@@ -23,7 +23,9 @@ handlers): sample% → fixed-fraction sampling; error% → adaptive CLT;
 from __future__ import annotations
 
 import re
+import tempfile
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,10 +48,29 @@ from approximatequeryengine_spark.result import (
 )
 
 
+def _cents(value_sql: str):
+    """A dollar column gridded to integer cents."""
+    return F.floor(F.expr(value_sql) * 100.0 + 0.5).cast("long")
+
+
+@dataclass(frozen=True)
+class _Registration:
+    """One registered index: its kind, the handle its build returned
+    (O(blocks) metadata the probes consult on the driver) and the SQL
+    its probes re-apply to the base table."""
+
+    kind: str
+    handle: object
+    value_sql: str
+    key_sql: str | None = None
+
+
 class AQEngine:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.catalog = Catalog(spark, sf_dir)
+        # (probe family 'range' | 'point' | 'zorder', table) → registration
+        self._indexes: dict[tuple[str, str], _Registration] = {}
 
     # -- building blocks ---------------------------------------------------
 
@@ -105,46 +126,48 @@ class AQEngine:
         ``key_sql`` must be integer-valued SQL (dates via
         ``datediff(...)``); ``value_sql`` is a dollar column (gridded
         to cents internally). Returns the index path; the registration
-        lives on this engine instance."""
-        import tempfile
-
+        — including the index's O(blocks) handle — lives on this engine
+        instance, and a rebuild replaces it."""
         if kind not in ("aqpplus", "sampleseek"):
             raise ValueError(
                 f"unknown range-index kind {kind!r}; use 'aqpplus' or 'sampleseek'"
             )
         df = self.catalog.table(table)
         key = F.expr(key_sql).cast("long")
-        cents = F.floor(F.expr(value_sql) * 100.0 + 0.5).cast("long")
         path = path or tempfile.mkdtemp(prefix=f"aqe_rangeidx_{table}_")
         if kind == "aqpplus":
             from approximatequeryengine_spark.plans.aqpplus import aqpplus_build
 
-            aqpplus_build(self.spark, df, path, key, cents, n_blocks=n_blocks)
+            handle = aqpplus_build(
+                self.spark, df, path, key, _cents(value_sql), n_blocks=n_blocks
+            )
         else:
             from approximatequeryengine_spark.sources.zonemap import zonemap_write
 
             uk = self.catalog.unique_key(table)
-            zonemap_write(
+            handle = zonemap_write(
                 self.spark,
                 df.select(
                     F.expr(uk).cast("long").alias("__rk"),
-                    cents.alias("__cents"),
+                    _cents(value_sql).alias("__cents"),
                     key.alias("__keysrc"),
                 ),
                 path,
                 key=F.col("__keysrc"),
                 n_zones=n_blocks,
             )
-        if not hasattr(self, "_range_indexes"):
-            self._range_indexes = {}
-        self._range_indexes[table] = {
-            "kind": kind,
-            "path": path,
-            "key_sql": key_sql,
-            "value_sql": value_sql,
-            "n_blocks": n_blocks,
-        }
+        self._indexes[("range", table)] = _Registration(
+            kind, handle, value_sql, key_sql
+        )
         return path
+
+    def _registration(self, probe: str, table: str, build: str) -> _Registration:
+        reg = self._indexes.get((probe, table))
+        if reg is None:
+            raise ValueError(
+                f"no {probe} index registered for {table!r}; call {build} first"
+            )
+        return reg
 
     def range_sum(
         self,
@@ -157,26 +180,23 @@ class AQEngine:
         """Answer ``SUM(value) WHERE lo <= key <= hi`` through the
         registered range index (see :meth:`build_range_index`):
         'aqpplus' → exact interior + sampled-boundary CI; 'sampleseek'
-        → selectivity-routed exact-or-sampled answer."""
-        info = getattr(self, "_range_indexes", {}).get(table)
-        if info is None:
-            raise ValueError(
-                f"no range index registered for {table!r}; call "
-                "build_range_index(table, key_sql, value_sql) first"
-            )
-        if info["kind"] == "aqpplus":
+        → selectivity-routed exact-or-sampled answer. The index
+        metadata comes from the registration, so the probe runs one
+        Spark query."""
+        reg = self._registration(
+            "range", table, "build_range_index(table, key_sql, value_sql)"
+        )
+        if reg.kind == "aqpplus":
             from approximatequeryengine_spark.plans.aqpplus import aqpplus_range_sum
 
             return aqpplus_range_sum(
                 self.spark,
                 self.catalog.table(table),
-                info["path"],
+                reg.handle,
                 lo,
                 hi,
-                key=F.expr(info["key_sql"]).cast("long"),
-                value_cents=F.floor(F.expr(info["value_sql"]) * 100.0 + 0.5).cast(
-                    "long"
-                ),
+                key=F.expr(reg.key_sql).cast("long"),
+                value_cents=_cents(reg.value_sql),
                 row_key=F.expr(self.catalog.unique_key(table)).cast("long"),
                 fraction=fraction,
             )
@@ -186,7 +206,7 @@ class AQEngine:
 
         return sample_seek_range_sum(
             self.spark,
-            info["path"],
+            reg.handle,
             lo,
             hi,
             fraction=fraction,
@@ -206,44 +226,34 @@ class AQEngine:
         unclustered integer column — unlocks :meth:`point_sum`.
         Blocks are fixed-width ranges of the table's unique key
         (ingest order); returns the index path."""
-        import tempfile
-
         from approximatequeryengine_spark.sources.blockbloom import blockbloom_write
 
-        df = self.catalog.table(table)
         path = path or tempfile.mkdtemp(prefix=f"aqe_pointidx_{table}_")
-        blockbloom_write(
+        handle = blockbloom_write(
             self.spark,
-            df,
+            self.catalog.table(table),
             path,
             ingest_key=F.expr(self.catalog.unique_key(table)).cast("long"),
             lookup_key=F.expr(lookup_sql).cast("long"),
             block_width=block_width,
         )
-        if not hasattr(self, "_point_indexes"):
-            self._point_indexes = {}
-        self._point_indexes[table] = {"path": path, "value_sql": value_sql}
+        self._indexes[("point", table)] = _Registration("blockbloom", handle, value_sql)
         return path
 
     def point_sum(self, table: str, key: int) -> DataFrame:
         """Exact ``SUM(value) WHERE lookup = key`` through the
-        registered bloom skip index: bounded metadata consult +
-        partition-pruned scan of the surviving blocks only."""
-        info = getattr(self, "_point_indexes", {}).get(table)
-        if info is None:
-            raise ValueError(
-                f"no point index registered for {table!r}; call "
-                "build_point_index(table, lookup_sql, value_sql) first"
-            )
+        registered bloom skip index: a driver-side consult of ≤ k bloom
+        words per block + one partition-pruned scan of the surviving
+        blocks."""
+        reg = self._registration(
+            "point", table, "build_point_index(table, lookup_sql, value_sql)"
+        )
         from approximatequeryengine_spark.sources.blockbloom import (
             blockbloom_point_sum,
         )
 
         return blockbloom_point_sum(
-            self.spark,
-            info["path"],
-            key,
-            value_cents=F.floor(F.expr(info["value_sql"]) * 100.0 + 0.5).cast("long"),
+            self.spark, reg.handle, key, value_cents=_cents(reg.value_sql)
         )
 
     def build_zorder_index(
@@ -258,47 +268,40 @@ class AQEngine:
         """Build and register a Z-order (Morton) clustered layout
         (`sources/zorder.py`) over two integer-valued columns —
         unlocks :meth:`rect_sum` for 2-D rectangle predicates."""
-        import tempfile
-
         from approximatequeryengine_spark.sources.zorder import zorder_write
 
-        df = self.catalog.table(table)
         path = path or tempfile.mkdtemp(prefix=f"aqe_zorderidx_{table}_")
-        zorder_write(
+        handle = zorder_write(
             self.spark,
-            df,
+            self.catalog.table(table),
             path,
             x=F.expr(x_sql).cast("long"),
             y=F.expr(y_sql).cast("long"),
             rowid=F.expr(self.catalog.unique_key(table)).cast("long"),
             n_blocks=n_blocks,
         )
-        if not hasattr(self, "_zorder_indexes"):
-            self._zorder_indexes = {}
-        self._zorder_indexes[table] = {"path": path, "value_sql": value_sql}
+        self._indexes[("zorder", table)] = _Registration("zorder", handle, value_sql)
         return path
 
     def rect_sum(
         self, table: str, x_lo: int, x_hi: int, y_lo: int, y_hi: int
     ) -> DataFrame:
         """Exact rectangle aggregate through the registered Z-order
-        layout: blockmap consult + partition-pruned scan."""
-        info = getattr(self, "_zorder_indexes", {}).get(table)
-        if info is None:
-            raise ValueError(
-                f"no zorder index registered for {table!r}; call "
-                "build_zorder_index(table, x_sql, y_sql, value_sql) first"
-            )
+        layout: driver-side blockmap consult + one partition-pruned
+        scan."""
+        reg = self._registration(
+            "zorder", table, "build_zorder_index(table, x_sql, y_sql, value_sql)"
+        )
         from approximatequeryengine_spark.sources.zorder import zorder_rect_sum
 
         return zorder_rect_sum(
             self.spark,
-            info["path"],
+            reg.handle,
             x_lo,
             x_hi,
             y_lo,
             y_hi,
-            value_cents=F.floor(F.expr(info["value_sql"]) * 100.0 + 0.5).cast("long"),
+            value_cents=_cents(reg.value_sql),
         )
 
     def _advise_auto(self, spec: QuerySpec) -> tuple[str, dict | None]:
@@ -306,17 +309,19 @@ class AQEngine:
         (plans/advisor.py — cv², top-B mass share → outlier/pps/
         revolutionary/clt) for global SUM over a column, the
         reference's static F3 ladder (``select_method``) for every
-        other shape. Returns (method, evidence-row-or-None); the
+        other shape. Returns (method, evidence-dict-or-None); the
         evidence surfaces in ``ApproxResult.groups['__advisor__']``
         and the CLI's ``--explain``."""
         if spec.agg == "SUM" and spec.column and not spec.group_by and not spec.distinct:
-            from approximatequeryengine_spark.plans.advisor import advise_method
+            from approximatequeryengine_spark.plans.advisor import (
+                advise_method_evidence,
+            )
 
-            row = advise_method(
+            ev = advise_method_evidence(
                 self._base_df(spec),
                 F.floor(F.expr(spec.column) * 100.0 + 0.5),
-            ).collect()[0].asDict()
-            return row["recommended_method"], row
+            )
+            return ev["recommended_method"], ev
         if (
             spec.agg in ("MEDIAN", "PERCENTILE")
             and spec.column

@@ -29,7 +29,6 @@ import time
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.plans.estimators import Z_95, AggSpec, approx_aggregate
 from approximatequeryengine_spark.plans.sampling import SamplingSpec, apply_sampling
@@ -38,6 +37,7 @@ from approximatequeryengine_spark.result import (
     ApproxResult,
     heuristic_confidence,
 )
+from approximatequeryengine_spark.session import local_frame
 
 
 def error_ladder(error_pct: float) -> float:
@@ -79,7 +79,8 @@ def adaptive_grouped_aggregate(
     (``workload._adaptive_grouped_oracle``).
 
     Returns ``(result_df, final_fraction, iterations)`` where
-    ``result_df`` is the terminal rung's grouped estimate + CI frame.
+    ``result_df`` is the terminal rung's grouped estimate + CI rows, as
+    a local frame (collecting it runs no job).
     """
     fraction = spec.fraction if spec.fraction else error_ladder(error_pct)
     fraction = max(min(fraction, 1.0), 1e-6)
@@ -152,8 +153,10 @@ def adaptive_grouped_aggregate(
         # Output parity with the filtered path (and the DuckDB oracle):
         # groups the terminal sample missed are stop-rule signal, not
         # result rows.
-        rdf = rdf.filter(F.col("n_samples") > 0)
-    return rdf, fraction, iterations
+        rows = [r for r in rows if r["n_samples"] > 0]
+    # The terminal rung is already collected: hand back its rows as a
+    # local frame rather than a plan the caller's collect would re-run.
+    return local_frame(df.sparkSession, rows, rdf.schema), fraction, iterations
 
 
 def adaptive_aggregate(

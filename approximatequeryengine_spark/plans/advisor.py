@@ -9,9 +9,10 @@ design (the top handful of rows carry the variance), a well-behaved one
 wants plain CLT escalation. This module profiles a column in one
 bounded pass and recommends from measured statistics:
 
-- ``cv2``      — squared coefficient of variation, from exact BIGINT
+- ``cv2``      — squared coefficient of variation, from exact integer
                  second moments about the integer center (the A10/A11
-                 convention — no float-fold summation);
+                 convention — no float-fold summation; DECIMAL(38,0)
+                 sums, since Σ(x−c)² outgrows BIGINT at sf0.1);
 - ``top_share``— fraction of total mass in the top-B values
                  (TakeOrdered(B) + integer sums): the direct measure of
                  tail concentration, the same quantity the
@@ -29,8 +30,8 @@ Decision rule (deterministic, documented, test-pinned):
     n > 100_000                → 'revolutionary' (stride scan, F3 parity)
     otherwise                  → 'clt'
 
-Scale shape: one full-scan aggregate (n, Σx), one centered-moment
-aggregate, one TakeOrdered(B) — all map-side combined; nothing
+Scale shape: one full-scan aggregate (n, Σx, Σx²) and one
+TakeOrdered(B) — both map-side combined; nothing
 proportional to N leaves the executors. The DuckDB oracle re-derives
 every statistic and the rule itself, so the driver row certifies the
 RECOMMENDATION, not just the numbers.
@@ -40,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from approximatequeryengine_spark.session import local_frame
 
 Z_95 = 1.959963984540054
 TOP_B = 100
@@ -55,27 +58,31 @@ QUANTILE_REL_TOLERANCE = 0.01  # matches the DDSketch α guarantee
 QUANTILE_SAMPLE_FRACTION = 0.10
 
 
-def advise_method(df: DataFrame, value_cents: "F.Column", b: int = TOP_B) -> DataFrame:
-    """One-row readout
-    (n, cv2, top_share, pred_rel_ci_uniform10, recommended_method)
-    for a positive integer-cents measure Column."""
+def advise_method_evidence(
+    df: DataFrame, value_cents: "F.Column", b: int = TOP_B
+) -> dict:
+    """The advisor's evidence for a positive integer-cents measure
+    Column as a dict: ``n, cv2, top_share, pred_rel_ci_uniform10,
+    recommended_method``.
+
+    Two Spark queries: one aggregate for n, Σx and Σx² — as
+    DECIMAL(38,0), so no sum overflows — and one TakeOrdered(B). The
+    centered second moment Σ(x−c)² = Σx² − 2cΣx + nc² is then the same
+    integer, derived with Python ints: at sf0.1 it already reaches
+    3.1e19 on ``o_totalprice``, past BIGINT."""
     base = df.select(value_cents.cast("long").alias("x")).filter(
         F.col("x").isNotNull()
     )
-    n, sx = base.agg(
-        F.count(F.lit(1)).cast("long"), F.sum("x").cast("long")
+    xd = F.col("x").cast("decimal(38,0)")
+    n, sx, sxx = base.agg(
+        F.count(F.lit(1)).cast("long"), F.sum(xd), F.sum(xd * xd)
     ).collect()[0]
     if not n:
         raise ValueError("advise_method: no non-null values")
+    sx, sxx = int(sx), int(sxx)
     c = (2 * sx + n) // (2 * n)
-    m2c = (
-        base.select(((F.col("x") - c) * (F.col("x") - c)).cast("long").alias("d2"))
-        .agg(F.sum("d2").cast("long"))
-        .collect()[0][0]
-    )
-    topsum = (
-        base.orderBy(F.desc("x")).limit(b).agg(F.sum("x").cast("long")).collect()[0][0]
-    )
+    m2c = sxx - 2 * c * sx + n * c * c
+    topsum = sum(r["x"] for r in base.orderBy(F.desc("x")).limit(b).collect())
     d = (sx - n * c) / n
     var = (m2c - n * d * d) / (n - 1) if n >= 2 else 0.0
     mean = sx / n
@@ -90,9 +97,24 @@ def advise_method(df: DataFrame, value_cents: "F.Column", b: int = TOP_B) -> Dat
         method = "revolutionary"
     else:
         method = "clt"
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(int(n), float(cv2), float(top_share), float(pred), method)],
+    return {
+        "n": int(n),
+        "cv2": float(cv2),
+        "top_share": float(top_share),
+        "pred_rel_ci_uniform10": float(pred),
+        "recommended_method": method,
+    }
+
+
+def advise_method(df: DataFrame, value_cents: "F.Column", b: int = TOP_B) -> DataFrame:
+    """One-row readout
+    (n, cv2, top_share, pred_rel_ci_uniform10, recommended_method)
+    for a positive integer-cents measure Column — the DataFrame
+    rendering of :func:`advise_method_evidence`."""
+    ev = advise_method_evidence(df, value_cents, b)
+    return local_frame(
+        df.sparkSession,
+        [tuple(ev.values())],
         "n long, cv2 double, top_share double, pred_rel_ci_uniform10 double, "
         "recommended_method string",
     )
@@ -205,8 +227,8 @@ def advise_quantile_method(
         df, column, q, spec, tolerance=tolerance, n_exact=n_exact,
         dd_alpha=dd_alpha,
     )
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [
             (
                 ev["n"],
@@ -235,7 +257,8 @@ WITH base AS (
 a1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx FROM base),
 a1c AS (SELECT n, sx, (2 * sx + n) // (2 * n) AS c FROM a1),
 m2 AS (
-  SELECT CAST(sum((b.x - a.c) * (b.x - a.c)) AS BIGINT) AS m2c
+  -- HUGEINT: the centered sum of squares outgrows BIGINT at sf0.1
+  SELECT sum(CAST(b.x - a.c AS HUGEINT) * (b.x - a.c)) AS m2c
   FROM base b, a1c a
 ),
 tp AS (SELECT CAST(sum(x) AS BIGINT) AS topsum

@@ -48,7 +48,9 @@ grid.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
@@ -57,7 +59,40 @@ from approximatequeryengine_spark.functions.hashing import (
     portable_hash_sql,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin
+from approximatequeryengine_spark.sources.arrow_write import write_single_parquet
 from approximatequeryengine_spark.sources.swap import read_synopsis
+
+_META_DDL = "mn long, width long, n_blocks long"
+
+
+@dataclass(frozen=True)
+class AqpplusIndex:
+    """What a range probe needs of a built index, held on the driver:
+    the block grid and the exact block aggregates — O(blocks), never
+    O(rows). ``blocks`` holds ``(block, n_rows, sum_cents)`` sorted by
+    block."""
+
+    path: str
+    mn: int
+    width: int
+    blocks: tuple[tuple[int, int, int], ...]
+
+
+def aqpplus_load(spark: SparkSession, path: str) -> AqpplusIndex:
+    """Read a built index's handle back from disk (for callers that hold
+    only the path; :func:`aqpplus_build` returns the same handle)."""
+    mrow = spark.read.parquet(f"{path}/meta").collect()[0]
+    rows = read_synopsis(spark, f"{path}/blocks").collect()
+    return AqpplusIndex(path, int(mrow["mn"]), int(mrow["width"]), _block_rows(rows))
+
+
+def _block_rows(rows) -> tuple[tuple[int, int, int], ...]:
+    # A NULL key has no block; it can never be interior.
+    return tuple(sorted(
+        (int(r["block"]), int(r["n_rows"]), int(r["sum_cents"]))
+        for r in rows
+        if r["block"] is not None
+    ))
 
 
 def aqpplus_build(
@@ -67,10 +102,12 @@ def aqpplus_build(
     key: Column,
     value_cents: Column,
     n_blocks: int = 64,
-) -> None:
-    """Persist the block-aggregate table + meta. ``key`` must be an
-    integer-valued Column (dates via datediff upstream); ``value_cents``
-    an integer-cents Column so block sums are exact BIGINTs."""
+) -> AqpplusIndex:
+    """Persist the block-aggregate table + meta and return the index's
+    handle. ``key`` must be an integer-valued Column (dates via datediff
+    upstream); ``value_cents`` an integer-cents Column so block sums are
+    exact BIGINTs. The block rows reach the driver as an observed metric
+    of the write job itself, so the handle costs no read-back."""
     base = df.select(
         key.cast("long").alias("__key"),
         value_cents.cast("long").alias("__cents"),
@@ -79,6 +116,7 @@ def aqpplus_build(
     if mn is None:
         raise ValueError("aqpplus_build: no non-null keys")
     width = max(1, (mx - mn + n_blocks) // n_blocks)
+    obs = Observation()
     (
         base.withColumn(
             "block", F.floor((F.col("__key") - F.lit(mn)) / F.lit(width)).cast("long")
@@ -88,13 +126,14 @@ def aqpplus_build(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum("__cents").cast("long").alias("sum_cents"),
         )
+        .observe(obs, F.collect_list(F.struct("block", "n_rows", "sum_cents")).alias("rows"))
         .write.mode("overwrite")
         .parquet(f"{path}/blocks")
     )
-    meta = spark.createDataFrame(
-        [(int(mn), int(width), int(n_blocks))], "mn long, width long, n_blocks long"
+    write_single_parquet(
+        spark, [(int(mn), int(width), int(n_blocks))], _META_DDL, f"{path}/meta"
     )
-    meta.write.mode("overwrite").parquet(f"{path}/meta")
+    return AqpplusIndex(path, int(mn), int(width), _block_rows(obs.get["rows"]))
 
 
 def _interior_block_range(mn: int, width: int, lo: int, hi: int) -> tuple[int, int]:
@@ -109,7 +148,7 @@ def _interior_block_range(mn: int, width: int, lo: int, hi: int) -> tuple[int, i
 def aqpplus_range_sum(
     spark: SparkSession,
     df: DataFrame,
-    path: str,
+    index: AqpplusIndex | str,
     lo: int,
     hi: int,
     key: Column,
@@ -123,22 +162,18 @@ def aqpplus_range_sum(
     ``(sum_value, ci_lower, ci_upper, n_samples, interior_rows,
     blocks_interior)`` in dollars (cents/100, rounded 2).
 
-    The interior readout is a bounded O(blocks) collect of the
-    precomputed table; the base table is scanned only on the boundary
-    slivers, through the deterministic hash sample."""
-    mrow = spark.read.parquet(f"{path}/meta").collect()[0]
-    mn, width = int(mrow["mn"]), int(mrow["width"])
+    The interior readout sums the handle's block aggregates on the
+    driver (a path is loaded first); the base table is scanned only on
+    the boundary slivers, through the deterministic hash sample — the
+    probe's one Spark query."""
+    if isinstance(index, str):
+        index = aqpplus_load(spark, index)
+    mn, width = index.mn, index.width
     b_lo, b_hi = _interior_block_range(mn, width, lo, hi)
-
-    interior_cents = 0
-    interior_rows = 0
-    blocks_interior = 0
-    if b_lo <= b_hi:
-        for r in read_synopsis(spark, f"{path}/blocks").collect():
-            if b_lo <= int(r["block"]) <= b_hi:
-                interior_cents += int(r["sum_cents"])
-                interior_rows += int(r["n_rows"])
-                blocks_interior += 1
+    interior = [r for r in index.blocks if b_lo <= r[0] <= b_hi]
+    interior_cents = sum(r[2] for r in interior)
+    interior_rows = sum(r[1] for r in interior)
+    blocks_interior = len(interior)
 
     k = key.cast("long")
     boundary = F.col("__k").between(F.lit(lo), F.lit(hi))
@@ -284,10 +319,9 @@ def aqpplus_grouped_build(
         .write.mode("overwrite")
         .parquet(f"{path}/blocks")
     )
-    meta = spark.createDataFrame(
-        [(int(mn), int(width), int(n_blocks))], "mn long, width long, n_blocks long"
+    write_single_parquet(
+        spark, [(int(mn), int(width), int(n_blocks))], _META_DDL, f"{path}/meta"
     )
-    meta.write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def aqpplus_grouped_append(

@@ -57,6 +57,7 @@ from approximatequeryengine_spark.plans.sampling import (
     apply_sampling,
     sampling_where_sql,
 )
+from approximatequeryengine_spark.session import local_frame
 
 # Test hook: when a list, every aggregate the rank selection executes
 # appends its physical plan here — the plan gates assert no Window /
@@ -476,9 +477,10 @@ def _grouped_select_order_stats(
                 StructField("v_lb", DoubleType(), False),
                 StructField("v_ub", DoubleType(), False),
             ])
-            bounds_df = spark.createDataFrame(
+            bounds_df = local_frame(
+                spark,
                 [(g, lb, ub) for g, (lb, ub) in bounds_by_group.items()],
-                schema=bschema,
+                bschema,
             )
             joined = nonnull.alias("s").join(
                 F.broadcast(bounds_df.alias("b")),
@@ -592,7 +594,7 @@ def grouped_order_stat_ci(
         StructField("n_samples", LongType(), True),
     ])
     if not counts:
-        return spark.createDataFrame([], schema=out_schema)
+        return local_frame(spark, [], out_schema)
     ranks_by_group: dict = {}
     picked: dict = {}
     nn_by_group: dict = {}
@@ -622,7 +624,7 @@ def grouped_order_stat_ci(
         )
         for g, (lo, point, hi) in picked.items()
     ]
-    rdf = spark.createDataFrame(rows, schema=out_schema)
+    rdf = local_frame(spark, rows, out_schema)
     if order_by_group:
         rdf = rdf.orderBy(group_col)
     return rdf

@@ -50,11 +50,12 @@ from approximatequeryengine_spark.functions.hashing import (
     portable_hash_sql,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin
+from approximatequeryengine_spark.sources.zonemap import ZonemapIndex, zonemap_load
 
 
 def sample_seek_range_sum(
     spark: SparkSession,
-    zonemap_path: str,
+    index: ZonemapIndex | str,
     lo: int,
     hi: int,
     row_key: str = "__rk",
@@ -64,33 +65,15 @@ def sample_seek_range_sum(
 ) -> DataFrame:
     """Route a key-range SUM through seek-or-sample over a persisted
     zone-map layout (built by ``zonemap_write`` with the row key kept
-    as a column named ``row_key``). One row; see module docstring for
-    the schema."""
-    zm_rows = spark.read.parquet(f"{zonemap_path}/zonemap").collect()
-    total_rows = 0
-    overlap_rows = 0
-    cells = []
-    for r in zm_rows:
-        total_rows += int(r["n_rows"])
-        if r["zmax"] >= lo and r["zmin"] <= hi:
-            cells.append(int(r["__zone"]))
-            overlap_rows += int(r["n_rows"])
-    cells.sort()
-    sel_est = overlap_rows / total_rows if total_rows else 0.0
+    as a column named ``row_key``; pass its handle, or a path to load
+    it from). One row; see module docstring for the schema."""
+    if isinstance(index, str):
+        index = zonemap_load(spark, index)
+    hit = index.overlapping(lo, hi)
+    total_rows = sum(z[3] for z in index.zones)
+    sel_est = sum(z[3] for z in hit) / total_rows if total_rows else 0.0
     seek = sel_est <= seek_threshold
-
-    # List ONLY the surviving zone directories (the zonemap consult
-    # shape shared with sources/zonemap.zonemap_range_sum).
-    from approximatequeryengine_spark.sources.arrow_write import _local_path
-
-    if cells and _local_path(f"{zonemap_path}/data") is not None:
-        data = spark.read.option("basePath", f"{zonemap_path}/data").parquet(
-            *[f"{zonemap_path}/data/__zone={c}" for c in cells]
-        )
-    else:
-        data = spark.read.parquet(f"{zonemap_path}/data").filter(
-            F.col("__zone").isin(cells)
-        )
+    data = index.read(spark, [z[0] for z in hit])
     data = data.filter(F.col("__key").between(F.lit(lo), F.lit(hi)))
     if seek:
         m = data.agg(

@@ -54,6 +54,8 @@ import uuid
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Partition-column types whose str() rendering matches the JVM
 # writer's directory naming for the values this engine uses.
@@ -209,3 +211,37 @@ def write_single_parquet(spark, rows: list[tuple], schema: str, path: str) -> No
         pq.write_table(tbl, os.path.join(fs_path, "part-00000.parquet"))
         return
     spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(path)
+
+
+def read_schema(df: DataFrame, partition_col: str | None = None) -> StructType:
+    """The schema ``spark.read.parquet`` gives the table that writing
+    ``df`` leaves behind: every column nullable and, for a table
+    partitioned by ``partition_col`` (``write_partitioned_parquet`` or
+    the JVM ``partitionBy`` writer), that column last — pinned to
+    BIGINT, where inference would pick INT or BIGINT from the directory
+    names. Index builders record it so their probes read with
+    ``spark.read.schema(...)`` and never pay a schema-inference job."""
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in df.schema.fields
+        if f.name != partition_col
+    ]
+    if partition_col is not None:
+        fields.append(StructField(partition_col, LongType(), True))
+    return StructType(fields)
+
+
+def read_partitions(
+    spark, path: str, partition_col: str, values: list[int], schema: StructType
+) -> DataFrame:
+    """Read only the ``{partition_col}=v`` directories of a partitioned
+    table, with its recorded schema. A local table lists just those
+    directories (``basePath`` keeps the partition column): listing
+    every directory first is O(partitions) driver work before pruning
+    even runs. Elsewhere the IN-list prunes at planning time."""
+    reader = spark.read.schema(schema)
+    if values and _local_path(path) is not None:
+        return reader.option("basePath", path).parquet(
+            *[f"{path}/{partition_col}={v}" for v in values]
+        )
+    return reader.parquet(path).filter(F.col(partition_col).isin(values))

@@ -30,19 +30,24 @@ lookup column:
   false-positive block rate where independent probes predict 0.5%,
   and 2 Kibit/k=2 gave 15%; the avalanche high bits at 16 bits/key,
   k=3 measure ~1.4% at sf0.1.
-- **query**: a point lookup reads the 1-row meta, computes its k
-  probe (word, mask) pairs driver-side, aggregates the bloom table to
-  the surviving block ids (every probed word must cover its mask;
-  a missing (block, word) row means those bits are 0 → pruned), and
-  scans only those block directories with the exact equality
-  predicate. No false negatives — every ingested key OR-ed its probes
-  into its block — so the answer is EXACT; false positives only add
-  scanned blocks.
+- **handle**: the build returns a :class:`BlockBloomIndex` — ``m``,
+  the block count and the recorded parquet schemas, all O(1) — which
+  the engine keeps per registered index; ``blockbloom_load`` rebuilds
+  it from disk for callers that hold only the path.
+- **query**: a point lookup computes its k probe (word, mask) pairs
+  driver-side, reads ONLY the bloom rows of those ≤ k words (the bloom
+  table is written sorted by word, so parquet row-group statistics
+  skip the rest), keeps the blocks where every probed word covers its
+  mask (a missing (block, word) row means those bits are 0 → pruned),
+  and scans only those block directories with the exact equality
+  predicate — the probe's one Spark query. No false negatives — every
+  ingested key OR-ed its probes into its block — so the answer is
+  EXACT; false positives only add scanned blocks.
 
 At 100 TB: ≤ max_blocks directories regardless of data size, the
 bloom side table is O(distinct keys · k / 32) words, and the consult
-is one bounded aggregate + a |survivors| collect (at extreme scale the
-id list becomes a join against the partition column). The certified
+reads ≤ k · blocks of them (a pyarrow filtered read on the driver for
+a local index, a filtered Spark read elsewhere). The certified
 readout row carries (n_rows, sum, blocks_scanned, blocks_total) so the
 DRIVER certifies the layout, the bloom arithmetic, the pruning AND the
 answer — the oracle re-derives all four, including the data-dependent
@@ -51,10 +56,25 @@ answer — the oracle re-derives all four, including the data-dependent
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from collections import Counter
+from dataclasses import dataclass
 
-from approximatequeryengine_spark.sources.swap import read_synopsis
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from approximatequeryengine_spark.sources.arrow_write import (
+    _local_path,
+    read_partitions,
+    read_schema,
+    write_partitioned_parquet,
+    write_single_parquet,
+)
+from approximatequeryengine_spark.sources.swap import (
+    heal_synopsis,
+    read_synopsis,
+    staged_swap,
+)
 from approximatequeryengine_spark.functions.hashing import (
     AVALANCHE_MULT,
     HASH_SPACE,
@@ -92,6 +112,34 @@ def probe_masks(key: int, m_bits: int, k: int = K_PROBES) -> dict[int, int]:
 
 
 M_BITS_MAX = 1 << 25  # keeps h·m < 2^57: exact in BIGINT on every engine
+
+
+@dataclass(frozen=True)
+class BlockBloomIndex:
+    """What a point probe needs of a built index, held on the driver:
+    the filter width, the number of blocks with bloom rows, and the
+    parquet schemas of the data and bloom tables. The bloom words
+    themselves (O(rows)) stay on disk."""
+
+    path: str
+    m_bits: int
+    blocks_total: int
+    data_schema: StructType
+    bloom_schema: StructType
+
+
+def blockbloom_load(spark: SparkSession, path: str) -> BlockBloomIndex:
+    """Read a built (or appended-to) index's handle back from disk;
+    :func:`blockbloom_write` returns the same handle without this."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    bloom = read_synopsis(spark, f"{path}/bloom")
+    return BlockBloomIndex(
+        path,
+        int(meta["m_bits"]),
+        bloom.agg(F.countDistinct("__block")).collect()[0][0],
+        read_schema(spark.read.parquet(f"{path}/data"), "__block"),
+        bloom.schema,
+    )
 
 
 def _layout(mn: int, mx: int, block_width: int, max_blocks: int) -> tuple[int, int]:
@@ -149,10 +197,13 @@ def blockbloom_write(
     block_width: int = 256,
     max_blocks: int = MAX_BLOCKS,
     k: int = K_PROBES,
-) -> None:
+) -> BlockBloomIndex:
     """Persist ``path/data`` partitioned by ``__block``, the sparse
-    ``path/bloom`` = (block, word, bits) side table, and ``path/meta``
-    = the 1-row (mn, width, m) layout parameters."""
+    ``path/bloom`` = (block, word, bits) side table sorted by word, and
+    ``path/meta`` = the 1-row (mn, width, m) layout parameters; return
+    the index's handle. The block count reaches the driver as an
+    observed metric of the bloom write, so the handle costs no
+    read-back."""
     base = df.withColumn("__lk", lookup_key.cast("long")).withColumn(
         "__ik", ingest_key.cast("long")
     )
@@ -180,20 +231,17 @@ def blockbloom_write(
     # Commit-light block write + driver-side meta (sources/arrow_write):
     # same directory layout, ~6× less wall for the many-small-files
     # write at fixture scale (per-file writer/commit overhead, guide §6).
-    from approximatequeryengine_spark.sources.arrow_write import (
-        write_partitioned_parquet,
-        write_single_parquet,
-    )
-
     write_partitioned_parquet(
         base.repartition("__block"), f"{path}/data", "__block"
     )
-    (
+    bloom = (
         _probe_rows(base, m_bits, k)
         .groupBy("__block", "word")
         .agg(F.bit_or("mask").alias("bits"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/bloom")
+    )
+    obs = Observation()
+    _write_bloom(
+        bloom.observe(obs, F.collect_set("__block").alias("blocks")), f"{path}/bloom"
     )
     write_single_parquet(
         spark,
@@ -201,6 +249,19 @@ def blockbloom_write(
         "mn long, width long, m_bits long",
         f"{path}/meta",
     )
+    return BlockBloomIndex(
+        path,
+        m_bits,
+        len(obs.get["blocks"]),
+        read_schema(base, "__block"),
+        read_schema(bloom),
+    )
+
+
+def _write_bloom(bloom: DataFrame, dest: str) -> None:
+    # Sorted by word within each file, so a probe's `word IN need`
+    # filter skips every row group that holds none of its words.
+    bloom.sortWithinPartitions("word").write.mode("overwrite").parquet(dest)
 
 
 def blockbloom_append(
@@ -245,10 +306,6 @@ def blockbloom_append(
             f"blockbloom_append: {n_null} NULL ingest keys in the batch; "
             "the blocking key must be non-null"
         )
-    from approximatequeryengine_spark.sources.arrow_write import (
-        write_partitioned_parquet,
-    )
-
     write_partitioned_parquet(
         base.repartition("__block"), f"{path}/data", "__block", mode="append"
     )
@@ -265,69 +322,69 @@ def blockbloom_append(
     # (retire aside, never delete before the swap lands) is the shared
     # sources/swap.py helper — recover_synopsis() restores the table
     # from whichever complete copy a crash left behind.
-    from approximatequeryengine_spark.sources.swap import staged_swap
-
     staged_swap(
         spark,
         f"{path}/bloom",
-        lambda p: merged.write.mode("overwrite").parquet(p),
+        lambda p: _write_bloom(merged, p),
         name="blockbloom_append",
     )
 
 
+def _surviving_blocks(
+    spark: SparkSession, index: BlockBloomIndex, need: dict[int, int]
+) -> list[int]:
+    """Blocks whose bloom words cover every probe mask in ``need``,
+    reading only the rows of the probed words: a pyarrow filtered read
+    on the driver for a local index (no Spark job), a filtered Spark
+    read with the recorded schema elsewhere. Either way at most
+    ``len(need)`` rows per block reach the driver."""
+    bloom = f"{index.path}/bloom"
+    heal_synopsis(spark, bloom)
+    words = sorted(need)
+    local = _local_path(bloom)
+    if local is not None:
+        import pyarrow.dataset as ds
+
+        tbl = ds.dataset(local, format="parquet").to_table(
+            columns=["__block", "word", "bits"], filter=ds.field("word").isin(words)
+        )
+        rows = zip(*(tbl.column(c).to_pylist() for c in ("__block", "word", "bits")))
+    else:
+        rows = (
+            spark.read.schema(index.bloom_schema)
+            .parquet(bloom)
+            .filter(F.col("word").isin(words))
+            .collect()
+        )
+    hits = Counter(b for b, w, bits in rows if bits & need[w] == need[w])
+    return sorted(b for b, n in hits.items() if n == len(need))
+
+
 def blockbloom_point_sum(
     spark: SparkSession,
-    path: str,
+    index: BlockBloomIndex | str,
     key: int,
     value_cents: Column,
     k: int = K_PROBES,
 ) -> DataFrame:
-    """Point-lookup aggregate through the bloom index: one row
-    (n_rows, sum_value, blocks_scanned, blocks_total). The consult is
-    one bounded aggregate over the sparse bloom table; the data scan
-    prunes to the surviving block directories."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    need = probe_masks(key, int(meta["m_bits"]), k)
-    bloom = read_synopsis(spark, f"{path}/bloom")
-    cond = None
-    for w, m in need.items():
-        c = (F.col("word") == F.lit(w)) & (
-            F.col("bits").bitwiseAND(F.lit(m)) == F.lit(m)
-        )
-        cond = c if cond is None else cond | c
-    # ONE job over the bloom table: per-block hit counts for every
-    # block (blocks_total = row count of the result, ≤ max_blocks+ε —
-    # a bounded collect thanks to the block-count cap).
-    per_block = (
-        bloom.groupBy("__block")
-        .agg(F.sum(F.when(cond, 1).otherwise(0)).alias("n_hit"))
-        .collect()
-    )
-    blocks_total = len(per_block)
-    cells = sorted(int(r["__block"]) for r in per_block if r["n_hit"] == len(need))
-    # List ONLY the surviving block directories (basePath keeps the
-    # partition column): the plain read lists every block dir up front
-    # — O(blocks_total) driver listing/footer work — before partition
-    # pruning even runs, which dominated the consult at 586 blocks
-    # (guide §6: file listing). Every cell in `cells` has a directory:
-    # a block appears in the bloom table only via its ingested rows.
-    from approximatequeryengine_spark.sources.arrow_write import _local_path
-
-    if cells and _local_path(f"{path}/data") is not None:
-        reader = spark.read.option("basePath", f"{path}/data")
-        data = reader.parquet(
-            *[f"{path}/data/__block={c}" for c in cells]
-        )
-    else:
-        data = spark.read.parquet(f"{path}/data").filter(
-            F.col("__block").isin(cells)
-        )
-    data = data.filter(F.col("__lk") == F.lit(key))
+    """Point-lookup aggregate through the bloom index (its handle, or a
+    path to load it from): one row (n_rows, sum_value, blocks_scanned,
+    blocks_total). The consult reads ≤ k bloom words per block; the
+    data scan — the one Spark query — reads only the surviving block
+    directories."""
+    if isinstance(index, str):
+        index = blockbloom_load(spark, index)
+    cells = _surviving_blocks(spark, index, probe_masks(key, index.m_bits, k))
+    # Every cell has a directory: a block appears in the bloom table
+    # only via its ingested rows.
+    data = read_partitions(
+        spark, f"{index.path}/data", "__block", cells, index.data_schema
+    ).filter(F.col("__lk") == F.lit(key))
     return data.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.round(F.sum(value_cents.cast("long")) / F.lit(100.0), 2).alias("sum_value"),
         F.lit(len(cells)).cast("long").alias("blocks_scanned"),
-        F.lit(blocks_total).cast("long").alias("blocks_total"),
+        F.lit(index.blocks_total).cast("long").alias("blocks_total"),
     )
 
 

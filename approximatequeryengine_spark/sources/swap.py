@@ -94,16 +94,20 @@ def staged_swap(
     fs.delete(retired, True)
 
 
-def read_synopsis(spark: SparkSession, dest: str):
-    """``spark.read.parquet(dest)``, self-healing: when ``dest`` is
-    missing because a refresh crashed mid-swap, restore it from the
-    complete copy the protocol guarantees and read that. The happy path
-    costs one existence probe; readers of swapped synopses use this so
-    a crashed nightly refresh never turns into a query-time
-    FileNotFound at 3am."""
+def heal_synopsis(spark: SparkSession, dest: str) -> None:
+    """Make sure the table at ``dest`` exists: when a refresh crashed
+    mid-swap, restore it from the complete copy the protocol
+    guarantees. The happy path costs one existence probe; readers of
+    swapped synopses call this so a crashed nightly refresh never turns
+    into a query-time FileNotFound at 3am."""
     fs, hpath = _fs(spark, dest)
     if not fs.exists(hpath(dest)):
         recover_synopsis(spark, dest)
+
+
+def read_synopsis(spark: SparkSession, dest: str):
+    """``spark.read.parquet(dest)`` after :func:`heal_synopsis`."""
+    heal_synopsis(spark, dest)
     return spark.read.parquet(dest)
 
 

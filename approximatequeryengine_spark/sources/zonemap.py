@@ -19,8 +19,10 @@ pruning all share:
   per-zone key bounds — tighter than the nominal zone range when the
   key space has gaps, which is exactly what a zone map buys over
   arithmetic bucket pruning;
-- **query**: a key-range aggregate consults the zonemap first
-  (|zones| rows, one bounded collect), then scans ONLY the
+- **query**: a key-range aggregate consults the zonemap first (the
+  build's :class:`ZonemapIndex` handle holds its |zones| rows on the
+  driver; ``zonemap_load`` reads them back for a bare path), then
+  scans ONLY the
   overlapping zones' directories via a partition-column IN-list
   (PartitionFilters — plan-gated in tests), applying the exact range
   predicate on the survivors.
@@ -41,8 +43,56 @@ ANSWER and the PRUNING arithmetic.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from approximatequeryengine_spark.sources.arrow_write import (
+    read_partitions,
+    read_schema,
+    write_partitioned_parquet,
+    write_single_parquet,
+)
+
+
+@dataclass(frozen=True)
+class ZonemapIndex:
+    """What a range probe needs of a built zone layout, held on the
+    driver: the zonemap ``(zone, zmin, zmax, n_rows)`` sorted by zone,
+    O(zones), and the data's parquet schema."""
+
+    path: str
+    zones: tuple[tuple[int, int, int, int], ...]
+    data_schema: StructType
+
+    def overlapping(self, lo: int, hi: int) -> list[tuple[int, int, int, int]]:
+        """The zones whose actual key bounds meet [lo, hi]."""
+        return [z for z in self.zones if z[2] >= lo and z[1] <= hi]
+
+    def read(self, spark: SparkSession, zones: list[int]) -> DataFrame:
+        """The data of ``zones`` only, read with the recorded schema."""
+        return read_partitions(
+            spark, f"{self.path}/data", "__zone", zones, self.data_schema
+        )
+
+
+def _zone_rows(rows) -> tuple[tuple[int, int, int, int], ...]:
+    return tuple(sorted(
+        (int(r["__zone"]), int(r["zmin"]), int(r["zmax"]), int(r["n_rows"]))
+        for r in rows
+    ))
+
+
+def zonemap_load(spark: SparkSession, path: str) -> ZonemapIndex:
+    """Read a built layout's handle back from disk; :func:`zonemap_write`
+    returns the same handle without this."""
+    return ZonemapIndex(
+        path,
+        _zone_rows(spark.read.parquet(f"{path}/zonemap").collect()),
+        read_schema(spark.read.parquet(f"{path}/data"), "__zone"),
+    )
 
 
 def zonemap_write(
@@ -52,9 +102,10 @@ def zonemap_write(
     key: Column,
     n_zones: int = 64,
     balanced: bool = False,
-) -> None:
-    """Persist the zone-partitioned layout + zonemap. ``key`` must be
-    an integer-valued Column (dates go through datediff upstream).
+) -> ZonemapIndex:
+    """Persist the zone-partitioned layout + zonemap and return the
+    layout's handle. ``key`` must be an integer-valued Column (dates go
+    through datediff upstream).
 
     Two boundary strategies:
 
@@ -96,11 +147,6 @@ def zonemap_write(
         zoned = base.withColumn(
             "__zone", ((F.col("__key") - F.lit(mn)) / F.lit(width)).cast("long")
         )
-    from approximatequeryengine_spark.sources.arrow_write import (
-        write_partitioned_parquet,
-        write_single_parquet,
-    )
-
     # Commit-light partitioned write (sources/arrow_write): identical
     # directory layout; the task-ordered Arrow batches preserve the
     # sortWithinPartitions order, so row-group min/max stats stay tight.
@@ -120,57 +166,41 @@ def zonemap_write(
         )
         .collect()
     )
+    zones = _zone_rows(zm_rows)
     write_single_parquet(
-        spark,
-        [
-            (int(r["__zone"]), int(r["zmin"]), int(r["zmax"]), int(r["n_rows"]))
-            for r in zm_rows
-        ],
-        "__zone long, zmin long, zmax long, n_rows long",
+        spark, list(zones), "__zone long, zmin long, zmax long, n_rows long",
         f"{path}/zonemap",
     )
+    return ZonemapIndex(path, zones, read_schema(zoned, "__zone"))
 
 
 def zonemap_range_sum(
     spark: SparkSession,
-    path: str,
+    index: ZonemapIndex | str,
     lo: int,
     hi: int,
     value_cents: Column,
 ) -> DataFrame:
-    """Key-range aggregate through the zone map: one row
-    (n_rows, sum_value, zones_scanned, zones_total).
+    """Key-range aggregate through the zone map (its handle, or a path
+    to load it from): one row (n_rows, sum_value, zones_scanned,
+    zones_total).
 
-    The zonemap consult is a bounded |zones|-row collect; the data scan
-    carries a partition-column IN-list (directory pruning) plus the
-    exact BETWEEN (row pruning within surviving zones, served by the
-    sorted row groups).
+    The zonemap consult runs on the driver over the handle; the data
+    scan carries a partition-column IN-list (directory pruning) plus
+    the exact BETWEEN (row pruning within surviving zones, served by
+    the sorted row groups).
     """
-    zm = spark.read.parquet(f"{path}/zonemap")
-    zm_rows = zm.collect()
-    zones_total = len(zm_rows)
-    cells = sorted(
-        int(r["__zone"]) for r in zm_rows if r["zmax"] >= lo and r["zmin"] <= hi
-    )
-    # List ONLY the surviving zone directories (same consult shape as
-    # blockbloom/zorder): every selected zone has a directory — it is
-    # in the zonemap because its rows were written.
-    from approximatequeryengine_spark.sources.arrow_write import _local_path
-
-    if cells and _local_path(f"{path}/data") is not None:
-        data = spark.read.option("basePath", f"{path}/data").parquet(
-            *[f"{path}/data/__zone={c}" for c in cells]
-        )
-    else:
-        data = spark.read.parquet(f"{path}/data").filter(
-            F.col("__zone").isin(cells)
-        )
-    data = data.filter(F.col("__key").between(F.lit(lo), F.lit(hi)))
+    if isinstance(index, str):
+        index = zonemap_load(spark, index)
+    # Every selected zone has a directory: it is in the zonemap because
+    # its rows were written.
+    cells = [z[0] for z in index.overlapping(lo, hi)]
+    data = index.read(spark, cells).filter(F.col("__key").between(F.lit(lo), F.lit(hi)))
     return data.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.round(F.sum(value_cents.cast("long")) / F.lit(100.0), 2).alias("sum_value"),
         F.lit(len(cells)).cast("long").alias("zones_scanned"),
-        F.lit(zones_total).cast("long").alias("zones_total"),
+        F.lit(len(index.zones)).cast("long").alias("zones_total"),
     )
 
 

@@ -29,10 +29,13 @@ rectangle queries on either or both columns.
   oracle to replay blocks_scanned exactly. Cells are equal-AREA, not
   equal-count — the documented trade vs the sort-based layouts below;
   under heavy 2-D skew use ``layout='range'``;
-- **blockmap**: per-block ACTUAL (xmin, xmax, ymin, ymax, n_rows);
-- **query**: a rectangle aggregate consults the blockmap (bounded
-  O(blocks) collect), scans only blocks overlapping BOTH ranges via a
-  partition IN-list, and applies the exact predicate on survivors.
+- **blockmap**: per-block ACTUAL (xmin, xmax, ymin, ymax, n_rows),
+  persisted and also returned in the build's :class:`ZorderIndex`
+  handle (with the data's parquet schema);
+- **query**: a rectangle aggregate consults the handle's blockmap on
+  the driver, scans only blocks overlapping BOTH ranges via a
+  partition IN-list — the probe's one Spark query — and applies the
+  exact predicate on survivors.
 
 Alternative layouts, kept for the balance-vs-build trade:
 
@@ -58,13 +61,49 @@ identical to any partitioned table write.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from approximatequeryengine_spark.sources.arrow_write import (
+    read_partitions,
+    read_schema,
+    write_single_parquet,
+)
 
 Q_BITS = 16  # 16-bit cells per dimension → z < 2^32, exact in BIGINT
 Q_CELLS = 1 << Q_BITS
 Z_BITS = 2 * Q_BITS
+
+
+@dataclass(frozen=True)
+class ZorderIndex:
+    """What a rectangle probe needs of a built layout, held on the
+    driver: the blockmap ``(block, xmin, xmax, ymin, ymax)`` sorted by
+    block, O(blocks), and the data's parquet schema."""
+
+    path: str
+    blockmap: tuple[tuple[int, int, int, int, int], ...]
+    data_schema: StructType
+
+
+def _blockmap_rows(rows) -> tuple[tuple[int, int, int, int, int], ...]:
+    return tuple(sorted(
+        (int(r["__block"]), r["xmin"], r["xmax"], r["ymin"], r["ymax"]) for r in rows
+    ))
+
+
+def zorder_load(spark: SparkSession, path: str) -> ZorderIndex:
+    """Read a built layout's handle back from disk; :func:`zorder_write`
+    returns the same handle without this."""
+    return ZorderIndex(
+        path,
+        _blockmap_rows(spark.read.parquet(f"{path}/blockmap").collect()),
+        read_schema(spark.read.parquet(f"{path}/data"), "__block"),
+    )
 
 
 def morton_sql(xq: str, yq: str, bits: int = Q_BITS) -> str:
@@ -152,11 +191,13 @@ def zorder_write(
     rowid: Column,
     n_blocks: int = 64,
     layout: str = "prefix",
-) -> None:
+) -> ZorderIndex:
     """Persist ``path/data`` partitioned by Morton block and
     ``path/blockmap`` = (block, xmin, xmax, ymin, ymax, n_rows); also
     writes ``path/meta`` (the two quantization (min, span) pairs and
-    the layout) so queries never re-derive the layout.
+    the layout) so queries never re-derive the layout. Returns the
+    layout's handle; the blockmap reaches the driver as an observed
+    metric of its own write, so the handle adds no job.
 
     Block-assignment strategies (see module docstring for the full
     trade): ``'prefix'`` (default — expression-only quadtree cells,
@@ -200,10 +241,6 @@ def zorder_write(
         raise ValueError(
             f"unknown layout {layout!r}; use 'prefix', 'range' or 'ntile'"
         )
-    from approximatequeryengine_spark.sources.arrow_write import (
-        write_single_parquet,
-    )
-
     writer = zoned
     if layout in ("prefix", "ntile"):
         writer = writer.repartition("__block")
@@ -215,14 +252,17 @@ def zorder_write(
     # costs more than 64 files' worth of writer/commit overhead.
     # Contrast blockbloom's 586 tiny files, where Arrow wins 6×.)
     writer.write.partitionBy("__block").mode("overwrite").parquet(f"{path}/data")
+    data_schema = read_schema(zoned, "__block")
     # Blockmap from the WRITTEN files, not the lineage: under 'range'
     # the block ids come from spark_partition_id over sampled
     # boundaries, which a re-execution may re-draw — stats derived
     # from the lineage could describe a layout that was never written.
     # (Measured: the read-back is also ~3× cheaper than re-evaluating
     # the 64-term Morton expression over the source.)
+    obs = Observation()
     (
-        spark.read.parquet(f"{path}/data")
+        spark.read.schema(data_schema)
+        .parquet(f"{path}/data")
         .groupBy("__block")
         .agg(
             F.min("__x").alias("xmin"),
@@ -231,6 +271,8 @@ def zorder_write(
             F.max("__y").alias("ymax"),
             F.count(F.lit(1)).cast("long").alias("n_rows"),
         )
+        .observe(obs, F.collect_list(
+            F.struct("__block", "xmin", "xmax", "ymin", "ymax")).alias("rows"))
         .write.mode("overwrite")
         .parquet(f"{path}/blockmap")
     )
@@ -240,41 +282,33 @@ def zorder_write(
         "xmn long, xs1 long, ymn long, ys1 long, layout string",
         f"{path}/meta",
     )
+    return ZorderIndex(path, _blockmap_rows(obs.get["rows"]), data_schema)
 
 
 def zorder_rect_sum(
     spark: SparkSession,
-    path: str,
+    index: ZorderIndex | str,
     x_lo: int,
     x_hi: int,
     y_lo: int,
     y_hi: int,
     value_cents: Column,
 ) -> DataFrame:
-    """Rectangle aggregate through the Morton layout: one row
-    (n_rows, sum_value, blocks_scanned, blocks_total)."""
-    bm = spark.read.parquet(f"{path}/blockmap").collect()
-    cells = sorted(
-        int(r["__block"])
-        for r in bm
-        if r["xmax"] >= x_lo
-        and r["xmin"] <= x_hi
-        and r["ymax"] >= y_lo
-        and r["ymin"] <= y_hi
+    """Rectangle aggregate through the Morton layout (its handle, or a
+    path to load it from): one row (n_rows, sum_value, blocks_scanned,
+    blocks_total)."""
+    if isinstance(index, str):
+        index = zorder_load(spark, index)
+    cells = [
+        b
+        for b, xmin, xmax, ymin, ymax in index.blockmap
+        if xmax >= x_lo and xmin <= x_hi and ymax >= y_lo and ymin <= y_hi
+    ]
+    # Every cell has a directory: it is in the blockmap because its
+    # rows were written.
+    data = read_partitions(
+        spark, f"{index.path}/data", "__block", cells, index.data_schema
     )
-    # List ONLY the surviving block directories (same consult shape as
-    # blockbloom_point_sum): every cell has a directory — it is in the
-    # blockmap because its rows were written.
-    from approximatequeryengine_spark.sources.arrow_write import _local_path
-
-    if cells and _local_path(f"{path}/data") is not None:
-        data = spark.read.option("basePath", f"{path}/data").parquet(
-            *[f"{path}/data/__block={c}" for c in cells]
-        )
-    else:
-        data = spark.read.parquet(f"{path}/data").filter(
-            F.col("__block").isin(cells)
-        )
     data = data.filter(
         F.col("__x").between(F.lit(x_lo), F.lit(x_hi))
     ).filter(F.col("__y").between(F.lit(y_lo), F.lit(y_hi)))
@@ -282,7 +316,7 @@ def zorder_rect_sum(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.round(F.sum(value_cents.cast("long")) / F.lit(100.0), 2).alias("sum_value"),
         F.lit(len(cells)).cast("long").alias("blocks_scanned"),
-        F.lit(len(bm)).cast("long").alias("blocks_total"),
+        F.lit(len(index.blockmap)).cast("long").alias("blocks_total"),
     )
 
 

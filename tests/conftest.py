@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -17,6 +18,43 @@ def spark():
     s = get_spark(app_name="aqe-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns ``(fn(), number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store fills from the listener bus asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def parquet_reads(monkeypatch):
+    """Every path handed to ``spark.read...parquet(...)`` while the test
+    runs, in call order."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen: list[str] = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        seen.extend(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return seen
 
 
 @pytest.fixture(scope="session")

@@ -126,6 +126,26 @@ def test_adaptive_grouped_tight_budget_escalates(engine):
     assert rdf.count() == 3
 
 
+def test_adaptive_grouped_result_is_not_rerun(engine, count_jobs):
+    """The loop already collected the terminal rung; collecting the
+    returned frame must not run that rung again."""
+    from approximatequeryengine_spark.plans.adaptive import adaptive_grouped_aggregate
+
+    (rdf, _, iterations), loop_jobs = count_jobs(
+        lambda: adaptive_grouped_aggregate(
+            engine.catalog.table("lineitem"),
+            AggSpec("sum", "l_extendedprice"),
+            ["l_returnflag"],
+            SamplingSpec(fraction=0.0, key=KEY),
+            error_pct=2.0,
+        )
+    )
+    rows, collect_jobs = count_jobs(rdf.collect)
+    assert loop_jobs >= iterations
+    assert collect_jobs == 0
+    assert len(rows) == 3 and all(r["n_samples"] > 0 for r in rows)
+
+
 def test_adaptive_grouped_masked_parity_systematic(engine_med):
     """Round-5 fix: systematic/block/stratified grouped adaptives run
     their missed-group guard as a rung-job MASK (no standalone

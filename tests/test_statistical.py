@@ -7,6 +7,8 @@ salted portable hash, and aggregate per salt — the distributed-friendly
 form of "run the estimator 100 times", with no driver loop.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +22,7 @@ from approximatequeryengine_spark.functions.hashing import (
     fraction_threshold,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95
+from tests.conftest import SF_DIR
 
 KEY = "l_orderkey * 8 + l_linenumber"
 FRACTION = 0.1
@@ -1271,6 +1274,57 @@ def test_advisor_big_n_prefers_stride(spark):
     df = spark.range(0, 150_000).select((F.col("id") % 7 + 1000).alias("v"))
     row = advise_method(df, F.col("v")).collect()[0]
     assert row["recommended_method"] == "revolutionary"
+
+
+def test_advisor_sums_outgrow_bigint_without_overflow(spark):
+    """Centered second moments past 2^63 (here ~8e21) must neither raise
+    ARITHMETIC_OVERFLOW nor wrap: the evidence matches the oracle."""
+    import duckdb
+    import pandas as pd
+
+    from approximatequeryengine_spark.plans.advisor import (
+        advise_method,
+        advise_method_sql,
+    )
+    from tests.conftest import assert_df_matches_sql
+
+    vals = [(i % 2) * 4_000_000_000 + i for i in range(2000)]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"v": vals}))
+    assert_df_matches_sql(
+        advise_method(spark.createDataFrame([(v,) for v in vals], "v long"), F.col("v")),
+        con,
+        advise_method_sql("t", "v"),
+    )
+
+
+SF_DIR_LARGE = os.environ.get(
+    "AQE_TEST_SF_DIR_LARGE", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+)
+
+
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(SF_DIR_LARGE, "orders.parquet")),
+    reason="needs the sf0.1 fixtures",
+)
+def test_advisor_auto_sum_on_orders_at_sf01(spark):
+    """method='auto' on SUM(o_totalprice) at sf0.1: Σ(x−c)² over the
+    cents is 3.1e19, past BIGINT — the query used to raise
+    ARITHMETIC_OVERFLOW. The evidence must equal the oracle's row."""
+    from approximatequeryengine_spark import AQEngine
+    from approximatequeryengine_spark.plans.advisor import advise_method_sql
+    from tests.conftest import _duck
+
+    res = AQEngine(spark, SF_DIR_LARGE).run(
+        "SELECT APPROX(SUM(o_totalprice)) FROM orders", method="auto"
+    )
+    ev = res.groups["__advisor__"]
+    cur = _duck(SF_DIR_LARGE).execute(
+        advise_method_sql("orders", "floor(o_totalprice * 100.0 + 0.5)")
+    )
+    want = dict(zip([d[0] for d in cur.description], cur.fetchone()))
+    assert ev == want
+    assert res.value is not None
 
 
 def test_twostage_ci_coverage_over_salts(spark):
