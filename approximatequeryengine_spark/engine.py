@@ -40,7 +40,11 @@ from approximatequeryengine_spark.frontend.dialect import (
 )
 from approximatequeryengine_spark.plans.adaptive import adaptive_aggregate, error_ladder
 from approximatequeryengine_spark.plans.estimators import AggSpec, approx_aggregate
-from approximatequeryengine_spark.plans.sampling import SamplingSpec, apply_sampling
+from approximatequeryengine_spark.plans.sampling import (
+    SamplingSpec,
+    apply_sampling,
+    sql_double,
+)
 from approximatequeryengine_spark.result import (
     ApproximationStatus,
     ApproxResult,
@@ -48,9 +52,16 @@ from approximatequeryengine_spark.result import (
 )
 
 
+def _cents_sql(value_sql: str) -> str:
+    """A dollar expression gridded to integer cents, as Spark SQL."""
+    return (
+        f"CAST(floor(({value_sql}) * {sql_double(100.0)} + {sql_double(0.5)}) AS BIGINT)"
+    )
+
+
 def _cents(value_sql: str):
-    """A dollar column gridded to integer cents."""
-    return F.floor(F.expr(value_sql) * 100.0 + 0.5).cast("long")
+    """:func:`_cents_sql` as a Column."""
+    return F.expr(_cents_sql(value_sql))
 
 
 @dataclass(frozen=True)
@@ -133,13 +144,12 @@ class AQEngine:
                 f"unknown range-index kind {kind!r}; use 'aqpplus' or 'sampleseek'"
             )
         df = self.catalog.table(table)
-        key = F.expr(key_sql).cast("long")
         path = path or tempfile.mkdtemp(prefix=f"aqe_rangeidx_{table}_")
         if kind == "aqpplus":
             from approximatequeryengine_spark.plans.aqpplus import aqpplus_build
 
             handle = aqpplus_build(
-                self.spark, df, path, key, _cents(value_sql), n_blocks=n_blocks
+                self.spark, df, path, key_sql, _cents_sql(value_sql), n_blocks=n_blocks
             )
         else:
             from approximatequeryengine_spark.sources.zonemap import zonemap_write
@@ -150,7 +160,7 @@ class AQEngine:
                 df.select(
                     F.expr(uk).cast("long").alias("__rk"),
                     _cents(value_sql).alias("__cents"),
-                    key.alias("__keysrc"),
+                    F.expr(key_sql).cast("long").alias("__keysrc"),
                 ),
                 path,
                 key=F.col("__keysrc"),
@@ -195,9 +205,9 @@ class AQEngine:
                 reg.handle,
                 lo,
                 hi,
-                key=F.expr(reg.key_sql).cast("long"),
-                value_cents=_cents(reg.value_sql),
-                row_key=F.expr(self.catalog.unique_key(table)).cast("long"),
+                key=reg.key_sql,
+                value_cents=_cents_sql(reg.value_sql),
+                row_key=self.catalog.unique_key(table),
                 fraction=fraction,
             )
         from approximatequeryengine_spark.plans.sampleseek import (

@@ -29,9 +29,15 @@ import time
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.plans.estimators import Z_95, AggSpec, approx_aggregate
-from approximatequeryengine_spark.plans.sampling import SamplingSpec, apply_sampling
+from approximatequeryengine_spark.plans.sampling import (
+    P_COL,
+    SamplingSpec,
+    apply_sampling,
+    sample_predicate_sql,
+)
 from approximatequeryengine_spark.result import (
     ApproximationStatus,
     ApproxResult,
@@ -50,6 +56,18 @@ def error_ladder(error_pct: float) -> float:
     if error_pct <= 5.0:
         return 0.10
     return 0.05
+
+
+def masked_rung(
+    df: DataFrame, agg: AggSpec, group_by: list[str], spec: SamplingSpec, z: float = Z_95
+) -> DataFrame:
+    """One grouped rung over the UNSAMPLED frame, with the sample as an
+    aggregate mask: every group in ``df`` gets a row, the ones the
+    sample missed with ``n_samples = 0``. ``spec`` must be a
+    deterministic design."""
+    mask, p = sample_predicate_sql(spec)
+    full = df.withColumn(P_COL, F.expr(p))
+    return approx_aggregate(full, agg, group_by=group_by, z=z, mask=mask)
 
 
 def adaptive_grouped_aggregate(
@@ -90,20 +108,14 @@ def adaptive_grouped_aggregate(
     # "converged" result. For every DETERMINISTIC design the guard rides
     # the rung job itself: the grouped moments run over the UNSAMPLED
     # frame with the sample predicate as an aggregate MASK
-    # (sampling.sampling_mask → estimators.approx_aggregate(mask=...)),
+    # (sampling.sample_predicate_sql → estimators.approx_aggregate(mask=...)),
     # so every group in the data appears — missed ones with
     # n_samples = 0, which fails the min_samples check. Identical
     # estimates (NULL-skipping aggregates), one scan per rung, and no
     # standalone distinct-count job. Only ``bernoulli`` — whose
     # membership lives in Spark's sampler state, not a row expression —
     # keeps the up-front column-pruned distinct count.
-    from approximatequeryengine_spark.plans.sampling import (
-        MASKABLE_DESIGNS,
-        P_COL,
-        sampling_mask,
-    )
-
-    masked = spec.design in MASKABLE_DESIGNS
+    masked = spec.design != "bernoulli"
     n_groups = (
         None if masked else df.select(*group_by).distinct().count()
     )
@@ -113,9 +125,7 @@ def adaptive_grouped_aggregate(
         iterations += 1
         cur = replace(spec, fraction=fraction)
         if masked:
-            mask, p = sampling_mask(cur)
-            full = df.withColumn(P_COL, p)
-            rdf = approx_aggregate(full, agg, group_by=group_by, z=z, mask=mask)
+            rdf = masked_rung(df, agg, group_by, cur, z)
         else:
             rdf = approx_aggregate(
                 apply_sampling(df, cur), agg, group_by=group_by, z=z

@@ -20,21 +20,37 @@ the in-between that dominates both at scale:
   O(blocks) ≈ KBs regardless of data size.
 - **query**: blocks FULLY covered by ``[lo, hi]`` are answered from
   the precomputed table (a bounded O(blocks) readout, no data scan at
-  all). Only the ≤ 2 PARTIALLY covered boundary slivers touch the base
-  table, and those through the engine's deterministic uniform-hash
+  all). Only rows of the ≤ 2 PARTIALLY covered boundary slivers enter
+  the estimate, through the engine's deterministic uniform-hash
   sample (`plans/sampling.py`), HT-scaled with the standard CI. The
   CI's variance comes from the boundary alone — for a range spanning
   many blocks the interior dominates the answer and the CI collapses
   toward zero, at the SAME sample cost a pure-sampling plan spends for
   a CI that must cover the whole range.
 
-At 100 TB: the query plan never scans the interior (the dominant mass)
-— it reads the KB-sized block table plus ``fraction`` of the two
-boundary slivers, with every predicate (range, NOT-interior, hash
-threshold) a pushable row expression inside whole-stage codegen. The
-block table is mergeable under ingest (per-block sums add), so the
-index maintains incrementally like the engine's other persisted
+What a probe reads: the interior comes from the handle's block
+aggregates on the driver — no Spark read of the block table. The
+boundary is one filtered scan of the base table: every predicate
+(range, NOT-interior, hash threshold) is a row expression inside
+whole-stage codegen, but whether the scan skips the interior depends
+on the key. A plain column key hands the range to the Parquet reader,
+whose row-group statistics skip what lies outside it (when the data is
+clustered by the key); an expression key such as ``datediff(...)`` pushes
+nothing down, so the probe reads the key, value and row-key columns of
+the WHOLE table and keeps ``fraction`` of the slivers. A
+block-partitioned boundary store would read only the two boundary
+blocks, but measured on sf0.1 ``orders`` it saved 0.04 s per probe
+while the build went from 0.79 to 1.71 s — so the layout stays. An
+empty or block-aligned range has no boundary and runs no Spark job.
+The block table is mergeable under ingest (per-block sums add), so
+the index maintains incrementally like the engine's other persisted
 synopses.
+
+Plans are built from Spark SQL text (``filter(str)``, ``selectExpr``,
+``F.expr``): one parse call per step instead of a py4j round trip per
+Column node (an engine probe: ~1,000 round trips as Columns, ~37 as
+text). Constants are written ``CAST(v AS DOUBLE)`` — the typing of
+``F.lit(float)`` — so the parsed expressions are the Column path's.
 
 Determinism contract (what makes the DuckDB oracle possible): integer
 block arithmetic, integer-cents block sums, the portable sampling hash,
@@ -55,10 +71,11 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
     fraction_threshold,
-    portable_hash_col,
     portable_hash_sql,
 )
-from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin
+from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin_sql
+from approximatequeryengine_spark.plans.sampling import sql_double
+from approximatequeryengine_spark.session import local_frame
 from approximatequeryengine_spark.sources.arrow_write import write_single_parquet
 from approximatequeryengine_spark.sources.swap import read_synopsis
 
@@ -95,23 +112,30 @@ def _block_rows(rows) -> tuple[tuple[int, int, int], ...]:
     ))
 
 
+def _long(expr: Column | str, name: str) -> Column:
+    """``expr`` — a Column or Spark SQL text — as a BIGINT column named
+    ``name``. Text is one parse call; a Column tree costs a py4j round
+    trip per node."""
+    if isinstance(expr, str):
+        return F.expr(f"CAST(({expr}) AS BIGINT) AS {name}")
+    return expr.cast("long").alias(name)
+
+
 def aqpplus_build(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    key: Column,
-    value_cents: Column,
+    key: Column | str,
+    value_cents: Column | str,
     n_blocks: int = 64,
 ) -> AqpplusIndex:
     """Persist the block-aggregate table + meta and return the index's
-    handle. ``key`` must be an integer-valued Column (dates via datediff
-    upstream); ``value_cents`` an integer-cents Column so block sums are
-    exact BIGINTs. The block rows reach the driver as an observed metric
-    of the write job itself, so the handle costs no read-back."""
-    base = df.select(
-        key.cast("long").alias("__key"),
-        value_cents.cast("long").alias("__cents"),
-    )
+    handle. ``key`` must be integer-valued (dates via datediff
+    upstream); ``value_cents`` integer cents so block sums are exact
+    BIGINTs — each a Column or Spark SQL text. The block rows reach the
+    driver as an observed metric of the write job itself, so the handle
+    costs no read-back."""
+    base = df.select(_long(key, "__key"), _long(value_cents, "__cents"))
     mn, mx = base.agg(F.min("__key"), F.max("__key")).collect()[0]
     if mn is None:
         raise ValueError("aqpplus_build: no non-null keys")
@@ -145,70 +169,103 @@ def _interior_block_range(mn: int, width: int, lo: int, hi: int) -> tuple[int, i
     return b_lo, b_hi
 
 
+def _boundary_sql(mn: int, width: int, lo: int, hi: int) -> str | None:
+    """The boundary slivers — ``[lo, hi]`` minus the key span of the
+    interior blocks — as a predicate on ``__k``; ``None`` when they are
+    empty (an empty or block-aligned range)."""
+    if lo > hi:
+        return None
+    inside = f"__k BETWEEN {lo} AND {hi}"
+    b_lo, b_hi = _interior_block_range(mn, width, lo, hi)
+    if b_lo > b_hi:
+        return inside
+    int_lo, int_hi = mn + b_lo * width, mn + (b_hi + 1) * width - 1
+    if (int_lo, int_hi) == (lo, hi):
+        return None
+    return f"{inside} AND NOT (__k BETWEEN {int_lo} AND {int_hi})"
+
+
+# The boundary sample's HT moments: exactly-summed integer cents plus
+# the double second moment.
+_MOMENTS = (
+    "CAST(count(1) AS BIGINT) AS n",
+    "CAST(coalesce(sum(__cents), 0) AS BIGINT) AS s1",
+    f"coalesce(sum(CAST(__cents AS DOUBLE) * __cents), {sql_double(0.0)}) AS s2",
+)
+
+
+def _sampled_boundary(
+    df: DataFrame,
+    cols: list[Column],
+    boundary: str,
+    fraction: float,
+    salt: int,
+) -> DataFrame:
+    """The base rows projected to ``cols`` (which name ``__k`` and
+    ``__rk``), kept on the boundary slivers and in the hash sample."""
+    h = portable_hash_sql("__rk", salt)
+    return df.select(*cols).filter(
+        f"{boundary} AND {h} < {fraction_threshold(fraction)}"
+    )
+
+
+def _ci_sql(icents: str, fraction: float, z: float) -> list[str]:
+    """Estimate and CI in dollars from the interior cents ``icents`` and
+    the boundary moments: HT with CONSTANT p, the float constants
+    applied once to exactly-summed integer moments (determinism
+    contract above)."""
+    est = f"({icents} + s1 * {sql_double(1.0 / fraction)}) / {sql_double(100.0)}"
+    vconst = (1.0 - fraction) / (fraction * fraction) / 10000.0
+    margin = ht_integer_margin_sql("n", f"s2 * {sql_double(vconst)}", z)
+    return [
+        f"round({est}, 2) AS sum_value",
+        f"round({est} - {margin}, 2) AS ci_lower",
+        f"round({est} + {margin}, 2) AS ci_upper",
+    ]
+
+
 def aqpplus_range_sum(
     spark: SparkSession,
     df: DataFrame,
     index: AqpplusIndex | str,
     lo: int,
     hi: int,
-    key: Column,
-    value_cents: Column,
-    row_key: Column,
+    key: Column | str,
+    value_cents: Column | str,
+    row_key: Column | str,
     fraction: float = 0.1,
     salt: int = 0,
     z: float = Z_95,
 ) -> DataFrame:
     """Range SUM via exact interior + sampled boundary: one row
     ``(sum_value, ci_lower, ci_upper, n_samples, interior_rows,
-    blocks_interior)`` in dollars (cents/100, rounded 2).
+    blocks_interior)`` in dollars (cents/100, rounded 2). ``key``,
+    ``value_cents`` and ``row_key`` are Columns or Spark SQL text.
 
     The interior readout sums the handle's block aggregates on the
-    driver (a path is loaded first); the base table is scanned only on
+    driver (a path is loaded first); the base table is scanned only for
     the boundary slivers, through the deterministic hash sample — the
-    probe's one Spark query."""
+    probe's one Spark query. An empty or block-aligned range has no
+    boundary and runs no Spark job: its zero moments go through the
+    same CI projection over a local frame."""
     if isinstance(index, str):
         index = aqpplus_load(spark, index)
-    mn, width = index.mn, index.width
-    b_lo, b_hi = _interior_block_range(mn, width, lo, hi)
+    b_lo, b_hi = _interior_block_range(index.mn, index.width, lo, hi)
     interior = [r for r in index.blocks if b_lo <= r[0] <= b_hi]
-    interior_cents = sum(r[2] for r in interior)
-    interior_rows = sum(r[1] for r in interior)
-    blocks_interior = len(interior)
-
-    k = key.cast("long")
-    boundary = F.col("__k").between(F.lit(lo), F.lit(hi))
-    if b_lo <= b_hi:
-        int_lo = mn + b_lo * width
-        int_hi = mn + (b_hi + 1) * width - 1
-        boundary = boundary & ~F.col("__k").between(F.lit(int_lo), F.lit(int_hi))
-
-    base = df.select(
-        k.alias("__k"),
-        value_cents.cast("long").alias("__cents"),
-        row_key.cast("long").alias("__rk"),
-    ).filter(boundary)
-    thr = fraction_threshold(fraction)
-    sampled = base.filter(portable_hash_col(F.col("__rk"), salt=salt) < F.lit(thr))
-
-    m = sampled.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(F.sum("__cents"), F.lit(0)).cast("long").alias("s1"),
-        F.coalesce(F.sum(F.col("__cents").cast("double") * F.col("__cents")), F.lit(0.0)).alias("s2"),
-    )
-    inv_f = 1.0 / fraction
-    # HT estimate/variance with CONSTANT p: float constants applied once
-    # to exactly-summed integer moments (determinism contract above).
-    est_cents = F.lit(float(interior_cents)) + F.col("s1") * F.lit(inv_f)
-    vht_d = F.col("s2") * F.lit((1.0 - fraction) / (fraction * fraction) / 10000.0)
-    margin_d = ht_integer_margin(F.col("n"), vht_d, z)
-    est_d = F.round(est_cents / F.lit(100.0), 2)
-    return m.select(
-        est_d.alias("sum_value"),
-        F.round(est_cents / F.lit(100.0) - margin_d, 2).alias("ci_lower"),
-        F.round(est_cents / F.lit(100.0) + margin_d, 2).alias("ci_upper"),
-        F.col("n").alias("n_samples"),
-        F.lit(interior_rows).cast("long").alias("interior_rows"),
-        F.lit(blocks_interior).cast("long").alias("blocks_interior"),
+    boundary = _boundary_sql(index.mn, index.width, lo, hi)
+    if boundary is None:
+        m = local_frame(
+            spark, [(0, 0, 0.0)], "n BIGINT NOT NULL, s1 BIGINT NOT NULL, s2 DOUBLE NOT NULL"
+        )
+    else:
+        cols = [_long(key, "__k"), _long(value_cents, "__cents"), _long(row_key, "__rk")]
+        m = _sampled_boundary(df, cols, boundary, fraction, salt).selectExpr(*_MOMENTS)
+    icents = sql_double(sum(r[2] for r in interior))
+    return m.selectExpr(
+        *_ci_sql(icents, fraction, z),
+        "n AS n_samples",
+        f"CAST({sum(r[1] for r in interior)} AS BIGINT) AS interior_rows",
+        f"CAST({len(interior)} AS BIGINT) AS blocks_interior",
     )
 
 
@@ -290,8 +347,8 @@ def aqpplus_grouped_build(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    key: Column,
-    value_cents: Column,
+    key: Column | str,
+    value_cents: Column | str,
     group: str,
     n_blocks: int = 64,
 ) -> None:
@@ -299,9 +356,7 @@ def aqpplus_grouped_build(
     the precomputation behind dashboard-style 'range rollup by
     category' queries. Size O(blocks × |groups|), still KBs."""
     base = df.select(
-        key.cast("long").alias("__key"),
-        value_cents.cast("long").alias("__cents"),
-        F.col(group).alias("__grp"),
+        _long(key, "__key"), _long(value_cents, "__cents"), F.col(group).alias("__grp")
     )
     mn, mx = base.agg(F.min("__key"), F.max("__key")).collect()[0]
     if mn is None:
@@ -328,8 +383,8 @@ def aqpplus_grouped_append(
     spark: SparkSession,
     df_batch: DataFrame,
     path: str,
-    key: Column,
-    value_cents: Column,
+    key: Column | str,
+    value_cents: Column | str,
     group: str,
 ) -> None:
     """Incremental maintenance: block aggregates are ADDITIVE, and the
@@ -342,9 +397,7 @@ def aqpplus_grouped_append(
     mn, width = int(mrow["mn"]), int(mrow["width"])
     batch = (
         df_batch.select(
-            key.cast("long").alias("__key"),
-            value_cents.cast("long").alias("__cents"),
-            F.col(group).alias("__grp"),
+            _long(key, "__key"), _long(value_cents, "__cents"), F.col(group).alias("__grp")
         )
         .withColumn(
             "block", F.floor((F.col("__key") - F.lit(mn)) / F.lit(width)).cast("long")
@@ -385,10 +438,10 @@ def aqpplus_grouped_range_sum(
     path: str,
     lo: int,
     hi: int,
-    key: Column,
-    value_cents: Column,
+    key: Column | str,
+    value_cents: Column | str,
     group: str,
-    row_key: Column,
+    row_key: Column | str,
     fraction: float = 0.1,
     salt: int = 0,
     z: float = Z_95,
@@ -407,70 +460,38 @@ def aqpplus_grouped_range_sum(
     # distinct groups equal the base table's): a group with no interior
     # rows and no sampled boundary rows must still surface with a 0.0
     # estimate, exactly as the oracle's DISTINCT-groups LEFT JOIN does.
-    all_groups = blocks.select("__grp").distinct()
-    if b_lo <= b_hi:
-        interior_agg = (
-            blocks.filter(F.col("block").between(b_lo, b_hi))
-            .groupBy("__grp")
-            .agg(
-                F.sum("sum_cents").cast("long").alias("icents"),
-                F.sum("n_rows").cast("long").alias("irows"),
-            )
-        )
-        interior = all_groups.join(interior_agg, on="__grp", how="left").select(
-            "__grp",
-            F.coalesce(F.col("icents"), F.lit(0)).cast("long").alias("icents"),
-            F.coalesce(F.col("irows"), F.lit(0)).cast("long").alias("irows"),
-        )
-    else:
-        interior = all_groups.select(
-            "__grp",
-            F.lit(0).cast("long").alias("icents"),
-            F.lit(0).cast("long").alias("irows"),
-        )
+    # An empty interior keeps the block filter: it selects no row.
+    interior = (
+        blocks.filter(f"block BETWEEN {b_lo} AND {b_hi}")
+        .groupBy("__grp")
+        .agg(F.expr("sum(sum_cents) AS icents"), F.expr("sum(n_rows) AS irows"))
+    )
+    interior = blocks.select("__grp").distinct().join(interior, on="__grp", how="left")
 
-    k = key.cast("long")
-    boundary = F.col("__k").between(F.lit(lo), F.lit(hi))
-    if b_lo <= b_hi:
-        int_lo = mn + b_lo * width
-        int_hi = mn + (b_hi + 1) * width - 1
-        boundary = boundary & ~F.col("__k").between(F.lit(int_lo), F.lit(int_hi))
-
-    base = df.select(
-        k.alias("__k"),
-        value_cents.cast("long").alias("__cents"),
+    boundary = _boundary_sql(mn, width, lo, hi) or "FALSE"
+    cols = [
+        _long(key, "__k"),
+        _long(value_cents, "__cents"),
         F.col(group).alias("__grp"),
-        row_key.cast("long").alias("__rk"),
-    ).filter(boundary)
-    thr = fraction_threshold(fraction)
-    sampled = base.filter(portable_hash_col(F.col("__rk"), salt=salt) < F.lit(thr))
-    m = sampled.groupBy("__grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(F.sum("__cents"), F.lit(0)).cast("long").alias("s1"),
-        F.coalesce(
-            F.sum(F.col("__cents").cast("double") * F.col("__cents")), F.lit(0.0)
-        ).alias("s2"),
+        _long(row_key, "__rk"),
+    ]
+    m = (
+        _sampled_boundary(df, cols, boundary, fraction, salt)
+        .groupBy("__grp")
+        .agg(*[F.expr(e) for e in _MOMENTS])
     )
-
-    joined = interior.join(m, on="__grp", how="full").select(
-        F.col("__grp"),
-        F.coalesce(F.col("icents"), F.lit(0)).alias("icents"),
-        F.coalesce(F.col("irows"), F.lit(0)).alias("irows"),
-        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-        F.coalesce(F.col("s1"), F.lit(0)).alias("s1"),
-        F.coalesce(F.col("s2"), F.lit(0.0)).alias("s2"),
-    )
-    inv_f = 1.0 / fraction
-    est_cents = F.col("icents").cast("double") + F.col("s1") * F.lit(inv_f)
-    vht_d = F.col("s2") * F.lit((1.0 - fraction) / (fraction * fraction) / 10000.0)
-    margin_d = ht_integer_margin(F.col("n"), vht_d, z)
-    return joined.select(
-        F.col("__grp").alias("grp"),
-        F.round(est_cents / F.lit(100.0), 2).alias("sum_value"),
-        F.round(est_cents / F.lit(100.0) - margin_d, 2).alias("ci_lower"),
-        F.round(est_cents / F.lit(100.0) + margin_d, 2).alias("ci_upper"),
-        F.col("n").cast("long").alias("n_samples"),
-        F.col("irows").cast("long").alias("interior_rows"),
+    return interior.join(m, on="__grp", how="full").selectExpr(
+        "__grp",
+        "CAST(coalesce(icents, 0) AS BIGINT) AS icents",
+        "CAST(coalesce(irows, 0) AS BIGINT) AS irows",
+        "coalesce(n, 0) AS n",
+        "coalesce(s1, 0) AS s1",
+        f"coalesce(s2, {sql_double(0.0)}) AS s2",
+    ).selectExpr(
+        "__grp AS grp",
+        *_ci_sql("CAST(icents AS DOUBLE)", fraction, z),
+        "CAST(n AS BIGINT) AS n_samples",
+        "CAST(irows AS BIGINT) AS interior_rows",
     )
 
 

@@ -33,7 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.plans.sampling import P_COL
+from approximatequeryengine_spark.plans.sampling import P_COL, sql_double
 
 Z_95 = 1.959963984540054  # two-sided 95% normal quantile
 
@@ -69,17 +69,34 @@ def finite_sql(expr: str) -> str:
     )
 
 
-def ht_integer_margin(n: Column, vht: Column, z: float = Z_95) -> Column:
-    """The engine's SUM-margin convention as one shared expression:
-    ``z·√vht`` in the OUTPUT's units, gated to 0 for n < 2, and
-    rounded to a whole unit with a floor of 1 when positive (see
-    ``_ci_columns`` for the boundary-noise rationale). Used by every
-    cents-grid HT estimator outside this module (AQP++, Sample+Seek,
-    wander join) so the ritual cannot drift per copy — each caller's
-    oracle renders the identical CASE/round/greatest chain."""
-    m = F.lit(z) * F.sqrt(F.greatest(vht, F.lit(0.0)))
-    m = F.when(n >= F.lit(2), m).otherwise(F.lit(0.0))
-    return F.when(m > 0, F.greatest(F.round(m, 0), F.lit(1.0))).otherwise(F.lit(0.0))
+D0 = sql_double(0.0)
+D1 = sql_double(1.0)
+
+
+def _gated_margin_sql(n: str, margin: str, integer: bool = True) -> str:
+    """``_ci_columns``' margin chain as Spark SQL: 0 for n < 2, and for
+    SUM/COUNT rounded to a whole unit with a floor of 1 when positive."""
+    m = f"(CASE WHEN {n} >= 2 THEN {margin} ELSE {D0} END)"
+    if integer:
+        m = f"(CASE WHEN {m} > 0 THEN greatest(round({m}, 0), {D1}) ELSE {D0} END)"
+    return m
+
+
+def ht_integer_margin_sql(n: str, vht: str, z: float = Z_95) -> str:
+    """The engine's SUM-margin convention as one shared Spark SQL
+    expression over the SQL texts ``n`` and ``vht``: ``z·√vht`` in the
+    OUTPUT's units, gated to 0 for n < 2, and rounded to a whole unit
+    with a floor of 1 when positive (see ``_ci_columns`` for the
+    boundary-noise rationale). Used by every cents-grid HT estimator
+    (AQP++, Sample+Seek, wander join, two-stage, outlier index) so the
+    ritual cannot drift per copy — each caller's DuckDB oracle renders
+    the identical CASE/round/greatest chain on its own."""
+    return _gated_margin_sql(n, f"({sql_double(z)} * sqrt(greatest({vht}, {D0})))")
+
+
+def ht_integer_margin(n: str, vht: str, z: float = Z_95) -> Column:
+    """:func:`ht_integer_margin_sql` as a Column."""
+    return F.expr(ht_integer_margin_sql(n, vht, z))
 
 
 @dataclass
@@ -142,36 +159,37 @@ def _sql_approx_aggregate(
     group_by: list[str],
     z: float,
     with_ci: bool,
+    mask: str | None = None,
 ) -> DataFrame:
-    """String-expression twin of the Column path below for the common
-    (un-masked, sum/avg/count) case: the same moments, estimate and
-    margin formulas rendered as Spark SQL text. The Column construction
-    is ~200 py4j round trips per query build (measured ~0.15-0.25 s of
-    driver wall per approximate entry); this path is ~15. The parsed
-    expressions are identical — ``DOUBLE`` casts are written wherever
-    the Column path has a double ``F.lit``, so no decimal-literal
-    typing can creep in. Guide §4: the Python boundary includes the
-    driver's own chatter."""
-    D0 = "CAST(0.0 AS DOUBLE)"
-    D1 = "CAST(1.0 AS DOUBLE)"
+    """The sum/avg/count estimator — HT moments, estimate and margin —
+    rendered as Spark SQL text. Built as Column trees it cost ~200 py4j
+    round trips per query build (measured ~0.15-0.25 s of driver wall
+    per approximate entry); as text it is ~15. Every constant is
+    written ``CAST(v AS DOUBLE)`` (``F.lit(float)`` typing), so no
+    decimal-literal typing can creep in. With ``mask``, every moment's
+    argument is wrapped in ``CASE WHEN mask THEN … END``."""
+
+    def m(e: str) -> str:
+        return f"(CASE WHEN {mask} THEN {e} END)" if mask else e
+
     x = f"CAST(({agg.column}) AS DOUBLE)" if agg.column else D1
     p = P_COL
     moments = [
-        f"COUNT({x}) AS __n",
-        f"SUM({x}) AS __s1",
-        f"SUM({x} * {x}) AS __s2",
-        f"SUM({x} * ({D1} / {p})) AS __ht_sum",
-        f"SUM({D1} / {p}) AS __ht_n",
-        f"SUM((({x} * {x}) * ({D1} - {p})) / ({p} * {p})) AS __vht",
-        f"AVG({p}) AS __p_avg",
+        f"COUNT({m(x)}) AS __n",
+        f"SUM({m(x)}) AS __s1",
+        f"SUM({m(f'{x} * {x}')}) AS __s2",
+        f"SUM({m(f'{x} * ({D1} / {p})')}) AS __ht_sum",
+        f"SUM({m(f'{D1} / {p}')}) AS __ht_n",
+        f"SUM({m(f'(({x} * {x}) * ({D1} - {p})) / ({p} * {p})')}) AS __vht",
+        f"AVG({m(p)}) AS __p_avg",
     ]
-    m = sampled.groupBy(*group_by).agg(*[F.expr(e) for e in moments])
+    mo = sampled.groupBy(*group_by).agg(*[F.expr(e) for e in moments])
 
     var = (
         "CASE WHEN __n >= 2 THEN greatest((__s2 - __s1 * __s1 / __n) "
         f"/ (__n - {D1}), {D0}) ELSE {D0} END"
     )
-    zs = f"CAST({z!r} AS DOUBLE)"
+    zs = sql_double(z)
     func = agg.func.lower()
     if func == "avg":
         est = "(__ht_sum / __ht_n)"
@@ -183,12 +201,7 @@ def _sql_approx_aggregate(
         est = "__ht_n"
         margin = f"(({zs} * sqrt(__n * ({D1} - __p_avg))) / __p_avg)"
     # n<2 gate + integer margin for SUM/COUNT — _ci_columns' exact chain.
-    margin = f"(CASE WHEN __n >= 2 THEN {margin} ELSE {D0} END)"
-    if func != "avg":
-        margin = (
-            f"(CASE WHEN {margin} > 0 THEN greatest(round({margin}, 0), {D1}) "
-            f"ELSE {D0} END)"
-        )
+    margin = _gated_margin_sql("__n", margin, integer=func != "avg")
     sel = list(group_by)
     if with_ci:
         sel += [
@@ -199,7 +212,7 @@ def _sql_approx_aggregate(
     else:
         sel.append(f"{est} AS `{agg.name()}`")
     sel.append("CAST(__n AS BIGINT) AS n_samples")
-    return m.selectExpr(*sel)
+    return mo.selectExpr(*sel)
 
 
 def approx_aggregate(
@@ -208,7 +221,7 @@ def approx_aggregate(
     group_by: list[str] | None = None,
     z: float = Z_95,
     with_ci: bool = True,
-    mask: Column | None = None,
+    mask: str | None = None,
 ) -> DataFrame:
     """Aggregate a sampled DataFrame (must carry ``__p`` from
     ``apply_sampling``) into estimates with confidence intervals.
@@ -216,8 +229,8 @@ def approx_aggregate(
     Output columns: ``[*group_by, <alias>, ci_lower, ci_upper,
     n_samples]`` (CI columns only when ``with_ci``).
 
-    ``mask``: when given, ``sampled`` is the UNSAMPLED frame (plus a
-    constant ``__p``) and the boolean column selects the in-sample rows
+    ``mask``: when given, ``sampled`` is the UNSAMPLED frame (plus
+    ``__p``) and the boolean SQL predicate selects the in-sample rows
     — every moment wraps its argument in ``CASE WHEN mask`` (NULLs are
     skipped by all aggregate functions, so values match the filtered
     path exactly), while grouping still sees EVERY group in the data.
@@ -226,92 +239,40 @@ def approx_aggregate(
     on this to fold its missed-group guard into the rung job itself.
     """
     group_by = group_by or []
-    if mask is None and agg.func.lower() in ("sum", "avg", "count"):
-        return _sql_approx_aggregate(sampled, agg, group_by, z, with_ci)
+    if agg.func.lower() in ("sum", "avg", "count"):
+        return _sql_approx_aggregate(sampled, agg, group_by, z, with_ci, mask)
+    func = agg.func.lower()
+    if func not in ("min", "max"):
+        raise ValueError(f"unsupported aggregate {agg.func!r}")
+    # A sampled extremum is biased toward the interior; no CLT CI exists
+    # for it. Over the FULL data (design 'none', every __p == 1) the
+    # value is exact → zero-width CI is honest; over a real sample emit
+    # NULL bounds instead of false certainty (mirrors
+    # approx_multi_aggregate's rejection).
     # F.expr: the measure may be an expression (e.g. price * discount),
     # not just a column name.
     x = F.expr(agg.column).cast("double") if agg.column else F.lit(1.0)
     p = F.col(P_COL)
-    w = F.lit(1.0) / p
     if mask is not None:
-        x = F.when(mask, x)
-        p = F.when(mask, p)
-        w = F.when(mask, w)
-
-    func = agg.func.lower()
-    moments = [
-        F.count(x).alias("__n"),
-        F.sum(x).alias("__s1"),
-        F.sum(x * x).alias("__s2"),
-        F.sum(x * w).alias("__ht_sum"),
-        F.sum(w).alias("__ht_n"),
-        # HT variance moment: Σ x²(1−p)/p², the unbiased variance
-        # estimator of Σ(x/p) under independent per-row inclusion.
-        F.sum(x * x * (F.lit(1.0) - p) / (p * p)).alias("__vht"),
-        F.avg(p).alias("__p_avg"),
-    ]
-    if func in ("min", "max"):
-        # Extremum moments are opt-in: only MIN/MAX consume them, and
-        # paying three extra aggregate buffers on every SUM/AVG/COUNT
-        # estimate is measurable at bench scale.
-        moments += [
-            F.min(p).alias("__p_min"),
-            F.min(x).alias("__min"),
-            F.max(x).alias("__max"),
-        ]
-    g = sampled.groupBy(*[F.col(c) for c in group_by])
-    m = g.agg(*moments)
-
-    n = F.col("__n")
-    s1 = F.col("__s1")
-    s2 = F.col("__s2")
-    mean = s1 / n
-    # Sample variance via the single-pass moment identity; guarded for n<2.
-    var = F.when(n >= 2, (s2 - s1 * s1 / n) / (n - F.lit(1.0))).otherwise(F.lit(0.0))
-    var = F.greatest(var, F.lit(0.0))  # numeric noise can drive it < 0
-    se = F.sqrt(var / n)
-
-    if func == "avg":
-        # Weighted mean Σ(x/p)/Σ(1/p); equals the plain sample mean for
-        # constant p (reference semantics: AVG never scaled).
-        est = F.col("__ht_sum") / F.col("__ht_n")
-        margin = F.lit(z) * se
-    elif func == "sum":
-        est = F.col("__ht_sum")
-        # z · √(HT variance) — see module docstring (quirk Q8).
-        margin = F.lit(z) * F.sqrt(F.greatest(F.col("__vht"), F.lit(0.0)))
-    elif func == "count":
-        est = F.col("__ht_n")
-        pbar = F.col("__p_avg")
-        margin = F.lit(z) * F.sqrt(n * (F.lit(1.0) - pbar)) / pbar
-    elif func in ("min", "max"):
-        # A sampled extremum is biased toward the interior; no CLT CI
-        # exists for it. Over the FULL data (design 'none', every
-        # __p == 1) the value is exact → zero-width CI is honest;
-        # over a real sample emit NULL bounds instead of false
-        # certainty (mirrors approx_multi_aggregate's rejection).
-        est = F.col("__min") if func == "min" else F.col("__max")
-        exact = F.col("__p_min") >= F.lit(1.0)
-        cols: list[Column] = [F.col(c) for c in group_by]
-        if with_ci:
-            cols += [
-                est.alias(agg.name()),
-                F.when(exact, est).otherwise(F.lit(None)).alias("ci_lower"),
-                F.when(exact, est).otherwise(F.lit(None)).alias("ci_upper"),
-            ]
-        else:
-            cols.append(est.alias(agg.name()))
-        cols.append(n.cast("long").alias("n_samples"))
-        return m.select(*cols)
-    else:
-        raise ValueError(f"unsupported aggregate {agg.func!r}")
-
-    cols = [F.col(c) for c in group_by]
+        in_sample = F.expr(mask)
+        x = F.when(in_sample, x)
+        p = F.when(in_sample, p)
+    extremum = F.min(x) if func == "min" else F.max(x)
+    m = sampled.groupBy(*[F.col(c) for c in group_by]).agg(
+        F.count(x).alias("__n"), F.min(p).alias("__p_min"), extremum.alias("__ext")
+    )
+    est = F.col("__ext")
+    exact = F.col("__p_min") >= F.lit(1.0)
+    cols: list[Column] = [F.col(c) for c in group_by]
     if with_ci:
-        cols += _ci_columns(est, margin, n, agg.name(), integer_margin=func != "avg")
+        cols += [
+            est.alias(agg.name()),
+            F.when(exact, est).otherwise(F.lit(None)).alias("ci_lower"),
+            F.when(exact, est).otherwise(F.lit(None)).alias("ci_upper"),
+        ]
     else:
         cols.append(est.alias(agg.name()))
-    cols.append(n.cast("long").alias("n_samples"))
+    cols.append(F.col("__n").cast("long").alias("n_samples"))
     return m.select(*cols)
 
 

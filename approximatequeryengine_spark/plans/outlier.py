@@ -32,17 +32,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.functions.hashing import (
-    fraction_threshold,
-    portable_hash_col,
+from approximatequeryengine_spark.plans.estimators import (
+    D0,
+    Z_95,
+    ht_integer_margin_sql,
 )
-from approximatequeryengine_spark.plans.estimators import Z_95, _ci_columns
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
+    sample_predicate_sql,
     sampling_where_sql,
+    sql_double,
 )
 
 N_OUTLIERS = 100
+
+
+def _moments_sql(x: str, t: str, key: str, fraction: float, salt: int) -> list[str]:
+    """The one conditional aggregate over rows with a non-NULL ``x``:
+    the exact outlier stratum (``x > t``) and the HT moments of the
+    hash-sampled remainder, as Spark SQL text."""
+    in_sample, _ = sample_predicate_sql(
+        SamplingSpec(design="uniform_hash", fraction=fraction, key=key, salt=salt)
+    )
+    is_out = f"({x} > {t})"
+    is_rest = f"(NOT {is_out} AND {in_sample})"
+    p = float(fraction)
+    return [
+        f"coalesce(sum(CASE WHEN {is_out} THEN {x} END), {D0}) AS outlier_sum",
+        f"sum(CAST({is_out} AS BIGINT)) AS n_outliers",
+        f"sum(CAST({is_rest} AS BIGINT)) AS n",
+        f"sum(CASE WHEN {is_rest} THEN {x} / {sql_double(p)} END) AS ht_sum",
+        f"sum(CASE WHEN {is_rest} THEN {x} * {x} * {sql_double((1.0 - p) / (p * p))} END)"
+        " AS vht",
+    ]
+
+
+def _estimate_sql(z: float) -> list[str]:
+    """Exact outlier stratum + HT remainder with the integer-margin
+    convention of ``_ci_columns``."""
+    rest = f"coalesce(ht_sum, {D0})"
+    margin = ht_integer_margin_sql("n", "vht", z)
+    return [
+        f"round(outlier_sum + {rest}, 2) AS estimate",
+        f"round(outlier_sum + ({rest} - {margin}), 2) AS ci_lower",
+        f"round(outlier_sum + ({rest} + {margin}), 2) AS ci_upper",
+        "CAST(n AS BIGINT) AS n_samples",
+        "n_outliers",
+        "round(outlier_sum, 2) AS outlier_sum",
+    ]
 
 
 def outlier_sum_ci(
@@ -57,50 +94,23 @@ def outlier_sum_ci(
     """1-row DataFrame: (estimate, ci_lower, ci_upper, n_samples,
     n_outliers, outlier_sum) for SUM(column) = exact outlier stratum +
     HT-estimated remainder; the CI reflects only the sampled part's
-    uncertainty (the outlier stratum is exact)."""
-    x = F.col(column).cast("double")
-    base = df.filter(x.isNotNull())
+    uncertainty (the outlier stratum is exact). ``column`` and ``key``
+    are Spark SQL text; the plan is built from text (one parse call per
+    step, not a py4j round trip per Column node)."""
+    x = f"CAST(({column}) AS DOUBLE)"
+    base = df.filter(f"{x} IS NOT NULL")
     trow = (
-        base.select(x.alias("x"))
+        base.selectExpr(f"{x} AS x")
         .orderBy(F.desc("x"))
         .limit(n_outliers)
-        .agg(F.min("x").alias("t"))
+        .selectExpr("min(x) AS t")
         .collect()[0]
     )
     if trow["t"] is None:
         raise ValueError("empty input; nothing to estimate")
-    t = float(trow["t"])
-    is_out = x > F.lit(t)
-    in_sample = portable_hash_col(F.expr(key).cast("long"), salt=salt) < F.lit(
-        fraction_threshold(fraction)
-    )
-    is_rest = ~is_out & in_sample
-    p = float(fraction)
-    m = base.agg(
-        F.coalesce(F.sum(F.when(is_out, x)), F.lit(0.0)).alias("outlier_sum"),
-        F.sum(is_out.cast("long")).alias("n_outliers"),
-        F.sum(is_rest.cast("long")).alias("n"),
-        F.sum(F.when(is_rest, x / F.lit(p))).alias("ht_sum"),
-        F.sum(
-            F.when(is_rest, x * x * F.lit((1.0 - p) / (p * p)))
-        ).alias("vht"),
-    )
-    rest_est = F.coalesce(F.col("ht_sum"), F.lit(0.0))
-    margin = F.lit(z) * F.sqrt(F.greatest(F.col("vht"), F.lit(0.0)))
-    rest_cols = _ci_columns(rest_est, margin, F.col("n"), "rest_sum")
-    staged = m.select(
-        F.col("outlier_sum"),
-        F.col("n_outliers"),
-        F.col("n"),
-        *rest_cols,
-    )
-    return staged.select(
-        F.round(F.col("outlier_sum") + F.col("rest_sum"), 2).alias("estimate"),
-        F.round(F.col("outlier_sum") + F.col("ci_lower"), 2).alias("ci_lower"),
-        F.round(F.col("outlier_sum") + F.col("ci_upper"), 2).alias("ci_upper"),
-        F.col("n").cast("long").alias("n_samples"),
-        F.col("n_outliers"),
-        F.round(F.col("outlier_sum"), 2).alias("outlier_sum"),
+    t = sql_double(trow["t"])
+    return base.selectExpr(*_moments_sql(x, t, key, fraction, salt)).selectExpr(
+        *_estimate_sql(z)
     )
 
 
@@ -180,13 +190,12 @@ def outlier_grouped_sum_ci(
     exact outlier stratum AND sampled-remainder HT moments in the same
     pass. Two scans, one slim shuffle, O(|groups|) driver-free state —
     no per-group TakeOrdered fan-out."""
-    x = F.col(column).cast("double")
-    g = F.col(group_col)
-    base = df.filter(x.isNotNull())
+    x = f"CAST(({column}) AS DOUBLE)"
+    base = df.filter(f"{x} IS NOT NULL")
     from pyspark.sql.window import Window
 
     thr = (
-        base.select(g.alias("__og"), x.alias("__ox"))
+        base.selectExpr(f"{group_col} AS __og", f"{x} AS __ox")
         .withColumn("__orn", F.row_number().over(
             Window.partitionBy("__og").orderBy(F.desc("__ox"))
         ))
@@ -197,40 +206,10 @@ def outlier_grouped_sum_ci(
     joined = base.join(
         F.broadcast(thr), base[group_col] == thr["__og"], "inner"
     )
-    is_out = x > F.col("__ot")
-    in_sample = portable_hash_col(F.expr(key).cast("long"), salt=salt) < F.lit(
-        fraction_threshold(fraction)
-    )
-    is_rest = ~is_out & in_sample
-    p = float(fraction)
     m = joined.groupBy(F.col("__og").alias("g")).agg(
-        F.coalesce(F.sum(F.when(is_out, x)), F.lit(0.0)).alias("outlier_sum"),
-        F.sum(is_out.cast("long")).alias("n_outliers"),
-        F.sum(is_rest.cast("long")).alias("n"),
-        F.sum(F.when(is_rest, x / F.lit(p))).alias("ht_sum"),
-        F.sum(
-            F.when(is_rest, x * x * F.lit((1.0 - p) / (p * p)))
-        ).alias("vht"),
+        *[F.expr(e) for e in _moments_sql(x, "__ot", key, fraction, salt)]
     )
-    rest_est = F.coalesce(F.col("ht_sum"), F.lit(0.0))
-    margin = F.lit(z) * F.sqrt(F.greatest(F.col("vht"), F.lit(0.0)))
-    rest_cols = _ci_columns(rest_est, margin, F.col("n"), "rest_sum")
-    staged = m.select(
-        F.col("g"),
-        F.col("outlier_sum"),
-        F.col("n_outliers"),
-        F.col("n"),
-        *rest_cols,
-    )
-    return staged.select(
-        F.col("g").alias(group_col),
-        F.round(F.col("outlier_sum") + F.col("rest_sum"), 2).alias("estimate"),
-        F.round(F.col("outlier_sum") + F.col("ci_lower"), 2).alias("ci_lower"),
-        F.round(F.col("outlier_sum") + F.col("ci_upper"), 2).alias("ci_upper"),
-        F.col("n").cast("long").alias("n_samples"),
-        F.col("n_outliers"),
-        F.round(F.col("outlier_sum"), 2).alias("outlier_sum"),
-    ).orderBy(group_col)
+    return m.selectExpr(f"g AS `{group_col}`", *_estimate_sql(z)).orderBy(group_col)
 
 
 def outlier_grouped_sum_ci_sql(

@@ -50,6 +50,7 @@ from approximatequeryengine_spark.functions.hashing import (
     portable_hash_sql,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin
+from approximatequeryengine_spark.plans.sampling import sql_double
 from approximatequeryengine_spark.sources.zonemap import ZonemapIndex, zonemap_load
 
 
@@ -102,8 +103,8 @@ def sample_seek_range_sum(
         ).alias("s2"),
     )
     est_cents = F.col("s1") * F.lit(1.0 / fraction)
-    vht_d = F.col("s2") * F.lit((1.0 - fraction) / (fraction * fraction) / 10000.0)
-    margin_d = ht_integer_margin(F.col("n"), vht_d, z)
+    vconst = (1.0 - fraction) / (fraction * fraction) / 10000.0
+    margin_d = ht_integer_margin("n", f"s2 * {sql_double(vconst)}", z)
     return m.select(
         F.round(est_cents / F.lit(100.0), 2).alias("sum_value"),
         F.round(est_cents / F.lit(100.0) - margin_d, 2).alias("ci_lower"),

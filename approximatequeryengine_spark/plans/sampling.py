@@ -32,14 +32,13 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from decimal import Decimal
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
-    HASH_SPACE,
     fraction_threshold,
-    portable_hash_col,
     portable_hash_sql,
 )
 
@@ -73,53 +72,56 @@ class SamplingSpec:
         return max(1, int(round(1.0 / self.fraction)))
 
 
-def _key_col(spec: SamplingSpec) -> Column:
-    return F.expr(spec.key).cast("long")
+def sql_double(v: float) -> str:
+    """A DOUBLE constant in Spark SQL text — the spelling of
+    ``F.lit(float)``. A bare ``0.15`` parses as DECIMAL, which would
+    turn ``s1 * (1/f)`` into decimal arithmetic."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'' if v > 0 else '-'}Infinity' AS DOUBLE)"
+    return f"CAST({v!r} AS DOUBLE)"
 
 
 def _sql_lit(v) -> str:
-    """Render a Python literal as a Spark SQL literal (stratum values:
-    strings, numbers, None)."""
+    """Render a Python literal as a Spark SQL literal typed as
+    ``F.lit(v)`` types it (stratum values: strings, numbers, None)."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
+    if isinstance(v, float):
+        return sql_double(v)
+    if isinstance(v, (int, Decimal)):
+        return str(v)
     return "'" + str(v).replace("'", "''") + "'"
 
 
 def _key_hash_sql(spec: SamplingSpec) -> str:
-    """Spark-SQL text of ``portable_hash_col(_key_col(spec))`` — the
-    same arithmetic the DuckDB renderer emits, with the explicit
-    BIGINT cast the Column path applies to the key expression."""
+    """Spark-SQL text of the portable hash of the BIGINT-cast row key."""
     return portable_hash_sql(f"CAST(({spec.key}) AS BIGINT)", salt=spec.salt)
 
 
-def apply_sampling(df: DataFrame, spec: SamplingSpec) -> DataFrame:
-    """Filter ``df`` down to the sample and attach ``__p``.
+def sample_predicate_sql(spec: SamplingSpec) -> tuple[str, str] | None:
+    """The sample as Spark SQL text: ``(membership predicate, per-row
+    inclusion probability)``. The one Spark spelling of every
+    deterministic design, shared by :func:`apply_sampling` (a filter)
+    and the grouped adaptive rung (an aggregate mask,
+    ``estimators.approx_aggregate(mask=...)``). Returns ``None`` for
+    ``bernoulli``, whose membership lives in Spark's sampler state, not
+    in a row expression.
 
-    The hash predicates are built as SQL TEXT (``df.filter(str)``)
-    rather than Column trees: the hash chain is ~40 py4j round trips
-    as Columns (measured ~25 ms per query build, paid at
-    DataFrame-construction time by every approximate entry) and ONE
-    parse call as text — the analyzed expressions are identical either
-    way (guide §4: the Python boundary includes the driver's own
-    chatter, not just executor-side UDFs)."""
+    Text, not Column trees: a hash chain is ~40 py4j round trips as
+    Columns and one parse call as text, and Catalyst analyses the same
+    expression either way."""
     if spec.design == "none":
-        return df.withColumn(P_COL, F.lit(1.0))
-
+        return "TRUE", sql_double(1.0)
+    if spec.design == "bernoulli":
+        return None
     if spec.design == "uniform_hash":
         thr = fraction_threshold(spec.fraction)
-        return df.filter(f"({_key_hash_sql(spec)}) < {thr}").withColumn(
-            P_COL, F.lit(spec.fraction)
-        )
-
-    if spec.design == "bernoulli":
-        return df.sample(withReplacement=False, fraction=spec.fraction, seed=spec.seed).withColumn(
-            P_COL, F.lit(spec.fraction)
-        )
-
+        return f"({_key_hash_sql(spec)}) < {thr}", sql_double(spec.fraction)
     if spec.design == "systematic":
         # DENSITY ASSUMPTION (the textbook periodicity hazard): 1/step
         # is the true inclusion probability only when keys populate the
@@ -135,16 +137,15 @@ def apply_sampling(df: DataFrame, spec: SamplingSpec) -> DataFrame:
         # compare against 1/step before trusting a systematic design on
         # a structured key.
         step = spec._step()
-        return df.filter(
-            f"(abs(CAST(({spec.key}) AS BIGINT)) % {step}) = {spec.offset % step}"
-        ).withColumn(P_COL, F.lit(1.0 / step))
-
+        return (
+            f"(abs(CAST(({spec.key}) AS BIGINT)) % {step}) = {spec.offset % step}",
+            sql_double(1.0 / step),
+        )
     if spec.design == "block":
         block_sql = f"floor(abs(CAST(({spec.key}) AS BIGINT)) / {spec.block_size})"
         h_sql = portable_hash_sql(block_sql, salt=spec.salt)
         thr = fraction_threshold(spec.fraction)
-        return df.filter(f"({h_sql}) < {thr}").withColumn(P_COL, F.lit(spec.fraction))
-
+        return f"({h_sql}) < {thr}", sql_double(spec.fraction)
     if spec.design == "stratified":
         if not spec.stratum_col or not spec.strata_fractions:
             raise ValueError("stratified design needs stratum_col and strata_fractions")
@@ -156,7 +157,7 @@ def apply_sampling(df: DataFrame, spec: SamplingSpec) -> DataFrame:
         # fraction (while a SQL oracle's equi-join would DROP them —
         # the NULL-stratum divergence the poststrat review first hit).
         thr_sql = str(fraction_threshold(spec.fraction))
-        p_sql = f"CAST({float(spec.fraction)!r} AS DOUBLE)"
+        p_sql = sql_double(spec.fraction)
         s = spec.stratum_col
         for value, frac in spec.strata_fractions.items():
             v = _sql_lit(value)
@@ -164,67 +165,19 @@ def apply_sampling(df: DataFrame, spec: SamplingSpec) -> DataFrame:
                 f"CASE WHEN ({s}) <=> {v} THEN {fraction_threshold(frac)} "
                 f"ELSE {thr_sql} END"
             )
-            p_sql = (
-                f"CASE WHEN ({s}) <=> {v} THEN CAST({float(frac)!r} AS DOUBLE) "
-                f"ELSE {p_sql} END"
-            )
-        return df.filter(f"({_key_hash_sql(spec)}) < ({thr_sql})").withColumn(
-            P_COL, F.expr(p_sql)
-        )
-
+            p_sql = f"CASE WHEN ({s}) <=> {v} THEN {sql_double(frac)} ELSE {p_sql} END"
+        return f"({_key_hash_sql(spec)}) < ({thr_sql})", p_sql
     raise ValueError(f"unknown sampling design {spec.design!r}")
 
 
-# Designs whose membership is a pure row expression — renderable as an
-# aggregate mask (sampling_mask) and as portable SQL (sampling_where_sql).
-MASKABLE_DESIGNS = frozenset(
-    {"none", "uniform_hash", "systematic", "block", "stratified"}
-)
-
-
-def sampling_mask(spec: SamplingSpec) -> tuple[Column, Column] | None:
-    """The sample as a boolean MASK plus the per-row inclusion
-    probability, for running estimators over the UNSAMPLED frame
-    (``estimators.approx_aggregate(mask=...)``).
-
-    Deterministic designs are pure row predicates — the same expressions
-    ``apply_sampling`` filters on — so the grouped adaptive loop can fold
-    its missed-group guard into the rung job itself: grouping the full
-    frame surfaces every group in the data (missed ones with
-    ``n_samples = 0``) without a standalone ``distinct().count()`` scan.
-    Returns ``None`` for ``bernoulli``, whose membership lives in Spark's
-    sampler state, not in a row expression.
-    """
-    if spec.design == "none":
-        return F.lit(True), F.lit(1.0)
-    if spec.design == "uniform_hash":
-        h = portable_hash_col(_key_col(spec), salt=spec.salt)
-        return h < F.lit(fraction_threshold(spec.fraction)), F.lit(spec.fraction)
-    if spec.design == "systematic":
-        step = spec._step()
-        k = F.abs(_key_col(spec))
-        return (
-            k % F.lit(step) == F.lit(spec.offset % step),
-            F.lit(1.0 / step),
-        )
-    if spec.design == "block":
-        block_id = F.floor(F.abs(_key_col(spec)) / F.lit(spec.block_size))
-        h = portable_hash_col(block_id, salt=spec.salt)
-        return h < F.lit(fraction_threshold(spec.fraction)), F.lit(spec.fraction)
-    if spec.design == "stratified":
-        if not spec.stratum_col or not spec.strata_fractions:
-            raise ValueError("stratified design needs stratum_col and strata_fractions")
-        h = portable_hash_col(_key_col(spec), salt=spec.salt)
-        thr: Column = F.lit(fraction_threshold(spec.fraction))
-        p: Column = F.lit(spec.fraction)
-        s = F.col(spec.stratum_col)
-        for value, frac in spec.strata_fractions.items():
-            thr = F.when(s.eqNullSafe(F.lit(value)), F.lit(fraction_threshold(frac))).otherwise(thr)
-            p = F.when(s.eqNullSafe(F.lit(value)), F.lit(float(frac))).otherwise(p)
-        return h < thr, p
+def apply_sampling(df: DataFrame, spec: SamplingSpec) -> DataFrame:
+    """Filter ``df`` down to the sample and attach ``__p``."""
     if spec.design == "bernoulli":
-        return None
-    raise ValueError(f"unknown sampling design {spec.design!r}")
+        return df.sample(withReplacement=False, fraction=spec.fraction, seed=spec.seed).withColumn(
+            P_COL, F.lit(spec.fraction)
+        )
+    pred, p = sample_predicate_sql(spec)
+    return df.filter(pred).withColumn(P_COL, F.expr(p))
 
 
 def sampling_where_sql(spec: SamplingSpec, key_sql: str | None = None) -> str:

@@ -53,6 +53,7 @@ from approximatequeryengine_spark.functions.hashing import (
     portable_hash_sql,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin
+from approximatequeryengine_spark.plans.sampling import sql_double
 
 TS_F1 = 0.25  # stage-1 block inclusion probability (1/f1 = 4, exact)
 TS_F2 = 0.5  # stage-2 row inclusion probability (1/f2 = 2, exact)
@@ -63,6 +64,8 @@ TS_ROW_SALT = 23
 _EST_MULT = 8  # 1 / (f1·f2)
 _V_SS2 = 48  # (1−f1)/f1² · (1/f2)²
 _V_QQ = 8  # (1/f1) · (1−f2)/f2²
+# the HT variance in dollars², over the aggregated ss2/qq moments
+_VHT_D = f"CAST(ss2 * {_V_SS2} + qq * {_V_QQ} AS DOUBLE) / {sql_double(10000.0)}"
 
 
 def twostage_sum_ci(
@@ -102,10 +105,7 @@ def twostage_sum_ci(
         .alias("qq"),
     )
     est_d = (F.col("ss") * F.lit(_EST_MULT)).cast("double") / F.lit(100.0)
-    vht_d = (
-        F.col("ss2") * F.lit(_V_SS2) + F.col("qq") * F.lit(_V_QQ)
-    ).cast("double") / F.lit(10000.0)
-    margin = ht_integer_margin(F.col("m"), vht_d, z)
+    margin = ht_integer_margin("m", _VHT_D, z)
     return tot.select(
         F.round(est_d, 2).alias("sum_value"),
         F.round(est_d - margin, 2).alias("ci_lower"),
@@ -185,10 +185,7 @@ def twostage_grouped_sum_ci(
         F.coalesce(F.col("qq"), F.lit(0).cast("decimal(38,0)")).alias("qq"),
     )
     est_d = (F.col("ss") * F.lit(_EST_MULT)).cast("double") / F.lit(100.0)
-    vht_d = (
-        F.col("ss2") * F.lit(_V_SS2) + F.col("qq") * F.lit(_V_QQ)
-    ).cast("double") / F.lit(10000.0)
-    margin = ht_integer_margin(F.col("m"), vht_d, z)
+    margin = ht_integer_margin("m", _VHT_D, z)
     return joined.select(
         F.col("q").alias(group_by),
         F.round(est_d, 2).alias("sum_value"),

@@ -54,6 +54,7 @@ from approximatequeryengine_spark.plans.estimators import (
     finite_sql,
     ht_integer_margin,
 )
+from approximatequeryengine_spark.plans.sampling import sql_double
 WALK_SALT = 17  # partner-pick hash family (left inclusion uses salt 0)
 
 
@@ -121,8 +122,9 @@ def wander_join_abs_gap(
         ).alias("s2"),
     )
     est_cents = F.col("s1") * F.lit(1.0 / p)
-    vht_d = F.col("s2") * F.lit((1.0 - p) / (p * p) / 10000.0)
-    margin_d = ht_integer_margin(F.col("n"), vht_d, z)
+    margin_d = ht_integer_margin(
+        "n", f"s2 * {sql_double((1.0 - p) / (p * p) / 10000.0)}", z
+    )
     return m.select(
         F.round(est_cents / F.lit(100.0), 2).alias("join_sum_value"),
         F.round(est_cents / F.lit(100.0) - margin_d, 2).alias("ci_lower"),

@@ -10,7 +10,11 @@ timezone so results hash-match the DuckDB oracle.
 
 from __future__ import annotations
 
+import gc
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
@@ -98,3 +102,39 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema=schema)
+
+
+@dataclass
+class Py4jCalls:
+    """Round trips counted by :func:`count_py4j_calls`."""
+
+    n: int = 0
+
+
+@contextmanager
+def count_py4j_calls(spark: SparkSession) -> Iterator[Py4jCalls]:
+    """Count the py4j commands the driver sends to the JVM inside the
+    block — the round trips a plan build costs. Memory commands are not
+    counted: py4j sends its object releases from garbage collection, so
+    their number varies between runs. ``gc`` is paused inside the block
+    for the same reason. Counts every thread's commands."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = Py4jCalls()
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.n += 1
+        return send(command, *args, **kwargs)
+
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
+    client.send_command = counted
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+        if gc_was_enabled:
+            gc.enable()

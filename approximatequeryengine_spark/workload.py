@@ -4254,6 +4254,9 @@ _register("table_merge_upsert_stats", _merge_upsert_fn, _merge_upsert_oracle())
 # (interior_rows / blocks_interior re-derived by the oracle).
 _AQPP_LO = 8500    # 1993-04-10
 _AQPP_HI = 10226   # 1997-12-31
+# Spark SQL text of the key and the cents grid (F.lit(double) typing)
+_AQPP_KEY = "datediff(o_orderdate, '1970-01-01')"
+_AQPP_CENTS = "floor(o_totalprice * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
 
 
 def _aqpplus_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4272,18 +4275,16 @@ def _aqpplus_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_aqpplus_")
-    key = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01"))
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-    aqpplus_build(spark, orders, path, key, cents, n_blocks=64)
+    handle = aqpplus_build(spark, orders, path, _AQPP_KEY, _AQPP_CENTS, n_blocks=64)
     return aqpplus_range_sum(
         spark,
         orders,
-        path,
+        handle,
         _AQPP_LO,
         _AQPP_HI,
-        key,
-        cents,
-        row_key=F.col("o_orderkey"),
+        _AQPP_KEY,
+        _AQPP_CENTS,
+        row_key="o_orderkey",
         fraction=0.1,
     )
 
@@ -4320,10 +4321,8 @@ def _aqpplus_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_aqppg_")
-    key = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01"))
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     aqpplus_grouped_build(
-        spark, orders, path, key, cents, group="o_orderpriority", n_blocks=64
+        spark, orders, path, _AQPP_KEY, _AQPP_CENTS, group="o_orderpriority", n_blocks=64
     )
     return aqpplus_grouped_range_sum(
         spark,
@@ -4331,10 +4330,10 @@ def _aqpplus_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         _AQPP_LO,
         _AQPP_HI,
-        key,
-        cents,
+        _AQPP_KEY,
+        _AQPP_CENTS,
         group="o_orderpriority",
-        row_key=F.col("o_orderkey"),
+        row_key="o_orderkey",
         fraction=0.1,
     ).withColumnRenamed("grp", "o_orderpriority")
 

@@ -41,6 +41,20 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def py4j_calls(spark):
+    """``py4j_calls(fn)`` returns ``(fn(), py4j round trips fn made)``
+    (``session.count_py4j_calls``)."""
+    from approximatequeryengine_spark.session import count_py4j_calls
+
+    def run(fn):
+        with count_py4j_calls(spark) as calls:
+            out = fn()
+        return out, calls.n
+
+    return run
+
+
+@pytest.fixture
 def parquet_reads(monkeypatch):
     """Every path handed to ``spark.read...parquet(...)`` while the test
     runs, in call order."""

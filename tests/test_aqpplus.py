@@ -296,3 +296,80 @@ def test_grouped_group_with_no_range_rows_still_surfaces(spark):
     assert rows["outside"]["sum_value"] == 0.0
     assert rows["outside"]["n_samples"] == 0
     assert rows["in_range"]["sum_value"] > 0
+
+
+# -- edge cases against the DuckDB twin, with text keys ---------------------
+
+DAYS_SPARK = "datediff(o_orderdate, '1970-01-01')"
+CENTS_SPARK = "floor(o_totalprice * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
+# every 97th order has no key: it belongs to no block and no range
+NULL_KEY_SPARK = f"CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE {DAYS_SPARK} END"
+NULL_KEY_DUCK = f"CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE {KEY_SQL} END"
+
+
+@pytest.fixture(scope="module")
+def handle(spark, orders):
+    path = tempfile.mkdtemp(prefix="aqpp_text_")
+    return aqpplus_build(spark, orders, path, DAYS_SPARK, CENTS_SPARK, n_blocks=64)
+
+
+def _assert_matches_twin(spark, orders, index, lo, hi, fraction=0.1,
+                         key=DAYS_SPARK, key_duck=KEY_SQL):
+    df = aqpplus_range_sum(
+        spark, orders, index, lo, hi, key, CENTS_SPARK, "o_orderkey", fraction=fraction
+    )
+    # Every constant is a DOUBLE. A bare 0.15 parses as DECIMAL, and
+    # s1 · (1/f) would become decimal arithmetic on the BIGINT moment.
+    assert "decimal" not in df._jdf.queryExecution().optimizedPlan().toString().lower()
+    row = df.collect()[0].asDict()
+    con = _duck(SF_DIR_MED)
+    res = con.execute(aqpplus_range_sum_sql(
+        "orders", key_duck, CENTS_SQL, "o_orderkey", lo, hi, 64, fraction
+    ))
+    twin = dict(zip([d[0] for d in res.description], res.fetchall()[0]))
+    assert row == twin
+    return row
+
+
+def _edge_ranges(mn: int, w: int) -> dict[str, tuple[int, int]]:
+    return {
+        "inside_one_block": (mn + 5 * w + 1, mn + 6 * w - 2),
+        "two_partial_blocks": (mn + 5 * w + 1, mn + 6 * w + w // 2),
+        "lo_aligned": (mn + 5 * w, mn + 12 * w + w // 2),
+        "hi_aligned": (mn + 5 * w + 1, mn + 13 * w - 1),
+        "past_both_ends": (mn - 100, mn + 70 * w),
+    }
+
+
+@pytest.mark.parametrize("case", list(_edge_ranges(0, 10)))
+def test_edge_ranges_match_twin(spark, orders, handle, case):
+    mn, w = handle.mn, handle.width
+    assert w >= 3
+    lo, hi = _edge_ranges(mn, w)[case]
+    _assert_matches_twin(spark, orders, handle, lo, hi)
+
+
+@pytest.mark.parametrize("fraction", [0.05, 0.15])
+def test_fractions_match_twin(spark, orders, handle, fraction):
+    _assert_matches_twin(spark, orders, handle, 8500, 10226, fraction=fraction)
+
+
+def test_null_key_rows_match_twin(spark, orders):
+    path = tempfile.mkdtemp(prefix="aqpp_nullkey_")
+    index = aqpplus_build(spark, orders, path, NULL_KEY_SPARK, CENTS_SPARK, n_blocks=64)
+    _assert_matches_twin(
+        spark, orders, index, 8500, 10226, key=NULL_KEY_SPARK, key_duck=NULL_KEY_DUCK
+    )
+
+
+def test_block_aligned_range_runs_no_spark_job(spark, orders, handle, count_jobs):
+    """No boundary, no base scan: the answer comes from the handle."""
+    mn, w = handle.mn, handle.width
+    lo, hi = mn + 10 * w, mn + 20 * w - 1
+    rows, jobs = count_jobs(lambda: aqpplus_range_sum(
+        spark, orders, handle, lo, hi, DAYS_SPARK, CENTS_SPARK, "o_orderkey"
+    ).collect())
+    assert jobs == 0
+    row = _assert_matches_twin(spark, orders, handle, lo, hi)
+    assert rows[0].asDict() == row
+    assert row["n_samples"] == 0 and row["blocks_interior"] == 10

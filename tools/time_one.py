@@ -5,6 +5,12 @@ whole scaling sweep (the sf10 protocol in SCALING.md):
 
     timeout 600 python tools/time_one.py <query> [sf_dir] [runs]
 
+The line also splits off the build phase: `build_s` is the best run's
+wall until the entry's DataFrame exists, before any action on it (an
+entry's own eager jobs, such as index builds or pilot passes, count
+here), and `py4j_calls` the driver-to-JVM round trips of that phase
+(`session.count_py4j_calls`) in the last run.
+
 Set AQE_TIME_COUNT=1 to measure plan execution throughput WITHOUT
 driver materialization (df.count() instead of .collect()) — the right
 measure for entries whose output is itself large (pair lists), where
@@ -28,6 +34,7 @@ def main() -> None:
     count_mode = os.environ.get("AQE_TIME_COUNT") == "1"
 
     from approximatequeryengine_spark import get_spark
+    from approximatequeryengine_spark.session import count_py4j_calls
     from approximatequeryengine_spark.workload import QUERIES
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -36,16 +43,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["exact_count"](spark, sf_dir).collect()  # warm session + footers
 
-    samples, n_rows = [], None
+    samples, builds, n_rows = [], [], None
     for _ in range(runs):
         t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
+        with count_py4j_calls(spark) as calls:
+            df = QUERIES[name](spark, sf_dir)
+        builds.append(round(time.time() - t0, 3))
         n_rows = df.count() if count_mode else len(df.collect())
         samples.append(round(time.time() - t0, 3))
+    best = samples.index(min(samples))
     print(json.dumps({
-        "query": name, "sf_dir": sf_dir, "best": min(samples),
-        "samples": samples, "rows": n_rows,
-        "mode": "count" if count_mode else "collect",
+        "query": name, "sf_dir": sf_dir, "best": samples[best],
+        "samples": samples, "build_s": builds[best], "py4j_calls": calls.n,
+        "rows": n_rows, "mode": "count" if count_mode else "collect",
     }))
     spark.stop()
 
