@@ -1,17 +1,30 @@
 """AQEngine — the user-facing facade.
 
-Query lifecycle (replacing SURVEY.md §3's string-pipeline):
+Query lifecycle: :meth:`AQEngine.run` and :meth:`AQEngine.explain_auto`
+walk one ordered route table, ``_ROUTES`` (end of this module). Each
+route has a matcher, an executor and an explainer (what
+``method='auto'`` would pick, without running the query); the first
+route whose matcher accepts the query answers it:
 
-    sql ──rewrite APPROX dialect──► QuerySpec        (frontend/dialect.py)
-        ──sampling planner──────► sampled DataFrame  (plans/sampling.py)
-        ──estimator layer───────► moments agg + CI   (plans/estimators.py)
-        ──[adaptive executor]───► escalation loop    (plans/adaptive.py)
+    dialect QuerySpec (frontend/dialect.py):
+        quantile · STDDEV · CORR · COUNT(DISTINCT) · exact ·
+        sampled ──sampling planner──► estimator (``_ESTIMATORS``)
+                   (plans/sampling.py)  [adaptive escalation loop]
+    WITHIN e PERCENT marker ──► adaptive CLT escalation (plans/adaptive.py)
+    global / grouped quantile marker ──► partition-parallel rank selection
+    other APPROX + TABLESAMPLE marker ──► portable rewritten SQL
+                                          (frontend/approx_sql.py)
+    anything else ──► spark.sql, exact
+
+The matchers share one ``_Query``, which parses each syntax at most once
+and only when a matcher asks for it. An APPROX query no route accepts
+raises the grammar error, built from each route's one-line grammar;
+``compare=True`` runs the route's exact twin through one ``_compare``.
 
 Everything relational stays declarative: Catalyst handles predicate
 pushdown, column pruning, and partial aggregation; our code runs only
 *before* (dialect → sampling spec) and *after* (CI post-processing,
-escalation) the optimizer. Queries outside the reference grammar pass
-through ``spark.sql`` unchanged (exact, full Spark surface).
+escalation) the optimizer.
 
 Routing implements the *documented* reference semantics (README.md:209-218;
 fixes quirk Q1 where ``--sample``/``--error`` could never reach their
@@ -26,11 +39,22 @@ import re
 import tempfile
 import time
 from dataclasses import dataclass
+from decimal import Decimal
+from functools import cached_property
+from statistics import NormalDist
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.catalog import TABLES, Catalog
+from approximatequeryengine_spark.frontend.approx_sql import (
+    exact_twin_sql,
+    parse_global_quantile_marker,
+    parse_grouped_quantile_marker,
+    parse_within_marker,
+    rewrite_approx_sql,
+)
 from approximatequeryengine_spark.frontend.dialect import (
     METHODS,
     QuerySpec,
@@ -38,12 +62,64 @@ from approximatequeryengine_spark.frontend.dialect import (
     rewrite_approx,
     select_method,
 )
-from approximatequeryengine_spark.plans.adaptive import adaptive_aggregate, error_ladder
-from approximatequeryengine_spark.plans.estimators import AggSpec, approx_aggregate
+from approximatequeryengine_spark.plans.adaptive import (
+    adaptive_aggregate,
+    adaptive_grouped_aggregate,
+    error_ladder,
+)
+from approximatequeryengine_spark.plans.advisor import (
+    QUANTILE_SAMPLE_FRACTION,
+    advise_method_evidence,
+    advise_quantile_evidence,
+)
+from approximatequeryengine_spark.plans.bootstrap import (
+    blb_sum_ci,
+    bootstrap_grouped_sum_ci,
+    bootstrap_sum_ci,
+)
+from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles
+from approximatequeryengine_spark.plans.distinct import chao1_sql, kmv_distinct_ci
+from approximatequeryengine_spark.plans.estimators import (
+    Z_95,
+    AggSpec,
+    approx_aggregate,
+)
+from approximatequeryengine_spark.plans.hll import HLL_M, _estimate, hll_registers
+from approximatequeryengine_spark.plans.outlier import (
+    outlier_grouped_sum_ci,
+    outlier_sum_ci,
+)
+from approximatequeryengine_spark.plans.poststrat import (
+    poststrat_grouped_sum_ci,
+    poststrat_sum_ci,
+)
+from approximatequeryengine_spark.plans.pps import pps_sum_ci
+from approximatequeryengine_spark.plans.priority import priority_sample_subset_sum
+from approximatequeryengine_spark.plans.quantiles import (
+    approx_quantile_ci,
+    grouped_order_stat_ci,
+    order_stat_marker_ci,
+)
+from approximatequeryengine_spark.plans.regression import (
+    regaux_grouped_sum_ci,
+    regaux_sum_ci,
+)
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
     sql_double,
+)
+from approximatequeryengine_spark.plans.twostage import (
+    TS_F1,
+    TS_F2,
+    twostage_grouped_sum_ci,
+    twostage_sum_ci,
+)
+from approximatequeryengine_spark.plans.variance import (
+    approx_corr_ci,
+    approx_grouped_corr_ci,
+    approx_grouped_stddev_ci,
+    approx_stddev_ci,
 )
 from approximatequeryengine_spark.result import (
     ApproximationStatus,
@@ -314,119 +390,61 @@ class AQEngine:
             value_cents=_cents(reg.value_sql),
         )
 
-    def _advise_auto(self, spec: QuerySpec) -> tuple[str, dict | None]:
-        """Resolve ``method='auto'``: the measured-moment advisor
-        (plans/advisor.py — cv², top-B mass share → outlier/pps/
-        revolutionary/clt) for global SUM over a column, the
-        reference's static F3 ladder (``select_method``) for every
-        other shape. Returns (method, evidence-dict-or-None); the
-        evidence surfaces in ``ApproxResult.groups['__advisor__']``
-        and the CLI's ``--explain``."""
-        if spec.agg == "SUM" and spec.column and not spec.group_by and not spec.distinct:
-            from approximatequeryengine_spark.plans.advisor import (
-                advise_method_evidence,
-            )
-
-            ev = advise_method_evidence(
-                self._base_df(spec),
-                F.floor(F.expr(spec.column) * 100.0 + 0.5),
-            )
-            return ev["recommended_method"], ev
-        if (
-            spec.agg in ("MEDIAN", "PERCENTILE")
-            and spec.column
-            and not spec.group_by
-        ):
-            # Quantile family: the bakeoff-calibrated rule (measured
-            # sampled-order-statistic CI vs the DDSketch α guarantee vs
-            # the exact sort's affordability — plans/advisor.py).
-            from approximatequeryengine_spark.plans.advisor import (
-                QUANTILE_SAMPLE_FRACTION,
-                advise_quantile_evidence,
-            )
-
-            ev, _, _ = advise_quantile_evidence(
-                self._base_df(spec),
-                spec.column,
-                spec.q if spec.q is not None else 0.5,
-                self._sampling_spec(
+    def _advise_auto(
+        self, spec: QuerySpec, z: float
+    ) -> tuple[str, dict | None, tuple | None]:
+        """Resolve ``method='auto'`` for a dialect query: the
+        measured-moment advisor (plans/advisor.py — cv², top-B mass
+        share → outlier/pps/revolutionary/clt) for a global SUM over a
+        column; the bakeoff-calibrated quantile advisor (exact / sampled
+        order statistic / ddsketch) for a global MEDIAN/PERCENTILE; the
+        reference's static F3 ladder (``select_method``) for every other
+        shape. Returns ``(method, evidence or None, reuse)``: the
+        evidence surfaces in ``ApproxResult.groups['__advisor__']`` and
+        the CLI's ``--explain``; ``reuse`` is the quantile advisor's
+        ``(spec, frame, row)`` — its evidence pass IS the 10%
+        order-statistic job, so :meth:`_run_quantile` reuses it rather
+        than run the same sampled job twice."""
+        if spec.column and not spec.group_by:
+            if spec.agg == "SUM":
+                ev = advise_method_evidence(
+                    self._base_df(spec),
+                    F.floor(F.expr(spec.column) * 100.0 + 0.5),
+                )
+                return ev["recommended_method"], ev, None
+            if spec.agg in ("MEDIAN", "PERCENTILE"):
+                s_spec = self._sampling_spec(
                     spec, "uniform_hash", QUANTILE_SAMPLE_FRACTION
-                ),
-            )
-            return ev["recommended_method"], ev
+                )
+                ev, rdf, row = advise_quantile_evidence(
+                    self._base_df(spec),
+                    spec.column,
+                    spec.q if spec.q is not None else 0.5,
+                    s_spec,
+                    z=z,
+                )
+                return ev["recommended_method"], ev, (s_spec, rdf, row)
         total = self.catalog.table(spec.table).count()
-        return select_method(spec.agg, total, spec.group_by is not None), None
+        return select_method(spec.agg, total, spec.group_by is not None), None, None
+
+    def _route(self, q: _Query) -> _Route:
+        for route in _ROUTES:
+            if route.match(q):
+                return route
+        raise _grammar_error(q.sql)
 
     def explain_auto(self, sql: str) -> dict:
         """What ``method='auto'`` would pick for ``sql`` and why,
-        WITHOUT executing the query — the CLI ``--explain`` surface.
-        Returns ``{'method', 'source' ('advisor'|'static'),
-        'evidence' (moment profile dict or None)}``."""
-        spec = parse_query(sql)
-        if spec is None:
-            # Marker queries (TABLESAMPLE + APPROX/STRATIFY/AUX/...)
-            # route through the SQL rewriter, not the method advisor —
-            # report the route and the portable text it would run.
-            from approximatequeryengine_spark.frontend.approx_sql import (
-                parse_within_marker,
-                rewrite_approx_sql,
-            )
-
-            keys = dict(TABLES)
-            keys.update(self.catalog._extra_keys)
-            wm = parse_within_marker(sql, keys)
-            if wm is not None:
-                from approximatequeryengine_spark.plans.adaptive import (
-                    error_ladder,
-                )
-
-                start = wm[6] / 100.0 if wm[6] else error_ladder(wm[7])
-                return {
-                    "method": "adaptive_sql",
-                    "source": "rewriter",
-                    "evidence": {
-                        "error_pct": wm[7],
-                        "start_fraction": start,
-                        "escalation": "fraction doubles until the CI "
-                        "half-width meets the budget (worst group when "
-                        "grouped)",
-                    },
-                }
-            rewritten = rewrite_approx_sql(sql, keys)
-            if rewritten is not None:
-                evidence: dict = {"rewritten_sql": rewritten}
-                from approximatequeryengine_spark.frontend.approx_sql import (
-                    parse_global_quantile_marker,
-                    parse_grouped_quantile_marker,
-                )
-
-                if parse_global_quantile_marker(sql, keys) is not None:
-                    evidence["executes_via"] = (
-                        "order_stat_marker_ci (partition-parallel rank "
-                        "selection; the window text is the oracle only)"
-                    )
-                elif parse_grouped_quantile_marker(sql, keys) is not None:
-                    evidence["executes_via"] = (
-                        "grouped_order_stat_ci (grouped partition-"
-                        "parallel rank selection; the window text is "
-                        "the oracle only)"
-                    )
-                return {
-                    "method": "sql_rewrite",
-                    "source": "rewriter",
-                    "evidence": evidence,
-                }
-            raise ValueError(
-                "explain_auto needs an APPROX-dialect aggregate query "
-                "or a rewritable APPROX+TABLESAMPLE marker query; "
-                f"could not parse: {sql!r}"
-            )
-        method, evidence = self._advise_auto(spec)
-        return {
-            "method": method,
-            "source": "advisor" if evidence is not None else "static",
-            "evidence": evidence,
-        }
+        WITHOUT executing the query — the CLI ``--explain`` surface. It
+        walks the same route table as :meth:`run`, so it names the
+        method ``run(sql, method='auto')`` executes. Returns
+        ``{'method', 'source' ('advisor'|'static'|'rewriter'),
+        'evidence' (dict or None)}``."""
+        q = _Query(self, sql, method="auto")
+        route = self._route(q)
+        if route.explain is None:
+            raise _grammar_error(sql)
+        return route.explain(self, q)
 
     def run(
         self,
@@ -434,12 +452,16 @@ class AQEngine:
         sample_pct: float | None = None,
         error_pct: float | None = None,
         method: str | None = None,
-        with_ci: bool = True,
         compare: bool = False,
         confidence: float = 0.95,
         stratum_col: str | None = None,
         aux_column: str | None = None,
     ) -> ApproxResult:
+        """Answer ``sql`` through the first route of ``_ROUTES`` that
+        accepts it (module docstring). ``sample_pct``, ``error_pct``,
+        ``method``, ``stratum_col`` and ``aux_column`` steer the
+        dialect routes; ``compare=True`` also runs the route's exact
+        twin and reports the actual error and speedup."""
         t0 = time.time()
         if not 0.5 <= confidence < 1.0:
             raise ValueError(
@@ -451,614 +473,37 @@ class AQEngine:
         # differs from it in the last ulp, and every oracle text is
         # rendered with Z_95 — one ulp of z is enough to flip a rounded
         # CI bound across engines.
-        from statistics import NormalDist
-
-        from approximatequeryengine_spark.plans.estimators import Z_95 as _Z95
-
         z = (
-            _Z95
+            Z_95
             if confidence == 0.95
             else NormalDist().inv_cdf((1.0 + confidence) / 2.0)
         )
-        spec = parse_query(sql)
-        if spec is None:
-            # Beyond the reference grammar: APPROX() aggregates over
-            # arbitrary SQL (joins, multi-column GROUP BY) with the
-            # sampled table marked via TABLESAMPLE (p PERCENT) — the
-            # sampled-CTE injection of frontend/approx_sql.py. Tried
-            # FIRST because the simple dialect's marker regex cannot
-            # see nested parens (APPROX(SUM(a * (1 - b)))).
-            from approximatequeryengine_spark.frontend.approx_sql import (
-                parse_within_marker,
-                rewrite_approx_sql,
-            )
-
-            keys = dict(TABLES)
-            keys.update(self.catalog._extra_keys)
-            wm = parse_within_marker(sql, keys)
-            if wm is not None:
-                # APPROX(SUM(x)) ... WITHIN e PERCENT — the reference's
-                # CLT early-stop from plain SQL: escalate the sampling
-                # fraction until the realized CI half-width meets the
-                # budget (plans/adaptive.py; per WORST group when
-                # grouped). The terminal rung is a pure function of the
-                # data — certifiable by a rung-re-deriving oracle.
-                return self._run_within_marker(
-                    wm, z=z, compare=compare, t0=t0, sql=sql
-                )
-            rewritten = rewrite_approx_sql(sql, keys, z=z)
-            if rewritten is not None:
-                self.catalog.ensure_views()
-                from approximatequeryengine_spark.frontend.approx_sql import (
-                    parse_global_quantile_marker,
-                )
-
-                gq = parse_global_quantile_marker(sql, keys)
-                if gq is not None:
-                    # GLOBAL order-statistic markers execute through the
-                    # partition-parallel rank selection — the rewritten
-                    # window text would sort the whole sample through one
-                    # task (it remains the DuckDB oracle; identical
-                    # values by construction).
-                    from approximatequeryengine_spark.plans.quantiles import (
-                        order_stat_marker_ci,
-                    )
-
-                    table, qexpr, qq, qalias, qwhere, qspec = gq
-                    df = order_stat_marker_ci(
-                        self.catalog.table(table),
-                        qexpr,
-                        qq,
-                        qalias,
-                        qspec,
-                        where=qwhere,
-                        z=z,
-                    )
-                else:
-                    from approximatequeryengine_spark.frontend.approx_sql import (
-                        parse_grouped_quantile_marker,
-                    )
-
-                    gg = parse_grouped_quantile_marker(sql, keys)
-                    if gg is not None:
-                        # GROUPED markers too (round 9): the window
-                        # text's sort parallelism equals the group
-                        # count — three groups means three tasks each
-                        # sorting a third of the sample. The grouped
-                        # rank selection is partition-parallel in every
-                        # pass; the text stays the DuckDB oracle.
-                        from approximatequeryengine_spark.plans.quantiles import (
-                            grouped_order_stat_ci,
-                        )
-
-                        (table, qexpr, qq, qalias, qwhere, qgroup,
-                         qspec, qordered) = gg
-                        df = grouped_order_stat_ci(
-                            self.catalog.table(table),
-                            qexpr,
-                            qq,
-                            qalias,
-                            qgroup,
-                            qspec,
-                            where=qwhere,
-                            z=z,
-                            order_by_group=qordered,
-                        )
-                    else:
-                        df = self.spark.sql(rewritten)
-                res = ApproxResult(
-                    df=df,
-                    method="sql_rewrite",
-                    status=ApproximationStatus.STABLE,
-                    computation_time=time.time() - t0,
-                )
-                if compare:
-                    # F6 exact-vs-approx comparison for the rewrite
-                    # path: run the exact twin (markers unwrapped) and
-                    # report actual error + speedup. Both results are
-                    # aggregate outputs — the collects are bounded.
-                    from approximatequeryengine_spark.frontend.approx_sql import (
-                        exact_twin_sql,
-                    )
-
-                    twin = exact_twin_sql(sql)
-                    if twin is not None:
-                        approx_rows = df.collect()
-                        res.computation_time = time.time() - t0
-                        t1 = time.time()
-                        exact_df = self.spark.sql(twin)
-                        exact_rows = exact_df.collect()
-                        exact_time = time.time() - t1
-                        res.groups["__exact_sql__"] = twin
-                        res.groups["__exact_df__"] = exact_df
-                        res.groups["__speedup__"] = (
-                            exact_time / res.computation_time
-                            if res.computation_time
-                            else float("inf")
-                        )
-                        if len(approx_rows) == 1 and len(exact_rows) == 1:
-                            from decimal import Decimal
-
-                            a, e = approx_rows[0], exact_rows[0]
-                            # Every shared numeric alias gets an error
-                            # readout (Decimal included — exact SUMs over
-                            # decimal fixtures are Decimal-typed; bool is
-                            # an int subclass, not a metric).
-                            shared = [
-                                c for c in exact_df.columns
-                                if c in df.columns
-                                and isinstance(e[c], (int, float, Decimal))
-                                and not isinstance(e[c], bool)
-                            ]
-                            per_col = {
-                                c: 100.0 * abs(float(a[c]) - float(e[c]))
-                                / abs(float(e[c]))
-                                for c in shared
-                                if e[c] and a[c] is not None
-                            }
-                            if per_col:
-                                res.groups["__actual_error_pct_by_col__"] = per_col
-                            if shared:
-                                c = shared[0]
-                                res.groups["__exact__"] = (
-                                    float(e[c])
-                                    if isinstance(e[c], Decimal) else e[c]
-                                )
-                                if c in per_col:
-                                    res.groups["__actual_error_pct__"] = per_col[c]
-                return res
-            _, is_approx, _ = rewrite_approx(sql)
-            if is_approx or re.search(r"\bAPPROX\s*\(", sql, re.IGNORECASE):
-                raise ValueError(
-                    "APPROX dialect supports a single SUM/AVG/COUNT/MIN/MAX/"
-                    "MEDIAN/PERCENTILE/STDDEV/CORR aggregate over one table "
-                    "(optional WHERE, one GROUP BY column) — or SQL-marker "
-                    "queries with the sampled table marked `t TABLESAMPLE "
-                    "(p PERCENT)`: APPROX(SUM/AVG/COUNT(expr)) AS alias "
-                    "(joins OK), APPROX(SUM(a) / SUM(b)) AS alias (ratio), "
-                    "APPROX(MEDIAN(x)/PERCENTILE(x, q)) AS alias, "
-                    "APPROX(COUNT(DISTINCT col)) AS alias, estimator "
-                    "markers `STRATIFY BY col` / `USING AUX(expr)` "
-                    "(single table or INNER star join), "
-                    "and the error-budget marker `WITHIN e PERCENT` "
-                    "(adaptive CLT escalation; TABLESAMPLE optional there). "
-                    "Leading CTEs are accepted when the markers live in "
-                    "the main query"
-                    f"; could not parse: {sql!r}"
-                )
-            # Full Spark SQL surface, exact.
-            # Temp views are session-global; another catalog (different
-            # sf_dir, same session) may have clobbered ours — re-assert.
-            self.catalog.ensure_views()
-            df = self.spark.sql(sql)
-            return ApproxResult(df=df, method="spark_sql", status=ApproximationStatus.EXACT,
-                                computation_time=time.time() - t0)
-
-        if spec.sample_pct is not None and sample_pct is None:
-            sample_pct = spec.sample_pct
-
-        wants_approx = spec.approx or sample_pct is not None or error_pct is not None or method
-
-        # method='auto' — resolved by the data-driven advisor for the
-        # shapes it profiles (global SUM), static F3 ladder elsewhere.
-        # The non-SUM dispatches below (quantile/stddev/corr/distinct)
-        # see method=None, i.e. their documented defaults.
-        auto = method == "auto"
-        if auto:
-            method = None
-
-        if spec.agg in ("MEDIAN", "PERCENTILE"):
-            q_advisor_row: dict | None = None
-            q_reuse = None  # the advisor's own sampled measurement
-            if auto and spec.column and not spec.group_by:
-                # Quantile-family auto: the bakeoff-calibrated advisor
-                # picks exact / sampled-order-statistic / ddsketch from
-                # measured evidence (plans/advisor.py). The evidence
-                # pass IS a 10% order-statistic job, so when the
-                # recommendation is 'quantile' at the default fraction
-                # its result is reused directly — never the same
-                # sampled job twice.
-                from approximatequeryengine_spark.plans.advisor import (
-                    QUANTILE_SAMPLE_FRACTION,
-                    advise_quantile_evidence,
-                )
-
-                adv_spec = self._sampling_spec(
-                    spec, "uniform_hash", QUANTILE_SAMPLE_FRACTION
-                )
-                q_advisor_row, adv_df, adv_row = advise_quantile_evidence(
-                    self._base_df(spec),
-                    spec.column,
-                    spec.q if spec.q is not None else 0.5,
-                    adv_spec,
-                    z=z,
-                )
-                rec = q_advisor_row["recommended_method"]
-                if rec == "ddsketch":
-                    method = "ddsketch"
-                elif rec == "exact":
-                    wants_approx = False
-                else:  # 'quantile' — the sampled order statistic
-                    wants_approx = True
-                    if (
-                        sample_pct is None
-                        and adv_df is not None
-                        and abs(adv_spec.fraction - QUANTILE_SAMPLE_FRACTION)
-                        < 1e-12
-                    ):
-                        q_reuse = (adv_spec, adv_df, adv_row)
-            if q_reuse is not None:
-                adv_spec, rdf, row = q_reuse
-                res = ApproxResult(
-                    df=rdf,
-                    value=row[f"{spec.column}_q"],
-                    ci_lower=row["ci_lower"],
-                    ci_upper=row["ci_upper"],
-                    samples_used=int(row["n_samples"]),
-                    fraction=adv_spec.realized_fraction(),
-                    method="quantile",
-                    status=ApproximationStatus.STABLE,
-                    computation_time=time.time() - t0,
-                )
-                res.error_margin = (res.ci_upper - res.ci_lower) / 2.0
-                res.confidence_level = min(
-                    confidence, heuristic_confidence(res.samples_used)
-                )
-            else:
-                res = self._run_quantile(
-                    spec, sample_pct, wants_approx, t0, z=z,
-                    confidence=confidence, method=method,
-                )
-            if q_advisor_row is not None:
-                res.groups["__advisor__"] = q_advisor_row
-            return res
-
-        if spec.agg == "STDDEV":
-            return self._run_stddev(
-                spec, sample_pct, wants_approx, t0, z=z, confidence=confidence
-            )
-
-        if spec.agg == "CORR":
-            return self._run_corr(
-                spec, sample_pct, wants_approx, t0, z=z, confidence=confidence
-            )
-
-        if spec.distinct:
-            return self._run_count_distinct(
-                spec, sample_pct, method, wants_approx, t0, z=z, confidence=confidence
-            )
-
-        if not wants_approx:
-            return self._run_exact(spec, t0)
-
-        advisor_row: dict | None = None
-        if method is None:
-            if auto:
-                method, advisor_row = self._advise_auto(spec)
-            elif error_pct is not None:
-                method = "clt"
-            elif sample_pct is not None:
-                method = "parallel" if spec.group_by else "random"
-            else:
-                total = self.catalog.table(spec.table).count()
-                method = select_method(spec.agg, total, spec.group_by is not None)
-        if method not in METHODS:
-            raise ValueError(f"unknown method {method!r}; one of {sorted(METHODS)}")
-        minfo = METHODS[method]
-
-        # Estimator-specific arguments must reach an estimator that
-        # consumes them — silently ignoring a stratification/auxiliary
-        # request would hand back a different estimator than asked for.
-        if stratum_col and not minfo.get("poststrat"):
-            raise ValueError(
-                f"stratum_col= is only consumed by method='poststrat' "
-                f"(got method={method!r})"
-            )
-        if aux_column and not minfo.get("regaux"):
-            raise ValueError(
-                f"aux_column= is only consumed by method='regaux' "
-                f"(got method={method!r})"
-            )
-
-        fraction = (sample_pct / 100.0) if sample_pct else error_ladder(error_pct or 5.0)
-        agg = AggSpec(func=spec.agg.lower(), column=spec.column)
-        s_spec = self._sampling_spec(spec, minfo["design"], fraction)
-
-        if minfo.get("outlier"):
-            from approximatequeryengine_spark.plans.outlier import (
-                outlier_grouped_sum_ci,
-                outlier_sum_ci,
-            )
-
-            if spec.agg != "SUM":
-                raise ValueError(
-                    "method='outlier' supports a global SUM only; use the "
-                    "closed-form methods for AVG/COUNT"
-                )
-            if spec.group_by:
-                rdf = outlier_grouped_sum_ci(
-                    self._base_df(spec),
-                    spec.column,
-                    spec.group_by,
-                    self.catalog.unique_key(spec.table),
-                    fraction,
-                    z=z,
-                )
-            else:
-                rdf = outlier_sum_ci(
-                    self._base_df(spec),
-                    spec.column,
-                    self.catalog.unique_key(spec.table),
-                    fraction,
-                    z=z,
-                )
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("ddsketch"):
-            # Reaching here means a non-quantile aggregate: the quantile
-            # dispatch above consumed MEDIAN/PERCENTILE before the
-            # method chain.
-            raise ValueError(
-                "method='ddsketch' applies to MEDIAN/PERCENTILE only; "
-                "use the sampling methods for SUM/AVG/COUNT"
-            )
-        elif minfo.get("priority"):
-            from approximatequeryengine_spark.plans.priority import (
-                priority_sample_subset_sum,
-            )
-
-            if spec.agg != "SUM" or spec.group_by:
-                raise ValueError(
-                    "method='priority' supports a global SUM only; use "
-                    "the closed-form methods for AVG/COUNT/GROUP BY"
-                )
-            rdf = priority_sample_subset_sum(
-                self._base_df(spec),
-                self.catalog.unique_key(spec.table),
-                F.floor(F.col(spec.column) * 100.0 + 0.5).cast("long"),
-                F.lit(True),
-                k=2048,
-            )
-            rdf = rdf.withColumnRenamed("est_sum", AggSpec("sum", spec.column).name())
-            rdf = rdf.withColumnRenamed("n_sample", "n_samples")
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("twostage"):
-            from approximatequeryengine_spark.plans.twostage import (
-                TS_F1,
-                TS_F2,
-                twostage_grouped_sum_ci,
-                twostage_sum_ci,
-            )
-
-            if spec.agg != "SUM":
-                raise ValueError(
-                    "method='twostage' supports SUM only (global or one "
-                    "GROUP BY column); use the closed-form methods for "
-                    "AVG/COUNT"
-                )
-            if spec.group_by:
-                rdf = twostage_grouped_sum_ci(
-                    self._base_df(spec),
-                    self.catalog.unique_key(spec.table),
-                    spec.group_by,
-                    F.floor(F.col(spec.column) * 100.0 + 0.5),
-                    z=z,
-                ).orderBy(spec.group_by)
-            else:
-                rdf = twostage_sum_ci(
-                    self._base_df(spec),
-                    self.catalog.unique_key(spec.table),
-                    F.floor(F.col(spec.column) * 100.0 + 0.5),
-                    z=z,
-                )
-            rdf = rdf.withColumnRenamed("sum_value", AggSpec("sum", spec.column).name())
-            rdf = rdf.withColumnRenamed("n_rows", "n_samples")
-            res = self._finalize(
-                rdf, agg, spec, method, TS_F1 * TS_F2, t0, confidence=confidence
-            )
-        elif minfo.get("poststrat"):
-            from approximatequeryengine_spark.plans.poststrat import (
-                poststrat_grouped_sum_ci,
-                poststrat_sum_ci,
-            )
-
-            if spec.agg != "SUM":
-                raise ValueError(
-                    "method='poststrat' supports SUM only (global or one "
-                    "GROUP BY column; the strata come from stratum_col=)"
-                )
-            if not stratum_col:
-                raise ValueError(
-                    "method='poststrat' needs stratum_col=<column> — the "
-                    "column whose exact counts re-weight the sample"
-                )
-            if spec.group_by:
-                if spec.group_by == stratum_col:
-                    raise ValueError(
-                        "method='poststrat': GROUP BY column and "
-                        "stratum_col= must differ (stratifying on the "
-                        "output group is a no-op — the exact per-group "
-                        "counts already condition on it)"
-                    )
-                rdf = poststrat_grouped_sum_ci(
-                    self._base_df(spec),
-                    spec.column,
-                    spec.group_by,
-                    stratum_col,
-                    s_spec,
-                    z=z,
-                )
-            else:
-                rdf = poststrat_sum_ci(
-                    self._base_df(spec), spec.column, stratum_col, s_spec, z=z
-                )
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("regaux"):
-            from approximatequeryengine_spark.plans.regression import (
-                regaux_grouped_sum_ci,
-                regaux_sum_ci,
-            )
-
-            if spec.agg != "SUM":
-                raise ValueError(
-                    "method='regaux' supports SUM only (global or one "
-                    "GROUP BY column); use the closed-form methods for "
-                    "AVG/COUNT"
-                )
-            if not aux_column:
-                raise ValueError(
-                    "method='regaux' needs aux_column=<column/expression> — "
-                    "the auxiliary whose exact total calibrates the sample"
-                )
-            if spec.group_by:
-                rdf = regaux_grouped_sum_ci(
-                    self._base_df(spec),
-                    spec.column,
-                    spec.group_by,
-                    aux_column,
-                    s_spec,
-                    z=z,
-                )
-            else:
-                rdf = regaux_sum_ci(
-                    self._base_df(spec), spec.column, aux_column, s_spec, z=z
-                )
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("pps"):
-            from approximatequeryengine_spark.plans.pps import pps_sum_ci
-
-            if spec.agg != "SUM" or spec.group_by:
-                raise ValueError(
-                    "method='pps' supports a global SUM only; use the "
-                    "closed-form methods for AVG/COUNT/GROUP BY"
-                )
-            rdf = pps_sum_ci(
-                self._base_df(spec),
-                spec.column,
-                self.catalog.unique_key(spec.table),
-                fraction,
-                z=z,
-            )
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("blb"):
-            from approximatequeryengine_spark.plans.bootstrap import blb_sum_ci
-
-            if spec.agg != "SUM" or spec.group_by:
-                raise ValueError(
-                    "method='blb' supports a global SUM only; use "
-                    "method='bootstrap' for grouped bootstrap CIs"
-                )
-            rdf = blb_sum_ci(
-                self._base_df(spec),
-                spec.column,
-                self.catalog.unique_key(spec.table),
-                z=z,
-            )
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            rdf = rdf.withColumnRenamed("n_rows_scanned", "n_samples")
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("bootstrap"):
-            from approximatequeryengine_spark.plans.bootstrap import (
-                bootstrap_grouped_sum_ci,
-                bootstrap_sum_ci,
-            )
-
-            if spec.agg != "SUM":
-                raise ValueError(
-                    "method='bootstrap' supports SUM only; use the "
-                    "closed-form methods for AVG/COUNT"
-                )
-            if spec.group_by:
-                rdf = bootstrap_grouped_sum_ci(
-                    self._base_df(spec), spec.column, spec.group_by, s_spec, z=z
-                )
-            else:
-                rdf = bootstrap_sum_ci(self._base_df(spec), spec.column, s_spec, z=z)
-            rdf = rdf.withColumnRenamed("estimate", AggSpec("sum", spec.column).name())
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        elif minfo.get("adaptive") and not spec.group_by:
-            res = adaptive_aggregate(
-                self._base_df(spec),
-                agg,
-                s_spec,
-                error_pct=error_pct or 5.0,
-                confidence=confidence,
-                validators=minfo.get("validators", 0),
-                z=z,
-            )
-            res.method = method
-        elif minfo.get("adaptive") and spec.group_by:
-            # Round 3: grouped adaptive escalation — double the fraction
-            # until the WORST group's relative CI half-width meets the
-            # budget (the reference ran grouped queries at a fixed
-            # fraction).
-            from approximatequeryengine_spark.plans.adaptive import (
-                adaptive_grouped_aggregate,
-            )
-
-            rdf, final_fraction, iters = adaptive_grouped_aggregate(
-                self._base_df(spec),
-                agg,
-                [spec.group_by],
-                s_spec,
-                error_pct=error_pct or 5.0,
-                z=z,
-            )
-            res = self._finalize(
-                rdf, agg, spec, method, final_fraction, t0, confidence=confidence
-            )
-            res.iterations = iters
-        else:
-            sampled = apply_sampling(self._base_df(spec), s_spec)
-            rdf = approx_aggregate(
-                sampled, agg, group_by=[spec.group_by] if spec.group_by else None,
-                z=z, with_ci=with_ci,
-            )
-            res = self._finalize(rdf, agg, spec, method, fraction, t0, confidence=confidence)
-        # Cap, never overwrite: the adaptive path's V4 validation
-        # confidence (max(0, 1−cv)) and the small-sample heuristic
-        # downgrade must survive — a DRIFTING result reporting the full
-        # requested level would silently disable the V4/V5 semantics.
-        res.confidence_level = min(confidence, res.confidence_level)
-        if advisor_row is not None:
-            res.groups["__advisor__"] = advisor_row
-
-        if compare:
-            exact = self._run_exact(spec, time.time())
-            res.extras = getattr(res, "extras", {})
-            if res.value is not None and exact.value:
-                res.groups["__exact__"] = exact.value
-                res.groups["__actual_error_pct__"] = (
-                    100.0 * abs(res.value - exact.value) / abs(exact.value)
-                )
-                res.groups["__speedup__"] = (
-                    exact.computation_time / res.computation_time
-                    if res.computation_time
-                    else float("inf")
-                )
+        q = _Query(
+            self, sql, z, t0, sample_pct, error_pct, method, confidence,
+            stratum_col, aux_column,
+        )
+        route = self._route(q)
+        res = route.execute(self, q)
+        twin = route.twin(self, q, res) if compare and route.twin else None
+        if twin is not None:
+            self._compare(res, *twin)
         return res
 
-    def _run_within_marker(
-        self, wm, z: float, compare: bool, t0: float, sql: str
-    ) -> ApproxResult:
+    # -- routes: markers and passthrough ----------------------------------
+
+    def _run_within_marker(self, q: _Query) -> ApproxResult:
         """Execute the ``WITHIN e PERCENT`` error-budget marker
         (frontend/approx_sql.py::parse_within_marker): route to the
         adaptive CLT escalation loop — the reference's early-stop
         semantics (``custom_bplus_db.cpp:885-1043``) from plain SQL.
-        Global shape → adaptive_aggregate; grouped → worst-group stop
-        rule. Output columns: [group,] <alias>, ci_lower, ci_upper,
-        n_samples — the approx_aggregate frame with the user's alias."""
-        from approximatequeryengine_spark.plans.adaptive import (
-            adaptive_aggregate,
-            adaptive_grouped_aggregate,
-        )
-        from approximatequeryengine_spark.plans.estimators import AggSpec
-
+        The fraction doubles until the realized CI half-width meets the
+        budget; global shape → adaptive_aggregate, grouped → the
+        worst-group stop rule. The terminal rung is a pure function of
+        the data — certifiable by a rung-re-deriving oracle. Output
+        columns: [group,] <alias>, ci_lower, ci_upper, n_samples — the
+        approx_aggregate frame with the user's alias."""
         (table, aggf, expr, alias, where, group, start_pct, error_pct,
-         join_txt, order_by_groups, cte) = wm
+         join_txt, order_by_groups, cte) = q.within
         if join_txt or cte:
             # Star-join / leading-CTE shape (round 9): the adaptive
             # loop samples by the FACT key, so each rung's hash
@@ -1084,7 +529,7 @@ class AQEngine:
         )
         if group:
             rdf, fraction, iterations = adaptive_grouped_aggregate(
-                base, agg, group, s_spec, error_pct=error_pct, z=z
+                base, agg, group, s_spec, error_pct=error_pct, z=q.z
             )
             if order_by_groups:
                 rdf = rdf.orderBy(*group)
@@ -1094,107 +539,271 @@ class AQEngine:
                 status=ApproximationStatus.STABLE,
                 fraction=fraction,
                 iterations=iterations,
-                computation_time=time.time() - t0,
             )
         else:
             res = adaptive_aggregate(
-                base, agg, s_spec, error_pct=error_pct, z=z
+                base, agg, s_spec, error_pct=error_pct, z=q.z
             )
             res.method = "adaptive_sql"
-            res.computation_time = time.time() - t0
-        if compare:
-            from approximatequeryengine_spark.frontend.approx_sql import (
-                exact_twin_sql,
-            )
-
-            twin = exact_twin_sql(sql)
-            if twin is not None:
-                self.catalog.ensure_views()
-                t1 = time.time()
-                exact_df = self.spark.sql(twin)
-                exact_rows = exact_df.collect()
-                exact_time = time.time() - t1
-                res.groups["__exact_sql__"] = twin
-                res.groups["__exact_df__"] = exact_df
-                res.groups["__speedup__"] = (
-                    exact_time / res.computation_time
-                    if res.computation_time
-                    else float("inf")
-                )
-                if (
-                    not group
-                    and res.value is not None
-                    and len(exact_rows) == 1
-                    and exact_rows[0][alias]
-                ):
-                    ev = float(exact_rows[0][alias])
-                    res.groups["__exact__"] = ev
-                    res.groups["__actual_error_pct__"] = (
-                        100.0 * abs(res.value - ev) / abs(ev)
-                    )
+        res.computation_time = time.time() - q.t0
         return res
 
-    def _run_quantile(
-        self, spec: QuerySpec, sample_pct: float | None, approx: bool, t0: float,
-        z: float = 1.959963984540054, confidence: float = 0.95,
-        method: str | None = None,
-    ) -> ApproxResult:
-        """MEDIAN / PERCENTILE(col, q): order-statistic point estimate
-        with the binomial distribution-free CI (plans/quantiles.py).
-        ``method='ddsketch'`` routes to the guaranteed-relative-error
-        sketch instead (full scan, no sampling). Exact mode = the same
-        machinery over the full data (design 'none')."""
-        from approximatequeryengine_spark.plans.quantiles import approx_quantile_ci
+    def _run_marker(self, q: _Query, build: Callable[[], DataFrame]) -> ApproxResult:
+        """An APPROX + TABLESAMPLE marker query answered by ``build``."""
+        self.catalog.ensure_views()
+        return ApproxResult(
+            df=build(),
+            method="sql_rewrite",
+            status=ApproximationStatus.STABLE,
+            computation_time=time.time() - q.t0,
+        )
 
-        if not spec.column:
-            raise ValueError(f"{spec.agg} requires a column")
-        q = spec.q if spec.q is not None else 0.5
-        if method == "ddsketch":
-            return self._run_ddsketch_quantile(spec, q, t0, confidence=confidence)
-        if spec.group_by:
-            return self._run_grouped_quantile(
-                spec, q, sample_pct, approx, t0, z=z, confidence=confidence
-            )
-        if approx:
-            s_spec = self._sampling_spec(
-                spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-            )
+    def _run_quantile_marker(self, q: _Query) -> ApproxResult:
+        """GLOBAL order-statistic markers execute through the
+        partition-parallel rank selection — the rewritten window text
+        would sort the whole sample through one task (it remains the
+        DuckDB oracle; identical values by construction)."""
+        table, expr, qq, alias, where, spec = q.global_quantile
+        return self._run_marker(q, lambda: order_stat_marker_ci(
+            self.catalog.table(table), expr, qq, alias, spec, where=where, z=q.z
+        ))
+
+    def _run_grouped_quantile_marker(self, q: _Query) -> ApproxResult:
+        """GROUPED order-statistic markers (round 9) execute through the
+        grouped rank selection, partition-parallel in every pass: the
+        window text's sort parallelism equals the group count — three
+        groups means three tasks each sorting a third of the sample. The
+        text stays the DuckDB oracle."""
+        table, expr, qq, alias, where, group, spec, ordered = q.grouped_quantile
+        return self._run_marker(q, lambda: grouped_order_stat_ci(
+            self.catalog.table(table), expr, qq, alias, group, spec,
+            where=where, z=q.z, order_by_group=ordered,
+        ))
+
+    def _run_spark_sql(self, q: _Query) -> ApproxResult:
+        """The query text through plain Spark SQL, exact: the full Spark
+        SQL surface, and the dialect shapes that have no estimator when
+        no approximation was asked for. Temp views are session-global;
+        another catalog (different sf_dir, same session) may have
+        clobbered ours — re-assert."""
+        self.catalog.ensure_views()
+        return ApproxResult(
+            df=self.spark.sql(q.sql),
+            method="spark_sql",
+            status=ApproximationStatus.EXACT,
+            computation_time=time.time() - q.t0,
+        )
+
+    # -- compare=True ------------------------------------------------------
+
+    def _marker_twin(self, q: _Query, res: ApproxResult):
+        """A marker query's exact twin: the markers unwrapped."""
+        twin = exact_twin_sql(q.sql)
+        if twin is None:
+            return None
+        self.catalog.ensure_views()
+        return self.spark.sql(twin), twin
+
+    def _compare(
+        self, res: ApproxResult, exact_df: DataFrame, exact_sql: str | None = None
+    ) -> None:
+        """F6 exact-vs-approx comparison, one copy for every route: run
+        the exact twin and report ``__speedup__``; for a one-row answer
+        also ``__exact__`` / ``__actual_error_pct__`` (its first numeric
+        column shared with the twin) and ``__actual_error_pct_by_col__``.
+        The TABLESAMPLE marker routes hand back a lazy frame with no
+        scalar ``value``: it runs here first, so its time covers the
+        work, and its row is read. A twin given as SQL is reported as
+        ``__exact_sql__`` / ``__exact_df__``. Both results are aggregate
+        outputs — the collects are bounded."""
+        approx_rows = None
+        if res.method == "sql_rewrite":
+            t1 = time.time()
+            approx_rows = res.df.collect()
+            res.computation_time += time.time() - t1
+        t1 = time.time()
+        exact_rows = exact_df.collect()
+        exact_time = time.time() - t1
+        if exact_sql is not None:
+            res.groups["__exact_sql__"] = exact_sql
+            res.groups["__exact_df__"] = exact_df
+        res.groups["__speedup__"] = (
+            exact_time / res.computation_time if res.computation_time else float("inf")
+        )
+        if len(exact_rows) != 1:
+            return
+        e = exact_rows[0]
+        # Every shared numeric column gets an error readout (Decimal
+        # included — exact SUMs over decimal fixtures are Decimal-typed;
+        # bool is an int subclass, not a metric).
+        shared = [
+            c for c in exact_df.columns
+            if c in res.df.columns
+            and isinstance(e[c], (int, float, Decimal))
+            and not isinstance(e[c], bool)
+        ]
+        if approx_rows is None:
+            a = {c: res.value for c in shared[:1]} if res.value is not None else None
         else:
-            s_spec = SamplingSpec(design="none", key=self.catalog.unique_key(spec.table))
-        rdf = approx_quantile_ci(self._base_df(spec), spec.column, q, s_spec, z=z)
-        row = rdf.collect()[0]
+            a = approx_rows[0].asDict() if len(approx_rows) == 1 else None
+        if a is None:
+            return
+        per_col = {
+            c: 100.0 * abs(float(a[c]) - float(e[c])) / abs(float(e[c]))
+            for c in shared
+            if c in a and e[c] and a[c] is not None
+        }
+        if per_col:
+            res.groups["__actual_error_pct_by_col__"] = per_col
+        if shared:
+            res.groups["__exact__"] = float(e[shared[0]])
+            if shared[0] in per_col:
+                res.groups["__actual_error_pct__"] = per_col[shared[0]]
+
+    # -- routes: the dialect -----------------------------------------------
+
+    def _run_sampled(self, q: _Query) -> ApproxResult:
+        """SUM/AVG/COUNT/MIN/MAX over a sample. The method: ``auto`` →
+        :meth:`_advise_auto`; else an error budget → 'clt'; a sample % →
+        'random' ('parallel' when grouped); neither → the F3 ladder. Its
+        ``_ESTIMATORS`` entry then checks the query and runs."""
+        spec, advisor = q.spec, None
+        if q.method == "auto":
+            q.method, advisor, _ = self._advise_auto(spec, q.z)
+        elif q.method is None:
+            if q.error_pct is not None:
+                q.method = "clt"
+            elif q.pct is not None:
+                q.method = "parallel" if spec.group_by else "random"
+            else:
+                total = self.catalog.table(spec.table).count()
+                q.method = select_method(spec.agg, total, spec.group_by is not None)
+        est = _ESTIMATORS.get(q.method)
+        if est is None:
+            raise ValueError(f"unknown method {q.method!r}; one of {sorted(METHODS)}")
+        est.check(q)
+        fraction = (q.pct / 100.0) if q.pct else error_ladder(q.error_pct or 5.0)
+        s_spec = self._sampling_spec(spec, METHODS[q.method]["design"], fraction)
+        out = (est.grouped if spec.group_by else est.run)(q, self._base_df(spec), s_spec)
+        if isinstance(out, ApproxResult):
+            res = out
+            res.method = q.method
+        else:
+            for old, new in ((est.estimate, q.agg.name()), (est.n_samples, "n_samples")):
+                if old:
+                    out = out.withColumnRenamed(old, new)
+            res = self._finalize(
+                out, q, q.method, est.fraction or fraction, confidence=q.confidence
+            )
+        # Cap, never overwrite: the adaptive path's V4 validation
+        # confidence (max(0, 1−cv)) and the small-sample heuristic
+        # downgrade must survive — a DRIFTING result reporting the full
+        # requested level would silently disable the V4/V5 semantics.
+        res.confidence_level = min(q.confidence, res.confidence_level)
+        if advisor is not None:
+            res.groups["__advisor__"] = advisor
+        return res
+
+    def _sampled_twin(self, q: _Query, res: ApproxResult):
+        """The sampled route's exact twin: the same aggregate unsampled
+        (a global answer only)."""
+        return (self._exact_df(q), None) if res.value is not None else None
+
+    def _sample_spec(self, q: _Query, approx: bool = True) -> SamplingSpec:
+        """The dialect's default sample for the non-SUM families: uniform
+        hash at the query's percentage (10% when none is given), or the
+        whole table when no approximation was asked for."""
+        if not approx:
+            return SamplingSpec(design="none", key=self.catalog.unique_key(q.spec.table))
+        return self._sampling_spec(q.spec, "uniform_hash", (q.pct or 10.0) / 100.0)
+
+    def _ci_result(
+        self, q: _Query, rdf: DataFrame, row, value_col: str, method: str,
+        s_spec: SamplingSpec, exact: bool = False,
+    ) -> ApproxResult:
+        """A one-row answer with a CI: value, bounds and sample count
+        read from ``row``; confidence capped by the sample size."""
         res = ApproxResult(
             df=rdf,
-            value=row[f"{spec.column}_q"],
+            value=row[value_col],
             ci_lower=row["ci_lower"],
             ci_upper=row["ci_upper"],
             samples_used=int(row["n_samples"]),
             fraction=s_spec.realized_fraction(),
-            method="quantile" if approx else "exact",
-            status=ApproximationStatus.STABLE if approx else ApproximationStatus.EXACT,
-            computation_time=time.time() - t0,
+            method=method,
+            status=ApproximationStatus.EXACT if exact else ApproximationStatus.STABLE,
+            computation_time=time.time() - q.t0,
         )
         res.error_margin = (res.ci_upper - res.ci_lower) / 2.0
-        res.confidence_level = min(confidence, heuristic_confidence(res.samples_used))
+        res.confidence_level = min(q.confidence, heuristic_confidence(res.samples_used))
         return res
 
-    def _run_ddsketch_quantile(
-        self, spec: QuerySpec, q: float, t0: float, confidence: float = 0.95
+    def _grouped_result(
+        self, q: _Query, rdf: DataFrame, method: str, s_spec: SamplingSpec,
+        exact: bool = False,
     ) -> ApproxResult:
+        """A grouped answer: its CI columns were computed for the
+        requested level, so that level is reported."""
+        return ApproxResult(
+            df=rdf,
+            method=method,
+            fraction=s_spec.realized_fraction(),
+            status=ApproximationStatus.EXACT if exact else ApproximationStatus.STABLE,
+            computation_time=time.time() - q.t0,
+            confidence_level=q.confidence,
+        )
+
+    def _run_quantile(self, q: _Query) -> ApproxResult:
+        """MEDIAN / PERCENTILE(col, q): order-statistic point estimate
+        with the binomial distribution-free CI (plans/quantiles.py).
+        ``method='ddsketch'`` routes to the guaranteed-relative-error
+        sketch instead (full scan, no sampling); ``method='auto'`` asks
+        the quantile advisor. Exact mode = the same machinery over the
+        full data (design 'none')."""
+        spec, method, approx = q.spec, q.method, q.approx
+        advisor = reuse = None
+        if not spec.column:
+            raise ValueError(f"{spec.agg} requires a column")
+        quant = spec.q if spec.q is not None else 0.5
+        if method == "auto" and not spec.group_by:
+            method, advisor, reuse = self._advise_auto(spec, q.z)
+            approx = method != "exact"
+        if method == "ddsketch":
+            res = self._run_ddsketch_quantile(q, quant)
+        elif spec.group_by:
+            res = self._run_grouped_quantile(q, quant, approx)
+        else:
+            if method == "quantile" and reuse and q.pct is None:
+                # The advisor's evidence pass IS the 10% order-statistic
+                # job at the default fraction: its result is the answer —
+                # never the same sampled job twice.
+                s_spec, rdf, row = reuse
+            else:
+                s_spec = self._sample_spec(q, approx)
+                rdf = approx_quantile_ci(self._base_df(spec), spec.column, quant, s_spec, z=q.z)
+                row = rdf.collect()[0]
+            res = self._ci_result(
+                q, rdf, row, f"{spec.column}_q", "quantile" if approx else "exact",
+                s_spec, exact=not approx,
+            )
+        if advisor is not None:
+            res.groups["__advisor__"] = advisor
+        return res
+
+    def _run_ddsketch_quantile(self, q: _Query, quant: float) -> ApproxResult:
         """PERCENTILE/MEDIAN via DDSketch (plans/ddsketch.py): one full
         scan, GUARANTEED |est − true|/true ≤ α — the reported interval
         is the deterministic α-bound [est/(1+α), est/(1−α)], so the
         confidence level is 1.0 by construction (positive values only,
         the sketch's domain)."""
-        from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles
-
+        spec = q.spec
         if spec.group_by:
             raise ValueError(
                 "method='ddsketch' supports a global PERCENTILE/MEDIAN "
                 "only; grouped quantiles use the order-statistic path"
             )
         alpha = 0.01
-        rdf = ddsketch_quantiles(self._base_df(spec), spec.column, alpha=alpha, qs=(q,))
+        rdf = ddsketch_quantiles(self._base_df(spec), spec.column, alpha=alpha, qs=(quant,))
         rows = rdf.collect()
         if not rows:
             raise ValueError(
@@ -1212,39 +821,19 @@ class AQEngine:
             fraction=1.0,
             method="ddsketch",
             status=ApproximationStatus.STABLE,
-            computation_time=time.time() - t0,
+            computation_time=time.time() - q.t0,
         )
         res.error_margin = (res.ci_upper - res.ci_lower) / 2.0
         res.confidence_level = 1.0
         return res
 
-    def _passthrough_exact(self, spec: QuerySpec, t0: float) -> ApproxResult:
-        """Run the original query text through plain Spark SQL — for
-        grammar shapes the dialect recognizes but has no estimator for,
-        when no approximation was requested (the pre-widening behavior)."""
-        self.catalog.ensure_views()
-        df = self.spark.sql(spec.raw)
-        return ApproxResult(
-            df=df,
-            method="spark_sql",
-            status=ApproximationStatus.EXACT,
-            computation_time=time.time() - t0,
-        )
-
-    def _run_grouped_quantile(
-        self, spec: QuerySpec, q: float, sample_pct: float | None, approx: bool,
-        t0: float, z: float = 1.959963984540054, confidence: float = 0.95,
-    ) -> ApproxResult:
+    def _run_grouped_quantile(self, q: _Query, quant: float, approx: bool) -> ApproxResult:
         """Grouped MEDIAN/PERCENTILE: per-group order-statistic CI.
         The portable spelling stays plans/quantiles.py::
         grouped_quantile_ci_sql (the oracle); execution uses the
         grouped partition-parallel rank selection."""
-        if approx:
-            s_spec = self._sampling_spec(
-                spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-            )
-        else:
-            s_spec = SamplingSpec(design="none", key=self.catalog.unique_key(spec.table))
+        spec = q.spec
+        s_spec = self._sample_spec(q, approx)
         self.catalog.ensure_views()
         # Execute via the grouped partition-parallel rank selection
         # (round 9) — the window text's per-group sort has parallelism
@@ -1252,132 +841,72 @@ class AQEngine:
         # The text (grouped_quantile_ci_sql) remains the portable
         # oracle spelling; values identical by construction, including
         # its NULLS FIRST window convention (nulls='first').
-        from approximatequeryengine_spark.plans.quantiles import (
-            grouped_order_stat_ci,
-        )
-
         rdf = grouped_order_stat_ci(
             self.catalog.table(spec.table),
             spec.column,
-            q,
+            quant,
             f"{spec.column}_q",
             spec.group_by,
             s_spec,
             where=spec.where,
-            z=z,
+            z=q.z,
             nulls="first",
             order_by_group=True,
         ).select(
             spec.group_by, "n_samples", f"{spec.column}_q",
             "ci_lower", "ci_upper",
         )
-        res = ApproxResult(
-            df=rdf,
-            method="quantile" if approx else "exact",
-            fraction=s_spec.realized_fraction(),
-            status=ApproximationStatus.STABLE if approx else ApproximationStatus.EXACT,
-            computation_time=time.time() - t0,
+        return self._grouped_result(
+            q, rdf, "quantile" if approx else "exact", s_spec, exact=not approx
         )
-        res.confidence_level = confidence
-        return res
 
-    def _run_stddev(
-        self, spec: QuerySpec, sample_pct: float | None, approx: bool, t0: float,
-        z: float = 1.959963984540054, confidence: float = 0.95,
-    ) -> ApproxResult:
+    def _run_stddev(self, q: _Query) -> ApproxResult:
         """STDDEV: sampled standard deviation with the fourth-moment
         CLT CI (plans/variance.py); exact mode = ``stddev_samp`` over
         the full data."""
+        spec = q.spec
         if not spec.column:
             raise ValueError("STDDEV requires a column")
         if spec.group_by:
-            if not approx:
+            if not q.approx:
                 # Plain grouped STDDEV is ordinary Spark SQL — don't
                 # regress the passthrough the grammar widening captured.
-                return self._passthrough_exact(spec, t0)
-            from approximatequeryengine_spark.plans.variance import (
-                approx_grouped_stddev_ci,
-            )
-
-            s_spec = self._sampling_spec(
-                spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-            )
+                return self._run_spark_sql(q)
+            s_spec = self._sample_spec(q)
             rdf = approx_grouped_stddev_ci(
-                self._base_df(spec), spec.column, spec.group_by, s_spec, z=z
+                self._base_df(spec), spec.column, spec.group_by, s_spec, z=q.z
             )
-            res = ApproxResult(
-                df=rdf,
-                method="moment",
-                fraction=s_spec.realized_fraction(),
-                status=ApproximationStatus.STABLE,
-                computation_time=time.time() - t0,
-            )
-            res.confidence_level = confidence
-            return res
-        if not approx:
+            return self._grouped_result(q, rdf, "moment", s_spec)
+        if not q.approx:
             rdf = self._base_df(spec).agg(
                 F.stddev_samp(F.col(spec.column).cast("double")).alias("stddev")
             )
             res = ApproxResult(df=rdf, method="exact", status=ApproximationStatus.EXACT)
             v = rdf.collect()[0]["stddev"]
             res.value = float(v) if v is not None else None  # n<2 → NULL
-            res.computation_time = time.time() - t0
+            res.computation_time = time.time() - q.t0
             return res
-        from approximatequeryengine_spark.plans.variance import approx_stddev_ci
+        s_spec = self._sample_spec(q)
+        rdf = approx_stddev_ci(self._base_df(spec), spec.column, s_spec, z=q.z)
+        return self._ci_result(q, rdf, rdf.collect()[0], "stddev", "moment", s_spec)
 
-        s_spec = self._sampling_spec(
-            spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-        )
-        rdf = approx_stddev_ci(self._base_df(spec), spec.column, s_spec, z=z)
-        row = rdf.collect()[0]
-        res = ApproxResult(
-            df=rdf,
-            value=row["stddev"],
-            ci_lower=row["ci_lower"],
-            ci_upper=row["ci_upper"],
-            samples_used=int(row["n_samples"]),
-            fraction=s_spec.realized_fraction(),
-            method="moment",
-            status=ApproximationStatus.STABLE,
-            computation_time=time.time() - t0,
-        )
-        res.error_margin = (res.ci_upper - res.ci_lower) / 2.0
-        res.confidence_level = min(confidence, heuristic_confidence(res.samples_used))
-        return res
-
-    def _run_corr(
-        self, spec: QuerySpec, sample_pct: float | None, approx: bool, t0: float,
-        z: float = 1.959963984540054, confidence: float = 0.95,
-    ) -> ApproxResult:
+    def _run_corr(self, q: _Query) -> ApproxResult:
         """CORR(x, y): sampled Pearson correlation with the Fisher-z
         interval (plans/variance.py); exact mode = ``corr`` over the
         full data."""
+        spec = q.spec
         if not spec.column or not spec.column2:
             raise ValueError("CORR requires two columns: CORR(x, y)")
         if spec.group_by:
-            if not approx:
-                return self._passthrough_exact(spec, t0)
-            from approximatequeryengine_spark.plans.variance import (
-                approx_grouped_corr_ci,
-            )
-
-            s_spec = self._sampling_spec(
-                spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-            )
+            if not q.approx:
+                return self._run_spark_sql(q)
+            s_spec = self._sample_spec(q)
             rdf = approx_grouped_corr_ci(
                 self._base_df(spec), spec.column, spec.column2,
-                spec.group_by, s_spec, z=z,
+                spec.group_by, s_spec, z=q.z,
             )
-            res = ApproxResult(
-                df=rdf,
-                method="fisher_z",
-                fraction=s_spec.realized_fraction(),
-                status=ApproximationStatus.STABLE,
-                computation_time=time.time() - t0,
-            )
-            res.confidence_level = confidence
-            return res
-        if not approx:
+            return self._grouped_result(q, rdf, "fisher_z", s_spec)
+        if not q.approx:
             rdf = self._base_df(spec).agg(
                 F.corr(
                     F.col(spec.column).cast("double"),
@@ -1387,69 +916,50 @@ class AQEngine:
             res = ApproxResult(df=rdf, method="exact", status=ApproximationStatus.EXACT)
             v = rdf.collect()[0]["corr"]
             res.value = float(v) if v is not None else None  # n<2 / constant arm
-            res.computation_time = time.time() - t0
+            res.computation_time = time.time() - q.t0
             return res
-        from approximatequeryengine_spark.plans.variance import approx_corr_ci
-
-        s_spec = self._sampling_spec(
-            spec, "uniform_hash", (sample_pct or 10.0) / 100.0
-        )
+        s_spec = self._sample_spec(q)
         rdf = approx_corr_ci(
-            self._base_df(spec), spec.column, spec.column2, s_spec, z=z
+            self._base_df(spec), spec.column, spec.column2, s_spec, z=q.z
         )
-        row = rdf.collect()[0]
-        res = ApproxResult(
-            df=rdf,
-            value=row["corr"],
-            ci_lower=row["ci_lower"],
-            ci_upper=row["ci_upper"],
-            samples_used=int(row["n_samples"]),
-            fraction=s_spec.realized_fraction(),
-            method="fisher_z",
-            status=ApproximationStatus.STABLE,
-            computation_time=time.time() - t0,
-        )
-        res.error_margin = (res.ci_upper - res.ci_lower) / 2.0
-        res.confidence_level = min(confidence, heuristic_confidence(res.samples_used))
-        return res
+        return self._ci_result(q, rdf, rdf.collect()[0], "corr", "fisher_z", s_spec)
 
-    def _run_count_distinct(
-        self,
-        spec: QuerySpec,
-        sample_pct: float | None,
-        method: str | None,
-        wants_approx: bool,
-        t0: float,
-        z: float = 1.959963984540054,
-        confidence: float = 0.95,
-    ) -> ApproxResult:
+    def _run_count_distinct(self, q: _Query) -> ApproxResult:
         """COUNT(DISTINCT col) routes (round 3): exact ``countDistinct``;
         ``method='hll'`` (default) = the portable HyperLogLog — one full
         scan, constant memory, CI from the sketch's 1.04/√m standard
-        error; ``method='chao1'`` (default when ``sample_pct`` is given)
-        = sample-based species-richness correction (point estimate, no
-        closed-form CI)."""
+        error; ``method='chao1'`` (default when a sample % is given or
+        the query is grouped) = sample-based species-richness
+        correction (point estimate, no closed-form CI)."""
+        spec = q.spec
+        method = None if q.method == "auto" else q.method
         if not spec.column:
             raise ValueError("COUNT(DISTINCT ...) requires a column")
-        if spec.group_by:
-            return self._run_grouped_count_distinct(
-                spec, sample_pct, method, wants_approx, t0, confidence
-            )
-        if not wants_approx:
-            rdf = self._base_df(spec).agg(
-                F.countDistinct(spec.column).alias("count_distinct")
-            )
-            res = ApproxResult(
-                df=rdf, method="exact", status=ApproximationStatus.EXACT
-            )
-            row = rdf.collect()[0]
-            res.value = float(row["count_distinct"])
-            res.samples_used = int(row["count_distinct"])
-            res.computation_time = time.time() - t0
+        if not q.approx:
+            rdf = self._base_df(spec)
+            if spec.group_by:
+                rdf = rdf.groupBy(spec.group_by)
+            rdf = rdf.agg(F.countDistinct(spec.column).alias("count_distinct"))
+            res = ApproxResult(df=rdf, method="exact", status=ApproximationStatus.EXACT)
+            if not spec.group_by:
+                row = rdf.collect()[0]
+                res.value = float(row["count_distinct"])
+                res.samples_used = int(row["count_distinct"])
+            res.computation_time = time.time() - q.t0
             return res
-
+        if spec.group_by:
+            # The grouped HLL lives in the workload's
+            # sketch_portable_hll; Chao1 is the sampled route the
+            # dialect exposes.
+            if method is not None and method != "chao1":
+                raise ValueError(
+                    "grouped COUNT(DISTINCT ...) supports method='chao1' only "
+                    "(the HLL route is global; grouped sketches live in "
+                    "sketch_portable_hll)"
+                )
+            return self._run_chao1(q)
         if method is None:
-            method = "chao1" if sample_pct is not None else "hll"
+            method = "chao1" if q.pct is not None else "hll"
         if method not in ("hll", "chao1", "kmv"):
             raise ValueError(
                 f"COUNT(DISTINCT ...) supports method 'hll', 'chao1' or "
@@ -1457,27 +967,19 @@ class AQEngine:
             )
 
         if method == "kmv":
-            from approximatequeryengine_spark.plans.distinct import kmv_distinct_ci
-
-            rdf = kmv_distinct_ci(self._base_df(spec), spec.column, k=256, z=z)
+            rdf = kmv_distinct_ci(self._base_df(spec), spec.column, k=256, z=q.z)
             res = ApproxResult(df=rdf, method="kmv", fraction=1.0)
             row = rdf.collect()[0]
             res.value = float(row["est_distinct"])
             res.ci_lower = float(row["ci_lower"])
             res.ci_upper = float(row["ci_upper"])
             res.error_margin = (res.ci_upper - res.ci_lower) / 2
-            res.confidence_level = confidence
+            res.confidence_level = q.confidence
             res.samples_used = int(row["k_used"])
-            res.computation_time = time.time() - t0
+            res.computation_time = time.time() - q.t0
             return res
 
         if method == "hll":
-            from approximatequeryengine_spark.plans.hll import (
-                HLL_M,
-                _estimate,
-                hll_registers,
-            )
-
             base = self._base_df(spec).select(
                 F.lit("all").alias("__g"), F.col(spec.column)
             )
@@ -1495,34 +997,26 @@ class AQEngine:
             # Flajolet et al.: SE(E) ≈ 1.04/√m — an honest, known-form
             # interval unlike the sampled-sum CLT margins.
             se = 1.04 / (HLL_M ** 0.5)
-            res.error_margin = z * se * res.value
+            res.error_margin = q.z * se * res.value
             res.ci_lower = res.value - res.error_margin
             res.ci_upper = res.value + res.error_margin
-            res.confidence_level = confidence
+            res.confidence_level = q.confidence
             res.samples_used = int(HLL_M)
-            res.computation_time = time.time() - t0
+            res.computation_time = time.time() - q.t0
             return res
 
-        res = self._run_chao1(spec, sample_pct, t0, confidence)
+        res = self._run_chao1(q)
         row = res.df.collect()[0]
         res.value = float(row["d_chao1"])
         res.samples_used = int(row["d_obs"])
         return res
 
-    def _run_chao1(
-        self,
-        spec: QuerySpec,
-        sample_pct: float | None,
-        t0: float,
-        confidence: float,
-        group_col: str | None = None,
-    ) -> ApproxResult:
+    def _run_chao1(self, q: _Query) -> ApproxResult:
         """Shared Chao1 routing (global + grouped): deterministic sample
         via the portable hash, species-richness correction in one SQL
         statement over the catalog's temp views."""
-        from approximatequeryengine_spark.plans.distinct import chao1_sql
-
-        fraction = (sample_pct / 100.0) if sample_pct else 0.2
+        spec = q.spec
+        fraction = (q.pct / 100.0) if q.pct else 0.2
         table_expr = (
             f"(SELECT * FROM {spec.table} WHERE {spec.where})"
             if spec.where
@@ -1531,69 +1025,38 @@ class AQEngine:
         s_spec = self._sampling_spec(spec, "uniform_hash", fraction)
         self.catalog.ensure_views()
         rdf = self.spark.sql(
-            chao1_sql(table_expr, spec.column, s_spec, group_col=group_col)
+            chao1_sql(table_expr, spec.column, s_spec, group_col=spec.group_by)
         )
         res = ApproxResult(df=rdf, method="chao1", fraction=fraction)
-        res.confidence_level = confidence
-        res.computation_time = time.time() - t0
+        res.confidence_level = q.confidence
+        res.computation_time = time.time() - q.t0
         return res
 
-    def _run_grouped_count_distinct(
-        self,
-        spec: QuerySpec,
-        sample_pct: float | None,
-        method: str | None,
-        wants_approx: bool,
-        t0: float,
-        confidence: float,
-    ) -> ApproxResult:
-        """Grouped COUNT(DISTINCT col): exact via ``countDistinct``, or
-        per-group Chao1 over the deterministic sample (the grouped HLL
-        lives in the workload's ``sketch_portable_hll``; Chao1 is the
-        sampled route the dialect exposes)."""
-        if not wants_approx:
-            rdf = self._base_df(spec).groupBy(spec.group_by).agg(
-                F.countDistinct(spec.column).alias("count_distinct")
-            )
-            res = ApproxResult(
-                df=rdf, method="exact", status=ApproximationStatus.EXACT
-            )
-            res.computation_time = time.time() - t0
-            return res
-        if method is not None and method != "chao1":
-            raise ValueError(
-                "grouped COUNT(DISTINCT ...) supports method='chao1' only "
-                "(the HLL route is global; grouped sketches live in "
-                "sketch_portable_hll)"
-            )
-        return self._run_chao1(
-            spec, sample_pct, t0, confidence, group_col=spec.group_by
+    def _exact_df(self, q: _Query) -> DataFrame:
+        sampled = apply_sampling(self._base_df(q.spec), SamplingSpec(design="none"))
+        return approx_aggregate(
+            sampled, q.agg, group_by=[q.spec.group_by] if q.spec.group_by else None,
+            with_ci=False,
         )
 
-    def _run_exact(self, spec: QuerySpec, t0: float) -> ApproxResult:
-        agg = AggSpec(func=spec.agg.lower(), column=spec.column)
-        sampled = apply_sampling(self._base_df(spec), SamplingSpec(design="none"))
-        rdf = approx_aggregate(
-            sampled, agg, group_by=[spec.group_by] if spec.group_by else None, with_ci=False
-        )
-        res = self._finalize(rdf, agg, spec, "exact", 1.0, t0)
+    def _run_exact(self, q: _Query) -> ApproxResult:
+        res = self._finalize(self._exact_df(q), q, "exact", 1.0)
         res.status = ApproximationStatus.EXACT
         return res
 
     def _finalize(
         self,
         rdf: DataFrame,
-        agg: AggSpec,
-        spec: QuerySpec,
+        q: _Query,
         method: str,
         fraction: float,
-        t0: float,
         confidence: float = 0.95,
     ) -> ApproxResult:
         res = ApproxResult(df=rdf, method=method, fraction=fraction)
-        if not spec.group_by:
+        if not q.spec.group_by:
+            name = q.agg.name()
             row = rdf.collect()[0]
-            res.value = float(row[agg.name()]) if row[agg.name()] is not None else None
+            res.value = float(row[name]) if row[name] is not None else None
             res.samples_used = int(row["n_samples"])
             if (
                 "ci_lower" in rdf.columns
@@ -1607,7 +1070,382 @@ class AQEngine:
         else:
             # Grouped path: z/CI columns were computed for the requested
             # level, so report it — otherwise the dataclass default (0.95)
-            # caps a 0.99 request at line ~209's min().
+            # caps a 0.99 request at _run_sampled's min().
             res.confidence_level = confidence
-        res.computation_time = time.time() - t0
+        res.computation_time = time.time() - q.t0
         return res
+
+
+@dataclass
+class _Query:
+    """One :meth:`AQEngine.run` / :meth:`AQEngine.explain_auto` call:
+    the SQL, the caller's arguments (``method`` becomes the resolved
+    method once the sampled route picks one) and the parses the route
+    matchers share — each made at most once, and only when a matcher
+    asks for it."""
+
+    eng: AQEngine
+    sql: str
+    z: float = Z_95
+    t0: float = 0.0
+    sample_pct: float | None = None
+    error_pct: float | None = None
+    method: str | None = None
+    confidence: float = 0.95
+    stratum_col: str | None = None
+    aux_column: str | None = None
+
+    @cached_property
+    def spec(self) -> QuerySpec | None:
+        return parse_query(self.sql)
+
+    @cached_property
+    def keys(self) -> dict[str, str]:
+        return {**TABLES, **self.eng.catalog._extra_keys}
+
+    @cached_property
+    def within(self):
+        return parse_within_marker(self.sql, self.keys)
+
+    @cached_property
+    def rewritten(self) -> str | None:
+        return rewrite_approx_sql(self.sql, self.keys, z=self.z)
+
+    @cached_property
+    def global_quantile(self):
+        return parse_global_quantile_marker(self.sql, self.keys)
+
+    @cached_property
+    def grouped_quantile(self):
+        return parse_grouped_quantile_marker(self.sql, self.keys)
+
+    @cached_property
+    def agg(self) -> AggSpec:
+        return AggSpec(func=self.spec.agg.lower(), column=self.spec.column)
+
+    @property
+    def pct(self) -> float | None:
+        """The dialect's sample %: the argument, else the query's own
+        (``APPROX_SUM(x, pct)``, ``TABLESAMPLE``)."""
+        return self.sample_pct if self.sample_pct is not None else self.spec.sample_pct
+
+    @property
+    def approx(self) -> bool:
+        """Whether the dialect query asked for an approximation."""
+        return bool(
+            self.spec.approx or self.pct is not None
+            or self.error_pct is not None or self.method
+        )
+
+    @property
+    def approx_marker(self) -> bool:
+        """An APPROX marker in any syntax (the grammar error's trigger)."""
+        return rewrite_approx(self.sql)[1] or bool(
+            re.search(r"\bAPPROX\s*\(", self.sql, re.IGNORECASE)
+        )
+
+
+@dataclass(frozen=True)
+class _Route:
+    """One entry of the route table: ``match`` reads the query's parses;
+    ``execute`` answers it; ``explain`` says what ``method='auto'``
+    picks without running it (None: nothing to pick); ``twin`` gives the
+    exact twin for ``compare=True`` as ``(frame, sql or None)`` (None:
+    no comparison); ``grammar`` is the shape the grammar error quotes."""
+
+    name: str
+    grammar: str
+    match: Callable[[_Query], object]
+    execute: Callable[[AQEngine, _Query], ApproxResult]
+    explain: Callable[[AQEngine, _Query], dict] | None = None
+    twin: Callable | None = None
+
+
+def _explained(method: str, evidence: dict | None = None, source: str | None = None) -> dict:
+    return {
+        "method": method,
+        "source": source or ("advisor" if evidence is not None else "static"),
+        "evidence": evidence,
+    }
+
+
+def _explain_quantile(eng: AQEngine, q: _Query) -> dict:
+    if q.spec.group_by:
+        return _explained("quantile")
+    return _explained(*eng._advise_auto(q.spec, q.z)[:2])
+
+
+def _explain_within(eng: AQEngine, q: _Query) -> dict:
+    start_pct, error_pct = q.within[6], q.within[7]
+    return _explained("adaptive_sql", {
+        "error_pct": error_pct,
+        "start_fraction": start_pct / 100.0 if start_pct else error_ladder(error_pct),
+        "escalation": "fraction doubles until the CI half-width meets the "
+        "budget (worst group when grouped)",
+    }, "rewriter")
+
+
+def _explain_rewrite(executes_via: str | None = None) -> Callable:
+    """Marker routes report the rewrite and the portable text it runs
+    (or, for quantile markers, what executes in its place)."""
+    def explain(eng: AQEngine, q: _Query) -> dict:
+        evidence = {"rewritten_sql": q.rewritten}
+        if executes_via:
+            evidence["executes_via"] = executes_via
+        return _explained("sql_rewrite", evidence, "rewriter")
+    return explain
+
+
+def _grammar_error(sql: str) -> ValueError:
+    shapes = "".join(f"\n  {r.name}: {r.grammar}" for r in _ROUTES if r.grammar)
+    return ValueError(
+        f"APPROX dialect supports these shapes:{shapes}\nLeading CTEs are "
+        f"accepted when the markers live in the main query; could not parse: {sql!r}"
+    )
+
+
+_DIALECT = "FROM t [WHERE w] [GROUP BY g]"
+_TABLESAMPLE = "FROM t TABLESAMPLE (p PERCENT)"
+
+# Ordered: the first route whose matcher accepts the query answers it.
+# The dialect routes need only parse_query; the marker parses run only
+# for queries outside the dialect, and the quantile markers only once
+# the rewriter accepted the query.
+_ROUTES: tuple[_Route, ...] = (
+    _Route(
+        "quantile", f"SELECT APPROX(MEDIAN(col) | PERCENTILE(col, q)) {_DIALECT}",
+        lambda q: q.spec is not None and q.spec.agg in ("MEDIAN", "PERCENTILE"),
+        AQEngine._run_quantile, _explain_quantile,
+    ),
+    _Route(
+        "stddev", f"SELECT APPROX(STDDEV(col)) {_DIALECT}",
+        lambda q: q.spec is not None and q.spec.agg == "STDDEV",
+        AQEngine._run_stddev, lambda eng, q: _explained("moment"),
+    ),
+    _Route(
+        "corr", f"SELECT APPROX(CORR(x, y)) {_DIALECT}",
+        lambda q: q.spec is not None and q.spec.agg == "CORR",
+        AQEngine._run_corr, lambda eng, q: _explained("fisher_z"),
+    ),
+    _Route(
+        "count_distinct", f"SELECT APPROX(COUNT(DISTINCT col)) {_DIALECT}",
+        lambda q: q.spec is not None and q.spec.distinct,
+        AQEngine._run_count_distinct,
+        lambda eng, q: _explained(
+            "chao1" if q.spec.group_by or q.pct is not None else "hll"
+        ),
+    ),
+    _Route("exact", "", lambda q: q.spec is not None and not q.approx, AQEngine._run_exact),
+    _Route(
+        "sampled",
+        f"SELECT APPROX(SUM|AVG|COUNT|MIN|MAX(col)) {_DIALECT}, also written "
+        "APPROX_SUM(col, pct) or with the table marked TABLESAMPLE (p PERCENT)",
+        lambda q: q.spec is not None,
+        AQEngine._run_sampled,
+        lambda eng, q: _explained(*eng._advise_auto(q.spec, q.z)[:2]),
+        AQEngine._sampled_twin,
+    ),
+    _Route(
+        "within",
+        "SELECT [g, ...,] APPROX(SUM|AVG|COUNT(expr)) AS alias FROM t "
+        "[TABLESAMPLE (p PERCENT)] [JOIN d ON ...] [WHERE w] [GROUP BY g, ...] "
+        "[ORDER BY g, ...] WITHIN e PERCENT",
+        lambda q: q.within is not None,
+        AQEngine._run_within_marker, _explain_within, AQEngine._marker_twin,
+    ),
+    _Route(
+        "quantile_marker",
+        f"SELECT APPROX(MEDIAN(x) | PERCENTILE(x, q)) AS alias {_TABLESAMPLE} [WHERE w]",
+        lambda q: q.rewritten is not None and q.global_quantile is not None,
+        AQEngine._run_quantile_marker,
+        _explain_rewrite(
+            "order_stat_marker_ci (partition-parallel rank selection; the "
+            "window text is the oracle only)"
+        ),
+        AQEngine._marker_twin,
+    ),
+    _Route(
+        "grouped_quantile_marker",
+        f"SELECT g, APPROX(MEDIAN(x) | PERCENTILE(x, q)) AS alias {_TABLESAMPLE} "
+        "[WHERE w] GROUP BY g [ORDER BY g]",
+        lambda q: q.rewritten is not None and q.grouped_quantile is not None,
+        AQEngine._run_grouped_quantile_marker,
+        _explain_rewrite(
+            "grouped_order_stat_ci (grouped partition-parallel rank "
+            "selection; the window text is the oracle only)"
+        ),
+        AQEngine._marker_twin,
+    ),
+    _Route(
+        "rewrite",
+        "SELECT ..., APPROX(SUM|AVG|COUNT(expr) | SUM(a) / SUM(b) | MEDIAN(x) | "
+        f"PERCENTILE(x, q) | COUNT(DISTINCT col)) AS alias, ... {_TABLESAMPLE} "
+        "[JOIN d ON ...] [WHERE w] [GROUP BY ...] [HAVING ...] "
+        "[STRATIFY BY col | USING AUX(expr)] (estimator markers: single table "
+        "or INNER star join)",
+        lambda q: q.rewritten is not None,
+        lambda eng, q: eng._run_marker(q, lambda: eng.spark.sql(q.rewritten)),
+        _explain_rewrite(),
+        AQEngine._marker_twin,
+    ),
+    _Route("spark_sql", "", lambda q: not q.approx_marker, AQEngine._run_spark_sql),
+)
+
+
+@dataclass(frozen=True)
+class _Method:
+    """How the sampled dialect route runs one ``method=`` (METHODS
+    holds its sampling design and description): its estimator for a
+    global query and, if it has one, for a grouped query — each
+    ``(query, base frame, sampling spec) → result frame`` or a finished
+    ApproxResult; the aggregates it accepts; its output columns renamed
+    to the ``sum_<col>`` estimate and to ``n_samples``; the fraction it
+    reports when not the requested one; the ``run()`` argument it needs
+    (name, what it is). A sketch for another aggregate family has no
+    estimator here: ``only`` names the family it serves."""
+
+    run: Callable | None = None
+    grouped: Callable | None = None
+    aggs: tuple[str, ...] = ("SUM",)
+    estimate: str | None = "estimate"
+    n_samples: str | None = None
+    fraction: float | None = None
+    needs: tuple[str, str] | None = None
+    hint: str | None = None
+    only: str = ""
+
+    def check(self, q: _Query) -> None:
+        """Reject a query this estimator does not answer — never hand
+        back a different estimator than the one asked for."""
+        name, spec = q.method, q.spec
+        needed = self.needs[0] if self.needs else None
+        for arg in ("stratum_col", "aux_column"):
+            if getattr(q, arg) and arg != needed:
+                owner = next(
+                    n for n, m in _ESTIMATORS.items() if m.needs and m.needs[0] == arg
+                )
+                raise ValueError(
+                    f"{arg}= is only consumed by method={owner!r} (got method={name!r})"
+                )
+        if self.run is None:
+            raise ValueError(
+                f"method={name!r} applies to {self.only} only; use the "
+                "sampling methods for SUM/AVG/COUNT"
+            )
+        if spec.agg not in self.aggs or (spec.group_by and self.grouped is None):
+            scope = " or a SUM grouped by one column" if self.grouped else ""
+            hint = self.hint or "the closed-form methods for AVG/COUNT" + (
+                "" if self.grouped else "/GROUP BY"
+            )
+            raise ValueError(f"method={name!r} supports a global SUM only{scope}; use {hint}")
+        if needed and not getattr(q, needed):
+            raise ValueError(f"method={name!r} needs {needed}={self.needs[1]}")
+        if spec.group_by and spec.group_by == q.stratum_col:
+            raise ValueError(
+                f"method={name!r}: GROUP BY column and stratum_col= must differ "
+                "(stratifying on the output group is a no-op — the exact "
+                "per-group counts already condition on it)"
+            )
+
+
+def _closed_form(q: _Query, base: DataFrame, s: SamplingSpec) -> DataFrame:
+    return approx_aggregate(
+        apply_sampling(base, s), q.agg,
+        group_by=[q.spec.group_by] if q.spec.group_by else None, z=q.z,
+    )
+
+
+def _adaptive(q: _Query, base: DataFrame, s: SamplingSpec) -> ApproxResult:
+    return adaptive_aggregate(
+        base, q.agg, s, error_pct=q.error_pct or 5.0, confidence=q.confidence,
+        validators=METHODS[q.method].get("validators", 0), z=q.z,
+    )
+
+
+def _adaptive_grouped(q: _Query, base: DataFrame, s: SamplingSpec) -> ApproxResult:
+    """Round 3: grouped adaptive escalation — double the fraction until
+    the WORST group's relative CI half-width meets the budget (the
+    reference ran grouped queries at a fixed fraction)."""
+    rdf, fraction, iterations = adaptive_grouped_aggregate(
+        base, q.agg, [q.spec.group_by], s, error_pct=q.error_pct or 5.0, z=q.z
+    )
+    res = q.eng._finalize(rdf, q, q.method, fraction, confidence=q.confidence)
+    res.iterations = iterations
+    return res
+
+
+def _cents_floor(q: _Query):
+    return F.floor(F.col(q.spec.column) * 100.0 + 0.5)
+
+
+_ALL_AGGS = ("SUM", "AVG", "COUNT", "MIN", "MAX")
+_ESTIMATORS: dict[str, _Method] = {
+    **dict.fromkeys(
+        ("random", "block", "parallel", "revolutionary"),
+        _Method(_closed_form, _closed_form, _ALL_AGGS, estimate=None),
+    ),
+    **dict.fromkeys(
+        ("clt", "adaptive"),
+        _Method(_adaptive, _adaptive_grouped, _ALL_AGGS, estimate=None),
+    ),
+    "outlier": _Method(
+        lambda q, base, s: outlier_sum_ci(
+            base, q.spec.column, s.key, s.fraction, z=q.z
+        ),
+        lambda q, base, s: outlier_grouped_sum_ci(
+            base, q.spec.column, q.spec.group_by, s.key, s.fraction, z=q.z
+        ),
+    ),
+    "priority": _Method(
+        lambda q, base, s: priority_sample_subset_sum(
+            base, s.key, _cents_floor(q).cast("long"), F.lit(True), k=2048
+        ),
+        estimate="est_sum",
+        n_samples="n_sample",
+    ),
+    "twostage": _Method(
+        lambda q, base, s: twostage_sum_ci(base, s.key, _cents_floor(q), z=q.z),
+        lambda q, base, s: twostage_grouped_sum_ci(
+            base, s.key, q.spec.group_by, _cents_floor(q), z=q.z
+        ).orderBy(q.spec.group_by),
+        estimate="sum_value",
+        n_samples="n_rows",
+        fraction=TS_F1 * TS_F2,
+    ),
+    "poststrat": _Method(
+        lambda q, base, s: poststrat_sum_ci(
+            base, q.spec.column, q.stratum_col, s, z=q.z
+        ),
+        lambda q, base, s: poststrat_grouped_sum_ci(
+            base, q.spec.column, q.spec.group_by, q.stratum_col, s, z=q.z
+        ),
+        needs=("stratum_col", "<column> — the column whose exact counts "
+               "re-weight the sample"),
+    ),
+    "regaux": _Method(
+        lambda q, base, s: regaux_sum_ci(base, q.spec.column, q.aux_column, s, z=q.z),
+        lambda q, base, s: regaux_grouped_sum_ci(
+            base, q.spec.column, q.spec.group_by, q.aux_column, s, z=q.z
+        ),
+        needs=("aux_column", "<column/expression> — the auxiliary whose "
+               "exact total calibrates the sample"),
+    ),
+    "pps": _Method(
+        lambda q, base, s: pps_sum_ci(base, q.spec.column, s.key, s.fraction, z=q.z)
+    ),
+    "blb": _Method(
+        lambda q, base, s: blb_sum_ci(base, q.spec.column, s.key, z=q.z),
+        n_samples="n_rows_scanned",
+        hint="method='bootstrap' for grouped bootstrap CIs",
+    ),
+    "bootstrap": _Method(
+        lambda q, base, s: bootstrap_sum_ci(base, q.spec.column, s, z=q.z),
+        lambda q, base, s: bootstrap_grouped_sum_ci(
+            base, q.spec.column, q.spec.group_by, s, z=q.z
+        ),
+    ),
+    **dict.fromkeys(
+        ("hll", "kmv", "chao1"), _Method(only="COUNT(DISTINCT)")
+    ),
+    "ddsketch": _Method(only="MEDIAN/PERCENTILE"),
+}

@@ -181,7 +181,9 @@ def parse_query(query: str) -> QuerySpec | None:
 
 
 # Method registry (F5, ``enhanced_aqe_cli.py:36-81``): the reference's six
-# named strategies mapped onto our sampling designs / executors.
+# named strategies plus the later estimators, each with its sampling design
+# and description. Which estimator runs, and on which aggregates, is the
+# engine's method table (engine.py ``_ESTIMATORS``).
 METHODS: dict[str, dict] = {
     "random": {
         "design": "uniform_hash",
@@ -223,7 +225,6 @@ METHODS: dict[str, dict] = {
     "bootstrap": {
         "design": "uniform_hash",
         "adaptive": False,
-        "bootstrap": True,
         "description": "One-pass Poissonized bootstrap: CI from 32 "
         "hash-seeded replicate re-weightings (SUM only) — for when no "
         "closed-form variance applies.",
@@ -231,7 +232,6 @@ METHODS: dict[str, dict] = {
     "pps": {
         "design": "uniform_hash",
         "adaptive": False,
-        "pps": True,
         "description": "Probability-proportional-to-size sampling (SUM "
         "over a positive column only): heavy rows become certainties, "
         "light rows are sampled — tightest CI per sampled row on "
@@ -240,7 +240,6 @@ METHODS: dict[str, dict] = {
     "hll": {
         "design": "none",
         "adaptive": False,
-        "hll": True,
         "description": "Portable HyperLogLog for COUNT(DISTINCT): one "
         "full scan, constant memory, mergeable registers; CI from the "
         "sketch's 1.04/sqrt(m) standard error.",
@@ -248,7 +247,6 @@ METHODS: dict[str, dict] = {
     "chao1": {
         "design": "uniform_hash",
         "adaptive": False,
-        "chao1": True,
         "description": "Chao1 species-richness correction for "
         "COUNT(DISTINCT) over a deterministic sample — corrects the "
         "sample's unseen-value undercount from its f1/f2 abundance "
@@ -257,7 +255,6 @@ METHODS: dict[str, dict] = {
     "kmv": {
         "design": "none",
         "adaptive": False,
-        "kmv": True,
         "description": "KMV bottom-k sketch for COUNT(DISTINCT): the "
         "k smallest hash values give D = (k-1)/U_(k) with a "
         "1/sqrt(k-2) relative-error CI; the sketch doubles as a "
@@ -266,7 +263,6 @@ METHODS: dict[str, dict] = {
     "blb": {
         "design": "uniform_hash",
         "adaptive": False,
-        "blb": True,
         "description": "Bag of Little Bootstraps (SUM only): disjoint "
         "hash subsamples + Poisson(1/f) replicate weights — full-size "
         "resample error assessment from a fraction of the data.",
@@ -274,7 +270,6 @@ METHODS: dict[str, dict] = {
     "outlier": {
         "design": "uniform_hash",
         "adaptive": False,
-        "outlier": True,
         "description": "Outlier-indexed SUM (ICDE'01): the top-B values "
         "kept exactly, only the well-behaved remainder sampled — "
         "narrowest CI per sampled row on heavy-tailed data, the "
@@ -283,7 +278,6 @@ METHODS: dict[str, dict] = {
     "priority": {
         "design": "none",
         "adaptive": False,
-        "priority": True,
         "description": "Priority sampling (Duffield-Lund-Thorup JACM'07, "
         "SUM over a positive column only): top-k by weight/hash "
         "priority, estimate Σ max(w, τ) — near-variance-optimal "
@@ -293,7 +287,6 @@ METHODS: dict[str, dict] = {
     "poststrat": {
         "design": "uniform_hash",
         "adaptive": False,
-        "poststrat": True,
         "description": "Post-stratified SUM: uniform sample re-weighted "
         "by exact per-stratum counts (pass stratum_col=) — removes "
         "between-stratum and sample-size variance after the fact, no "
@@ -302,7 +295,6 @@ METHODS: dict[str, dict] = {
     "regaux": {
         "design": "uniform_hash",
         "adaptive": False,
-        "regaux": True,
         "description": "Regression estimator for SUM: calibrates the "
         "sample against the exact total of a correlated auxiliary "
         "(pass aux_column=) — CI shrinks by ~sqrt(1-r^2); estimator "
@@ -311,7 +303,6 @@ METHODS: dict[str, dict] = {
     "twostage": {
         "design": "none",
         "adaptive": False,
-        "twostage": True,
         "description": "Two-stage cluster sampling (SUM only): "
         "Bernoulli-sampled key blocks (files, at scale) then rows "
         "within the survivors — ultimate-cluster HT variance, exact "
@@ -321,7 +312,6 @@ METHODS: dict[str, dict] = {
     "ddsketch": {
         "design": "none",
         "adaptive": False,
-        "ddsketch": True,
         "description": "DDSketch (VLDB'19) for PERCENTILE/MEDIAN: one "
         "full scan into a geometric bucket table with a GUARANTEED "
         "relative-error bound α — deterministic, mergeable, "
