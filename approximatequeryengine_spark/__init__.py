@@ -16,18 +16,26 @@ Public surface::
     res = eng.run("SELECT APPROX(SUM(l_extendedprice)) FROM lineitem")
 """
 
-from approximatequeryengine_spark.session import get_spark
-from approximatequeryengine_spark.catalog import Catalog, TABLES
-from approximatequeryengine_spark.engine import AQEngine
-from approximatequeryengine_spark.result import ApproxResult, ApproximationStatus
+from importlib import import_module
 
-__all__ = [
-    "get_spark",
-    "Catalog",
-    "TABLES",
-    "AQEngine",
-    "ApproxResult",
-    "ApproximationStatus",
-]
+# The public names load on first use: Arrow kernels call the NumPy hash
+# forms in functions/hashing.py, which a Python worker imports by name,
+# and importing the engine there cost every fresh worker ~0.15 s.
+_PUBLIC = {
+    "get_spark": "session",
+    "Catalog": "catalog",
+    "TABLES": "catalog",
+    "AQEngine": "engine",
+    "ApproxResult": "result",
+    "ApproximationStatus": "result",
+}
+
+__all__ = list(_PUBLIC)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name in _PUBLIC:
+        return getattr(import_module(f"{__name__}.{_PUBLIC[name]}"), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -32,10 +32,28 @@ produces heavily-correlated "independent" estimates. Properties:
 
 This is the *default* sampler; seeded ``df.sample`` (true Bernoulli) and
 the other designs live in ``plans/sampling.py``.
+
+Each hash has exactly one spelling per evaluation surface, all in this
+module and all taking the same raw ``salt`` (the stride multiply
+happens inside):
+
+=============  =========================  ============================  ======================
+hash           Spark Column               SQL text (Spark / DuckDB)     NumPy (Arrow kernels)
+=============  =========================  ============================  ======================
+portable       :func:`portable_hash_col`  :func:`portable_hash_sql`     :func:`portable_hash_np`
+avalanche      :func:`with_avalanche_h`   :func:`avalanche_hash_sql_steps`  :func:`avalanche_np`
+=============  =========================  ============================  ======================
+
+The avalanche hash (xorshift-multiply, two rounds) is the family for
+register-indexed sketches and replicate weights; see
+:func:`with_avalanche_h`. ``tests/test_hashing.py`` pins the three forms
+of each against one another, and forbids any other module from
+importing the mixing constants.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -135,15 +153,24 @@ def with_avalanche_u(
     return df.drop(f"{prefix}h")
 
 
-def avalanche_hash_sql_steps(key_expr: str, salt_expr: str, prefix: str = "__h") -> tuple[str, str]:
+def avalanche_hash_sql_steps(
+    key_expr: str, salt: int | str = 0, prefix: str = "__h"
+) -> tuple[str, str]:
     """DuckDB spelling as chained lateral-alias SELECT expressions.
 
-    Returns ``(select_fragment, final_name)``: the fragment defines the
-    intermediate columns step by step (DuckDB resolves aliases defined
-    earlier in the same SELECT), avoiding exponential text blowup from
-    inlining each xor twice."""
+    ``salt`` is the raw salt, as for :func:`with_avalanche_h`: an int,
+    or an SQL expression for per-row families (replicate or sketch-row
+    salts). Returns ``(select_fragment, final_name)``: the fragment
+    defines the intermediate columns step by step (DuckDB resolves
+    aliases defined earlier in the same SELECT), avoiding exponential
+    text blowup from inlining each xor twice."""
+    salt_term = (
+        f"{salt * SALT_STRIDE}"
+        if isinstance(salt, int)
+        else f"(({salt}) * {SALT_STRIDE})"
+    )
     steps = []
-    cur = f"((abs({key_expr}) + {salt_expr}) % {HASH_SPACE})"
+    cur = f"((abs({key_expr}) + {salt_term}) % {HASH_SPACE})"
     names = []
     for i in range(2):
         a = f"{prefix}a{i}"
@@ -154,6 +181,48 @@ def avalanche_hash_sql_steps(key_expr: str, salt_expr: str, prefix: str = "__h")
     steps.append(f"{names[-1]} AS {prefix}x2")
     steps.append(f"xor({prefix}x2, ({prefix}x2 // 65536)) AS {prefix}final")
     return ", ".join(steps), f"{prefix}final"
+
+
+def portable_hash_np(k, salt=0, out: np.ndarray | None = None):
+    """NumPy form of :func:`portable_hash_col` for Arrow kernels:
+    int64 ``k`` and raw ``salt`` (scalars or arrays) broadcast, so an
+    ``(n, 1)`` key column against ``(R,)`` salts gives the ``(n, R)``
+    block. ``out`` (shape of the broadcast result) makes every step run
+    in place — the AMS kernel reuses one buffer across its salts. The
+    ``% 2^31`` / ``% 2^32`` reductions are bit masks: every value in
+    play is non-negative and below 2^63 ((2^31-1)·MULT < 2^63)."""
+    k = np.asarray(k, dtype=np.int64)
+    s = np.asarray(salt, dtype=np.int64) * SALT_STRIDE
+    if out is None:
+        out = np.abs(k) + s
+    else:
+        np.add(np.abs(k, out=out), s, out=out)
+    out &= M31 - 1
+    out *= MULT
+    out += OFFSET
+    out &= HASH_SPACE - 1
+    out &= M31 - 1
+    out *= MULT2
+    out += 144
+    out &= HASH_SPACE - 1
+    return out
+
+
+def avalanche_np(k, salt=0):
+    """NumPy form of :func:`with_avalanche_h` (same raw ``salt``,
+    broadcasting like :func:`portable_hash_np`; ``% 2^32`` as a mask,
+    ``// 65536`` as a shift — exact on the non-negative values in play,
+    all below 2^59)."""
+    h = np.abs(np.asarray(k, dtype=np.int64)) + (
+        np.asarray(salt, dtype=np.int64) * SALT_STRIDE
+    )
+    h &= HASH_SPACE - 1
+    for _ in range(2):
+        h ^= h >> 16
+        h *= AVALANCHE_MULT
+        h &= HASH_SPACE - 1
+    h ^= h >> 16
+    return h
 
 
 def fraction_threshold(fraction: float) -> int:

@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.text import (
-    str_hash32_col,
     str_hash32_sql,
-    word_shingles_col,
     word_shingles_sql,
     ws_tokens_col,
     ws_tokens_sql,
@@ -145,18 +143,19 @@ CONTAM_NGRAM = 8
 
 
 def _shingle_hash_rows_pandas(docs: DataFrame, n: int) -> DataFrame:
-    """Arrow fast path for the contamination shingle-hash chain:
+    """Arrow kernel for the contamination shingle-hash chain:
     (doc_id, source, h) rows where ``h`` ranges over the DISTINCT
     md5-prefix hashes of the document's word-``n``-gram shingles.
-    Bit-identical to ``explode(array_distinct(transform(
+    The same rows as ``explode(array_distinct(transform(
     word_shingles_col(ws_tokens_col(text), n), str_hash32_col)))``:
     same Java-``\\s+`` tokenization and ``String.trim`` strip as the
     certified minhash/enrich kernels, same ``" ".join`` shingles with
     the <n-token whole-text fallback (empty text → the ``''`` shingle,
-    matching the expression's ``concat_ws`` on an empty array), same
-    md5[:8] hash, NULL text → no rows (the expression path drops it
-    via NULL propagation at the explode). Pinned by
-    ``test_contamination_arrow_matches_expression``.
+    matching ``concat_ws`` on an empty array), same md5[:8] hash, NULL
+    text → no rows (the Column chain drops it via NULL propagation at
+    the explode). ``test_contamination_arrow_matches_expression`` pins
+    the rows against that Column chain and the screen against
+    ``contamination_screen_sql`` in DuckDB.
     Why: the interpreted higher-order transform ran one md5 expression
     tree per shingle with no codegen — measured 26.6 s of task CPU for
     a 584 KB corpus (≈45 ms/KB); the kernel vectorizes the batch and
@@ -213,9 +212,8 @@ def _shingle_hash_rows_pandas(docs: DataFrame, n: int) -> DataFrame:
 
     return (
         docs.select("doc_id", "source", "text")
-        # NULL text reaches no shingle row on the expression path
-        # (NULL propagates to the explode) — filter keeps the kernel
-        # equivalent instead of crashing on None.
+        # NULL text has no shingles (the oracle's NULL token list
+        # unnests to nothing).
         .filter(F.col("text").isNotNull())
         .mapInPandas(batches, schema="doc_id long, source string, h long")
     )
@@ -225,7 +223,6 @@ def contamination_screen(
     spark: SparkSession,
     docs: DataFrame,
     n: int = CONTAM_NGRAM,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Decontamination accounting: a training document (``doc_id %
     EVAL_MOD != 0``) is *contaminated* if it shares ≥1 word-``n``-gram
@@ -238,16 +235,7 @@ def contamination_screen(
     anything."""
     docs = ensure_parallelism(docs, weight=4.0)
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    if use_arrow:
-        per_doc = _shingle_hash_rows_pandas(docs, n)
-    else:
-        toks = ws_tokens_col(F.col("text"))
-        sh = word_shingles_col(toks, n)
-        per_doc = docs.select(
-            F.col("doc_id"),
-            F.col("source"),
-            F.explode(F.array_distinct(F.transform(sh, str_hash32_col))).alias("h"),
-        )
+    per_doc = _shingle_hash_rows_pandas(docs, n)
     # Exchange barrier: the shingle-hash chain is consumed by BOTH
     # the eval and train branches — materialize it once through a
     # shuffle instead of recomputing per subtree.

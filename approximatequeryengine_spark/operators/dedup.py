@@ -19,11 +19,11 @@ Every operator has an equivalent DuckDB SQL rendering for the
 correctness oracle. Hash functions are the portable md5-prefix →
 salted multiplicative family (``functions/text.py``), identical in both
 engines. Operators are JVM-side array/lambda expressions, with one
-deliberate exception: the MinHash *signature stage* defaults to an
+deliberate exception: the MinHash *signature stage* is an
 Arrow-batched numpy kernel (``_minhash_sig_pandas``) because Catalyst
 evaluates higher-order array lambdas interpreted, per element — the
-vectorized kernel computes bit-identical signatures ~10-20× faster
-(equivalence is tested; a pure-expression path remains available).
+vectorized kernel computes the signatures ~10-20× faster (pinned
+against ``minhash_lsh_pairs_sql`` in DuckDB).
 """
 
 from __future__ import annotations
@@ -33,12 +33,14 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.operators import ensure_parallelism
 
-from approximatequeryengine_spark.functions.hashing import portable_hash_col
+from approximatequeryengine_spark.functions.hashing import (
+    portable_hash_col,
+    portable_hash_np,
+)
 from approximatequeryengine_spark.functions.text import (
     minhash_sql,
     str_hash32_col,
     str_hash32_sql,
-    word_shingles_col,
     word_shingles_sql,
     ws_tokens_col,
     ws_tokens_sql,
@@ -186,40 +188,6 @@ BANDS = 4
 ROWS_PER_BAND = N_HASHES // BANDS
 
 
-def minhash_array_col(ints: Column) -> Column:
-    """All ``N_HASHES`` minhashes in ONE pass over the shingle-int
-    array: ``aggregate`` folds each element's 16 salted hashes into a
-    running element-wise minimum. Crucially the expensive
-    text→tokens→shingles→hash32 chain feeding ``ints`` is referenced
-    exactly ONCE — a 16-separate-columns formulation gets inlined by
-    projection collapse and re-evaluates the whole chain per column
-    (measured 17× slower on the documents fixture). Sentinel 2³² for
-    empty shingle sets (instead of NULL) keeps the fold total."""
-    from approximatequeryengine_spark.functions.hashing import (
-        HASH_SPACE,
-        M31,
-        MULT,
-        MULT2,
-        OFFSET,
-        SALT_STRIDE,
-    )
-
-    def salted(s: Column, j: Column) -> Column:
-        t1 = (F.abs(s.cast("long")) + j.cast("long") * F.lit(SALT_STRIDE)) % F.lit(M31)
-        t2 = (t1 * F.lit(MULT) + F.lit(OFFSET)) % F.lit(HASH_SPACE)
-        return ((t2 % F.lit(M31)) * F.lit(MULT2) + F.lit(144)) % F.lit(HASH_SPACE)
-
-    idx = F.sequence(F.lit(0), F.lit(N_HASHES - 1))
-    init = F.expr(f"array_repeat(CAST({HASH_SPACE} AS BIGINT), {N_HASHES})")
-    return F.aggregate(
-        ints,
-        init,
-        lambda acc, s: F.zip_with(
-            acc, F.transform(idx, lambda j: salted(s, j)), lambda a, b: F.least(a, b)
-        ),
-    )
-
-
 _JAVA_WS = "".join(chr(c) for c in range(0x21))  # String.trim strips ≤ U+0020
 
 
@@ -240,29 +208,20 @@ def _sig_fanout(docs: DataFrame) -> int:
 
 
 def _minhash_sig_pandas(docs: DataFrame, shingle_size: int, n_parts: int) -> DataFrame:
-    """Arrow fast path: per-batch numpy minhash. Bit-identical to the
-    expression path (same Java-regex tokenization ``[ \\t\\n\\x0b\\f\\r]+``,
-    same md5-prefix string hash, same salted arithmetic in int64 — no
-    overflow: (2³¹−1)·MULT < 2⁶³−1), ~20× faster because the per-shingle
-    work is two vectorized matrix ops instead of an interpreted
-    expression tree per element."""
+    """The minhash signature stage as a per-batch NumPy kernel: Java-
+    regex tokenization ``[ \\t\\n\\x0b\\f\\r]+``, distinct word shingles,
+    the md5-prefix string hash, then ``portable_hash_np`` over the
+    (shingles × N_HASHES) salt block and a column minimum. The pair
+    output is pinned against ``minhash_lsh_pairs_sql`` in DuckDB;
+    empty shingle sets get the sentinel signature 2³² in every slot."""
     import hashlib
     import re
 
     import numpy as np
     import pandas as pd
 
-    from approximatequeryengine_spark.functions.hashing import (
-        HASH_SPACE,
-        M31,
-        MULT,
-        MULT2,
-        OFFSET,
-        SALT_STRIDE,
-    )
-
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
-    salts = (np.arange(N_HASHES, dtype=np.int64) * SALT_STRIDE)[None, :]
+    salts = np.arange(N_HASHES, dtype=np.int64)
 
     def batches(it):
         # Per-task memo: replicas (identical text) share one signature
@@ -303,9 +262,7 @@ def _minhash_sig_pandas(docs: DataFrame, shingle_size: int, n_parts: int) -> Dat
                     dtype=np.int64,
                     count=len(sh),
                 )
-                t1 = (np.abs(ints)[:, None] + salts) % M31
-                t2 = (t1 * MULT + OFFSET) % HASH_SPACE
-                h = ((t2 % M31) * MULT2 + 144) % HASH_SPACE
+                h = portable_hash_np(ints[:, None], salts)
                 mh = h.min(axis=0) if len(sh) else np.full(N_HASHES, HASH_SPACE, dtype=np.int64)
                 mh_l = mh.tolist()
                 sh_chars = sum(len(s) for s in sh)
@@ -323,11 +280,8 @@ def _minhash_sig_pandas(docs: DataFrame, shingle_size: int, n_parts: int) -> Dat
     return (
         docs.repartition(n_parts, "doc_id")
         .select("doc_id", "text")
-        # NULL text has no content: excluded from the signature table.
-        # The expression path reaches the same end state via NULL
-        # propagation (NULL shingles -> no band rows), and the oracle's
-        # NULL band keys never join — this keeps the kernel equivalent
-        # instead of crashing on None.
+        # NULL text has no content: excluded from the signature table,
+        # as the oracle's NULL band keys never join.
         .filter(F.col("text").isNotNull())
         .mapInPandas(batches, schema="doc_id long, sh array<string>, mh array<long>")
         .repartition(n_parts, "doc_id")
@@ -377,7 +331,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     shingle_size: int = 3,
-    use_arrow: bool = True,
     verify: str = "carry",
     profile: "DataFrame | str | None" = None,
 ) -> DataFrame:
@@ -388,10 +341,8 @@ def minhash_lsh_pairs(
     per-row CPU cost dominates — a single input file must not mean a
     single task) and one AFTER it (an exchange barrier, so the band
     fan-out below reads ``mh``/``sh`` as physical columns instead of
-    re-inlining the signature expression 16×). ``use_arrow`` picks the
-    vectorized numpy signature stage (default); the pure-JVM expression
-    path computes the identical signatures and exists for environments
-    where Arrow is unavailable (equivalence is tested).
+    re-inlining the signature expression 16×). The signature stage is
+    the NumPy kernel ``_minhash_sig_pandas``.
 
     ``verify`` picks where the shingle payload travels — the output
     pairs are IDENTICAL either way (equivalence is tested); the knob is
@@ -442,21 +393,7 @@ def minhash_lsh_pairs(
             f"verify must be 'carry', 'join' or 'auto', got {verify!r}"
         )
     n_parts = _sig_fanout(docs)
-    if use_arrow:
-        sig_df = _minhash_sig_pandas(docs, shingle_size, n_parts)
-    else:
-        toks = ws_tokens_col(F.col("text"))
-        shingles = F.array_distinct(word_shingles_col(toks, shingle_size))
-        ints = F.transform(shingles, str_hash32_col)
-        sig_df = (
-            docs.repartition(n_parts, "doc_id")
-            .select(
-                F.col("doc_id"),
-                shingles.alias("sh"),
-                minhash_array_col(ints).alias("mh"),
-            )
-            .repartition(n_parts, "doc_id")
-        )
+    sig_df = _minhash_sig_pandas(docs, shingle_size, n_parts)
     if verify == "carry":
         bands = sig_df.select(
             "doc_id", "sh", F.explode(_band_key_col()).alias("bk")
@@ -945,17 +882,9 @@ def _simhash32_pandas(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_summary(
-    spark: SparkSession, docs: DataFrame, use_arrow: bool = True
-) -> DataFrame:
+def simhash_summary(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Per-source SimHash diversity — collisions indicate near-dups."""
-    docs = ensure_parallelism(docs, weight=4.0)
-    if use_arrow:
-        per_doc = _simhash32_pandas(docs)
-    else:
-        per_doc = docs.select(
-            F.col("source"), simhash_col(F.col("text")).alias("simhash")
-        )
+    per_doc = _simhash32_pandas(ensure_parallelism(docs, weight=4.0))
     return per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("simhash").alias("n_distinct_simhash"),

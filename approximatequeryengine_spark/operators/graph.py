@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.functions.text import ws_tokens_col, ws_tokens_sql
+from approximatequeryengine_spark.functions.text import ws_tokens_sql
 
 PR_SCALE = 10**12
 PR_ITERS = 5
@@ -61,7 +61,7 @@ PR_WINDOW = 3  # co-occurrence = positions within 3 (TextRank-style)
 
 def _token_pairs_pandas(docs: DataFrame, window: int) -> DataFrame:
     """Arrow kernel for the sliding-window co-occurrence pair build
-    (round 10): the expression path exploded every token ``window``
+    (round 10): the former expression plan exploded every token ``window``
     more times into probe rows and SHUFFLED tokens×(window+1) string
     rows through a (doc_id, pos) equi-join — the sf10 wall of the
     pagerank entry. Here each task tokenizes its documents once
@@ -72,8 +72,8 @@ def _token_pairs_pandas(docs: DataFrame, window: int) -> DataFrame:
     already-thinned edge rows. A per-task text memo skips replica
     documents outright (their pair sets are already in the task's
     seen-set) — on the replica-dense scaling corpora that removes
-    ~99% of the tokenize+pair work. Pair-set equality with the
-    expression path is pinned by
+    ~99% of the tokenize+pair work. The edge set is pinned against a
+    Python windowed-pair reference over ``ws_tokens_col`` tokens by
     ``test_token_edges_arrow_matches_expression``."""
     import re
 
@@ -82,8 +82,8 @@ def _token_pairs_pandas(docs: DataFrame, window: int) -> DataFrame:
     # ws_tokens_col parity: F.trim (like DuckDB trim) strips SPACES
     # only — a tab-leading text keeps a leading '' token after the
     # Java-\s+ split, and re.split reproduces that (including the
-    # trailing empty of limit=-1). Pinned by the edge frame in the twin
-    # test.
+    # trailing empty of limit=-1). Pinned by the edge frame in the
+    # token-edges test.
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def kernel(it):
@@ -117,43 +117,17 @@ def _token_pairs_pandas(docs: DataFrame, window: int) -> DataFrame:
     return docs.select("text").mapInPandas(kernel, "src string, dst string")
 
 
-def _token_edges(
-    docs: DataFrame, window: int = PR_WINDOW, use_arrow: bool = True
-) -> DataFrame:
+def _token_edges(docs: DataFrame, window: int = PR_WINDOW) -> DataFrame:
     """Distinct directed sliding-window co-occurrence edges.
 
     Each token pairs with its ``window`` successor positions:
     O(tokens × window) candidates, probes past the end of a document
     simply find no match. Pairs are emitted in both directions
     (undirected co-occurrence), self-loops dropped, then deduplicated
-    corpus-wide. Default path: the per-task Arrow kernel above;
-    ``use_arrow=False`` keeps the expression path (posexplode + probe
-    explode + (doc_id, pos) equi-join) for the equivalence twin."""
-    if use_arrow:
-        from approximatequeryengine_spark.operators import ensure_parallelism
+    corpus-wide, from the per-task Arrow kernel above."""
+    from approximatequeryengine_spark.operators import ensure_parallelism
 
-        return _token_pairs_pandas(
-            ensure_parallelism(docs, weight=8.0), window
-        ).distinct()
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(ws_tokens_col(F.col("text")), lambda t: F.lower(t))
-        ).alias("pos", "tok"),
-    )
-    probes = toks.select(
-        "doc_id",
-        F.col("tok").alias("src_tok"),
-        F.explode(
-            F.sequence(F.col("pos") + 1, F.col("pos") + F.lit(window))
-        ).alias("pos"),
-    )
-    pairs = probes.join(toks, on=["doc_id", "pos"], how="inner").filter(
-        F.col("src_tok") != F.col("tok")
-    )
-    fwd = pairs.select(F.col("src_tok").alias("src"), F.col("tok").alias("dst"))
-    rev = pairs.select(F.col("tok").alias("src"), F.col("src_tok").alias("dst"))
-    return fwd.union(rev).distinct()
+    return _token_pairs_pandas(ensure_parallelism(docs, weight=8.0), window).distinct()
 
 
 def token_pagerank_topk(

@@ -30,13 +30,17 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.sources.swap import read_synopsis
 from pyspark.sql.window import Window
 
-from approximatequeryengine_spark.functions.hashing import HASH_SPACE, portable_hash_col
+from approximatequeryengine_spark.functions.hashing import (
+    portable_hash_col,
+    portable_hash_np,
+)
 from approximatequeryengine_spark.functions.vector import cosine_sim
 
 DIM = 64  # fixture embedding dimensionality
@@ -71,11 +75,13 @@ def valid_vec_sql(expr: str) -> str:
 
 def _cosine_sql(a: str, b: str) -> str:
     """DuckDB cosine with explicit sequential sums (matches zip_with +
-    aggregate fold order on the Spark side)."""
+    aggregate fold order on the Spark side). Vectors of unequal length
+    have no cosine (NULL), as on the Spark side, where ``zip_with``
+    NULL-pads the shorter one and the dot folds to NULL."""
     dot = f"list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUBLE) * {b}[i]))"
     na = f"sqrt(list_sum(list_transform({a}, v -> CAST(v AS DOUBLE) * v)))"
     nb = f"sqrt(list_sum(list_transform({b}, v -> CAST(v AS DOUBLE) * v)))"
-    return f"({dot} / ({na} * {nb}))"
+    return f"(CASE WHEN len({a}) = len({b}) THEN {dot} / ({na} * {nb}) END)"
 
 
 def _vec_double(col: Column) -> Column:
@@ -242,18 +248,14 @@ def ann_bruteforce_topk_arrow(
 # -- LSH (random hyperplane) ------------------------------------------------
 
 
-def _hyperplane_sign(bit: int, dim: int) -> int:
-    """Deterministic ±1 weight for (bit, dim), derived from the portable
-    hash so Spark/DuckDB/any-layout agree. Uses hash bit 16 (the
-    low bits of a multiplicative hash are weak)."""
-    # evaluated in Python: same arithmetic as portable_hash for key = bit*DIM+dim
-    from approximatequeryengine_spark.functions.hashing import M31, MULT, MULT2, OFFSET
-
-    k = bit * DIM + dim
-    t1 = k % M31
-    t2 = (t1 * MULT + OFFSET) % HASH_SPACE
-    h = ((t2 % M31) * MULT2 + 144) % HASH_SPACE
-    return 1 if (h >> 16) & 1 else -1
+@lru_cache(maxsize=None)
+def _hyperplane_signs(bit: int) -> tuple[int, ...]:
+    """Deterministic ±1 weights of hyperplane ``bit`` over the ``DIM``
+    dimensions: bit 16 of the portable hash of key ``bit·DIM + d`` (the
+    low bits of a multiplicative hash are weak), one vectorised
+    ``portable_hash_np`` call, so Spark/DuckDB/any-layout agree."""
+    h = portable_hash_np(bit * DIM + np.arange(DIM))
+    return tuple(np.where((h >> 16) & 1, 1, -1).tolist())
 
 
 def _hyperplane_bit_col(vec: Column, bit: int) -> Column:
@@ -264,7 +266,7 @@ def _hyperplane_bit_col(vec: Column, bit: int) -> Column:
     (DuckDB's rendering already truncates via ``range(1, len+1)``;
     an unsliced zip_with would null-pad short vectors and zero out
     every bit)."""
-    signs = [_hyperplane_sign(bit, d) for d in range(DIM)]
+    signs = _hyperplane_signs(bit)
     sign_arr = F.slice(
         F.array(*[F.lit(s).cast("double") for s in signs]),
         F.lit(1),
@@ -293,7 +295,7 @@ def _hyperplane_bit_expr(vec: str, bit: int) -> str:
     query); one ``F.expr`` parse is one round trip, and the text is
     lru-cached. Value equality with the Column path is pinned by
     ``test_ivf_expr_builders_match_column_path``."""
-    signs = ", ".join(f"{float(_hyperplane_sign(bit, d))}D" for d in range(DIM))
+    signs = ", ".join(f"{float(s)}D" for s in _hyperplane_signs(bit))
     ln = f"least(size({vec}), {DIM})"
     proj = (
         f"aggregate(zip_with(slice({vec}, 1, {ln}), "
@@ -318,7 +320,7 @@ def _ivf_cell_expr(vec: str, bits: int) -> str:
 
 
 def _hyperplane_bit_sql(vec: str, bit: int) -> str:
-    signs = ", ".join(f"{_hyperplane_sign(bit, d)}.0" for d in range(DIM))
+    signs = ", ".join(f"{s}.0" for s in _hyperplane_signs(bit))
     proj = (
         f"list_sum(list_transform(range(1, least(len({vec}), {DIM}) + 1), "
         f"i -> CAST({vec}[i] AS DOUBLE) * ([{signs}])[i]))"
@@ -378,11 +380,12 @@ def lsh_band_keys_arrow(
     slower than brute-force cosine at sf0.1. This kernel computes the
     identical bits with one vectorized accumulation per dimension.
 
-    Bit parity with the expression path (and hence the DuckDB oracle):
-    the accumulation loops over dimensions IN ORDER with a single
-    accumulator — the exact left-to-right float64 summation of the
-    fold / list_sum — so the ``proj > 0`` sign can never disagree (a
-    numpy matmul's pairwise summation could, at |proj| ≈ ulp).
+    Bit parity with ``lsh_band_keys_col`` and the DuckDB oracle's
+    ``lsh_band_keys_sql``: the accumulation loops over dimensions IN
+    ORDER with a single accumulator — the exact left-to-right float64
+    summation of the fold / list_sum — so the ``proj > 0`` sign can
+    never disagree (a numpy matmul's pairwise summation could, at
+    |proj| ≈ ulp).
     Equivalence is pinned in ``test_band_keys_arrow_matches_expression``.
 
     Returns ``[*carry, vec_id, v (double), keys (array<long>)]``."""
@@ -390,10 +393,7 @@ def lsh_band_keys_arrow(
     import pandas as pd
 
     nbits = n_bands * bits_per_band
-    signs = np.array(
-        [[_hyperplane_sign(b, d) for d in range(DIM)] for b in range(nbits)],
-        dtype=np.float64,
-    )
+    signs = np.array([_hyperplane_signs(b) for b in range(nbits)], dtype=np.float64)
     weights = 2 ** np.arange(bits_per_band, dtype=np.int64)
 
     def batches(it):
@@ -427,9 +427,8 @@ def lsh_band_keys_arrow(
     prefix = f"{carry_schema}, " if carry_schema else ""
     return (
         # NULL embeddings carry no direction: excluded from the
-        # signature table — the expression path reaches the same end
-        # state via NULL band keys (equality joins never match them);
-        # the kernel must match instead of crashing on None.
+        # signature table — the SQL twins reach the same end state via
+        # NULL band keys (equality joins never match them).
         emb.filter(valid_vec_col(F.col("embedding")))
         .repartition(n_parts, "vec_id")
         .select(*carry, "vec_id", "embedding")
@@ -455,7 +454,6 @@ def ann_lsh_topk(
     k: int = 3,
     n_tables: int = ANN_TABLES,
     bits_per_table: int = ANN_BITS,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k via **multi-table banded LSH**: ``n_tables``
     independent signatures of ``bits_per_table`` hyperplane bits each;
@@ -475,31 +473,10 @@ def ann_lsh_topk(
     partition key: each query probes T buckets, never the corpus.
 
     The tiny query set is broadcast; dedup of the union of bucket hits
-    happens before any cosine is computed. ``use_arrow`` (default)
-    computes the signatures in the vectorized kernel
-    (``lsh_band_keys_arrow``); the pure-expression path computes
-    identical bits and remains for equivalence testing."""
-    if use_arrow:
-        sigs = lsh_band_keys_arrow(emb, n_tables, bits_per_table)
-        banded = sigs.select(
-            "vec_id", "v", F.posexplode("keys").alias("tbl", "key")
-        )
-    else:
-        keys = lsh_band_keys_col(
-            _vec_double(F.col("embedding")), n_tables, bits_per_table
-        )
-        banded = emb.select(
-            F.col("vec_id"),
-            _vec_double(F.col("embedding")).alias("v"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(t).alias("tbl"), key.alias("key"))
-                        for t, key in enumerate(keys)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("vec_id", "v", F.col("bk.tbl").alias("tbl"), F.col("bk.key").alias("key"))
+    happens before any cosine is computed. The signatures come from the
+    vectorized kernel ``lsh_band_keys_arrow``."""
+    sigs = lsh_band_keys_arrow(emb, n_tables, bits_per_table)
+    banded = sigs.select("vec_id", "v", F.posexplode("keys").alias("tbl", "key"))
     queries = banded.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -562,18 +539,15 @@ def _assign_cells_pandas(base: DataFrame, bits: int) -> DataFrame:
     vector, measured 7.5 s for 200k vectors at 10 bits (sf10
     semantic-cells, noop-sinked in isolation). Projections accumulate
     SEQUENTIALLY over dimensions (the exact left-to-right double fold
-    of ``aggregate``), signs are the same ``_hyperplane_sign`` floats,
+    of ``aggregate``), signs are the same ``_hyperplane_signs`` floats,
     the bit test is the same strict ``> 0``, and vectors are sliced to
     ``min(len, DIM)`` exactly as the expression's ``slice`` — so cell
-    ids are bit-identical. Pinned by
-    ``test_ivf_assign_arrow_matches_expression``."""
+    ids are bit-identical. Pinned against the Spark-SQL text
+    ``_ivf_cell_expr`` by ``test_ivf_assign_arrow_matches_expression``."""
     import numpy as np
     import pandas as pd
 
-    signs = np.array(
-        [[_hyperplane_sign(b, d) for d in range(DIM)] for b in range(bits)],
-        dtype=np.float64,
-    )
+    signs = np.array([_hyperplane_signs(b) for b in range(bits)], dtype=np.float64)
 
     def kernel(it):
         for pdf in it:
@@ -609,9 +583,7 @@ def _assign_cells_pandas(base: DataFrame, bits: int) -> DataFrame:
     )
 
 
-def _ivf_assign(
-    emb: DataFrame, n_centroids: int, use_arrow: bool = True
-) -> DataFrame:
+def _ivf_assign(emb: DataFrame, n_centroids: int) -> DataFrame:
     """Deterministic LSH-cell assignment shared by every IVF surface
     (in-memory top-k, index write, index append): ``log2(n_centroids)``
     hyperplane-sign bits pack into the cell id. Extracted so the
@@ -626,11 +598,7 @@ def _ivf_assign(
     base = emb.filter(valid_vec_col(F.col("embedding"))).select(
         F.col("vec_id"), _vec_double(F.col("embedding")).alias("v")
     )
-    if use_arrow:
-        return _assign_cells_pandas(base, bits)
-    # one F.expr parse instead of bits×DIM literal Columns (the py4j
-    # chatter dominated plan-build time; see _hyperplane_bit_expr)
-    return base.withColumn("cluster", F.expr(_ivf_cell_expr("v", bits)))
+    return _assign_cells_pandas(base, bits)
 
 
 def _ivf_centroids(assigned: DataFrame) -> DataFrame:
@@ -922,7 +890,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.95,
     n_bands: int = NEARDUP_BANDS,
     bits_per_band: int = NEARDUP_BITS,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ τ): banded-LSH candidate
     generation + exact cosine verification inside buckets.
@@ -941,33 +908,14 @@ def embedding_neardup_pairs(
     the same bands bit-for-bit (hyperplane signs are the portable-hash
     family; dot products use identical left-to-right summation), so the
     driver check certifies the full candidate+verify pipeline.
-    ``use_arrow`` (default) computes the signatures vectorized."""
-    # vector-validity policy (the arrow kernel filters internally; the
-    # expression path needs it explicitly — a NaN dim yields non-NULL
-    # poisoned band keys, not a naturally-excluded NULL)
-    emb = emb.filter(valid_vec_col(F.col("embedding")))
-    if use_arrow:
-        sigs = lsh_band_keys_arrow(
-            emb, n_bands, bits_per_band, carry=("label",), carry_schema="label int"
-        )
-        base = sigs.select(
-            "label", "vec_id", "v", F.posexplode("keys").alias("band", "key")
-        )
-    else:
-        keys = lsh_band_keys_col(_vec_double(F.col("embedding")), n_bands, bits_per_band)
-        base = emb.select(
-            "label",
-            "vec_id",
-            _vec_double(F.col("embedding")).alias("v"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(t).alias("band"), k.alias("key"))
-                        for t, k in enumerate(keys)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("label", "vec_id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    Signatures come from the vectorized kernel ``lsh_band_keys_arrow``,
+    which also applies the vector-validity policy."""
+    sigs = lsh_band_keys_arrow(
+        emb, n_bands, bits_per_band, carry=("label",), carry_schema="label int"
+    )
+    base = sigs.select(
+        "label", "vec_id", "v", F.posexplode("keys").alias("band", "key")
+    )
     # Keys-only candidate generation (the minhash verify='join' payload
     # lesson, re-applied after the sf1 full-registry sweep read 54.5 s
     # here): the band join and the pair dedup shuffle move only
@@ -1224,7 +1172,6 @@ def ann_tune_profile(
     max_tables: int = TUNE_MAX_TABLES,
     neighbor_q: float = TUNE_NEIGHBOR_Q,
     bits_grid: tuple[int, ...] = TUNE_BITS_GRID,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """One-row tuning decision: ``(method, n_tables, bits,
     est_cand_frac, neighbor_cos, n_pairs)`` — see the module-section
@@ -1234,11 +1181,12 @@ def ann_tune_profile(
     T-ratio 6dp, fractions 4dp) BEFORE every comparison/ceiling so the
     Spark and DuckDB renderings agree despite libm ulp differences; the
     neighbor set is rank-based (cosine desc, id tiebreak) rather than a
-    quantile threshold so no float boundary can flip membership.
-    ``use_arrow`` (default) computes the 8×24 probe keys in the
-    vectorized kernel — the 192-hyperplane-bit *expression* tree costs
-    ~40 s of Catalyst compile time alone; bit parity between the two
-    paths is pinned by ``test_ann_autotune_arrow_matches_expression``.
+    quantile threshold so no float boundary can flip membership. The
+    8×24 probe keys come from the vectorized kernel
+    ``lsh_band_keys_arrow`` — the 192-hyperplane-bit *expression* tree
+    cost ~40 s of Catalyst compile time alone; the decision is pinned
+    against ``ann_tune_profile_sql`` in DuckDB by
+    ``test_ann_autotune_arrow_matches_expression``.
 
     At scale: the sample is O(n_sample) rows via TakeOrdered, pairs are
     a broadcast self-join of a 64-row table, the grid is 9 rows —
@@ -1254,17 +1202,9 @@ def ann_tune_profile(
         .limit(n_sample)
         .select("vec_id", "embedding")
     )
-    if use_arrow:
-        samp = lsh_band_keys_arrow(
-            samp0, TUNE_PROBE_TABLES, TUNE_MAX_BITS
-        ).select("vec_id", "v", F.col("keys").alias("ks"))
-    else:
-        probe_keys = lsh_band_keys_col(
-            F.col("v"), TUNE_PROBE_TABLES, TUNE_MAX_BITS
-        )
-        samp = samp0.select(
-            "vec_id", _vec_double(F.col("embedding")).alias("v")
-        ).select("vec_id", "v", F.array(*probe_keys).alias("ks"))
+    samp = lsh_band_keys_arrow(samp0, TUNE_PROBE_TABLES, TUNE_MAX_BITS).select(
+        "vec_id", "v", F.col("keys").alias("ks")
+    )
     a = samp.select(
         F.col("vec_id").alias("ida"), F.col("v").alias("va"), F.col("ks").alias("ka")
     )
@@ -1497,8 +1437,8 @@ PQ_BIT_BASE = 101  # disjoint hyperplane-sign key space vs the coarse bits
 PQ_SCALE = 1_000_000  # integer grid for ADC partials
 
 
-def _pq_sign(m: int, b: int, d: int) -> int:
-    return _hyperplane_sign(PQ_BIT_BASE + m * PQ_BITS + b, d)
+def _pq_signs(m: int, b: int) -> tuple[int, ...]:
+    return _hyperplane_signs(PQ_BIT_BASE + m * PQ_BITS + b)[:PQ_SUB]
 
 
 @lru_cache(maxsize=None)
@@ -1508,7 +1448,7 @@ def _pq_code_expr(sl: str, m: int) -> str:
     text). ``sl`` is the slice expression text."""
     terms = []
     for b in range(PQ_BITS):
-        signs = ", ".join(f"{float(_pq_sign(m, b, d))}D" for d in range(PQ_SUB))
+        signs = ", ".join(f"{float(s)}D" for s in _pq_signs(m, b))
         proj = (
             f"aggregate(zip_with({sl}, array({signs}), (a, s) -> a * s), "
             f"0.0D, (acc, x) -> acc + x)"
@@ -1539,7 +1479,7 @@ def _pq_code_col(sl: Column, m: int) -> Column:
     with a per-(subspace, bit) key."""
     total = F.lit(0).cast("long")
     for b in range(PQ_BITS):
-        signs = F.array(*[F.lit(float(_pq_sign(m, b, d))) for d in range(PQ_SUB)])
+        signs = F.array(*[F.lit(float(s)) for s in _pq_signs(m, b)])
         proj = F.aggregate(
             F.zip_with(sl, signs, lambda v, s: v * s),
             F.lit(0.0),
@@ -1553,7 +1493,7 @@ def _pq_code_col(sl: Column, m: int) -> Column:
 def _pq_code_sql(sl: str, m: int) -> str:
     terms = []
     for b in range(PQ_BITS):
-        signs = ", ".join(f"{_pq_sign(m, b, d)}.0" for d in range(PQ_SUB))
+        signs = ", ".join(f"{s}.0" for s in _pq_signs(m, b))
         proj = (
             f"list_sum(list_transform(range(1, {PQ_SUB} + 1), "
             f"i -> CAST(({sl})[i] AS DOUBLE) * ([{signs}])[i]))"
@@ -2005,14 +1945,16 @@ def _dominated_groups_pandas(paired: DataFrame, threshold: float) -> DataFrame:
     batch's dots with vectorized NumPy accumulating SEQUENTIALLY over
     dimensions — the exact left-to-right float64 fold of ``aggregate``,
     so cosines are bit-identical, not merely close (the
-    ``ann_bruteforce_topk_arrow`` fold-parity contract). Pinned by
+    ``ann_bruteforce_topk_arrow`` fold-parity contract). Pinned against
+    ``semantic_dedup_cells_sql`` in DuckDB by
     ``test_semantic_dedup_arrow_matches_expression``.
 
-    Edge parity with the expression filter:
-    - zero denominator → expression cosine is NULL, which no
+    Edge parity with the SQL cosine:
+    - zero denominator → the cosine is NULL, which no
       ``>= threshold`` passes → masked out here;
-    - unequal vector lengths → ``zip_with`` null-pads, the dot folds to
-      NULL, the pair is dropped → length-mismatched pairs masked out;
+    - unequal vector lengths → no cosine (``_cosine_sql``'s length
+      guard; ``zip_with`` NULL-pads on the Column side) → the pair is
+      dropped → length-mismatched pairs masked out;
     - NaN/Inf dims cannot reach here (``valid_vec_col`` at the shared
       ``_ivf_assign`` chokepoint).
     Emits only the dominated (cluster, gid) rows — the kernel output is
@@ -2065,7 +2007,6 @@ def semantic_dedup_cells(
     threshold: float = 0.35,
     n_cells: int = 16,
     n_chunks: int | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-cell semantic-dedup accounting: (cluster, n_docs, n_dropped,
     n_kept).
@@ -2119,7 +2060,7 @@ def semantic_dedup_cells(
     # sf10 corpus (200k rows, 2k distinct) this is 10,000× less
     # quadratic work; on all-distinct corpora it is one extra groupBy.
     # Row-level-rule equivalence is test-pinned.
-    from approximatequeryengine_spark.functions.vector import dot, l2_norm
+    from approximatequeryengine_spark.functions.vector import l2_norm
 
     groups = assigned.groupBy("cluster", "v").agg(
         F.min("vec_id").alias("gid"), F.count(F.lit(1)).alias("gn")
@@ -2134,19 +2075,15 @@ def semantic_dedup_cells(
         # NULL guard that no >= threshold predicate passes).
         "nv", l2_norm(F.col("v"))
     )
-    if use_arrow:
-        # Kernel path: the NumPy scoring cuts per-pair CPU ~2 orders of
-        # magnitude, so the partition count only needs to cover the
-        # cores — every partition is one Python-worker task invocation
-        # (~5-10 ms each), and sizing partitions to the CHUNK-PAIR KEY
-        # COUNT (1280 at sf0.1, 4096 at sf1) made task overhead the
-        # wall: measured 9.7 s vs 2.2 s expr at sf0.1. The key space
-        # still splits the largest cell's quadratic work; hashing many
-        # keys onto defaultParallelism partitions balances fine.
-        n_part = spark.sparkContext.defaultParallelism
-    else:
-        n_part = max(spark.sparkContext.defaultParallelism,
-                     min(n_cells * n_chunks * (n_chunks + 1) // 2, 4096))
+    # The NumPy scoring cuts per-pair CPU ~2 orders of magnitude, so
+    # the partition count only needs to cover the cores — every
+    # partition is one Python-worker task invocation (~5-10 ms each),
+    # and sizing partitions to the CHUNK-PAIR KEY COUNT (1280 at sf0.1,
+    # 4096 at sf1) made task overhead the wall: measured 9.7 s vs 2.2 s
+    # for the interpreted fold at sf0.1. The key space still splits the
+    # largest cell's quadratic work; hashing many keys onto
+    # defaultParallelism partitions balances fine.
+    n_part = spark.sparkContext.defaultParallelism
     # a-side: chunk ca joins every cb >= ca; b-side mirrors with cb's
     # row emitting every ca <= cb — each cross-chunk pair meets exactly
     # once, diagonal (ca == cb) pairs meet twice and are folded by the
@@ -2165,20 +2102,11 @@ def semantic_dedup_cells(
         .join(b.repartition(n_part, "cluster", "ca", "cb"), on=["cluster", "ca", "cb"])
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    if use_arrow:
-        # Round 10: the quadratic pair scoring runs in a NumPy kernel
-        # (one MapInPandas node in the same stage as the join) instead
-        # of an interpreted fold per pair — see _dominated_groups_pandas
-        # for the bit-parity contract.
-        scored = _dominated_groups_pandas(paired, threshold)
-    else:
-        pair_denom = F.col("na") * F.col("nb")
-        pair_cos = F.when(
-            pair_denom != F.lit(0.0), dot(F.col("va"), F.col("vb")) / pair_denom
-        )
-        scored = paired.filter(pair_cos >= F.lit(threshold)).select(
-            "cluster", F.greatest("id_a", "id_b").alias("gid")
-        )
+    # Round 10: the quadratic pair scoring runs in a NumPy kernel (one
+    # MapInPandas node in the same stage as the join) instead of an
+    # interpreted fold per pair — see _dominated_groups_pandas for the
+    # bit-parity contract.
+    scored = _dominated_groups_pandas(paired, threshold)
     dominated = scored.distinct().withColumn("dom", F.lit(True))
     per_group = groups.join(dominated, on=["cluster", "gid"], how="left").select(
         "cluster",

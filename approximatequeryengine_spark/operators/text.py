@@ -70,12 +70,14 @@ def predicted_lang_sql(text_expr: str) -> str:
 
 
 def _predicted_lang_pandas(docs: DataFrame, extra_cols: list[str]) -> DataFrame:
-    """Arrow fast path for language ID: stopword-hit argmax computed
-    once per row. Bit-identical to ``predicted_lang_col`` (same
-    ``_JAVA_WS`` strip + Java-``\\s+`` split, same per-token lower +
-    profile-set membership, same LANG_ORDER tie-break, NULL text →
-    'unknown' — the expression path's when-chain bottoms out at the
-    'unknown' literal because every score is NULL). Why: the argmax
+    """Arrow kernel for language ID: stopword-hit argmax computed once
+    per row, with the semantics of ``predicted_lang_col`` /
+    ``predicted_lang_sql`` (same ``_JAVA_WS`` strip + Java-``\\s+``
+    split, same per-token lower + profile-set membership, same
+    LANG_ORDER tie-break, NULL text → 'unknown' — the Column when-chain
+    bottoms out at the 'unknown' literal because every score is NULL).
+    Pinned per row against ``predicted_lang_col`` and end to end against
+    ``lang_id_confusion_sql`` in DuckDB. Why: the Column argmax
     when-chain re-inlines every per-language score (itself an
     interpreted higher-order filter) into each branch and into the
     greatest() — ~30 interpreted filter evaluations per document."""
@@ -126,18 +128,10 @@ def _predicted_lang_pandas(docs: DataFrame, extra_cols: list[str]) -> DataFrame:
     return docs.select(*extra_cols, "text").mapInPandas(batches, schema=schema)
 
 
-def lang_id_confusion(
-    spark: SparkSession, docs: DataFrame, use_arrow: bool = True
-) -> DataFrame:
+def lang_id_confusion(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Predicted-vs-labeled language counts (the operator's primary
     correctness artifact — deterministic, oracle-checkable)."""
-    docs = ensure_parallelism(docs)
-    if use_arrow:
-        per_doc = _predicted_lang_pandas(docs, ["lang"])
-    else:
-        per_doc = docs.select(
-            F.col("lang"), predicted_lang_col(F.col("text")).alias("predicted")
-        )
+    per_doc = _predicted_lang_pandas(ensure_parallelism(docs), ["lang"])
     return (
         per_doc.groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -225,14 +219,16 @@ _QUALITY_SIGNALS = (
 
 
 def _quality_pandas(docs: DataFrame, extra_cols: list[str]) -> DataFrame:
-    """Arrow fast path for the per-document quality signals: one
-    vectorized kernel computing every signal ONCE per row. Bit-identical
-    to ``quality_columns`` (same Java-regex char classes, same
+    """Arrow kernel for the per-document quality signals: one
+    vectorized kernel computing every signal ONCE per row, with the
+    semantics of ``quality_columns`` (same Java-regex char classes, same
     ``_JAVA_WS`` strip + ``\\s+`` split tokenization as the certified
     ``_enrich_pandas``, same IEEE-double arithmetic in the same order;
     NULL text keeps its row with all-NULL signals, exactly as the
-    expression path's NULL propagation) — pinned by
-    ``test_quality_arrow_matches_expression_path``.
+    Column path's NULL propagation) — pinned per row against
+    ``quality_columns`` and end to end against ``quality_by_lang_sql``
+    and ``quality_threshold_sweep_sql`` in DuckDB
+    (``test_quality_arrow_matches_expression_path``).
 
     Why it exists (guide §4.2): ``quality_columns`` returns independent
     Column trees, and the score column re-inlines the ratio columns —
@@ -313,15 +309,8 @@ def _quality_pandas(docs: DataFrame, extra_cols: list[str]) -> DataFrame:
     return docs.select(*extra_cols, "text").mapInPandas(batches, schema=schema)
 
 
-def quality_by_lang(
-    spark: SparkSession, docs: DataFrame, use_arrow: bool = True
-) -> DataFrame:
-    docs = ensure_parallelism(docs)
-    if use_arrow:
-        per_doc = _quality_pandas(docs, ["lang"])
-    else:
-        cols = quality_columns(F.col("text"))
-        per_doc = docs.select(F.col("lang"), *[c.alias(n) for n, c in cols.items()])
+def quality_by_lang(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    per_doc = _quality_pandas(ensure_parallelism(docs), ["lang"])
     return per_doc.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
@@ -429,12 +418,14 @@ _JAVA_WS = "".join(chr(c) for c in range(0x21))  # String.trim strips ≤ U+0020
 
 
 def _enrich_pandas(docs: DataFrame, n_parts: int) -> DataFrame:
-    """Arrow fast path for the corpus-clean enrichment: per-batch Python
+    """Arrow kernel for the corpus-clean enrichment: per-batch Python
     computing (plang, score, n_tokens, fp) with the *en+quality filter
-    applied inside the kernel*. Bit-identical to the expression path
-    (same Java-regex tokenization, same IEEE-double score arithmetic in
-    the same order, same md5 token-set fingerprint) — equivalence is
-    pinned by ``test_corpus_clean_arrow_matches_expression_path``.
+    applied inside the kernel*. Same Java-regex tokenization,
+    IEEE-double score arithmetic in the same order and md5 token-set
+    fingerprint as ``predicted_lang_sql`` / ``_quality_sql_parts`` /
+    ``fingerprint_sql_parts`` — pinned against
+    ``corpus_clean_pipeline_sql`` in DuckDB by
+    ``test_corpus_clean_arrow_matches_expression_path``.
 
     Why it exists: the language-ID / quality / fingerprint chains are
     interpreted higher-order array expressions, and Catalyst's
@@ -530,38 +521,23 @@ def _enrich_pandas(docs: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def corpus_clean_pipeline(
-    spark: SparkSession, docs: DataFrame, use_arrow: bool = True
-) -> DataFrame:
+def corpus_clean_pipeline(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """End-to-end training-data cleaning pass, composed from the
     operator layers: language-ID filter (predicted en) → quality filter
     (score ≥ 0.5) → token-set-fingerprint dedup (keep lowest doc_id) →
     corpus accounting. One Spark job: the filters are scan-time
-    predicates, the dedup is a single shuffle on the fingerprint.
-    ``use_arrow`` (default) computes the enrichment in a vectorized
-    Arrow kernel (see ``_enrich_pandas``); the pure-JVM expression path
-    computes identical values and is kept for equivalence testing."""
-    if use_arrow:
-        from approximatequeryengine_spark.operators import parallelism_target
+    predicates, the dedup is a single shuffle on the fingerprint. The
+    enrichment runs in one vectorized Arrow kernel (``_enrich_pandas``).
+    """
+    from approximatequeryengine_spark.operators import parallelism_target
 
-        # Size-proportional kernel fan-out (guide §2): the old constant
-        # defaultParallelism fanned a 5000-doc corpus to 32 Python-worker
-        # round trips ON TOP of the ensure_parallelism shuffle — two full
-        # payload shuffles where at most one is needed.
-        t = parallelism_target(docs, weight=4.0)
-        n_parts = t if t else docs.sparkSession.sparkContext.defaultParallelism
-        enriched = _enrich_pandas(docs, n_parts)
-    else:
-        docs = ensure_parallelism(docs)
-        q = quality_columns(F.col("text"))
-        fp = fingerprint_cols(F.col("text"))["fp_tokenset"]
-        enriched = docs.select(
-            "doc_id",
-            predicted_lang_col(F.col("text")).alias("plang"),
-            q["quality_score"].alias("score"),
-            q["n_tokens"].alias("n_tokens"),
-            fp.alias("fp"),
-        ).filter((F.col("plang") == "en") & (F.col("score") >= 0.5))
+    # Size-proportional kernel fan-out (guide §2): the old constant
+    # defaultParallelism fanned a 5000-doc corpus to 32 Python-worker
+    # round trips ON TOP of the ensure_parallelism shuffle — two full
+    # payload shuffles where at most one is needed.
+    t = parallelism_target(docs, weight=4.0)
+    n_parts = t if t else docs.sparkSession.sparkContext.defaultParallelism
+    enriched = _enrich_pandas(docs, n_parts)
     kept = enriched.groupBy("fp").agg(
         F.min_by(F.struct("doc_id", "score", "n_tokens"), F.col("doc_id")).alias("k"),
         F.count(F.lit(1)).alias("group_size"),
@@ -646,11 +622,10 @@ def corpus_mix_balanced(spark: SparkSession, docs: DataFrame) -> DataFrame:
 def corpus_mix_balanced_sql() -> str:
     from approximatequeryengine_spark.functions.hashing import (
         HASH_SPACE,
-        SALT_STRIDE,
         avalanche_hash_sql_steps,
     )
 
-    steps, final = avalanche_hash_sql_steps("doc_id", f"(401 * {SALT_STRIDE})")
+    steps, final = avalanche_hash_sql_steps("doc_id", 401)
     u = f"(CAST({final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     return f"""
 WITH counts AS (SELECT lang, count(*) AS n_lang FROM documents GROUP BY lang),
@@ -824,21 +799,12 @@ FROM ranked WHERE rank <= {k} ORDER BY rank
 QUALITY_THRESHOLDS = (0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8)
 
 
-def quality_threshold_sweep(
-    spark: SparkSession, docs: DataFrame, use_arrow: bool = True
-) -> DataFrame:
+def quality_threshold_sweep(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Survival curve: ``(threshold, n_docs_kept, n_tokens_kept,
     pct_docs_kept)``, one row per candidate cutoff, one corpus scan."""
-    docs = ensure_parallelism(docs)
-    if use_arrow:
-        per_doc = _quality_pandas(docs, []).select(
-            F.col("quality_score").alias("score"), F.col("n_tokens").alias("nt")
-        )
-    else:
-        cols = quality_columns(F.col("text"))
-        per_doc = docs.select(
-            cols["quality_score"].alias("score"), cols["n_tokens"].alias("nt")
-        )
+    per_doc = _quality_pandas(ensure_parallelism(docs), []).select(
+        F.col("quality_score").alias("score"), F.col("n_tokens").alias("nt")
+    )
     aggs = [F.count(F.lit(1)).alias("n_total")]
     for i, t in enumerate(QUALITY_THRESHOLDS):
         keep = F.col("score") >= F.lit(t)

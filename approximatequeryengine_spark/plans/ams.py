@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
     portable_hash_col,
+    portable_hash_np,
     portable_hash_sql,
 )
 
@@ -102,28 +103,21 @@ def _ams_counters_pandas(
     df: DataFrame, key: Column, k: int = K_DEFAULT, groups: int = GROUPS_DEFAULT
 ) -> DataFrame:
     """Arrow fast path: per-batch numpy sign sums → per-batch partial
-    counters → one tiny final aggregate. Bit-identical to the
-    expression path (same composed-hash arithmetic in int64; no
-    overflow: (2³¹−1)·MULT < 2⁶³−1; mods by 2³¹/2³² are bitwise ANDs).
-    The kernel loops over salts with ONE in-place n-vector buffer —
-    the broadcasted n×48 formulation allocates 230 MB temporaries per
-    op at sf0.1 and measured 24× slower (memory-bound, not compute).
-    The repartition spreads the kernel across cores: a single parquet
-    file would otherwise pin it to a handful of input splits."""
+    counters → one tiny final aggregate. The composed hash is
+    ``portable_hash_np`` twice — the NumPy form of ``_sign_col``'s
+    ``portable_hash_col``, pinned by ``tests/test_hashing.py``; the
+    counters are pinned against the ``kernel=False`` expression path
+    in ``tests/test_ams.py``.
+    The kernel loops over salts with ONE in-place n-vector buffer
+    (``out=``) — the broadcasted n×48 formulation allocates 230 MB
+    temporaries per op at sf0.1 and measured 24× slower (memory-bound,
+    not compute). The repartition spreads the kernel across cores: a
+    single parquet file would otherwise pin it to a handful of input
+    splits."""
     import numpy as np
     import pandas as pd
 
-    from approximatequeryengine_spark.functions.hashing import (
-        HASH_SPACE,
-        M31,
-        MULT,
-        MULT2,
-        OFFSET,
-        SALT_STRIDE,
-    )
-
     gk = groups * k
-    ma31, ma32 = M31 - 1, HASH_SPACE - 1
 
     def batches(it):
         # fold the partition's Arrow batches into ONE vector first:
@@ -142,22 +136,12 @@ def _ams_counters_pandas(
             nn = col.dropna()
             if len(nn):
                 chunks.append(nn.to_numpy(dtype=np.int64))
-        keys = np.abs(np.concatenate(chunks)) if chunks else np.empty(0, np.int64)
+        keys = np.concatenate(chunks) if chunks else np.empty(0, np.int64)
         buf = np.empty_like(keys)
         row = {}
         for j in range(gk):
-            np.add(keys, j * SALT_STRIDE, out=buf)
-            for salt_add in (None, (j + _SALT2) * SALT_STRIDE):
-                if salt_add is not None:
-                    buf += salt_add
-                buf &= ma31
-                buf *= MULT
-                buf += OFFSET
-                buf &= ma32
-                buf &= ma31
-                buf *= MULT2
-                buf += 144
-                buf &= ma32
+            portable_hash_np(keys, j, out=buf)
+            portable_hash_np(buf, j + _SALT2, out=buf)
             row[f"c{j}"] = [int((2 * ((buf >> 31) & 1) - 1).sum())]
         row["n_rows"] = [n_all]
         yield pd.DataFrame(row)

@@ -38,10 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Column
 
 from approximatequeryengine_spark.functions.hashing import (
-    AVALANCHE_MULT,
     HASH_SPACE,
-    SALT_STRIDE,
     avalanche_hash_sql_steps,
+    avalanche_np,
     with_avalanche_u,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95
@@ -183,10 +182,9 @@ def _poisson_partials_kernel(replicates: int):
     array is [n, n_valid, Σx/p, e_0..e_{R-1}] with
     e_r = Σ poisson_w(k, r)·x/p over the non-NULL values.
 
-    The arithmetic is the EXACT integer spelling of the SQL avalanche
-    hash (``hashing.avalanche_hash_sql_steps``), vectorized: int64 never
-    overflows ((2³²−1)·AVALANCHE_MULT < 2⁶³−1), ``h >> 16`` equals the
-    SQL ``cast(h/65536 as long)`` for the non-negative h in play, and
+    The replicate hashes are ``hashing.avalanche_np`` over the
+    (batch × R) key/salt block — the NumPy form of the SQL avalanche
+    hash, pinned to it by ``tests/test_hashing.py`` — and
     ``searchsorted(CDF, u, side='right')`` is precisely the CASE ladder
     "smallest k with u < CDF[k], else len(CDF)". Weights broadcast as a
     (batch × R) block, so the per-replicate loop is a handful of numpy
@@ -197,18 +195,13 @@ def _poisson_partials_kernel(replicates: int):
         import pandas as pd
 
         cdf = np.array(_POISSON_CDF, dtype=np.float64)
-        salts = (
-            np.int64(BOOT_SALT0) + np.arange(replicates, dtype=np.int64)
-        ) * np.int64(SALT_STRIDE)
-        # HASH_SPACE = 2³², so `% HASH_SPACE` on the non-negative values
-        # in play is exactly the bitmask — measurably faster than mod.
-        mask = np.int64(HASH_SPACE - 1)
+        salts = BOOT_SALT0 + np.arange(replicates, dtype=np.int64)
         n = 0
         n_valid = 0
         ht = 0.0
         es = np.zeros(replicates, dtype=np.float64)
         for pdf in batches:
-            k = np.abs(pdf["k"].to_numpy(np.int64))
+            k = pdf["k"].to_numpy(np.int64)
             hx = pdf["x"].to_numpy(np.float64) / pdf["p"].to_numpy(np.float64)
             n += len(k)
             # NULL x arrives as NaN: SQL aggregates (the oracle and the
@@ -219,11 +212,7 @@ def _poisson_partials_kernel(replicates: int):
             n_valid += int(len(k) - nan.sum())
             hx = np.where(nan, 0.0, hx)
             ht += float(hx.sum())
-            h = (k[:, None] + salts[None, :]) & mask
-            for _ in range(2):
-                h = h ^ (h >> 16)
-                h = (h * np.int64(AVALANCHE_MULT)) & mask
-            h = h ^ (h >> 16)
+            h = avalanche_np(k[:, None], salts)
             u = h.astype(np.float64) / float(HASH_SPACE)
             w = np.searchsorted(cdf, u.ravel(), side="right").reshape(u.shape)
             es += (w.astype(np.float64) * hx[:, None]).sum(axis=0)
@@ -299,14 +288,11 @@ def _grouped_poisson_partials_kernel(replicates: int):
         import pandas as pd
 
         cdf = np.array(_POISSON_CDF, dtype=np.float64)
-        salts = (
-            np.int64(BOOT_SALT0) + np.arange(replicates, dtype=np.int64)
-        ) * np.int64(SALT_STRIDE)
-        mask = np.int64(HASH_SPACE - 1)
+        salts = BOOT_SALT0 + np.arange(replicates, dtype=np.int64)
         acc: dict = {}
         for pdf in batches:
             for g, sub in pdf.groupby("g", sort=False, dropna=False):
-                k = np.abs(sub["k"].to_numpy(np.int64))
+                k = sub["k"].to_numpy(np.int64)
                 hx = sub["x"].to_numpy(np.float64) / sub["p"].to_numpy(np.float64)
                 a = acc.get(g)
                 if a is None:
@@ -316,11 +302,7 @@ def _grouped_poisson_partials_kernel(replicates: int):
                 a[1] += float(len(k) - nan.sum())
                 hx = np.where(nan, 0.0, hx)
                 a[2] += float(hx.sum())
-                h = (k[:, None] + salts[None, :]) & mask
-                for _ in range(2):
-                    h = h ^ (h >> 16)
-                    h = (h * np.int64(AVALANCHE_MULT)) & mask
-                h = h ^ (h >> 16)
+                h = avalanche_np(k[:, None], salts)
                 u = h.astype(np.float64) / float(HASH_SPACE)
                 w = np.searchsorted(cdf, u.ravel(), side="right").reshape(u.shape)
                 a[3:] += (w.astype(np.float64) * hx[:, None]).sum(axis=0)
@@ -465,13 +447,9 @@ def blb_sum_ci_sql(
     cdf = _poisson_cdf_table(lam)
     x = f"CAST({column} AS DOUBLE)"
     kk = f"CAST({key} AS BIGINT)"
-    # CAST: DuckDB folds bare int literals as INT32 and 4243·1000003
-    # overflows; the replicate salts below dodge this via the BIGINT r.
-    a_salt = f"(CAST({BLB_ASSIGN_SALT} AS BIGINT) * {SALT_STRIDE})"
-    a_steps, a_final = avalanche_hash_sql_steps("k", a_salt)
+    a_steps, a_final = avalanche_hash_sql_steps("k", BLB_ASSIGN_SALT)
     ua = f"(CAST({a_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
-    r_salt = f"(({BLB_SALT0} + r) * {SALT_STRIDE})"
-    r_steps, r_final = avalanche_hash_sql_steps("k", r_salt)
+    r_steps, r_final = avalanche_hash_sql_steps("k", f"{BLB_SALT0} + r")
     u = f"(CAST({r_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     w = (
         f"CASE WHEN r = -1 THEN {lam!r} "
@@ -516,8 +494,7 @@ def bootstrap_grouped_sum_ci_sql(
     where = sampling_where_sql(spec)
     x = f"CAST({column} AS DOUBLE)"
     key = f"CAST({spec.key} AS BIGINT)"
-    salt = f"(({BOOT_SALT0} + r) * {SALT_STRIDE})"
-    hash_steps, h_final = avalanche_hash_sql_steps("k", salt)
+    hash_steps, h_final = avalanche_hash_sql_steps("k", f"{BOOT_SALT0} + r")
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     w = f"CASE WHEN r = -1 THEN 1 ELSE {_poisson_icdf_sql(u)} END"
     return f"""
@@ -555,8 +532,7 @@ def bootstrap_sum_ci_sql(
     where = sampling_where_sql(spec)
     x = f"CAST({column} AS DOUBLE)"
     key = f"CAST({spec.key} AS BIGINT)"
-    salt = f"(({BOOT_SALT0} + r) * {SALT_STRIDE})"
-    hash_steps, h_final = avalanche_hash_sql_steps("k", salt)
+    hash_steps, h_final = avalanche_hash_sql_steps("k", f"{BOOT_SALT0} + r")
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     w = f"CASE WHEN r = -1 THEN 1 ELSE {_poisson_icdf_sql(u)} END"
     return f"""

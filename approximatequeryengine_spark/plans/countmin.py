@@ -32,10 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
-    AVALANCHE_MULT,
     HASH_SPACE,
-    SALT_STRIDE,
     avalanche_hash_sql_steps,
+    avalanche_np,
     with_avalanche_u,
 )
 from approximatequeryengine_spark.functions.text import str_hash32_col, str_hash32_sql
@@ -64,30 +63,26 @@ def _with_idx(df: DataFrame, width: int) -> DataFrame:
     ).drop("__u")
 
 
-def _sketch_partials_pandas(
-    hashed: DataFrame, depth: int, width: int, salt0: int = CM_SALT0
-) -> DataFrame:
-    """Per-task Count-Min partial counters as an Arrow kernel (round
-    10): the expression path exploded ``depth`` rows per input hash and
-    ran the 5-projection avalanche chain on every one — linear in
+def _sketch_arrow(hashed: DataFrame, depth: int, width: int) -> DataFrame:
+    """The (row, idx, cnt) sketch of the ``h`` column: per-task partial
+    counters from an Arrow kernel, summed by one map-side-combined
+    groupBy (round 10). Exploding ``depth`` rows per input hash and
+    running the 5-projection avalanche chain on each was linear in
     tokens×depth through codegen'd-but-per-row expressions (20.2 s at
     sf10). Here each task folds the depth dimension into ``depth``
     vectorized NumPy passes over its batches and emits one bounded
-    (row, idx, cnt) partial — ≤ depth·width rows per task, summed by
-    the caller's groupBy.
+    partial — ≤ depth·width rows per task.
 
-    Bit parity with ``_with_idx``'s expression chain, step for step in
-    int64 (every intermediate < 2⁶³, and the two double steps of the
-    expression path — ``/65536`` then cast, and ``floor(h/2³²·width)``
-    — are exact for h < 2³² and width ≤ 2²¹, so integer shifts/
-    divisions reproduce them bit-for-bit). ``mapInArrow`` rather than
+    Cell index = ``floor(avalanche_np(h, CM_SALT0 + row) / 2³² · width)``
+    in integers — the probes' ``_with_idx`` spelling, whose double steps
+    are exact for h < 2³² and width ≤ 2²¹. ``mapInArrow`` rather than
     ``mapInPandas``: the input is ONE narrow int64 column in the
     session's small Arrow batches (sized for blob payloads), and the
     pandas wrapper per batch cost more than the counting itself at
     sf10. NULL hashes (NULL join keys on the join-size path) are
-    dropped: the expression path counts them into a NULL-idx cell that
-    can never equi-join a probe, so declared outputs are identical.
-    Pinned by ``test_countmin_arrow_matches_expression``."""
+    dropped: they could never equi-join a probe. Pinned against
+    ``_with_idx`` and ``cms_join_size_sql`` by
+    ``test_countmin_arrow_matches_expression``."""
     import numpy as np
     import pyarrow as pa
 
@@ -101,14 +96,9 @@ def _sketch_partials_pandas(
             if not len(col):
                 continue
             seen = True
-            h = np.abs(col.to_numpy(zero_copy_only=False))
+            h = col.to_numpy(zero_copy_only=False)
             for r in range(depth):
-                a = (h + (salt0 + r) * SALT_STRIDE) % HASH_SPACE
-                for _ in range(2):
-                    a = a ^ (a >> 16)
-                    a = (a * AVALANCHE_MULT) % HASH_SPACE
-                hf = a ^ (a >> 16)
-                idx = (hf * width) // HASH_SPACE
+                idx = (avalanche_np(h, CM_SALT0 + r) * width) // HASH_SPACE
                 counts[r] += np.bincount(idx, minlength=width)
         if seen:
             rows, idxs = np.nonzero(counts)
@@ -121,8 +111,11 @@ def _sketch_partials_pandas(
                 names=["row", "idx", "cnt"],
             )
 
-    return hashed.select("h").mapInArrow(
-        kernel, schema="row int, idx long, cnt long"
+    return (
+        hashed.select("h")
+        .mapInArrow(kernel, schema="row int, idx long, cnt long")
+        .groupBy("row", "idx")
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
@@ -130,7 +123,6 @@ def countmin_sketch(
     docs: DataFrame,
     depth: int = CM_DEPTH,
     width: int = CM_WIDTH,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The sketch as a DataFrame of (row, idx, cnt) — ≤ depth·width rows,
     built in one map-side-combined aggregation."""
@@ -140,21 +132,8 @@ def countmin_sketch(
     # sf0.1). weight 16: tokenize + depth×avalanche-mix runs ~10 ms/KB
     # of input, ~20× the quantum calibration's light-text rate.
     toks = _tokens(ensure_parallelism(docs, weight=16.0))
-    hashed = toks.select(str_hash32_col(F.col("token")).alias("h"))
-    if use_arrow:
-        return (
-            _sketch_partials_pandas(hashed, depth, width)
-            .groupBy("row", "idx")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    fan = hashed.select(
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
-    )
-    return (
-        _with_idx(fan, width)
-        .groupBy("row", "idx")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    return _sketch_arrow(
+        toks.select(str_hash32_col(F.col("token")).alias("h")), depth, width
     )
 
 
@@ -202,8 +181,7 @@ def countmin_topk_sql(
     k: int = 20, depth: int = CM_DEPTH, width: int = CM_WIDTH
 ) -> str:
     h32 = str_hash32_sql("token")
-    salt = f"(({CM_SALT0} + row) * {SALT_STRIDE})"
-    steps, h_final = avalanche_hash_sql_steps("h", salt)
+    steps, h_final = avalanche_hash_sql_steps("h", f"{CM_SALT0} + row")
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     idx = f"CAST(floor(({u}) * {width}) AS BIGINT)"
     return f"""
@@ -240,7 +218,6 @@ def cms_join_size(
     key: str,
     depth: int = CM_DEPTH,
     width: int = 4096,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Equi-join SIZE estimation from two Count-Min sketches WITHOUT
     running the join (AMS/CMS inner product, Cormode & Muthukrishnan §4):
@@ -259,21 +236,8 @@ def cms_join_size(
     recomputes both identically)."""
 
     def sketch_of(df: DataFrame) -> DataFrame:
-        hashed = df.select(F.abs(F.col(key)).cast("long").alias("h"))
-        if use_arrow:
-            return (
-                _sketch_partials_pandas(hashed, depth, width)
-                .groupBy("row", "idx")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        fan = hashed.select(
-            "h",
-            F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
-        )
-        return (
-            _with_idx(fan, width)
-            .groupBy("row", "idx")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        return _sketch_arrow(
+            df.select(F.abs(F.col(key)).cast("long").alias("h")), depth, width
         )
 
     # Self-join fast path (round 10): when the caller passes the SAME
@@ -337,8 +301,7 @@ def cms_join_size_sql(
     width: int = 4096,
 ) -> str:
     """Oracle over two ``SELECT {key} FROM ...`` subqueries."""
-    salt = f"(({CM_SALT0} + row) * {SALT_STRIDE})"
-    steps, h_final = avalanche_hash_sql_steps("h", salt)
+    steps, h_final = avalanche_hash_sql_steps("h", f"{CM_SALT0} + row")
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     idx = f"CAST(floor(({u}) * {width}) AS BIGINT)"
     return f"""

@@ -142,7 +142,7 @@ def kmv_distinct_ci_sql(table: str, key: str, k: int = 256, z: float = _KMV_Z) -
         portable_hash_sql,
     )
 
-    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key), "0")
+    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key))
     est = (
         f"CASE WHEN nb < {k} THEN nb "
         f"ELSE CAST(floor(({float(k - 1)!r} * {float(HASH_SPACE)!r}) / kth + 0.5) AS BIGINT) END"
@@ -260,7 +260,7 @@ def kmv_set_ops_sql(table_a: str, table_b: str, key: str, k: int = 256) -> str:
         portable_hash_sql,
     )
 
-    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key), "0")
+    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key))
     side = (
         f"CASE WHEN count(*) < {k} THEN {HASH_SPACE} "
         f"ELSE CAST(max(h) AS BIGINT) END"
@@ -384,7 +384,7 @@ def kmv_distinct_where_sql(
         portable_hash_sql,
     )
 
-    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key), "0")
+    steps, final = avalanche_hash_sql_steps(portable_hash_sql(key))
     est = (
         f"CASE WHEN nb < {k} THEN nb "
         f"ELSE CAST(floor(({float(k - 1)!r} * {float(HASH_SPACE)!r}) / kth + 0.5) AS BIGINT) END"

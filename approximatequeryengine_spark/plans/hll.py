@@ -162,7 +162,7 @@ def rollup_from_registers(regs: DataFrame) -> DataFrame:
 
 
 def portable_hll_rollup_sql(table: str, key: str, group: str) -> str:
-    steps, final = avalanche_hash_sql_steps(key, "0")
+    steps, final = avalanche_hash_sql_steps(key)
     alpha = f"CAST({HLL_ALPHA!r} AS DOUBLE)"
     raw = f"({alpha} * {HLL_M} * {HLL_M} / (coalesce(sp, 0.0) + ({HLL_M} - np)))"
     return f"""
@@ -255,7 +255,7 @@ def portable_hll_overlap(sides: DataFrame) -> DataFrame:
 
 def portable_hll_overlap_sql(sides_sql: str) -> str:
     """Oracle over any ``(side, k)`` subquery (same derivation)."""
-    steps, final = avalanche_hash_sql_steps("k", "0")
+    steps, final = avalanche_hash_sql_steps("k")
     alpha = f"CAST({HLL_ALPHA!r} AS DOUBLE)"
 
     def est(np: str, sp: str) -> str:

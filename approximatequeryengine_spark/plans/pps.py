@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
     HASH_SPACE,
-    SALT_STRIDE,
     avalanche_hash_sql_steps,
     with_avalanche_u,
 )
@@ -103,10 +102,7 @@ def pps_sum_ci_sql(
     """DuckDB oracle: same two passes, hash, p_i, and CI arithmetic."""
     x = f"CAST({column} AS DOUBLE)"
     k = f"CAST({key} AS BIGINT)"
-    salt = f"({PPS_SALT} * {SALT_STRIDE})"
-    # Reuse the lateral-alias step builder with the salt pre-folded
-    # (constant salt, so the fragment stays small).
-    hash_steps, h_final = avalanche_hash_sql_steps("k", salt)
+    hash_steps, h_final = avalanche_hash_sql_steps("k", PPS_SALT)
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     return f"""
 WITH base AS (SELECT {x} AS x, {k} AS k FROM {table}),

@@ -59,6 +59,8 @@ from __future__ import annotations
 from collections import Counter
 from dataclasses import dataclass
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -76,10 +78,9 @@ from approximatequeryengine_spark.sources.swap import (
     staged_swap,
 )
 from approximatequeryengine_spark.functions.hashing import (
-    AVALANCHE_MULT,
     HASH_SPACE,
-    SALT_STRIDE,
     avalanche_hash_sql_steps,
+    avalanche_np,
     with_avalanche_h,
 )
 
@@ -88,24 +89,15 @@ K_PROBES = 3
 MAX_BLOCKS = 1024
 
 
-def _avalanche_int(k: int, salt: int) -> int:
-    """The avalanche hash in plain Python — mirrors
-    ``functions/hashing.py::with_avalanche_h`` bit for bit (pinned by
-    a test against the Spark column)."""
-    h = (abs(k) + salt * SALT_STRIDE) % HASH_SPACE
-    for _ in range(2):
-        h = h ^ (h // 65536)
-        h = (h * AVALANCHE_MULT) % HASH_SPACE
-    return h ^ (h // 65536)
-
-
 def probe_masks(key: int, m_bits: int, k: int = K_PROBES) -> dict[int, int]:
     """word → OR-ed mask for the k probes of ``key`` into an
     ``m_bits``-bit filter (probes landing in the same word merge, so
-    the survival check is per-WORD)."""
+    the survival check is per-WORD). The probe hashes are
+    ``avalanche_np`` over salts 0..k-1 — the build's
+    ``with_avalanche_h`` in NumPy form."""
     out: dict[int, int] = {}
-    for salt in range(k):
-        bit = (_avalanche_int(key, salt) * m_bits) // HASH_SPACE
+    for h in avalanche_np(key, np.arange(k)).tolist():
+        bit = (h * m_bits) // HASH_SPACE
         w, m = bit // 32, 1 << (bit % 32)
         out[w] = out.get(w, 0) | m
     return out
@@ -403,8 +395,8 @@ def blockbloom_point_sum_sql(
     key, the survival test, and the in-block exact aggregate — layout +
     bloom arithmetic + pruning + answer in one query."""
     salt_rows = " UNION ALL ".join(f"SELECT {s} AS salt" for s in range(k))
-    steps, final = avalanche_hash_sql_steps("lk", f"(salt * {SALT_STRIDE})")
-    qsteps, qfinal = avalanche_hash_sql_steps(str(key), f"(salt * {SALT_STRIDE})")
+    steps, final = avalanche_hash_sql_steps("lk", "salt")
+    qsteps, qfinal = avalanche_hash_sql_steps(str(key), "salt")
     return f"""
 WITH raw AS (
   SELECT CAST({ingest_key_sql} AS BIGINT) AS ik,

@@ -372,7 +372,7 @@ def countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from approximatequeryengine_spark.plans.countmin import (
         CM_DEPTH,
         CM_WIDTH,
-        _sketch_partials_pandas,
+        _sketch_arrow,
         _with_idx,
         countmin_topk_estimates,
     )
@@ -389,11 +389,7 @@ def countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the drained sketch is bit-identical (kernel parity pinned by
     # test_countmin_arrow_matches_expression).
     hashed = toks.select(str_hash32_col(F.col("token")).alias("h"))
-    sketch_stream = (
-        _sketch_partials_pandas(hashed, CM_DEPTH, CM_WIDTH)
-        .groupBy("row", "idx")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    sketch_stream = _sketch_arrow(hashed, CM_DEPTH, CM_WIDTH)
     sketch = run_to_memory_sink(sketch_stream, "complete", bounded_keys=True)
 
     # Probe the drained sketch with the exact top-20 (batch side), same

@@ -100,19 +100,33 @@ def duck_med():
     return _duck(SF_DIR_MED)
 
 
+def duck_of(**frames):
+    """A fresh DuckDB connection with each Spark frame registered under
+    its keyword — the table name an operator's ``*_sql`` twin reads."""
+    con = duckdb.connect()
+    for name, df in frames.items():
+        con.register(name, df.toArrow())
+    return con
+
+
+def _sort_key(row):
+    # NULL-safe row order: a NULL sorts after every value of its column
+    return tuple((v is None, v) for v in row)
+
+
 def assert_df_matches_sql(sdf, con, sql, rel=1e-9, abs_tol=1e-6):
     """Order-insensitive comparison of a Spark DataFrame against a DuckDB
     query — the same contract as the driver's correctness gate (columns
     sorted by name, rows sorted, values compared)."""
     cols = sorted(sdf.columns)
     spark_rows = sorted(
-        tuple(row[c] for c in cols) for row in sdf.collect()
+        (tuple(row[c] for c in cols) for row in sdf.collect()), key=_sort_key
     )
     res = con.execute(sql)
     duck_cols = [d[0] for d in res.description]
     assert sorted(duck_cols) == cols, f"columns differ: {sorted(duck_cols)} vs {cols}"
     idx = [duck_cols.index(c) for c in cols]
-    duck_rows = sorted(tuple(r[i] for i in idx) for r in res.fetchall())
+    duck_rows = sorted((tuple(r[i] for i in idx) for r in res.fetchall()), key=_sort_key)
     assert len(spark_rows) == len(duck_rows), (
         f"row count differs: spark={len(spark_rows)} duck={len(duck_rows)}"
     )

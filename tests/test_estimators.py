@@ -280,25 +280,58 @@ def test_countmin_overestimates_within_bound(engine, duck):
         assert r["cms_est"] <= r["exact_cnt"] + 3 * eps * total
 
 
-def test_countmin_arrow_matches_expression(engine):
-    """Round-10 equivalence twin: the NumPy partial-counter kernel must
-    reproduce the exploded expression chain's sketch bit for bit (same
-    avalanche mix, same floor-index arithmetic) — on the token sketch
-    AND the join-size sketches (negative-key abs path included)."""
+def test_countmin_arrow_matches_expression(spark, engine):
+    """The NumPy partial-counter kernel must reproduce the sketch of the
+    exploded ``_with_idx`` expression chain (the probes' spelling) bit
+    for bit — same avalanche mix, same floor-index arithmetic — and the
+    join-size estimate its DuckDB twin, on lineitem and on an edge frame
+    with negative (abs path), NULL and disjoint keys."""
+    from pyspark.sql import functions as F
+
+    from approximatequeryengine_spark.functions.text import str_hash32_col
     from approximatequeryengine_spark.plans.countmin import (
+        CM_DEPTH,
+        CM_WIDTH,
+        _tokens,
+        _with_idx,
         cms_join_size,
+        cms_join_size_sql,
         countmin_sketch,
     )
+    from tests.conftest import assert_df_matches_sql, duck_of
 
     docs = engine.catalog.table("documents")
-    fast = sorted(map(tuple, countmin_sketch(docs, use_arrow=True).collect()))
-    slow = sorted(map(tuple, countmin_sketch(docs, use_arrow=False).collect()))
-    assert fast == slow and fast
+    got = sorted(map(tuple, countmin_sketch(docs).collect()))
+    fan = _tokens(docs).select(
+        str_hash32_col(F.col("token")).alias("h"),
+        F.explode(F.sequence(F.lit(0), F.lit(CM_DEPTH - 1))).alias("row"),
+    )
+    ref = (
+        _with_idx(fan, CM_WIDTH)
+        .groupBy("row", "idx")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    assert got == sorted(map(tuple, ref.collect())) and got
 
-    li = engine.catalog.table("lineitem").select("l_partkey")
-    a = cms_join_size(li, li, "l_partkey", use_arrow=True).collect()
-    b = cms_join_size(li, li, "l_partkey", use_arrow=False).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    def twin(l_sql, r_sql):
+        return cms_join_size_sql(l_sql, r_sql, "k")
+
+    li = engine.catalog.table("lineitem").select(F.col("l_partkey").alias("k"))
+    assert_df_matches_sql(
+        cms_join_size(li, li, "k"), duck_of(li=li), twin("SELECT k FROM li", "SELECT k FROM li")
+    )
+    left = spark.createDataFrame(
+        [(-3,), (3,), (5,), (None,), (-5,), (7,), (7,), (11,)], "k long"
+    )
+    right = spark.createDataFrame([(3,), (-7,), (7,), (None,), (13,)], "k long")
+    con = duck_of(lt=left, rt=right)
+    for a, b, sql in (
+        (left, right, twin("SELECT k FROM lt", "SELECT k FROM rt")),
+        (left, left, twin("SELECT k FROM lt", "SELECT k FROM lt")),
+    ):
+        got = cms_join_size(a, b, "k")
+        assert got.collect()[0]["exact_join_size"] > 0
+        assert_df_matches_sql(got, con, sql)
 
 
 def test_hist_quantiles_within_bin_width(engine, duck):

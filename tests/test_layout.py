@@ -287,20 +287,30 @@ def _bloom_fixture(spark, engine, tmp_path):
 
 
 def test_blockbloom_python_mirror_matches_spark_hash(spark):
-    """probe_masks derives driver-side probes from a plain-Python
-    avalanche hash; it must agree with the Spark column bit for bit."""
-    from approximatequeryengine_spark.functions.hashing import with_avalanche_h
-    from approximatequeryengine_spark.sources.blockbloom import _avalanche_int
+    """probe_masks derives the driver-side probe words from
+    ``avalanche_np``; they must be the words and bits the build sets
+    from the Spark column (``with_avalanche_h`` and the exact
+    ``(h·m) div 2³²`` bit index). The hash forms themselves are pinned
+    in tests/test_hashing.py."""
+    from approximatequeryengine_spark.functions.hashing import (
+        HASH_SPACE,
+        with_avalanche_h,
+    )
+    from approximatequeryengine_spark.sources.blockbloom import K_PROBES, probe_masks
 
     keys = [0, 1, 42, 999, 123_456_789, 2**40 + 7]
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    for salt in (0, 1, 2):
-        got = {
-            r["k"]: r["__h"]
-            for r in with_avalanche_h(df, F.col("k"), F.lit(salt)).collect()
-        }
+    df = spark.createDataFrame(
+        [(k, s) for k in keys for s in range(K_PROBES)], "k long, salt long"
+    )
+    hashed = with_avalanche_h(df, F.col("k"), F.col("salt"))
+    for m_bits in (4096, 1 << 20):
+        bit = F.expr(f"CAST((__h * {m_bits}) div {HASH_SPACE} AS BIGINT)")
+        want: dict = {}
+        for r in hashed.select("k", bit.alias("bit")).collect():
+            w = want.setdefault(r["k"], {})
+            w[r["bit"] // 32] = w.get(r["bit"] // 32, 0) | (1 << (r["bit"] % 32))
         for k in keys:
-            assert got[k] == _avalanche_int(k, salt), (k, salt)
+            assert probe_masks(k, m_bits) == want[k], (k, m_bits)
 
 
 def test_blockbloom_exact_answer_no_false_negatives(spark, engine, tmp_path):

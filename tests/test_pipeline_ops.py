@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from approximatequeryengine_spark.functions import text as text_fns
 from approximatequeryengine_spark.operators import dedup, multimodal, similarity
 from approximatequeryengine_spark.operators.text import predicted_lang_col, quality_columns
+from tests.conftest import assert_df_matches_sql, duck_of
 
 
 @pytest.fixture(scope="module")
@@ -49,13 +50,13 @@ def test_minhash_finds_neardup(spark, synth_docs):
 
 
 def test_minhash_arrow_matches_expression_path(spark, synth_docs):
-    """The numpy signature kernel and the pure-JVM expression path must
-    produce identical pairs and jaccards (bit-equal hash arithmetic)."""
-    fast = sorted(map(tuple, dedup.minhash_lsh_pairs(
-        spark, synth_docs, threshold=0.0).collect()))
-    slow = sorted(map(tuple, dedup.minhash_lsh_pairs(
-        spark, synth_docs, threshold=0.0, use_arrow=False).collect()))
-    assert fast == slow and fast
+    """The numpy signature kernel must produce the pairs and jaccards of
+    the DuckDB twin (bit-equal hash arithmetic), empty doc included."""
+    got = dedup.minhash_lsh_pairs(spark, synth_docs, threshold=0.0)
+    assert got.count()
+    assert_df_matches_sql(
+        got, duck_of(documents=synth_docs), dedup.minhash_lsh_pairs_sql(threshold=0.0)
+    )
 
 
 def test_minhash_join_verify_matches_carry(spark, synth_docs):
@@ -255,21 +256,26 @@ def test_simhash_arrow_matches_expression(spark, synth_docs):
         ).collect()
     }
     assert fast == slow
-    # and the summary operator end-to-end
-    a = sorted(tuple(r) for r in dedup.simhash_summary(spark, docs, use_arrow=True).collect())
-    b = sorted(tuple(r) for r in dedup.simhash_summary(spark, docs, use_arrow=False).collect())
-    assert a == b and len(a) > 0
+    # and the summary operator end-to-end, against its DuckDB twin
+    summary = dedup.simhash_summary(spark, docs)
+    assert summary.count() > 0
+    assert_df_matches_sql(summary, duck_of(documents=docs), dedup.simhash_summary_sql())
 
 
 def test_quality_arrow_matches_expression_path(spark, synth_docs):
-    """The Arrow quality/lang-ID kernels and the pure-JVM expression
-    paths must produce identical aggregates (bit-equal ratio/score
-    arithmetic, identical NULL propagation) on fixture documents plus
-    NULL/empty-text edge rows."""
+    """The Arrow quality/lang-ID kernels must reproduce the Column
+    helpers row for row (bit-equal ratio/score arithmetic, identical
+    NULL propagation) and each operator its DuckDB twin, on fixture
+    documents plus NULL/empty-text edge rows."""
     from approximatequeryengine_spark.operators.text import (
+        _predicted_lang_pandas,
+        _quality_pandas,
         lang_id_confusion,
+        lang_id_confusion_sql,
         quality_by_lang,
+        quality_by_lang_sql,
         quality_threshold_sweep,
+        quality_threshold_sweep_sql,
     )
 
     fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -287,11 +293,22 @@ def test_quality_arrow_matches_expression_path(spark, synth_docs):
             key=lambda t: tuple((v is None, v) for v in t),
         )
 
-    for op in (quality_by_lang, lang_id_confusion, quality_threshold_sweep):
-        fast = rows(op(spark, docs, use_arrow=True))
-        slow = rows(op(spark, docs, use_arrow=False))
-        assert fast == slow, op.__name__
-        assert len(fast) > 0
+    q = quality_columns(F.col("text"))
+    assert rows(_quality_pandas(docs, ["doc_id"])) == rows(
+        docs.select("doc_id", *[c.alias(n) for n, c in q.items()])
+    )
+    assert rows(_predicted_lang_pandas(docs, ["doc_id"])) == rows(
+        docs.select("doc_id", predicted_lang_col(F.col("text")).alias("predicted"))
+    )
+    con = duck_of(documents=docs)
+    for op, twin in (
+        (quality_by_lang, quality_by_lang_sql),
+        (lang_id_confusion, lang_id_confusion_sql),
+        (quality_threshold_sweep, quality_threshold_sweep_sql),
+    ):
+        got = op(spark, docs)
+        assert got.count() > 0, op.__name__
+        assert_df_matches_sql(got, con, twin())
 
 
 def test_quality_empty_doc(spark, synth_docs):
@@ -563,16 +580,18 @@ def test_corpus_clean_pipeline(spark, synth_docs):
 
 
 def test_corpus_clean_arrow_matches_expression_path(spark):
-    """The Arrow enrichment kernel and the pure-JVM expression path must
-    produce identical aggregates (bit-equal score arithmetic and
-    fingerprints) on real fixture documents."""
-    from approximatequeryengine_spark.operators.text import corpus_clean_pipeline
+    """The Arrow enrichment kernel must produce the aggregates of the
+    DuckDB twin (bit-equal score arithmetic and fingerprints) on real
+    fixture documents."""
+    from approximatequeryengine_spark.operators.text import (
+        corpus_clean_pipeline,
+        corpus_clean_pipeline_sql,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fast = corpus_clean_pipeline(spark, docs, use_arrow=True).collect()[0]
-    slow = corpus_clean_pipeline(spark, docs, use_arrow=False).collect()[0]
-    assert fast.asDict() == slow.asDict()
-    assert fast["n_docs_kept"] > 0
+    got = corpus_clean_pipeline(spark, docs)
+    assert got.collect()[0]["n_docs_kept"] > 0
+    assert_df_matches_sql(got, duck_of(documents=docs), corpus_clean_pipeline_sql())
 
 
 def test_asof_and_range_join(spark):
@@ -985,10 +1004,10 @@ def test_contamination_flags_eval_duplicates(spark):
 
 
 def test_contamination_arrow_matches_expression(spark, synth_docs):
-    """The shingle-hash Arrow kernel and the higher-order-expression
-    path must agree on the exploded hash rows (bit-equal md5-prefix
-    ints, same distinct collapse, same short-doc/empty/NULL handling)
-    and therefore on the final screen."""
+    """The shingle-hash Arrow kernel must agree with the higher-order
+    Column chain on the exploded hash rows (bit-equal md5-prefix ints,
+    same distinct collapse, same short-doc/empty/NULL handling), and the
+    screen with its DuckDB twin."""
     from approximatequeryengine_spark.operators import curation
 
     edge = spark.createDataFrame(
@@ -1001,18 +1020,11 @@ def test_contamination_arrow_matches_expression(spark, synth_docs):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs = synth_docs.unionByName(edge)
-    fast = sorted(
-        map(tuple, curation.contamination_screen(spark, docs).collect())
+    screen = curation.contamination_screen(spark, docs)
+    assert screen.count()
+    assert_df_matches_sql(
+        screen, duck_of(documents=docs), curation.contamination_screen_sql()
     )
-    slow = sorted(
-        map(
-            tuple,
-            curation.contamination_screen(
-                spark, docs, use_arrow=False
-            ).collect(),
-        )
-    )
-    assert fast == slow and fast
     # Pin the per-row hash stream itself, not just the aggregate.
     kern = sorted(
         map(
@@ -1332,12 +1344,13 @@ def test_ann_auto_topk_dispatches_both_ways(spark, engine, clustered_emb):
 
 
 def test_ann_autotune_arrow_matches_expression(spark, clustered_emb):
-    """The Arrow probe-key path must reach the identical tuning
-    decision as the pure-expression path (which is what the DuckDB
-    oracle renders)."""
-    fast = similarity.ann_tune_profile(spark, clustered_emb, use_arrow=True).collect()
-    slow = similarity.ann_tune_profile(spark, clustered_emb, use_arrow=False).collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
+    """The Arrow probe-key path must reach the tuning decision the
+    DuckDB twin renders."""
+    got = similarity.ann_tune_profile(spark, clustered_emb)
+    assert got.count() == 1
+    assert_df_matches_sql(
+        got, duck_of(embeddings=clustered_emb), similarity.ann_tune_profile_sql()
+    )
 
 
 def test_bm25_search_ranking_invariants(spark, synth_docs):
@@ -1907,50 +1920,57 @@ def test_semantic_dedup_replica_collapse_matches_row_rule(spark):
 
 
 def test_ivf_assign_arrow_matches_expression(spark, engine):
-    """Round-10 equivalence twin: the NumPy hyperplane-projection kernel
-    must reproduce the interpreted fold's cell ids bit for bit — on the
-    fixture corpus (both bit widths the registry uses) and on the edge
-    frame (empty vector → cell 0, short vector → sliced fold, >DIM
-    vector → truncated at DIM, negative components)."""
-    from approximatequeryengine_spark.operators.similarity import _ivf_assign
+    """The NumPy hyperplane-projection kernel must reproduce the cell
+    ids of the interpreted fold (the Spark-SQL text ``_ivf_cell_expr``)
+    bit for bit — on the fixture corpus (both bit widths the registry
+    uses) and on the edge frame (empty vector → cell 0, short vector →
+    sliced fold, >DIM vector → truncated at DIM, negative components)."""
+    from approximatequeryengine_spark.operators.similarity import (
+        _ivf_assign,
+        _ivf_cell_expr,
+        _vec_double,
+        valid_vec_col,
+    )
+
+    def cells(df, with_v=True):
+        return sorted(
+            (r["vec_id"], r["cluster"]) + ((tuple(r["v"]),) if with_v else ())
+            for r in df.collect()
+        )
+
+    def reference(emb, n_cells):
+        bits = (n_cells - 1).bit_length()
+        return (
+            emb.filter(valid_vec_col(F.col("embedding")))
+            .select("vec_id", _vec_double(F.col("embedding")).alias("v"))
+            .withColumn("cluster", F.expr(_ivf_cell_expr("v", bits)))
+        )
 
     emb = engine.catalog.table("embeddings")
     for n_cells in (16, 128):
-        fast = sorted(
-            (r["vec_id"], r["cluster"], tuple(r["v"]))
-            for r in _ivf_assign(emb, n_cells, use_arrow=True).collect()
-        )
-        slow = sorted(
-            (r["vec_id"], r["cluster"], tuple(r["v"]))
-            for r in _ivf_assign(emb, n_cells, use_arrow=False).collect()
-        )
-        assert fast == slow and fast
+        got = cells(_ivf_assign(emb, n_cells))
+        assert got == cells(reference(emb, n_cells)) and got
 
     rows = [(0, [1.0] * 64), (1, []), (2, [0.5] * 3), (3, [-1.0] * 80)]
     edge = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    fast = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in _ivf_assign(edge, 16, use_arrow=True).collect()
-    )
-    slow = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in _ivf_assign(edge, 16, use_arrow=False).collect()
-    )
-    assert fast == slow and fast
+    got = cells(_ivf_assign(edge, 16), with_v=False)
+    assert got == cells(reference(edge, 16), with_v=False) and got
 
 
 def test_semantic_dedup_arrow_matches_expression(spark, engine):
-    """Round-10 equivalence twin: the NumPy pair-scoring kernel must
-    reproduce the interpreted-fold filter exactly — on the fixture
-    corpus AND on the edge frame (zero vectors → NULL cosine → kept;
-    unequal lengths → NULL-padded dot → pair never dominates; exact
-    replicas → collapse arithmetic unchanged)."""
+    """The NumPy pair-scoring kernel must reproduce the DuckDB twin's
+    per-cell counts — on the fixture corpus AND on the edge frame (zero
+    vectors → NULL cosine → kept; unequal lengths → NULL-padded dot →
+    pair never dominates; exact replicas → collapse arithmetic
+    unchanged)."""
     emb = engine.catalog.table("embeddings")
-    fast = similarity.semantic_dedup_cells(spark, emb, use_arrow=True)
-    slow = similarity.semantic_dedup_cells(spark, emb, use_arrow=False)
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+    got = similarity.semantic_dedup_cells(spark, emb)
+    assert got.count()
+    assert_df_matches_sql(
+        got, duck_of(embeddings=emb), similarity.semantic_dedup_cells_sql()
+    )
     # plan gate: the quadratic filter runs in ONE Arrow kernel node
-    assert "MapInPandas" in fast._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in got._jdf.queryExecution().executedPlan().toString()
 
     dim = 8
     rows = [
@@ -1962,18 +1982,13 @@ def test_semantic_dedup_arrow_matches_expression(spark, engine):
         (5, [1.0] * (dim // 2)),    # short replica pair with id 3
     ]
     edge = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    con = duck_of(embeddings=edge)
     for t in (0.35, 0.9):
-        got = sorted(
-            map(tuple, similarity.semantic_dedup_cells(
-                spark, edge, threshold=t, n_cells=2, use_arrow=True
-            ).collect())
+        got = similarity.semantic_dedup_cells(spark, edge, threshold=t, n_cells=2)
+        assert got.count()
+        assert_df_matches_sql(
+            got, con, similarity.semantic_dedup_cells_sql(threshold=t, n_cells=2)
         )
-        want = sorted(
-            map(tuple, similarity.semantic_dedup_cells(
-                spark, edge, threshold=t, n_cells=2, use_arrow=False
-            ).collect())
-        )
-        assert got == want and got
 
 
 def test_semdedup_scaled_bits_ladder():
@@ -2468,17 +2483,29 @@ def test_pagerank_mass_conservation_and_hub_dominance(spark):
 
 
 def test_token_edges_arrow_matches_expression(spark, engine):
-    """Round-10 equivalence twin: the per-task pair kernel must produce
-    the SAME distinct edge set as the posexplode + (doc_id, pos)
-    equi-join — on the fixture corpus and on the edge frame (NULL text,
-    whitespace-only text, single token, replica docs, self-loop
-    tokens)."""
-    from approximatequeryengine_spark.operators.graph import _token_edges
+    """The per-task pair kernel must produce the SAME distinct edge set
+    as a Python windowed-pair walk over Spark's own ``ws_tokens_col`` +
+    ``lower`` tokens — on the fixture corpus and on the edge frame (NULL
+    text, whitespace-only text, single token, replica docs, self-loop
+    tokens, tab-leading text)."""
+    from approximatequeryengine_spark.operators.graph import PR_WINDOW, _token_edges
+
+    def reference(docs):
+        toks = docs.select(
+            F.transform(text_fns.ws_tokens_col(F.col("text")), lambda t: F.lower(t)).alias("t")
+        )
+        edges = set()
+        for r in toks.collect():
+            t = r["t"] or []
+            for i, a in enumerate(t):
+                for b in t[i + 1 : i + 1 + PR_WINDOW]:
+                    if a != b:
+                        edges |= {(a, b), (b, a)}
+        return sorted(edges)
 
     docs = engine.catalog.table("documents")
-    fast = sorted(map(tuple, _token_edges(docs, use_arrow=True).collect()))
-    slow = sorted(map(tuple, _token_edges(docs, use_arrow=False).collect()))
-    assert fast == slow and fast
+    got = sorted(map(tuple, _token_edges(docs).collect()))
+    assert got == reference(docs) and got
 
     rows = [
         (0, "a b a c", "en", "s", 7),
@@ -2492,9 +2519,8 @@ def test_token_edges_arrow_matches_expression(spark, engine):
     edge = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    fast = sorted(map(tuple, _token_edges(edge, use_arrow=True).collect()))
-    slow = sorted(map(tuple, _token_edges(edge, use_arrow=False).collect()))
-    assert fast == slow and fast
+    got = sorted(map(tuple, _token_edges(edge).collect()))
+    assert got == reference(edge) and got
 
 
 def test_ann_recall_curve_monotone_and_exact_at_full_probe(spark):
