@@ -135,21 +135,14 @@ def _cents_sql(value_sql: str) -> str:
     )
 
 
-def _cents(value_sql: str):
-    """:func:`_cents_sql` as a Column."""
-    return F.expr(_cents_sql(value_sql))
-
-
 @dataclass(frozen=True)
 class _Registration:
-    """One registered index: its kind, the handle its build returned
-    (O(blocks) metadata the probes consult on the driver) and the SQL
-    its probes re-apply to the base table."""
+    """One registered index: its kind and the handle its build returned
+    (O(blocks) metadata the probes consult on the driver). The value,
+    key and row-key expressions were applied at build time."""
 
     kind: str
     handle: object
-    value_sql: str
-    key_sql: str | None = None
 
 
 class AQEngine:
@@ -225,7 +218,13 @@ class AQEngine:
             from approximatequeryengine_spark.plans.aqpplus import aqpplus_build
 
             handle = aqpplus_build(
-                self.spark, df, path, key_sql, _cents_sql(value_sql), n_blocks=n_blocks
+                self.spark,
+                df,
+                path,
+                key_sql,
+                _cents_sql(value_sql),
+                row_key=self.catalog.unique_key(table),
+                n_blocks=n_blocks,
             )
         else:
             from approximatequeryengine_spark.sources.zonemap import zonemap_write
@@ -235,16 +234,14 @@ class AQEngine:
                 self.spark,
                 df.select(
                     F.expr(uk).cast("long").alias("__rk"),
-                    _cents(value_sql).alias("__cents"),
+                    F.expr(_cents_sql(value_sql)).alias("__cents"),
                     F.expr(key_sql).cast("long").alias("__keysrc"),
                 ),
                 path,
                 key=F.col("__keysrc"),
                 n_zones=n_blocks,
             )
-        self._indexes[("range", table)] = _Registration(
-            kind, handle, value_sql, key_sql
-        )
+        self._indexes[("range", table)] = _Registration(kind, handle)
         return path
 
     def _registration(self, probe: str, table: str, build: str) -> _Registration:
@@ -267,25 +264,15 @@ class AQEngine:
         registered range index (see :meth:`build_range_index`):
         'aqpplus' → exact interior + sampled-boundary CI; 'sampleseek'
         → selectivity-routed exact-or-sampled answer. The index
-        metadata comes from the registration, so the probe runs one
-        Spark query."""
+        metadata comes from the registration; an aqpplus probe of a
+        local index runs no Spark job."""
         reg = self._registration(
             "range", table, "build_range_index(table, key_sql, value_sql)"
         )
         if reg.kind == "aqpplus":
             from approximatequeryengine_spark.plans.aqpplus import aqpplus_range_sum
 
-            return aqpplus_range_sum(
-                self.spark,
-                self.catalog.table(table),
-                reg.handle,
-                lo,
-                hi,
-                key=reg.key_sql,
-                value_cents=_cents_sql(reg.value_sql),
-                row_key=self.catalog.unique_key(table),
-                fraction=fraction,
-            )
+            return aqpplus_range_sum(self.spark, reg.handle, lo, hi, fraction=fraction)
         from approximatequeryengine_spark.plans.sampleseek import (
             sample_seek_range_sum,
         )
@@ -321,16 +308,17 @@ class AQEngine:
             path,
             ingest_key=F.expr(self.catalog.unique_key(table)).cast("long"),
             lookup_key=F.expr(lookup_sql).cast("long"),
+            value_cents=_cents_sql(value_sql),
             block_width=block_width,
         )
-        self._indexes[("point", table)] = _Registration("blockbloom", handle, value_sql)
+        self._indexes[("point", table)] = _Registration("blockbloom", handle)
         return path
 
     def point_sum(self, table: str, key: int) -> DataFrame:
         """Exact ``SUM(value) WHERE lookup = key`` through the
-        registered bloom skip index: a driver-side consult of ≤ k bloom
-        words per block + one partition-pruned scan of the surviving
-        blocks."""
+        registered bloom skip index: a consult of ≤ k bloom words per
+        block, then a read of the surviving block directories — both
+        on the driver for a local index, with no Spark job."""
         reg = self._registration(
             "point", table, "build_point_index(table, lookup_sql, value_sql)"
         )
@@ -338,9 +326,7 @@ class AQEngine:
             blockbloom_point_sum,
         )
 
-        return blockbloom_point_sum(
-            self.spark, reg.handle, key, value_cents=_cents(reg.value_sql)
-        )
+        return blockbloom_point_sum(self.spark, reg.handle, key)
 
     def build_zorder_index(
         self,
@@ -364,31 +350,25 @@ class AQEngine:
             x=F.expr(x_sql).cast("long"),
             y=F.expr(y_sql).cast("long"),
             rowid=F.expr(self.catalog.unique_key(table)).cast("long"),
+            value_cents=_cents_sql(value_sql),
             n_blocks=n_blocks,
         )
-        self._indexes[("zorder", table)] = _Registration("zorder", handle, value_sql)
+        self._indexes[("zorder", table)] = _Registration("zorder", handle)
         return path
 
     def rect_sum(
         self, table: str, x_lo: int, x_hi: int, y_lo: int, y_hi: int
     ) -> DataFrame:
         """Exact rectangle aggregate through the registered Z-order
-        layout: driver-side blockmap consult + one partition-pruned
-        scan."""
+        layout: a driver-side blockmap consult, then a read of the
+        overlapping block directories — on the driver for a local
+        layout, with no Spark job."""
         reg = self._registration(
             "zorder", table, "build_zorder_index(table, x_sql, y_sql, value_sql)"
         )
         from approximatequeryengine_spark.sources.zorder import zorder_rect_sum
 
-        return zorder_rect_sum(
-            self.spark,
-            reg.handle,
-            x_lo,
-            x_hi,
-            y_lo,
-            y_hi,
-            value_cents=_cents(reg.value_sql),
-        )
+        return zorder_rect_sum(self.spark, reg.handle, x_lo, x_hi, y_lo, y_hi)
 
     def _advise_auto(
         self, spec: QuerySpec, z: float

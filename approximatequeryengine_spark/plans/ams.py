@@ -42,7 +42,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.functions.hashing import (
-    portable_hash_col,
     portable_hash_np,
     portable_hash_sql,
 )
@@ -50,13 +49,6 @@ from approximatequeryengine_spark.functions.hashing import (
 K_DEFAULT = 8  # estimators per group (mean)
 GROUPS_DEFAULT = 6  # groups (median)
 _SALT2 = 50  # second-round salt offset of the composed hash
-
-
-def _sign_col(key: Column, salt: int) -> Column:
-    # top bit of the composed hash (see module docstring: one round's
-    # bits are low-discrepancy over sequential keys).
-    hh = portable_hash_col(portable_hash_col(key, salt=salt), salt=salt + _SALT2)
-    return (F.floor(hh / F.lit(2_147_483_648)) % 2) * 2 - 1
 
 
 def _sign_sql(key_sql: str, salt: int) -> str:
@@ -69,34 +61,21 @@ def ams_f2_counters(
     key: Column,
     k: int = K_DEFAULT,
     groups: int = GROUPS_DEFAULT,
-    kernel: bool | None = None,
 ) -> DataFrame:
     """The raw sketch: one row of ``groups·k`` signed-counter sums
     (columns ``c0..c{gk-1}``) plus ``n_rows``. Linear in the data —
     counters of two frames add.
 
     Batch AND streaming frames take the Arrow kernel
-    (:func:`_ams_counters_pandas`, bit-identical int64 arithmetic —
-    the same fast-path contract as the minhash signature kernel): the
-    expression path evaluates ``groups·k`` two-round modular chains
-    per row in codegen, which measured 4.3 s at sf0.1 vs ~0.6 s for
-    the vectorized kernel (and 8.6 → 3.2 s for the streaming entry,
-    round 10). The kernel is a STATELESS per-partition partial-sum
-    projection — on a stream the complete-mode aggregate state is the
-    final counter sum either way, and counters are linear, so partials
-    accumulate across micro-batches exactly like raw rows. ``kernel``
-    forces a path (parity tests); default kernel everywhere."""
-    if kernel is None:
-        kernel = True
-    if kernel:
-        return _ams_counters_pandas(df, key, k=k, groups=groups)
-    kk = key.cast("long")
-    aggs = [
-        F.sum(_sign_col(kk, salt=j)).cast("long").alias(f"c{j}")
-        for j in range(groups * k)
-    ]
-    aggs.append(F.count(F.lit(1)).cast("long").alias("n_rows"))
-    return df.agg(*aggs)
+    (:func:`_ams_counters_pandas`): a Spark expression path evaluated
+    ``groups·k`` two-round modular chains per row in codegen, which
+    measured 4.3 s at sf0.1 vs ~0.6 s for the vectorized kernel (and
+    8.6 → 3.2 s for the streaming entry, round 10). The kernel is a
+    STATELESS per-partition partial-sum projection — on a stream the
+    complete-mode aggregate state is the final counter sum either way,
+    and counters are linear, so partials accumulate across
+    micro-batches exactly like raw rows."""
+    return _ams_counters_pandas(df, key, k=k, groups=groups)
 
 
 def _ams_counters_pandas(
@@ -104,10 +83,10 @@ def _ams_counters_pandas(
 ) -> DataFrame:
     """Arrow fast path: per-batch numpy sign sums → per-batch partial
     counters → one tiny final aggregate. The composed hash is
-    ``portable_hash_np`` twice — the NumPy form of ``_sign_col``'s
-    ``portable_hash_col``, pinned by ``tests/test_hashing.py``; the
-    counters are pinned against the ``kernel=False`` expression path
-    in ``tests/test_ams.py``.
+    ``portable_hash_np`` twice — the NumPy form of ``_sign_sql``'s
+    ``portable_hash_sql``, pinned by ``tests/test_hashing.py``; the
+    counters are pinned against the DuckDB twin's
+    (``_counters_sql``) in ``tests/test_ams.py``.
     The kernel loops over salts with ONE in-place n-vector buffer
     (``out=``) — the broadcasted n×48 formulation allocates 230 MB
     temporaries per op at sf0.1 and measured 24× slower (memory-bound,
@@ -124,9 +103,8 @@ def _ams_counters_pandas(
         # per-batch processing pays the 48-salt Python loop once per
         # 10k-row batch (thousands of tiny numpy calls); per-partition
         # it runs once over ~N/cores rows (a few MB of int64).
-        # NULL keys: the expression path sums sign(NULL) = NULL (the
-        # aggregate skips it) while count(1) still counts the row —
-        # mirror that exactly (a raw to_numpy(int64) would crash on
+        # NULL keys: SQL sums sign(NULL) = NULL (the aggregate skips
+        # it) while count(*) still counts the row — mirror that exactly (a raw to_numpy(int64) would crash on
         # the NaN/NA a nullable long column arrives as).
         n_all = 0
         chunks = []
@@ -198,6 +176,23 @@ def ams_f2_estimate(
     return ams_f2_readout(ams_f2_counters(df, key, k=k, groups=groups), k=k, groups=groups)
 
 
+def _counters_sql(
+    table: str,
+    key_sql: str,
+    where: str = "TRUE",
+    k: int = K_DEFAULT,
+    groups: int = GROUPS_DEFAULT,
+) -> str:
+    """DuckDB twin of :func:`ams_f2_counters`: the one-row counters
+    ``c0..c{gk-1}`` plus ``n_rows``."""
+    csels = ", ".join(
+        f"CAST(sum({_sign_sql(key_sql, j)}) AS BIGINT) AS c{j}"
+        for j in range(groups * k)
+    )
+    return f"""SELECT {csels}, CAST(count(*) AS BIGINT) AS n_rows
+  FROM {table} WHERE {where}"""
+
+
 def ams_f2_estimate_sql(
     table: str,
     key_sql: str,
@@ -207,10 +202,6 @@ def ams_f2_estimate_sql(
 ) -> str:
     """DuckDB oracle — replays every counter, group mean, and the
     interpolated median."""
-    csels = ", ".join(
-        f"CAST(sum({_sign_sql(key_sql, j)}) AS BIGINT) AS c{j}"
-        for j in range(groups * k)
-    )
     gmeans = ", ".join(
         "("
         + " + ".join(
@@ -222,8 +213,7 @@ def ams_f2_estimate_sql(
     gvals = ", ".join(f"(g{g})" for g in range(groups))
     return f"""
 WITH counters AS (
-  SELECT {csels}, CAST(count(*) AS BIGINT) AS n_rows
-  FROM {table} WHERE {where}
+  {_counters_sql(table, key_sql, where, k, groups)}
 ),
 means AS ( SELECT {gmeans}, n_rows FROM counters ),
 stacked AS (

@@ -29,26 +29,34 @@ the in-between that dominates both at scale:
   a CI that must cover the whole range.
 
 What a probe reads: the interior comes from the handle's block
-aggregates on the driver — no Spark read of the block table. The
-boundary is one filtered scan of the base table: every predicate
-(range, NOT-interior, hash threshold) is a row expression inside
-whole-stage codegen, but whether the scan skips the interior depends
-on the key. A plain column key hands the range to the Parquet reader,
-whose row-group statistics skip what lies outside it (when the data is
-clustered by the key); an expression key such as ``datediff(...)`` pushes
-nothing down, so the probe reads the key, value and row-key columns of
-the WHOLE table and keeps ``fraction`` of the slivers. A
-block-partitioned boundary store would read only the two boundary
-blocks, but measured on sf0.1 ``orders`` it saved 0.04 s per probe
-while the build went from 0.79 to 1.71 s — so the layout stays. An
-empty or block-aligned range has no boundary and runs no Spark job.
-The block table is mergeable under ingest (per-block sums add), so
-the index maintains incrementally like the engine's other persisted
+aggregates on the driver — no read of the block table. The boundary
+comes from the build's second table, ``path/rows``: every row's key,
+value cents and row key as BIGINTs, partitioned by block, so a probe
+opens only the ≤ 2 partially covered block directories, whatever the
+key expression. The range predicate and the hash threshold apply to
+those rows alone (they hold no interior key by construction). A local
+index is read with pyarrow on the driver and its moments are summed
+there; an index on any other filesystem is read with one Spark
+aggregate over the same directories. Either way the readout is one
+projection over a local frame, so a probe of a local index runs no
+Spark job, and neither does the caller's ``collect()``. An earlier
+measurement rejected this store because it saved only 0.04 s per
+probe, but that was with a Spark read of the two blocks; the driver
+read is what makes it pay. Measured on sf0.1 ``orders``, 4 vCPUs,
+collect included, 40 probes each: a probe took 0.32 s (median) when its
+boundary was a Spark scan of the whole table and 0.05 s with the driver
+read; the store write (64 block directories) took the build from 0.61
+to 1.32 s (medians of 10). An
+empty or block-aligned range has no boundary and reads nothing. The
+grouped variant at the end of this module keeps no boundary store: its
+probe still samples the boundary from one filtered scan of the base
+table. The block table is mergeable under ingest (per-block sums add),
+so the index maintains incrementally like the engine's other persisted
 synopses.
 
 Plans are built from Spark SQL text (``filter(str)``, ``selectExpr``,
 ``F.expr``): one parse call per step instead of a py4j round trip per
-Column node (an engine probe: ~1,000 round trips as Columns, ~37 as
+Column node (an engine probe: ~1,000 round trips as Columns, ~34 as
 text). Constants are written ``CAST(v AS DOUBLE)`` — the typing of
 ``F.lit(float)`` — so the parsed expressions are the Column path's.
 
@@ -66,20 +74,41 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from approximatequeryengine_spark.functions.hashing import (
     fraction_threshold,
+    portable_hash_np,
     portable_hash_sql,
 )
 from approximatequeryengine_spark.plans.estimators import Z_95, ht_integer_margin_sql
 from approximatequeryengine_spark.plans.sampling import sql_double
 from approximatequeryengine_spark.session import local_frame
-from approximatequeryengine_spark.sources.arrow_write import write_single_parquet
+from approximatequeryengine_spark.sources.arrow_write import (
+    _local_path,
+    bigint_col,
+    read_partitions,
+    read_partitions_arrow,
+    write_partitioned_parquet,
+    write_single_parquet,
+)
 from approximatequeryengine_spark.sources.swap import read_synopsis
 
 _META_DDL = "mn long, width long, n_blocks long"
+# The boundary store's schema as Spark reads it back (partition column last).
+_ROWS_SCHEMA = StructType(
+    [StructField(c, LongType()) for c in ("__k", "__cents", "__rk", "block")]
+)
+# The boundary moments the readout projects: a StructType, not DDL, so
+# building the local frame needs no JVM parse.
+_MOMENTS_SCHEMA = StructType([
+    StructField("n", LongType(), False),
+    StructField("s1", LongType(), False),
+    StructField("s2", DoubleType(), False),
+])
 
 
 @dataclass(frozen=True)
@@ -112,40 +141,37 @@ def _block_rows(rows) -> tuple[tuple[int, int, int], ...]:
     ))
 
 
-def _long(expr: Column | str, name: str) -> Column:
-    """``expr`` — a Column or Spark SQL text — as a BIGINT column named
-    ``name``. Text is one parse call; a Column tree costs a py4j round
-    trip per node."""
-    if isinstance(expr, str):
-        return F.expr(f"CAST(({expr}) AS BIGINT) AS {name}")
-    return expr.cast("long").alias(name)
-
-
 def aqpplus_build(
     spark: SparkSession,
     df: DataFrame,
     path: str,
     key: Column | str,
     value_cents: Column | str,
+    row_key: Column | str,
     n_blocks: int = 64,
 ) -> AqpplusIndex:
-    """Persist the block-aggregate table + meta and return the index's
-    handle. ``key`` must be integer-valued (dates via datediff
-    upstream); ``value_cents`` integer cents so block sums are exact
-    BIGINTs — each a Column or Spark SQL text. The block rows reach the
-    driver as an observed metric of the write job itself, so the handle
-    costs no read-back."""
-    base = df.select(_long(key, "__key"), _long(value_cents, "__cents"))
-    mn, mx = base.agg(F.min("__key"), F.max("__key")).collect()[0]
+    """Persist the block-aggregate table, the boundary store and the
+    meta, and return the index's handle. ``key`` must be integer-valued
+    (dates via datediff upstream); ``value_cents`` integer cents so
+    block sums are exact BIGINTs; ``row_key`` the sampling hash's key —
+    each a Column or Spark SQL text. The block rows reach the driver as
+    an observed metric of the write job itself, so the handle costs no
+    read-back. ``path/rows`` holds ``(__k, __cents, __rk)`` partitioned
+    by block; a row with a NULL key belongs to no block and is not
+    stored."""
+    base = df.select(
+        bigint_col(key, "__k"), bigint_col(value_cents, "__cents"), bigint_col(row_key, "__rk")
+    )
+    mn, mx = base.agg(F.min("__k"), F.max("__k")).collect()[0]
     if mn is None:
         raise ValueError("aqpplus_build: no non-null keys")
     width = max(1, (mx - mn + n_blocks) // n_blocks)
+    blocked = base.withColumn(
+        "block", F.floor((F.col("__k") - F.lit(mn)) / F.lit(width)).cast("long")
+    )
     obs = Observation()
     (
-        base.withColumn(
-            "block", F.floor((F.col("__key") - F.lit(mn)) / F.lit(width)).cast("long")
-        )
-        .groupBy("block")
+        blocked.groupBy("block")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum("__cents").cast("long").alias("sum_cents"),
@@ -153,6 +179,9 @@ def aqpplus_build(
         .observe(obs, F.collect_list(F.struct("block", "n_rows", "sum_cents")).alias("rows"))
         .write.mode("overwrite")
         .parquet(f"{path}/blocks")
+    )
+    write_partitioned_parquet(
+        blocked.filter("block IS NOT NULL").repartition("block"), f"{path}/rows", "block"
     )
     write_single_parquet(
         spark, [(int(mn), int(width), int(n_blocks))], _META_DDL, f"{path}/meta"
@@ -224,42 +253,86 @@ def _ci_sql(icents: str, fraction: float, z: float) -> list[str]:
     ]
 
 
+def _boundary_blocks(index: AqpplusIndex, lo: int, hi: int) -> list[int]:
+    """The blocks that ``[lo, hi]`` covers only in part (at most two),
+    among those that hold rows."""
+    if lo > hi:
+        return []
+    b_lo, b_hi = _interior_block_range(index.mn, index.width, lo, hi)
+    first = (lo - index.mn) // index.width
+    last = (hi - index.mn) // index.width
+    return [
+        b for b, _, _ in index.blocks
+        if first <= b <= last and not b_lo <= b <= b_hi
+    ]
+
+
+def _boundary_moments(
+    spark: SparkSession, index: AqpplusIndex, lo: int, hi: int, fraction: float, salt: int
+) -> tuple[int, int, float]:
+    """``(n, Σcents, Σcents²)`` of the boundary rows in the hash sample:
+    the range predicate and the hash threshold over the boundary blocks
+    of ``path/rows``, which hold no interior key. The sums are exact
+    integers; Σcents² becomes a double once, at the end."""
+    blocks = _boundary_blocks(index, lo, hi)
+    if not blocks:
+        return 0, 0, 0.0
+    thr = fraction_threshold(fraction)
+    rows = f"{index.path}/rows"
+    fs_path = _local_path(spark, rows)
+    if fs_path is None:
+        h = portable_hash_sql("__rk", salt)
+        n, s1, s2 = (
+            read_partitions(spark, rows, "block", blocks, _ROWS_SCHEMA)
+            .filter(f"__k BETWEEN {lo} AND {hi} AND {h} < {thr}")
+            .selectExpr(
+                "count(1)",
+                "coalesce(sum(__cents), 0)",
+                "coalesce(sum(CAST(__cents AS DECIMAL(38, 0)) * __cents), 0)",
+            )
+            .collect()[0]
+        )
+        return n, s1, float(s2)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = read_partitions_arrow(fs_path, "block", blocks, ["__k", "__cents", "__rk"])
+    k = tbl["__k"].to_numpy()
+    rk = tbl["__rk"]
+    keep = (
+        (k >= lo) & (k <= hi)
+        & pc.is_valid(rk).to_numpy()
+        & (portable_hash_np(pc.fill_null(rk, 0).to_numpy(), salt) < thr)
+    )
+    cents = [c for c in tbl["__cents"].filter(pa.array(keep)).to_pylist() if c is not None]
+    return int(np.count_nonzero(keep)), sum(cents), float(sum(c * c for c in cents))
+
+
 def aqpplus_range_sum(
     spark: SparkSession,
-    df: DataFrame,
     index: AqpplusIndex | str,
     lo: int,
     hi: int,
-    key: Column | str,
-    value_cents: Column | str,
-    row_key: Column | str,
     fraction: float = 0.1,
     salt: int = 0,
     z: float = Z_95,
 ) -> DataFrame:
     """Range SUM via exact interior + sampled boundary: one row
     ``(sum_value, ci_lower, ci_upper, n_samples, interior_rows,
-    blocks_interior)`` in dollars (cents/100, rounded 2). ``key``,
-    ``value_cents`` and ``row_key`` are Columns or Spark SQL text.
+    blocks_interior)`` in dollars (cents/100, rounded 2), from the
+    index's handle (or a path to load it from).
 
     The interior readout sums the handle's block aggregates on the
-    driver (a path is loaded first); the base table is scanned only for
-    the boundary slivers, through the deterministic hash sample — the
-    probe's one Spark query. An empty or block-aligned range has no
-    boundary and runs no Spark job: its zero moments go through the
-    same CI projection over a local frame."""
+    driver; the boundary moments come from the ≤ 2 boundary blocks of
+    the build's boundary store (:func:`_boundary_moments`). Both go
+    through one CI projection over a local frame, which runs no Spark
+    job."""
     if isinstance(index, str):
         index = aqpplus_load(spark, index)
     b_lo, b_hi = _interior_block_range(index.mn, index.width, lo, hi)
     interior = [r for r in index.blocks if b_lo <= r[0] <= b_hi]
-    boundary = _boundary_sql(index.mn, index.width, lo, hi)
-    if boundary is None:
-        m = local_frame(
-            spark, [(0, 0, 0.0)], "n BIGINT NOT NULL, s1 BIGINT NOT NULL, s2 DOUBLE NOT NULL"
-        )
-    else:
-        cols = [_long(key, "__k"), _long(value_cents, "__cents"), _long(row_key, "__rk")]
-        m = _sampled_boundary(df, cols, boundary, fraction, salt).selectExpr(*_MOMENTS)
+    moments = _boundary_moments(spark, index, lo, hi, fraction, salt)
+    m = local_frame(spark, [moments], _MOMENTS_SCHEMA)
     icents = sql_double(sum(r[2] for r in interior))
     return m.selectExpr(
         *_ci_sql(icents, fraction, z),
@@ -356,7 +429,7 @@ def aqpplus_grouped_build(
     the precomputation behind dashboard-style 'range rollup by
     category' queries. Size O(blocks × |groups|), still KBs."""
     base = df.select(
-        _long(key, "__key"), _long(value_cents, "__cents"), F.col(group).alias("__grp")
+        bigint_col(key, "__key"), bigint_col(value_cents, "__cents"), F.col(group).alias("__grp")
     )
     mn, mx = base.agg(F.min("__key"), F.max("__key")).collect()[0]
     if mn is None:
@@ -397,7 +470,7 @@ def aqpplus_grouped_append(
     mn, width = int(mrow["mn"]), int(mrow["width"])
     batch = (
         df_batch.select(
-            _long(key, "__key"), _long(value_cents, "__cents"), F.col(group).alias("__grp")
+            bigint_col(key, "__key"), bigint_col(value_cents, "__cents"), F.col(group).alias("__grp")
         )
         .withColumn(
             "block", F.floor((F.col("__key") - F.lit(mn)) / F.lit(width)).cast("long")
@@ -470,10 +543,10 @@ def aqpplus_grouped_range_sum(
 
     boundary = _boundary_sql(mn, width, lo, hi) or "FALSE"
     cols = [
-        _long(key, "__k"),
-        _long(value_cents, "__cents"),
+        bigint_col(key, "__k"),
+        bigint_col(value_cents, "__cents"),
         F.col(group).alias("__grp"),
-        _long(row_key, "__rk"),
+        bigint_col(row_key, "__rk"),
     ]
     m = (
         _sampled_boundary(df, cols, boundary, fraction, salt)

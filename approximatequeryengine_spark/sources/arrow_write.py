@@ -43,6 +43,14 @@ tables those builders persist (layout parameters, thresholds): a
 driver-side ``pyarrow`` write of ``path/part-00000.parquet`` replaces
 a whole Spark job (createDataFrame → write), ~0.4–0.6 s per call at
 any scale — the table IS driver data to begin with.
+
+The read side of the same layout: ``read_partitions`` opens only the
+named block directories through Spark, and ``read_partitions_arrow``
+reads them with pyarrow on the driver, which runs no Spark job — the
+skip-index probes take it for a local index. "Local" follows Spark's
+own path resolution: a path with no scheme resolves against the
+Hadoop ``fs.defaultFS``, so on an HDFS or S3 default it is not local
+and both the writers and the probes take their Spark paths.
 """
 
 from __future__ import annotations
@@ -56,6 +64,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from approximatequeryengine_spark.session import local_frame
 
 # Partition-column types whose str() rendering matches the JVM
 # writer's directory naming for the values this engine uses.
@@ -86,12 +96,30 @@ def _escape_part_value(v) -> str:
     return _ESCAPE_RE.sub(lambda m: "%%%02X" % ord(m.group()), s)
 
 
-def _local_path(path: str) -> str | None:
-    """The bare filesystem path when ``path`` is local, else None."""
+def _local_path(spark, path: str) -> str | None:
+    """The bare filesystem path when ``path`` is on the local
+    filesystem, else None. A path with no scheme resolves against the
+    session's Hadoop ``fs.defaultFS``, as Spark's own reads and writes
+    do: it is local only when that is ``file:``."""
     parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path if parsed.scheme == "file" else path
-    return None
+    if parsed.scheme == "file":
+        return parsed.path
+    if parsed.scheme:
+        return None
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///"
+    )
+    return path if urlparse(default_fs).scheme == "file" else None
+
+
+def bigint_col(expr, name: str):
+    """``expr`` — a Column or Spark SQL text — as a BIGINT column named
+    ``name``: how the index builds spell the columns they store. Text
+    is one parse call; a Column tree costs a py4j round trip per
+    node."""
+    if isinstance(expr, str):
+        return F.expr(f"CAST(({expr}) AS BIGINT) AS {name}")
+    return expr.cast("long").alias(name)
 
 
 def write_partitioned_parquet(
@@ -102,7 +130,7 @@ def write_partitioned_parquet(
     Falls back to that exact call for non-local destinations,
     unsupported column types, or modes other than overwrite/append."""
     dtypes = dict(df.dtypes)
-    fs_path = _local_path(path)
+    fs_path = _local_path(df.sparkSession, path)
     supported = (
         fs_path is not None
         and mode in ("overwrite", "append")
@@ -190,7 +218,7 @@ def write_single_parquet(spark, rows: list[tuple], schema: str, path: str) -> No
     local. ``schema`` is the DDL string the Spark fallback needs; the
     Arrow path derives field types from it (long/string/double only —
     the meta tables this engine writes)."""
-    fs_path = _local_path(path)
+    fs_path = _local_path(spark, path)
     fields = [f.strip().rsplit(None, 1) for f in schema.split(",")]
     arrow_types = {"long": "int64", "bigint": "int64", "string": "string",
                    "double": "float64", "int": "int32"}
@@ -240,8 +268,52 @@ def read_partitions(
     every directory first is O(partitions) driver work before pruning
     even runs. Elsewhere the IN-list prunes at planning time."""
     reader = spark.read.schema(schema)
-    if values and _local_path(path) is not None:
+    if values and _local_path(spark, path) is not None:
         return reader.option("basePath", path).parquet(
             *[f"{path}/{partition_col}={v}" for v in values]
         )
     return reader.parquet(path).filter(F.col(partition_col).isin(values))
+
+
+def read_partitions_arrow(
+    fs_path: str, partition_col: str, values: list[int], columns: list[str]
+):
+    """The ``columns`` of the ``{partition_col}=v`` directories of a
+    partitioned table on the local filesystem (``fs_path``, as
+    :func:`_local_path` returns it), as one pyarrow Table read on the
+    driver — no Spark job. Only the parquet files of those directories
+    are opened: the JVM writer's ``.crc`` checksums and the
+    ``_SUCCESS`` marker are skipped, and no other directory is
+    listed."""
+    import pyarrow.dataset as ds
+
+    files = []
+    for v in values:
+        d = os.path.join(fs_path, f"{partition_col}={_escape_part_value(v)}")
+        files += [
+            os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+        ]
+    return ds.dataset(files, format="parquet").to_table(columns=columns)
+
+
+# (n, Σcents) of an exact probe; a StructType, not DDL, so building the
+# local frame needs no JVM parse.
+_SUM_SCHEMA = StructType(
+    [StructField("n", LongType(), False), StructField("s", LongType(), True)]
+)
+
+
+def exact_sum_readout(
+    spark, n: int, sum_cents: int | None, blocks_scanned: int, blocks_total: int
+) -> DataFrame:
+    """The one-row readout ``(n_rows, sum_value, blocks_scanned,
+    blocks_total)`` of an exact skip-index probe, in dollars: one
+    projection over a local frame, so neither building it nor
+    collecting it runs a Spark job. ``sum_cents`` is None when no row
+    matched, as SQL's ``sum`` is."""
+    return local_frame(spark, [(n, sum_cents)], _SUM_SCHEMA).selectExpr(
+        "n AS n_rows",
+        "round(s / CAST(100.0 AS DOUBLE), 2) AS sum_value",
+        f"CAST({blocks_scanned} AS BIGINT) AS blocks_scanned",
+        f"CAST({blocks_total} AS BIGINT) AS blocks_total",
+    )

@@ -39,10 +39,14 @@ lookup column:
   table is written sorted by word, so parquet row-group statistics
   skip the rest), keeps the blocks where every probed word covers its
   mask (a missing (block, word) row means those bits are 0 → pruned),
-  and scans only those block directories with the exact equality
-  predicate — the probe's one Spark query. No false negatives — every
-  ingested key OR-ed its probes into its block — so the answer is
-  EXACT; false positives only add scanned blocks.
+  and sums the ``__cents`` the build stored for the rows of only those
+  block directories that hold the key. A local index is read with
+  pyarrow on the driver, and the readout is one projection over a
+  local frame, so the probe runs no Spark job; an index on any other
+  filesystem takes one Spark aggregate over the same directories. No
+  false negatives — every ingested key OR-ed its probes into its
+  block — so the answer is EXACT; false positives only add read
+  blocks.
 
 At 100 TB: ≤ max_blocks directories regardless of data size, the
 bloom side table is O(distinct keys · k / 32) words, and the consult
@@ -67,7 +71,10 @@ from pyspark.sql.types import StructType
 
 from approximatequeryengine_spark.sources.arrow_write import (
     _local_path,
+    bigint_col,
+    exact_sum_readout,
     read_partitions,
+    read_partitions_arrow,
     read_schema,
     write_partitioned_parquet,
     write_single_parquet,
@@ -186,18 +193,24 @@ def blockbloom_write(
     path: str,
     ingest_key: Column,
     lookup_key: Column,
+    value_cents: Column | str,
     block_width: int = 256,
     max_blocks: int = MAX_BLOCKS,
     k: int = K_PROBES,
 ) -> BlockBloomIndex:
-    """Persist ``path/data`` partitioned by ``__block``, the sparse
-    ``path/bloom`` = (block, word, bits) side table sorted by word, and
-    ``path/meta`` = the 1-row (mn, width, m) layout parameters; return
-    the index's handle. The block count reaches the driver as an
-    observed metric of the bloom write, so the handle costs no
-    read-back."""
-    base = df.withColumn("__lk", lookup_key.cast("long")).withColumn(
-        "__ik", ingest_key.cast("long")
+    """Persist ``path/data`` partitioned by ``__block`` (the rows of
+    ``df`` plus ``__lk`` and ``__cents``, the lookup key and
+    ``value_cents`` — a Column or Spark SQL text — as BIGINTs), the
+    sparse ``path/bloom`` = (block, word, bits) side table sorted by
+    word, and ``path/meta`` = the 1-row (mn, width, m) layout
+    parameters; return the index's handle. The block count reaches the
+    driver as an observed metric of the bloom write, so the handle
+    costs no read-back."""
+    base = df.select(
+        "*",
+        lookup_key.cast("long").alias("__lk"),
+        bigint_col(value_cents, "__cents"),
+        ingest_key.cast("long").alias("__ik"),
     )
     mn, mx, n_null = base.agg(
         F.min("__ik"),
@@ -262,6 +275,7 @@ def blockbloom_append(
     path: str,
     ingest_key: Column,
     lookup_key: Column,
+    value_cents: Column | str,
     k: int = K_PROBES,
 ) -> None:
     """Append a batch to an existing index WITHOUT rebuilding: the new
@@ -288,9 +302,13 @@ def blockbloom_append(
     trade of this plain-parquet index.)"""
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     mn, width, m_bits = int(meta["mn"]), int(meta["width"]), int(meta["m_bits"])
-    base = df.withColumn("__lk", lookup_key.cast("long")).withColumn(
-        "__block",
-        F.floor((ingest_key.cast("long") - F.lit(mn)) / F.lit(width)).cast("long"),
+    base = df.select(
+        "*",
+        lookup_key.cast("long").alias("__lk"),
+        bigint_col(value_cents, "__cents"),
+        F.floor((ingest_key.cast("long") - F.lit(mn)) / F.lit(width))
+        .cast("long")
+        .alias("__block"),
     )
     n_null = base.filter(F.col("__block").isNull()).count()
     if n_null:
@@ -333,7 +351,7 @@ def _surviving_blocks(
     bloom = f"{index.path}/bloom"
     heal_synopsis(spark, bloom)
     words = sorted(need)
-    local = _local_path(bloom)
+    local = _local_path(spark, bloom)
     if local is not None:
         import pyarrow.dataset as ds
 
@@ -352,32 +370,48 @@ def _surviving_blocks(
     return sorted(b for b, n in hits.items() if n == len(need))
 
 
+def _key_moments(
+    spark: SparkSession, index: BlockBloomIndex, cells: list[int], key: int
+) -> tuple[int, int | None]:
+    """``(n, Σcents)`` of the rows of ``cells`` whose lookup key is
+    ``key``; the sum is None when no row matches, as SQL's is."""
+    if not cells:
+        return 0, None
+    data = f"{index.path}/data"
+    fs_path = _local_path(spark, data)
+    if fs_path is None:
+        n, s = (
+            read_partitions(spark, data, "__block", cells, index.data_schema)
+            .filter(f"__lk = {key}")
+            .selectExpr("count(1)", "sum(__cents)")
+            .collect()[0]
+        )
+        return n, s
+    import pyarrow.compute as pc
+
+    tbl = read_partitions_arrow(fs_path, "__block", cells, ["__lk", "__cents"])
+    hit = tbl.filter(pc.equal(tbl["__lk"], key))
+    return hit.num_rows, pc.sum(hit["__cents"]).as_py()
+
+
 def blockbloom_point_sum(
     spark: SparkSession,
     index: BlockBloomIndex | str,
     key: int,
-    value_cents: Column,
     k: int = K_PROBES,
 ) -> DataFrame:
     """Point-lookup aggregate through the bloom index (its handle, or a
     path to load it from): one row (n_rows, sum_value, blocks_scanned,
     blocks_total). The consult reads ≤ k bloom words per block; the
-    data scan — the one Spark query — reads only the surviving block
-    directories."""
+    key's rows are read only from the surviving block directories, and
+    the readout is one projection over a local frame."""
     if isinstance(index, str):
         index = blockbloom_load(spark, index)
     cells = _surviving_blocks(spark, index, probe_masks(key, index.m_bits, k))
     # Every cell has a directory: a block appears in the bloom table
     # only via its ingested rows.
-    data = read_partitions(
-        spark, f"{index.path}/data", "__block", cells, index.data_schema
-    ).filter(F.col("__lk") == F.lit(key))
-    return data.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.round(F.sum(value_cents.cast("long")) / F.lit(100.0), 2).alias("sum_value"),
-        F.lit(len(cells)).cast("long").alias("blocks_scanned"),
-        F.lit(index.blocks_total).cast("long").alias("blocks_total"),
-    )
+    moments = _key_moments(spark, index, cells, key)
+    return exact_sum_readout(spark, *moments, len(cells), index.blocks_total)
 
 
 def blockbloom_point_sum_sql(

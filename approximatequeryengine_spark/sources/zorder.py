@@ -33,9 +33,12 @@ rectangle queries on either or both columns.
   persisted and also returned in the build's :class:`ZorderIndex`
   handle (with the data's parquet schema);
 - **query**: a rectangle aggregate consults the handle's blockmap on
-  the driver, scans only blocks overlapping BOTH ranges via a
-  partition IN-list — the probe's one Spark query — and applies the
-  exact predicate on survivors.
+  the driver, reads only the blocks overlapping BOTH ranges, and sums
+  the ``__cents`` the build stored for their rows inside the exact
+  rectangle. A local layout is read with pyarrow on the driver and the
+  readout is one projection over a local frame, so the probe runs no
+  Spark job; a layout on any other filesystem takes one Spark
+  aggregate over the same block directories.
 
 Alternative layouts, kept for the balance-vs-build trade:
 
@@ -69,7 +72,11 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from approximatequeryengine_spark.sources.arrow_write import (
+    _local_path,
+    bigint_col,
+    exact_sum_readout,
     read_partitions,
+    read_partitions_arrow,
     read_schema,
     write_single_parquet,
 )
@@ -189,10 +196,13 @@ def zorder_write(
     x: Column,
     y: Column,
     rowid: Column,
+    value_cents: Column | str,
     n_blocks: int = 64,
     layout: str = "prefix",
 ) -> ZorderIndex:
-    """Persist ``path/data`` partitioned by Morton block and
+    """Persist ``path/data`` partitioned by Morton block (the rows of
+    ``df`` plus the BIGINT keys ``__x``, ``__y``, ``__rid`` and
+    ``__cents``, the value in cents — a Column or Spark SQL text) and
     ``path/blockmap`` = (block, xmin, xmax, ymin, ymax, n_rows); also
     writes ``path/meta`` (the two quantization (min, span) pairs and
     the layout) so queries never re-derive the layout. Returns the
@@ -205,10 +215,12 @@ def zorder_write(
     equal-count, sampled boundaries), ``'ntile'`` (deterministic
     equal-count via a single-partition window sort — small builds
     only)."""
-    base = (
-        df.withColumn("__x", x.cast("long"))
-        .withColumn("__y", y.cast("long"))
-        .withColumn("__rid", rowid.cast("long"))
+    base = df.select(
+        "*",
+        x.cast("long").alias("__x"),
+        y.cast("long").alias("__y"),
+        rowid.cast("long").alias("__rid"),
+        bigint_col(value_cents, "__cents"),
     )
     (xmn, xs1), (ymn, ys1) = _spans2(base, "__x", "__y")
     z = morton_sql(_quant_sql("__x", xmn, xs1), _quant_sql("__y", ymn, ys1))
@@ -285,6 +297,40 @@ def zorder_write(
     return ZorderIndex(path, _blockmap_rows(obs.get["rows"]), data_schema)
 
 
+def _rect_moments(
+    spark: SparkSession,
+    index: ZorderIndex,
+    cells: list[int],
+    x_lo: int,
+    x_hi: int,
+    y_lo: int,
+    y_hi: int,
+) -> tuple[int, int | None]:
+    """``(n, Σcents)`` of the rows of ``cells`` inside the rectangle;
+    the sum is None when no row matches, as SQL's is."""
+    if not cells:
+        return 0, None
+    data = f"{index.path}/data"
+    fs_path = _local_path(spark, data)
+    if fs_path is None:
+        n, s = (
+            read_partitions(spark, data, "__block", cells, index.data_schema)
+            .filter(f"__x BETWEEN {x_lo} AND {x_hi} AND __y BETWEEN {y_lo} AND {y_hi}")
+            .selectExpr("count(1)", "sum(__cents)")
+            .collect()[0]
+        )
+        return n, s
+    import pyarrow.compute as pc
+
+    tbl = read_partitions_arrow(fs_path, "__block", cells, ["__x", "__y", "__cents"])
+    x, y = tbl["__x"], tbl["__y"]
+    hit = tbl.filter(pc.and_(
+        pc.and_(pc.greater_equal(x, x_lo), pc.less_equal(x, x_hi)),
+        pc.and_(pc.greater_equal(y, y_lo), pc.less_equal(y, y_hi)),
+    ))
+    return hit.num_rows, pc.sum(hit["__cents"]).as_py()
+
+
 def zorder_rect_sum(
     spark: SparkSession,
     index: ZorderIndex | str,
@@ -292,11 +338,11 @@ def zorder_rect_sum(
     x_hi: int,
     y_lo: int,
     y_hi: int,
-    value_cents: Column,
 ) -> DataFrame:
     """Rectangle aggregate through the Morton layout (its handle, or a
     path to load it from): one row (n_rows, sum_value, blocks_scanned,
-    blocks_total)."""
+    blocks_total), read out through one projection over a local
+    frame."""
     if isinstance(index, str):
         index = zorder_load(spark, index)
     cells = [
@@ -306,18 +352,8 @@ def zorder_rect_sum(
     ]
     # Every cell has a directory: it is in the blockmap because its
     # rows were written.
-    data = read_partitions(
-        spark, f"{index.path}/data", "__block", cells, index.data_schema
-    )
-    data = data.filter(
-        F.col("__x").between(F.lit(x_lo), F.lit(x_hi))
-    ).filter(F.col("__y").between(F.lit(y_lo), F.lit(y_hi)))
-    return data.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.round(F.sum(value_cents.cast("long")) / F.lit(100.0), 2).alias("sum_value"),
-        F.lit(len(cells)).cast("long").alias("blocks_scanned"),
-        F.lit(len(index.blockmap)).cast("long").alias("blocks_total"),
-    )
+    moments = _rect_moments(spark, index, cells, x_lo, x_hi, y_lo, y_hi)
+    return exact_sum_readout(spark, *moments, len(cells), len(index.blockmap))
 
 
 def linear_blocks_scanned(

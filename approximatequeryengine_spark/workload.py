@@ -4097,13 +4097,9 @@ def _blockbloom_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         ingest_key=F.col("o_orderkey"),
         lookup_key=F.col("o_custkey"),
-    )
-    return blockbloom_point_sum(
-        spark,
-        path,
-        _BB_KEY,
         value_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5),
     )
+    return blockbloom_point_sum(spark, path, _BB_KEY)
 
 
 def _blockbloom_oracle() -> str:
@@ -4161,14 +4157,9 @@ def _zorder_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.col("l_partkey")
     rid = F.col("l_orderkey") * 8 + F.col("l_linenumber")
     path = tempfile.mkdtemp(prefix="aqe_zorder_")
-    zorder_write(spark, li, path, x=x, y=y, rowid=rid)
-    rect = zorder_rect_sum(
-        spark,
-        path,
-        *_ZO_X,
-        *_ZO_Y,
-        value_cents=F.floor(F.col("l_extendedprice") * 100.0 + 0.5),
-    )
+    zorder_write(spark, li, path, x=x, y=y, rowid=rid,
+                 value_cents=F.floor(F.col("l_extendedprice") * 100.0 + 0.5))
+    rect = zorder_rect_sum(spark, path, *_ZO_X, *_ZO_Y)
     lin = linear_blocks_scanned(spark, li, x=x, y=y, rowid=rid, x_lo=_ZO_X[0],
                                 x_hi=_ZO_X[1], y_lo=_ZO_Y[0], y_hi=_ZO_Y[1])
     return rect.crossJoin(lin)  # 1-row x 1-row readout
@@ -4275,18 +4266,10 @@ def _aqpplus_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_aqpplus_")
-    handle = aqpplus_build(spark, orders, path, _AQPP_KEY, _AQPP_CENTS, n_blocks=64)
-    return aqpplus_range_sum(
-        spark,
-        orders,
-        handle,
-        _AQPP_LO,
-        _AQPP_HI,
-        _AQPP_KEY,
-        _AQPP_CENTS,
-        row_key="o_orderkey",
-        fraction=0.1,
+    handle = aqpplus_build(
+        spark, orders, path, _AQPP_KEY, _AQPP_CENTS, row_key="o_orderkey", n_blocks=64
     )
+    return aqpplus_range_sum(spark, handle, _AQPP_LO, _AQPP_HI, fraction=0.1)
 
 
 def _aqpplus_oracle() -> str:

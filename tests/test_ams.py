@@ -9,7 +9,8 @@ What must hold:
   bit-for-bit (shard-parallel / ingest-mergeable);
 - F₂ separates skew: a repeated key scores far above a unique key on
   the same rows;
-- the DuckDB oracle replays the estimate exactly (driver parity).
+- the DuckDB oracle replays every counter and the estimate exactly
+  (driver parity), NULL keys included.
 """
 
 from __future__ import annotations
@@ -19,12 +20,13 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.catalog import Catalog
 from approximatequeryengine_spark.plans.ams import (
+    _counters_sql,
     ams_f2_counters,
     ams_f2_estimate,
     ams_f2_estimate_sql,
 )
 
-from tests.conftest import SF_DIR_MED, _duck
+from tests.conftest import SF_DIR_MED, _duck, duck_of
 
 
 @pytest.fixture(scope="module")
@@ -71,21 +73,24 @@ def test_f2_separates_skew(spark):
     assert f2_uniq < f2_const / 1000
 
 
-def test_kernel_and_expression_paths_bit_identical(spark, lineitem):
-    from approximatequeryengine_spark.plans.ams import ams_f2_counters
-
-    a = ams_f2_counters(lineitem, F.col("l_orderkey"), kernel=True).collect()[0]
-    b = ams_f2_counters(lineitem, F.col("l_orderkey"), kernel=False).collect()[0]
-    assert a.asDict() == b.asDict()
+def _duck_row(con, sql: str) -> dict:
+    res = con.execute(sql)
+    return dict(zip([d[0] for d in res.description], res.fetchall()[0]))
 
 
-def test_kernel_handles_null_keys_like_expression_path(spark):
-    from approximatequeryengine_spark.plans.ams import ams_f2_counters
+def test_kernel_counters_match_duckdb_twin(spark, lineitem):
+    con = _duck(SF_DIR_MED)
+    got = ams_f2_counters(lineitem, F.col("l_orderkey")).collect()[0].asDict()
+    assert got == _duck_row(con, _counters_sql("lineitem", "l_orderkey"))
+    row = ams_f2_estimate(lineitem, F.col("l_orderkey")).collect()[0].asDict()
+    assert row == _duck_row(con, ams_f2_estimate_sql("lineitem", "l_orderkey"))
 
-    df = spark.createDataFrame(
-        [(1,), (2,), (None,), (3,), (None,)], "k long"
-    )
-    a = ams_f2_counters(df, F.col("k"), kernel=True).collect()[0].asDict()
-    b = ams_f2_counters(df, F.col("k"), kernel=False).collect()[0].asDict()
-    assert a["n_rows"] == b["n_rows"] == 5
-    assert a == b
+
+def test_kernel_handles_null_keys_like_duckdb_twin(spark):
+    df = spark.createDataFrame([(1,), (2,), (None,), (3,), (None,)], "k long")
+    con = duck_of(t=df)
+    got = ams_f2_counters(df, F.col("k")).collect()[0].asDict()
+    assert got["n_rows"] == 5
+    assert got == _duck_row(con, _counters_sql("t", "k"))
+    row = ams_f2_estimate(df, F.col("k")).collect()[0].asDict()
+    assert row == _duck_row(con, ams_f2_estimate_sql("t", "k"))

@@ -8,12 +8,16 @@ What must hold:
 - the CI is strictly narrower than a pure-sampling CI at the same
   fraction (the paper's whole point);
 - empty ranges and empty boundaries don't crash or skew;
-- the DuckDB oracle reproduces the row bit-for-bit (driver parity).
+- the DuckDB oracle reproduces the row bit-for-bit (driver parity),
+  on both probe branches: the driver read of a local index and the
+  Spark read of an index on another filesystem.
 """
 
 from __future__ import annotations
 
+import contextlib
 import tempfile
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,7 +52,7 @@ def orders(spark):
 @pytest.fixture(scope="module")
 def built(spark, orders):
     path = tempfile.mkdtemp(prefix="aqpp_test_")
-    aqpplus_build(spark, orders, path, _key(), _cents(), n_blocks=64)
+    aqpplus_build(spark, orders, path, _key(), _cents(), F.col("o_orderkey"), n_blocks=64)
     return path
 
 
@@ -77,10 +81,7 @@ def test_interior_block_range_arithmetic():
 def test_estimate_covers_exact_and_matches_oracle(spark, orders, built):
     con = _duck(SF_DIR_MED)
     lo, hi = 8500, 10226
-    row = aqpplus_range_sum(
-        spark, orders, built, lo, hi, _key(), _cents(),
-        row_key=F.col("o_orderkey"), fraction=0.1,
-    ).collect()[0]
+    row = aqpplus_range_sum(spark, built, lo, hi, fraction=0.1).collect()[0]
     exact, n_exact = _exact(con, lo, hi)
     assert row["ci_lower"] <= exact <= row["ci_upper"]
     assert row["interior_rows"] <= n_exact
@@ -98,10 +99,7 @@ def test_block_aligned_range_is_exact_zero_width(spark, orders, built):
     con = _duck(SF_DIR_MED)
     mn, width = _meta(spark, built)
     lo, hi = mn + 10 * width, mn + 20 * width - 1  # exactly 10 blocks
-    row = aqpplus_range_sum(
-        spark, orders, built, lo, hi, _key(), _cents(),
-        row_key=F.col("o_orderkey"), fraction=0.1,
-    ).collect()[0]
+    row = aqpplus_range_sum(spark, built, lo, hi, fraction=0.1).collect()[0]
     exact, n_exact = _exact(con, lo, hi)
     assert row["sum_value"] == exact
     assert row["ci_lower"] == row["ci_upper"] == exact
@@ -120,10 +118,7 @@ def test_ci_narrower_than_pure_sampling(spark, orders, built):
     )
 
     lo, hi = 8500, 10226
-    row = aqpplus_range_sum(
-        spark, orders, built, lo, hi, _key(), _cents(),
-        row_key=F.col("o_orderkey"), fraction=0.1,
-    ).collect()[0]
+    row = aqpplus_range_sum(spark, built, lo, hi, fraction=0.1).collect()[0]
     in_range = orders.withColumn("__day", _key()).filter(
         F.col("__day").between(lo, hi)
     )
@@ -140,10 +135,7 @@ def test_ci_narrower_than_pure_sampling(spark, orders, built):
 
 
 def test_empty_range(spark, orders, built):
-    row = aqpplus_range_sum(
-        spark, orders, built, 1, 2, _key(), _cents(),
-        row_key=F.col("o_orderkey"), fraction=0.1,
-    ).collect()[0]
+    row = aqpplus_range_sum(spark, built, 1, 2, fraction=0.1).collect()[0]
     assert row["sum_value"] == 0.0
     assert row["n_samples"] == 0 and row["interior_rows"] == 0
 
@@ -153,7 +145,7 @@ def test_build_rejects_all_null_keys(spark):
     with pytest.raises(ValueError, match="no non-null keys"):
         aqpplus_build(
             spark, df, tempfile.mkdtemp(prefix="aqpp_null_"),
-            F.col("k"), F.col("v"),
+            F.col("k"), F.col("v"), F.col("v"),
         )
 
 
@@ -310,25 +302,40 @@ NULL_KEY_DUCK = f"CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE {KEY_SQL} END"
 @pytest.fixture(scope="module")
 def handle(spark, orders):
     path = tempfile.mkdtemp(prefix="aqpp_text_")
-    return aqpplus_build(spark, orders, path, DAYS_SPARK, CENTS_SPARK, n_blocks=64)
-
-
-def _assert_matches_twin(spark, orders, index, lo, hi, fraction=0.1,
-                         key=DAYS_SPARK, key_duck=KEY_SQL):
-    df = aqpplus_range_sum(
-        spark, orders, index, lo, hi, key, CENTS_SPARK, "o_orderkey", fraction=fraction
+    return aqpplus_build(
+        spark, orders, path, DAYS_SPARK, CENTS_SPARK, "o_orderkey", n_blocks=64
     )
-    # Every constant is a DOUBLE. A bare 0.15 parses as DECIMAL, and
-    # s1 · (1/f) would become decimal arithmetic on the BIGINT moment.
-    assert "decimal" not in df._jdf.queryExecution().optimizedPlan().toString().lower()
-    row = df.collect()[0].asDict()
+
+
+def _assert_matches_twin(spark, index, lo, hi, fraction=0.1, key_duck=KEY_SQL):
+    """The probe's row on both branches — the driver read of a local
+    index and the Spark read an index on another filesystem takes —
+    equals the DuckDB twin's."""
     con = _duck(SF_DIR_MED)
     res = con.execute(aqpplus_range_sum_sql(
         "orders", key_duck, CENTS_SQL, "o_orderkey", lo, hi, 64, fraction
     ))
     twin = dict(zip([d[0] for d in res.description], res.fetchall()[0]))
-    assert row == twin
+    for local in (True, False):
+        with _branch(local):
+            df = aqpplus_range_sum(spark, index, lo, hi, fraction=fraction)
+            # Every constant is a DOUBLE. A bare 0.15 parses as DECIMAL,
+            # and s1 · (1/f) would become decimal arithmetic on the
+            # BIGINT moment.
+            plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
+            assert "decimal" not in plan
+            row = df.collect()[0].asDict()
+        assert row == twin, ("driver" if local else "spark", row, twin)
     return row
+
+
+def _branch(local: bool):
+    """Force the probe's non-local (Spark) branch unless ``local``."""
+    from approximatequeryengine_spark.plans import aqpplus
+
+    if local:
+        return contextlib.nullcontext()
+    return mock.patch.object(aqpplus, "_local_path", lambda spark, path: None)
 
 
 def _edge_ranges(mn: int, w: int) -> dict[str, tuple[int, int]]:
@@ -342,34 +349,32 @@ def _edge_ranges(mn: int, w: int) -> dict[str, tuple[int, int]]:
 
 
 @pytest.mark.parametrize("case", list(_edge_ranges(0, 10)))
-def test_edge_ranges_match_twin(spark, orders, handle, case):
+def test_edge_ranges_match_twin(spark, handle, case):
     mn, w = handle.mn, handle.width
     assert w >= 3
     lo, hi = _edge_ranges(mn, w)[case]
-    _assert_matches_twin(spark, orders, handle, lo, hi)
+    _assert_matches_twin(spark, handle, lo, hi)
 
 
 @pytest.mark.parametrize("fraction", [0.05, 0.15])
-def test_fractions_match_twin(spark, orders, handle, fraction):
-    _assert_matches_twin(spark, orders, handle, 8500, 10226, fraction=fraction)
+def test_fractions_match_twin(spark, handle, fraction):
+    _assert_matches_twin(spark, handle, 8500, 10226, fraction=fraction)
 
 
 def test_null_key_rows_match_twin(spark, orders):
     path = tempfile.mkdtemp(prefix="aqpp_nullkey_")
-    index = aqpplus_build(spark, orders, path, NULL_KEY_SPARK, CENTS_SPARK, n_blocks=64)
-    _assert_matches_twin(
-        spark, orders, index, 8500, 10226, key=NULL_KEY_SPARK, key_duck=NULL_KEY_DUCK
+    index = aqpplus_build(
+        spark, orders, path, NULL_KEY_SPARK, CENTS_SPARK, "o_orderkey", n_blocks=64
     )
+    _assert_matches_twin(spark, index, 8500, 10226, key_duck=NULL_KEY_DUCK)
 
 
-def test_block_aligned_range_runs_no_spark_job(spark, orders, handle, count_jobs):
+def test_block_aligned_range_runs_no_spark_job(spark, handle, count_jobs):
     """No boundary, no base scan: the answer comes from the handle."""
     mn, w = handle.mn, handle.width
     lo, hi = mn + 10 * w, mn + 20 * w - 1
-    rows, jobs = count_jobs(lambda: aqpplus_range_sum(
-        spark, orders, handle, lo, hi, DAYS_SPARK, CENTS_SPARK, "o_orderkey"
-    ).collect())
+    rows, jobs = count_jobs(lambda: aqpplus_range_sum(spark, handle, lo, hi).collect())
     assert jobs == 0
-    row = _assert_matches_twin(spark, orders, handle, lo, hi)
+    row = _assert_matches_twin(spark, handle, lo, hi)
     assert rows[0].asDict() == row
     assert row["n_samples"] == 0 and row["blocks_interior"] == 10

@@ -1,12 +1,15 @@
 """Index handles: each build returns the O(blocks) metadata its probes
-need, the engine keeps it on the index's registration, and a probe
-runs exactly one Spark query — no read of the meta, block, blockmap or
-bloom tables through Spark.
+need, the engine keeps it on the index's registration, and a probe of
+a local index reads its block directories on the driver — no Spark
+job and no read through Spark at all.
 
 What must hold:
-- an engine probe on an engine-built aqpplus, blockbloom or zorder
-  index runs 2 Spark jobs (the one aggregate query) and reads only
-  data partition directories through Spark;
+- an engine probe on an engine-built local aqpplus, blockbloom or
+  zorder index runs 0 Spark jobs, counting the caller's ``collect()``,
+  and calls no ``DataFrameReader.parquet``;
+- the same probe forced onto the Spark branch (an index off the local
+  filesystem) answers the same row, and an aqpplus probe there reads
+  only the ≤ 2 boundary block directories;
 - a rebuild at the same path with a different layout replaces the
   handle: the next probe matches the twin for the new layout;
 - the direct module path (``*_point_sum(spark, path, ...)`` and the
@@ -86,9 +89,9 @@ def _engine_build(eng: AQEngine, kind: str, path: str, layout: int) -> None:
                                n_blocks=layout, path=path)
 
 
-def _engine_probe(eng: AQEngine, kind: str):
+def _engine_probe(eng: AQEngine, kind: str, rng: tuple[int, int] = RANGE):
     if kind == "aqpplus":
-        return eng.range_sum("orders", *RANGE)
+        return eng.range_sum("orders", *rng)
     if kind == "blockbloom":
         return eng.point_sum("orders", POINT)
     return eng.rect_sum("orders", *RECT)
@@ -96,7 +99,6 @@ def _engine_probe(eng: AQEngine, kind: str):
 
 # (kind, first layout, rebuilt layout): n_blocks, block_width, n_blocks
 KINDS = [("aqpplus", 64, 16), ("blockbloom", 256, 1024), ("zorder", 16, 4)]
-META_TABLES = ("meta", "blocks", "blockmap", "bloom", "zonemap")
 
 
 @pytest.fixture(scope="module")
@@ -111,13 +113,47 @@ def test_engine_probe_runs_one_query(
     _engine_build(eng, kind, str(tmp_path / kind), layout)
     del parquet_reads[:]
     rows, jobs = count_jobs(lambda: _engine_probe(eng, kind).collect())
-    assert jobs == 2, f"{kind} probe ran {jobs} Spark jobs"
-    assert not [
-        p for p in parquet_reads if os.path.basename(p.rstrip("/")) in META_TABLES
-    ], parquet_reads
-    assert all("/data" in p for p in parquet_reads), parquet_reads
+    assert jobs == 0, f"{kind} probe ran {jobs} Spark jobs"
+    assert parquet_reads == []
     assert_df_matches_sql(_engine_probe(eng, kind), duck, _twin(kind, layout))
     assert rows
+
+
+@pytest.mark.parametrize("kind,layout,_", KINDS)
+def test_non_local_probe_matches_driver_probe(eng, tmp_path, monkeypatch, kind, layout, _):
+    """An index off the local filesystem is probed with one Spark
+    aggregate over the same block directories; its row is the driver
+    read's. An aqpplus probe there reads only the boundary blocks."""
+    from approximatequeryengine_spark.plans import aqpplus
+    from approximatequeryengine_spark.sources import blockbloom, zorder
+
+    _engine_build(eng, kind, str(tmp_path / kind), layout)
+    ranges = [RANGE]
+    if kind == "aqpplus":
+        # two partial blocks around an interior, a range inside one
+        # block, and a block-aligned range
+        handle = eng._indexes["range", "orders"].handle
+        mn, w = handle.mn, handle.width
+        ranges = [(mn + 5 * w + 1, mn + 12 * w + w // 2), (mn + 5 * w + 1, mn + 6 * w - 2),
+                  (mn + 10 * w, mn + 20 * w - 1)]
+    driver = [_engine_probe(eng, kind, r).collect() for r in ranges]
+    module = {"aqpplus": aqpplus, "blockbloom": blockbloom, "zorder": zorder}[kind]
+    monkeypatch.setattr(module, "_local_path", lambda spark, path: None)
+    read: list[tuple[list[int], set[str]]] = []
+    real = module.read_partitions
+
+    def spy(spark, path, partition_col, values, schema):
+        df = real(spark, path, partition_col, values, schema)
+        read.append((list(values), {f.rsplit("/", 2)[-2] for f in df.inputFiles()}))
+        return df
+
+    monkeypatch.setattr(module, "read_partitions", spy)
+    assert [_engine_probe(eng, kind, r).collect() for r in ranges] == driver
+    part = "block" if kind == "aqpplus" else "__block"
+    assert read and all(dirs == {f"{part}={v}" for v in values} for values, dirs in read)
+    if kind == "aqpplus":
+        # the two partial blocks, one partial block, no boundary at all
+        assert [len(values) for values, _ in read] == [2, 1]
 
 
 @pytest.mark.parametrize("kind,layout,rebuilt", KINDS)
@@ -137,28 +173,26 @@ def test_direct_module_path_matches_twins_and_build_handles(spark, eng, duck, tm
     okey = F.col("o_orderkey").cast("long")
 
     a_path = str(tmp_path / "a")
-    built = aqpplus_build(spark, orders, a_path, days, _cents(), n_blocks=64)
+    built = aqpplus_build(spark, orders, a_path, days, _cents(), okey, n_blocks=64)
     assert aqpplus_load(spark, a_path) == built
     assert_df_matches_sql(
-        aqpplus_range_sum(spark, orders, a_path, *RANGE, key=days,
-                          value_cents=_cents(), row_key=okey),
-        duck, _twin("aqpplus", 64),
+        aqpplus_range_sum(spark, a_path, *RANGE), duck, _twin("aqpplus", 64),
     )
 
     b_path = str(tmp_path / "b")
     built = blockbloom_write(spark, orders, b_path, ingest_key=okey,
-                             lookup_key=F.col("o_custkey"))
+                             lookup_key=F.col("o_custkey"), value_cents=_cents())
     assert blockbloom_load(spark, b_path) == built
     assert_df_matches_sql(
-        blockbloom_point_sum(spark, b_path, POINT, _cents()), duck, _twin("blockbloom", 256)
+        blockbloom_point_sum(spark, b_path, POINT), duck, _twin("blockbloom", 256)
     )
 
     z_path = str(tmp_path / "z")
     built = zorder_write(spark, orders, z_path, x=days, y=F.col("o_custkey"),
-                         rowid=okey, n_blocks=16)
+                         rowid=okey, value_cents=_cents(), n_blocks=16)
     assert zorder_load(spark, z_path) == built
     assert_df_matches_sql(
-        zorder_rect_sum(spark, z_path, *RECT, _cents()), duck, _twin("zorder", 16)
+        zorder_rect_sum(spark, z_path, *RECT), duck, _twin("zorder", 16)
     )
 
     s_path = str(tmp_path / "s")
@@ -185,9 +219,10 @@ def test_bloom_consult_spark_read_matches_driver_read(spark, eng, tmp_path, monk
     from approximatequeryengine_spark.sources import blockbloom
 
     handle = blockbloom_write(spark, eng.catalog.table("orders"), str(tmp_path / "b"),
-                              ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"))
+                              ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+                              value_cents=_cents())
     need = blockbloom.probe_masks(POINT, handle.m_bits)
     driver = blockbloom._surviving_blocks(spark, handle, need)
-    monkeypatch.setattr(blockbloom, "_local_path", lambda path: None)
+    monkeypatch.setattr(blockbloom, "_local_path", lambda spark, path: None)
     assert blockbloom._surviving_blocks(spark, handle, need) == driver
     assert 0 < len(driver) < handle.blocks_total

@@ -282,6 +282,7 @@ def _bloom_fixture(spark, engine, tmp_path):
         path,
         ingest_key=F.col("o_orderkey"),
         lookup_key=F.col("o_custkey"),
+        value_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5),
     )
     return orders, path
 
@@ -323,7 +324,7 @@ def test_blockbloom_exact_answer_no_false_negatives(spark, engine, tmp_path):
     cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     scanned = []
     for key in (7, 42, 99, 101):
-        got = blockbloom_point_sum(spark, path, key, cents).collect()[0]
+        got = blockbloom_point_sum(spark, path, key).collect()[0]
         want = (
             orders.filter(F.col("o_custkey") == key)
             .agg(
@@ -360,9 +361,10 @@ def test_blockbloom_all_null_lookup_block_matches_oracle(spark, tmp_path):
     df = spark.createDataFrame(rows, "ik long, lk long, cents long")
     path = str(tmp_path / "nullblk")
     blockbloom_write(
-        spark, df, path, ingest_key=F.col("ik"), lookup_key=F.col("lk")
+        spark, df, path, ingest_key=F.col("ik"), lookup_key=F.col("lk"),
+        value_cents=F.col("cents"),
     )
-    got = blockbloom_point_sum(spark, path, 7, F.col("cents")).collect()[0]
+    got = blockbloom_point_sum(spark, path, 7).collect()[0]
     con = duckdb.connect()
     con.register("t", __import__("pandas").DataFrame(rows, columns=["ik", "lk", "cents"]))
     want = con.execute(
@@ -379,9 +381,7 @@ def test_blockbloom_absent_key_returns_empty(spark, engine, tmp_path):
     from approximatequeryengine_spark.sources.blockbloom import blockbloom_point_sum
 
     _, path = _bloom_fixture(spark, engine, tmp_path)
-    got = blockbloom_point_sum(
-        spark, path, 10**9 + 7, F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-    ).collect()[0]
+    got = blockbloom_point_sum(spark, path, 10**9 + 7).collect()[0]
     assert got["n_rows"] == 0
     assert got["sum_value"] is None
     # An absent key survives only via false positives — with 6 blocks
@@ -389,21 +389,36 @@ def test_blockbloom_absent_key_returns_empty(spark, engine, tmp_path):
     assert got["blocks_scanned"] < got["blocks_total"]
 
 
-def test_blockbloom_scan_is_partition_pruned(spark, engine, tmp_path):
+def _data_files_read(monkeypatch) -> list[str]:
+    """Every data-table parquet file a probe opens on the driver (the
+    pyarrow read of a local index), in call order."""
+    import pyarrow.dataset as ds
+
+    seen: list[str] = []
+    real = ds.dataset
+
+    def spy(source, *args, **kwargs):
+        if isinstance(source, list):
+            seen.extend(f for f in source if "/data/" in f)
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(ds, "dataset", spy)
+    return seen
+
+
+def test_blockbloom_scan_is_partition_pruned(spark, engine, tmp_path, monkeypatch):
     """The point lookup must touch ONLY the surviving block
-    directories — directory pruning, not a full scan + filter. Since
-    round 10 the consult lists the surviving directories directly
-    (pruned blocks are never even listed), so the evidence is the
-    scan's actual input files rather than a PartitionFilters entry."""
+    directories — directory pruning, not a full scan + filter. The
+    consult lists the surviving directories directly (pruned blocks
+    are never even listed), so the evidence is the files the probe's
+    driver read actually opens."""
     from approximatequeryengine_spark.sources.blockbloom import blockbloom_point_sum
 
     _, path = _bloom_fixture(spark, engine, tmp_path)
-    df = blockbloom_point_sum(
-        spark, path, 42, F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-    )
-    got = df.collect()[0]
+    files = _data_files_read(monkeypatch)
+    got = blockbloom_point_sum(spark, path, 42).collect()[0]
     assert 0 < got["blocks_scanned"] < got["blocks_total"]
-    dirs = {f.rsplit("/", 2)[-2] for f in df.inputFiles()}
+    dirs = {f.rsplit("/", 2)[-2] for f in files}
     assert all(d.startswith("__block=") for d in dirs)
     assert len(dirs) == got["blocks_scanned"]
 
@@ -443,7 +458,8 @@ def _zorder_fixture(spark, engine, tmp_path):
     y = F.col("l_partkey")
     rid = F.col("l_orderkey") * 8 + F.col("l_linenumber")
     path = str(tmp_path / "zo")
-    zorder_write(spark, li, path, x=x, y=y, rowid=rid, n_blocks=32)
+    zorder_write(spark, li, path, x=x, y=y, rowid=rid,
+                 value_cents=F.floor(F.col("l_extendedprice") * 100.0 + 0.5), n_blocks=32)
     return li, path, x, y, rid
 
 
@@ -453,7 +469,7 @@ def test_zorder_answer_matches_plain_filter(spark, engine, tmp_path):
     li, path, x, y, _ = _zorder_fixture(spark, engine, tmp_path)
     cents = F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
     for (xlo, xhi, ylo, yhi) in ((9100, 11700, 40, 119), (10013, 10104, 0, 99)):
-        got = zorder_rect_sum(spark, path, xlo, xhi, ylo, yhi, cents).collect()[0]
+        got = zorder_rect_sum(spark, path, xlo, xhi, ylo, yhi).collect()[0]
         want = (
             li.withColumn("__xx", x)
             .filter(F.col("__xx").between(xlo, xhi) & y.between(ylo, yhi))
@@ -477,8 +493,7 @@ def test_zorder_prunes_where_time_sorted_layout_cannot(spark, engine, tmp_path):
     )
 
     li, path, x, y, rid = _zorder_fixture(spark, engine, tmp_path)
-    cents = F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-    got = zorder_rect_sum(spark, path, 9100, 11700, 40, 119, cents).collect()[0]
+    got = zorder_rect_sum(spark, path, 9100, 11700, 40, 119).collect()[0]
     lin = linear_blocks_scanned(
         spark, li, x=x, y=y, rowid=rid,
         x_lo=9100, x_hi=11700, y_lo=40, y_hi=119, n_blocks=32,
@@ -488,19 +503,16 @@ def test_zorder_prunes_where_time_sorted_layout_cannot(spark, engine, tmp_path):
     assert got["blocks_scanned"] < got["blocks_total"] <= 32
 
 
-def test_zorder_scan_is_partition_pruned(spark, engine, tmp_path):
+def test_zorder_scan_is_partition_pruned(spark, engine, tmp_path, monkeypatch):
     from approximatequeryengine_spark.sources.zorder import zorder_rect_sum
 
     _, path, _, _, _ = _zorder_fixture(spark, engine, tmp_path)
-    df = zorder_rect_sum(
-        spark, path, 9100, 11700, 40, 119,
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5),
-    )
-    got = df.collect()[0]
+    files = _data_files_read(monkeypatch)
+    got = zorder_rect_sum(spark, path, 9100, 11700, 40, 119).collect()[0]
     assert 0 < got["blocks_scanned"] < got["blocks_total"]
     # Directory-pruned by construction: the consult lists only the
     # surviving block directories (see the blockbloom twin above).
-    dirs = {f.rsplit("/", 2)[-2] for f in df.inputFiles()}
+    dirs = {f.rsplit("/", 2)[-2] for f in files}
     assert all(d.startswith("__block=") for d in dirs)
     assert len(dirs) == got["blocks_scanned"]
 
@@ -521,20 +533,21 @@ def test_blockbloom_append_equals_rebuild(spark, engine, tmp_path):
     first = orders.filter(F.col("o_orderkey") % 2 == 0)
     second = orders.filter(F.col("o_orderkey") % 2 == 1)
     inc = str(tmp_path / "inc")
+    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     blockbloom_write(
         spark, first, inc,
-        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"), value_cents=cents,
     )
     blockbloom_append(
         spark, second, inc,
-        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"), value_cents=cents,
     )
     # rebuild under the same meta: full table, same (mn, width) because
     # first-half min/max orderkeys bound the full span at sf0.001
     full = str(tmp_path / "full")
     blockbloom_write(
         spark, orders, full,
-        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+        ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"), value_cents=cents,
     )
     bi = {
         (r["__block"], r["word"]): r["bits"]
@@ -545,9 +558,8 @@ def test_blockbloom_append_equals_rebuild(spark, engine, tmp_path):
         for r in spark.read.parquet(f"{full}/bloom").collect()
     }
     assert bi == bf
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     for key in (42, 99):
-        got = blockbloom_point_sum(spark, inc, key, cents).collect()[0]
+        got = blockbloom_point_sum(spark, inc, key).collect()[0]
         want = (
             orders.filter(F.col("o_custkey") == key)
             .agg(
@@ -578,16 +590,17 @@ def test_zorder_range_layout_same_answers_distributed_build(spark, engine, tmp_p
     paths = {}
     for layout in ("ntile", "range"):
         p = str(tmp_path / layout)
-        zorder_write(spark, li, p, x=x, y=y, rowid=rid, n_blocks=32, layout=layout)
+        zorder_write(spark, li, p, x=x, y=y, rowid=rid, value_cents=cents, n_blocks=32,
+                     layout=layout)
         paths[layout] = p
     for rect in ((9100, 11700, 40, 119), (10013, 10104, 0, 99)):
         rows = {
-            layout: zorder_rect_sum(spark, p, *rect, cents).collect()[0]
+            layout: zorder_rect_sum(spark, p, *rect).collect()[0]
             for layout, p in paths.items()
         }
         assert rows["ntile"]["n_rows"] == rows["range"]["n_rows"]
         assert rows["ntile"]["sum_value"] == rows["range"]["sum_value"]
-    got = zorder_rect_sum(spark, paths["range"], 9100, 11700, 40, 119, cents).collect()[0]
+    got = zorder_rect_sum(spark, paths["range"], 9100, 11700, 40, 119).collect()[0]
     assert got["blocks_scanned"] < got["blocks_total"]
 
 
@@ -609,7 +622,8 @@ def test_zorder_prefix_layout_deterministic_and_shuffle_only(spark, engine, tmp_
     maps = []
     for i, src in enumerate((li, li.repartition(7))):  # different input layouts
         p = str(tmp_path / f"pfx{i}")
-        zorder_write(spark, src, p, x=x, y=y, rowid=rid, n_blocks=32, layout="prefix")
+        zorder_write(spark, src, p, x=x, y=y, rowid=rid, value_cents=F.col("l_extendedprice"),
+                     n_blocks=32, layout="prefix")
         rows = sorted(
             tuple(r) for r in spark.read.parquet(f"{p}/blockmap").collect()
         )
@@ -632,11 +646,13 @@ def test_blockbloom_and_zorder_reject_null_keys(spark):
     )
     with _pytest.raises(ValueError, match="NULL ingest keys"):
         blockbloom_write(
-            spark, df, "/tmp/bb_nulls", ingest_key=F.col("ik"), lookup_key=F.col("lk")
+            spark, df, "/tmp/bb_nulls", ingest_key=F.col("ik"), lookup_key=F.col("lk"),
+            value_cents=F.col("rid"),
         )
     with _pytest.raises(ValueError, match="NULL values"):
         zorder_write(
-            spark, df, "/tmp/zo_nulls", x=F.col("ik"), y=F.col("lk"), rowid=F.col("rid")
+            spark, df, "/tmp/zo_nulls", x=F.col("ik"), y=F.col("lk"), rowid=F.col("rid"),
+            value_cents=F.col("rid"),
         )
 
 
@@ -651,5 +667,6 @@ def test_blockbloom_rejects_overflowing_span(spark):
     df = spark.createDataFrame([(0, 1), (2**38, 2)], "ik long, lk long")
     with _pytest.raises(ValueError, match="Quantize the ingest key"):
         blockbloom_write(
-            spark, df, "/tmp/bb_span", ingest_key=F.col("ik"), lookup_key=F.col("lk")
+            spark, df, "/tmp/bb_span", ingest_key=F.col("ik"), lookup_key=F.col("lk"),
+            value_cents=F.col("lk"),
         )

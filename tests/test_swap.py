@@ -133,12 +133,12 @@ def test_blockbloom_reader_self_heals(spark, engine, tmp_path):
     blockbloom_write(
         spark, orders, idx,
         ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+        value_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5),
     )
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-    before = blockbloom_point_sum(spark, idx, 42, cents).collect()[0]
+    before = blockbloom_point_sum(spark, idx, 42).collect()[0]
     shutil.copytree(f"{idx}/bloom", f"{idx}/bloom_staged")
     os.rename(f"{idx}/bloom", f"{idx}/bloom_old")
-    after = blockbloom_point_sum(spark, idx, 42, cents).collect()[0]
+    after = blockbloom_point_sum(spark, idx, 42).collect()[0]
     assert tuple(before) == tuple(after)
     assert os.path.exists(f"{idx}/bloom")
 
@@ -158,15 +158,15 @@ def test_blockbloom_crash_recovery_end_to_end(spark, engine, tmp_path):
     blockbloom_write(
         spark, orders, idx,
         ingest_key=F.col("o_orderkey"), lookup_key=F.col("o_custkey"),
+        value_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5),
     )
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-    before = blockbloom_point_sum(spark, idx, 42, cents).collect()[0]
+    before = blockbloom_point_sum(spark, idx, 42).collect()[0]
     # Simulate the crash window: bloom retired aside, completed staged
     # copy present, live table gone.
     shutil.copytree(f"{idx}/bloom", f"{idx}/bloom_staged")
     os.rename(f"{idx}/bloom", f"{idx}/bloom_old")
     assert recover_synopsis(spark, f"{idx}/bloom") == "from_staged"
-    after = blockbloom_point_sum(spark, idx, 42, cents).collect()[0]
+    after = blockbloom_point_sum(spark, idx, 42).collect()[0]
     assert tuple(before) == tuple(after)
 
 
@@ -182,15 +182,10 @@ def test_aqpplus_crash_recovery_end_to_end(spark, engine, tmp_path):
     idx = str(tmp_path / "aqp")
     key = F.expr("l_orderkey * 8 + l_linenumber")
     cents = F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-    aqpplus_build(spark, li, idx, key=key, value_cents=cents)
+    aqpplus_build(spark, li, idx, key=key, value_cents=cents, row_key=key)
 
     def ask():
-        return tuple(
-            aqpplus_range_sum(
-                spark, li, idx, 100, 5000,
-                key=key, value_cents=cents, row_key=key,
-            ).collect()[0]
-        )
+        return tuple(aqpplus_range_sum(spark, idx, 100, 5000).collect()[0])
 
     before = ask()
     shutil.copytree(f"{idx}/blocks", f"{idx}/blocks_staged")

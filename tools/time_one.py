@@ -9,7 +9,9 @@ The line also splits off the build phase: `build_s` is the best run's
 wall until the entry's DataFrame exists, before any action on it (an
 entry's own eager jobs, such as index builds or pilot passes, count
 here), and `py4j_calls` the driver-to-JVM round trips of that phase
-(`session.count_py4j_calls`) in the last run.
+(`session.count_py4j_calls`) in the last run. `spark_jobs` is the
+number of Spark jobs the best run started, build and action together
+(each run goes under its own job group).
 
 Set AQE_TIME_COUNT=1 to measure plan execution throughput WITHOUT
 driver materialization (df.count() instead of .collect()) — the right
@@ -43,18 +45,26 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["exact_count"](spark, sf_dir).collect()  # warm session + footers
 
-    samples, builds, n_rows = [], [], None
-    for _ in range(runs):
+    sc = spark.sparkContext
+    samples, builds, jobs, n_rows = [], [], [], None
+    for i in range(runs):
+        group = f"time-{name}-{i}"
+        sc.setJobGroup(group, group)
         t0 = time.time()
         with count_py4j_calls(spark) as calls:
             df = QUERIES[name](spark, sf_dir)
         builds.append(round(time.time() - t0, 3))
         n_rows = df.count() if count_mode else len(df.collect())
         samples.append(round(time.time() - t0, 3))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store fills from the listener bus asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     best = samples.index(min(samples))
     print(json.dumps({
         "query": name, "sf_dir": sf_dir, "best": samples[best],
         "samples": samples, "build_s": builds[best], "py4j_calls": calls.n,
+        "spark_jobs": jobs[best],
         "rows": n_rows, "mode": "count" if count_mode else "collect",
     }))
     spark.stop()
