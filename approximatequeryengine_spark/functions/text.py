@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.functions.hashing import portable_hash_col, portable_hash_sql
+from approximatequeryengine_spark.functions.hashing import portable_hash_sql
 
 # BPE-ish tokenizer: letter runs, digit runs, single punctuation marks.
 TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -27,11 +27,6 @@ def str_hash32_col(col: Column) -> Column:
 
 def str_hash32_sql(expr: str) -> str:
     return f"(('0x' || substring(md5({expr}), 1, 8))::BIGINT)"
-
-
-def minhash_col(shingle_ints: Column, salt: int) -> Column:
-    """min over the salted portable hash of each shingle int."""
-    return F.array_min(F.transform(shingle_ints, lambda s: portable_hash_col(s, salt=salt)))
 
 
 def minhash_sql(shingle_ints_expr: str, salt: int) -> str:
@@ -82,13 +77,6 @@ def word_shingles_sql(tokens_ident: str, n: int = 3) -> str:
         f"(CASE WHEN len({t}) >= {n} THEN {grams} "
         f"ELSE [array_to_string({t}, ' ')] END)"
     )
-
-
-def str_hash60_col(col: Column) -> Column:
-    """First 60 bits of md5 as a bigint (15 hex digits — always
-    non-negative, well inside int64): the wide-signature base hash the
-    scale SimHash path votes over."""
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
 def str_hash60_sql(expr: str) -> str:

@@ -44,8 +44,6 @@ from approximatequeryengine_spark.functions.hashing import (
 from approximatequeryengine_spark.functions.vector import cosine_sim
 
 DIM = 64  # fixture embedding dimensionality
-SIG_BITS = 8
-
 
 
 def valid_vec_col(col: Column) -> Column:
@@ -326,19 +324,6 @@ def _hyperplane_bit_sql(vec: str, bit: int) -> str:
         f"i -> CAST({vec}[i] AS DOUBLE) * ([{signs}])[i]))"
     )
     return f"(CASE WHEN {proj} > 0 THEN 1 ELSE 0 END)"
-
-
-def lsh_signature_col(vec: Column) -> Column:
-    """8-bit signature: bit b = [Σ_d sign(b,d)·vec[d] > 0]."""
-    total = F.lit(0).cast("long")
-    for b in range(SIG_BITS):
-        total = total + _hyperplane_bit_col(vec, b) * F.lit(2**b).cast("long")
-    return total
-
-
-def lsh_signature_sql(vec: str) -> str:
-    terms = [f"({_hyperplane_bit_sql(vec, b)} * {2**b})" for b in range(SIG_BITS)]
-    return "(" + " + ".join(terms) + ")"
 
 
 def lsh_band_keys_col(vec: Column, n_bands: int, bits_per_band: int) -> list[Column]:

@@ -61,13 +61,6 @@ _POISSON_CDF = [
 ]
 
 
-def _poisson_icdf_col(u: Column) -> Column:
-    w = F.lit(9)
-    for k in reversed(range(9)):
-        w = F.when(u < F.lit(_POISSON_CDF[k]), F.lit(k)).otherwise(w)
-    return w
-
-
 def _poisson_icdf_sql(u: str) -> str:
     expr = "9"
     for k in reversed(range(9)):

@@ -72,7 +72,8 @@ from approximatequeryengine_spark.session import local_frame
 _PART_TYPES = {"tinyint", "smallint", "int", "bigint", "string"}
 
 # Data-column types with a VERIFIED Spark→Arrow→parquet→Spark
-# round-trip (test_arrow_write_roundtrip pins them, including NULLs).
+# round-trip (tests/test_arrow_write.py::test_arrow_write_roundtrip
+# pins them, including NULLs).
 _DATA_TYPE_RE = re.compile(
     r"^(tinyint|smallint|int|bigint|float|double|boolean|string|binary|date"
     r"|timestamp|decimal\(\d+,\s*\d+\)"

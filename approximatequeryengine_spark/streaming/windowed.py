@@ -25,26 +25,6 @@ WINDOW = "15 minutes"
 WATERMARK = "30 minutes"
 
 
-def windowed_event_counts_batch(spark: SparkSession, events: DataFrame) -> DataFrame:
-    """The same aggregation as a batch DataFrame (shared logical plan —
-    what the stream produces incrementally, batch computes in one job)."""
-    return (
-        events.groupBy(
-            F.window(F.col("ts"), WINDOW).alias("w"), F.col("event_type")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream over any fixture table. The file stream
     source wants a *directory*; the read-only fixture file is exposed

@@ -2,10 +2,32 @@
 DuckDB oracle.
 
 This is the single source of truth consumed by ``__spark_entry__.py``
-(driver correctness gate) and ``bench.py``. Each entry is
-``name -> (spark_fn, oracle_sql | None)`` where ``spark_fn(spark,
-sf_dir) -> DataFrame`` and the oracle is ANSI SQL DuckDB runs over the
-same parquet tables.
+(driver correctness gate) and ``bench.py``. ``QUERIES`` maps each name
+to ``fn(spark, sf_dir) -> DataFrame``; ``ORACLE`` maps each
+oracle-backed name to the SQL DuckDB runs over the same parquet tables
+(an entry without one is checked for rows only). An entry is registered
+in one of these forms, each stating its operator, table and literals
+once:
+
+- ``_sql_query(name, sql, oracle="")``: a Spark SQL text; the oracle is
+  the same text unless a DuckDB spelling is given.
+- ``_approx_query`` / ``_head_query`` / ``_neyman_query`` /
+  ``_congress_query``: a sampled estimator whose oracle is derived from
+  the same sampling spec.
+- ``_twin_query(name, op, op_sql, table, *args, **kw)``: runs
+  ``op(<table>, *args, **kw)`` against ``op_sql(table, *args, **kw)``,
+  so the two engines cannot get different arguments.
+- ``_table_query(name, op, oracle, table)``: runs ``op(spark, <table>)``
+  against a fixed oracle text.
+- ``_register(name, fn, oracle)``: ``fn`` is an operator that already
+  takes ``(spark, sf_dir)`` (the streaming pipelines), or a function
+  kept in this file because the entry does more than call one
+  operator on one table: it builds an index or synopsis first, combines
+  several operators (the bake-offs), drives ``AQEngine``, reads two
+  tables, or passes a Spark Column where the SQL twin takes text.
+
+``_register`` rejects a name registered twice, and ``_finalize_order``
+rejects a ``_CERTIFY_FIRST`` name that is not registered.
 
 Determinism contract: approximate queries use the portable-hash /
 systematic / block / stratified designs, whose sample membership is a
@@ -17,7 +39,9 @@ both sides to absorb float summation-order noise.
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,22 +49,84 @@ from pyspark.sql import functions as F
 
 from approximatequeryengine_spark.catalog import TABLES as _CATALOG_TABLES
 from approximatequeryengine_spark.catalog import Catalog
+from approximatequeryengine_spark.engine import AQEngine
 from approximatequeryengine_spark.frontend.approx_sql import (
     rewrite_approx_sql as _rewrite_approx_sql,
 )
+from approximatequeryengine_spark.functions.hashing import (
+    HASH_SPACE,
+    fraction_threshold,
+    portable_hash_col,
+    portable_hash_sql,
+)
+from approximatequeryengine_spark.functions.text import ws_tokens_col, ws_tokens_sql
+from approximatequeryengine_spark.operators import curation as _cur
+from approximatequeryengine_spark.operators import dedup as _dedup
+from approximatequeryengine_spark.operators import graph as _graph
+from approximatequeryengine_spark.operators import joins as _joins
+from approximatequeryengine_spark.operators import merge as _merge
+from approximatequeryengine_spark.operators import multimodal as _mm
+from approximatequeryengine_spark.operators import profiling as _prof
+from approximatequeryengine_spark.operators import similarity as _sim
+from approximatequeryengine_spark.operators import temporal as _temporal
+from approximatequeryengine_spark.operators import text as _text
+from approximatequeryengine_spark.plans import adaptive as _adaptive
+from approximatequeryengine_spark.plans import advisor as _advisor
+from approximatequeryengine_spark.plans import ams as _ams
+from approximatequeryengine_spark.plans import aqpplus as _aqpplus
+from approximatequeryengine_spark.plans import bloom as _bloom
+from approximatequeryengine_spark.plans import bootstrap as _boot
+from approximatequeryengine_spark.plans import countmin as _cms
+from approximatequeryengine_spark.plans import ddsketch as _dd
+from approximatequeryengine_spark.plans import distinct as _distinct
+from approximatequeryengine_spark.plans import elp as _elp
+from approximatequeryengine_spark.plans import histogram as _hist
+from approximatequeryengine_spark.plans import histogram2d as _hist2d
+from approximatequeryengine_spark.plans import hll as _hll
+from approximatequeryengine_spark.plans import incremental as _inc
+from approximatequeryengine_spark.plans import joinsynopsis as _joinsyn
+from approximatequeryengine_spark.plans import outlier as _outlier
+from approximatequeryengine_spark.plans import poststrat as _poststrat
+from approximatequeryengine_spark.plans import pps as _pps
+from approximatequeryengine_spark.plans import priority as _priority
+from approximatequeryengine_spark.plans import quantiles as _quantiles
+from approximatequeryengine_spark.plans import regression as _regression
+from approximatequeryengine_spark.plans import sampleseek as _sampleseek
+from approximatequeryengine_spark.plans import synopsis as _synopsis
+from approximatequeryengine_spark.plans import twostage as _twostage
+from approximatequeryengine_spark.plans import variance as _variance
+from approximatequeryengine_spark.plans import wander as _wander
+from approximatequeryengine_spark.plans import wavelet as _wavelet
 from approximatequeryengine_spark.plans.estimators import (
+    Z_95,
     AggSpec,
     approx_aggregate,
+    approx_multi_aggregate,
+    finite_col,
+    finite_sql,
     moments_sql,
+    multi_moments_sql,
+    ratio_estimate_ci,
+    ratio_estimate_ci_sql,
 )
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
+    congressional_allocation,
     head_sample,
     head_sample_sql,
+    neyman_allocation,
     sampling_p_sql,
     sampling_where_sql,
 )
+from approximatequeryengine_spark.sources import blockbloom as _blockbloom
+from approximatequeryengine_spark.sources import layout as _layout
+from approximatequeryengine_spark.sources import recordfile as _recordfile
+from approximatequeryengine_spark.sources import zonemap as _zonemap
+from approximatequeryengine_spark.sources import zorder as _zorder
+from approximatequeryengine_spark.streaming import pipeline as _pipeline
+from approximatequeryengine_spark.streaming import stateful as _stateful
+from approximatequeryengine_spark.streaming import windowed as _stream
 
 _CATALOGS: dict[tuple[str, int, str], Catalog] = {}
 
@@ -81,9 +167,31 @@ ORACLE: dict[str, str] = {}
 
 
 def _register(name: str, fn: Callable[[SparkSession, str], DataFrame], oracle: str | None):
+    if name in QUERIES:
+        raise ValueError(f"registry entry {name!r} is registered twice")
     QUERIES[name] = fn
     if oracle is not None:
         ORACLE[name] = oracle
+
+
+def _table_query(name: str, op, oracle: str | None, table: str = "documents") -> None:
+    """Register ``op(spark, <table>)``: an operator over one catalog
+    table, checked against a fixed oracle text."""
+
+    def fn(spark: SparkSession, sf_dir: str, _op=op, _t=table) -> DataFrame:
+        cat = _catalog(spark, sf_dir)
+        return _op(spark, cat.table(_t))
+
+    _register(name, fn, oracle)
+
+
+def _twin_query(name: str, op, op_sql, table: str, *args, **kw) -> None:
+    """Register ``op(<table>, *args, **kw)`` against its SQL twin
+    ``op_sql(table, *args, **kw)``: one argument list feeds both engines,
+    so the two sides cannot drift apart."""
+    _table_query(
+        name, lambda spark, df: op(df, *args, **kw), op_sql(table, *args, **kw), table
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -178,10 +286,8 @@ _sql_query(
 
 
 def _exact_quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.quantiles import exact_interp_quantiles
-
     cat = _catalog(spark, sf_dir)
-    med, p95 = exact_interp_quantiles(
+    med, p95 = _quantiles.exact_interp_quantiles(
         cat.table("lineitem"), "l_extendedprice", [0.5, 0.95]
     )
     return spark.range(1).select(
@@ -993,8 +1099,6 @@ _approx_query(
 # The whole Q1-style block — three measures with CIs — from ONE 10%
 # sampled pass (multi-measure moments in a single HashAggregate).
 def _approx_q1_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.estimators import approx_multi_aggregate
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     sampled = apply_sampling(cat.table("lineitem"), spec)
@@ -1018,8 +1122,6 @@ def _approx_q1_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _approx_q1_oracle() -> str:
-    from approximatequeryengine_spark.plans.estimators import multi_moments_sql
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     return multi_moments_sql(
         "lineitem",
@@ -1125,9 +1227,6 @@ def _neyman_query(
     in SQL — the stddev quantization makes the arithmetic exact in
     doubles, so both engines compute bit-equal fractions, thresholds,
     samples, and estimates."""
-    from approximatequeryengine_spark.functions.hashing import HASH_SPACE, portable_hash_sql
-    from approximatequeryengine_spark.plans.sampling import neyman_allocation
-
     quantum = 10
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,9 +1293,6 @@ def _congress_query(
     the allocation bit-reproducible, and the oracle re-derives
     counts → weights → fractions → thresholds → per-group HT estimates
     end-to-end in SQL."""
-    from approximatequeryengine_spark.functions.hashing import HASH_SPACE, portable_hash_sql
-    from approximatequeryengine_spark.plans.sampling import congressional_allocation
-
     min_f = 0.005
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1251,205 +1347,56 @@ _congress_query(
 )
 
 
-def _quantile_query(name: str, table: str, column: str, q: float, spec: SamplingSpec) -> None:
-    from approximatequeryengine_spark.plans.quantiles import (
-        approx_quantile_ci,
-        approx_quantile_ci_sql,
-    )
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cat = _catalog(spark, sf_dir)
-        return approx_quantile_ci(cat.table(table), column, q, spec)
-
-    _register(name, fn, approx_quantile_ci_sql(table, column, q, spec))
-
-
 # Sampled median with a distribution-free (binomial order-statistic) CI
 # — an AQP capability beyond the reference's SUM/AVG/COUNT surface.
-_quantile_query(
-    "approx_median_ci",
+_twin_query(
+    "approx_median_ci", _quantiles.approx_quantile_ci, _quantiles.approx_quantile_ci_sql,
     "lineitem", "l_extendedprice", 0.5,
     SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
 )
-# Round-3: the same machinery at an arbitrary quantile — the dialect's
+# The same machinery at an arbitrary quantile — the dialect's
 # APPROX_PERCENTILE(col, q[, pct]) route (engine._run_quantile).
-_quantile_query(
-    "approx_p90_ci",
+_twin_query(
+    "approx_p90_ci", _quantiles.approx_quantile_ci, _quantiles.approx_quantile_ci_sql,
     "lineitem", "l_extendedprice", 0.9,
     SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
 )
-
-
-def _stddev_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled standard deviation with a fourth-moment CLT CI
-    (plans/variance.py) — the dialect's APPROX(STDDEV(col)) route."""
-    from approximatequeryengine_spark.plans.variance import approx_stddev_ci
-
-    cat = _catalog(spark, sf_dir)
-    return approx_stddev_ci(
-        cat.table("lineitem"), "l_extendedprice",
-        SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
-    )
-
-
-def _stddev_oracle() -> str:
-    from approximatequeryengine_spark.plans.variance import approx_stddev_ci_sql
-
-    return approx_stddev_ci_sql(
-        "lineitem", "l_extendedprice",
-        SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
-    )
-
-
-_register("approx_stddev_ci", _stddev_fn, _stddev_oracle())
-
-
-def _corr_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled Pearson correlation with the Fisher-z interval
-    (plans/variance.py) — the dialect's APPROX(CORR(x, y)) route."""
-    from approximatequeryengine_spark.plans.variance import approx_corr_ci
-
-    cat = _catalog(spark, sf_dir)
-    return approx_corr_ci(
-        cat.table("lineitem"), "l_quantity", "l_extendedprice",
-        SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
-    )
-
-
-def _corr_oracle() -> str:
-    from approximatequeryengine_spark.plans.variance import approx_corr_ci_sql
-
-    return approx_corr_ci_sql(
-        "lineitem", "l_quantity", "l_extendedprice",
-        SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
-    )
-
-
-_register("approx_corr_ci", _corr_fn, _corr_oracle())
-
-
-def _grouped_stddev_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group sampled stddev with fourth-moment CIs — the dialect's
-    grouped APPROX(STDDEV(col)) route (shared global integer center,
-    one grouped aggregate)."""
-    from approximatequeryengine_spark.plans.variance import approx_grouped_stddev_ci
-
-    cat = _catalog(spark, sf_dir)
-    return approx_grouped_stddev_ci(
-        cat.table("lineitem"), "l_extendedprice", "l_returnflag",
-        SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
-    )
-
-
-def _grouped_stddev_oracle() -> str:
-    from approximatequeryengine_spark.plans.variance import (
-        approx_grouped_stddev_ci_sql,
-    )
-
-    return approx_grouped_stddev_ci_sql(
-        "lineitem", "l_extendedprice", "l_returnflag",
-        SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
-    )
-
-
-_register("approx_grouped_stddev_ci", _grouped_stddev_fn, _grouped_stddev_oracle())
-
-
-def _grouped_corr_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group sampled Pearson correlation with Fisher-z intervals
-    (plans/variance.py) — shared-global-center grouped twin of
-    approx_corr_ci."""
-    from approximatequeryengine_spark.plans.variance import approx_grouped_corr_ci
-
-    cat = _catalog(spark, sf_dir)
-    return approx_grouped_corr_ci(
-        cat.table("lineitem"), "l_quantity", "l_extendedprice", "l_returnflag",
-        SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
-    )
-
-
-def _grouped_corr_oracle() -> str:
-    from approximatequeryengine_spark.plans.variance import (
-        approx_grouped_corr_ci_sql,
-    )
-
-    return approx_grouped_corr_ci_sql(
-        "lineitem", "l_quantity", "l_extendedprice", "l_returnflag",
-        SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
-    )
-
-
-_register("approx_grouped_corr_ci", _grouped_corr_fn, _grouped_corr_oracle())
-
-
-def _ab_diff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled A/B mean-difference readout with a Welch CI
-    (plans/variance.py): purchase vs click event values."""
-    from approximatequeryengine_spark.plans.variance import approx_ab_diff_ci
-
-    cat = _catalog(spark, sf_dir)
-    return approx_ab_diff_ci(
-        cat.table("events"), "value", "event_type", "purchase", "click",
-        SamplingSpec(design="uniform_hash", fraction=0.4, key="event_id"),
-    )
-
-
-def _ab_diff_oracle() -> str:
-    from approximatequeryengine_spark.plans.variance import approx_ab_diff_ci_sql
-
-    return approx_ab_diff_ci_sql(
-        "events", "value", "event_type", "purchase", "click",
-        SamplingSpec(design="uniform_hash", fraction=0.4, key="event_id"),
-    )
-
-
-_register("approx_ab_diff_ci", _ab_diff_fn, _ab_diff_oracle())
-
-
-def _outlier_sum_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outlier-indexed SUM (plans/outlier.py): exact top-100 stratum +
-    HT-estimated remainder — the deterministic skew weapon
-    complementing PPS."""
-    from approximatequeryengine_spark.plans.outlier import outlier_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    return outlier_sum_ci(cat.table("orders"), "o_totalprice", "o_orderkey", 0.10)
-
-
-def _outlier_sum_oracle() -> str:
-    from approximatequeryengine_spark.plans.outlier import outlier_sum_ci_sql
-
-    return outlier_sum_ci_sql("orders", "o_totalprice", "o_orderkey", 0.10)
-
-
-_register("approx_sum_outlier_index", _outlier_sum_fn, _outlier_sum_oracle())
-
-
-def _outlier_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group outlier-indexed SUM (plans/outlier.py): each order
-    priority keeps its own exact top-50 stratum and samples the rest —
-    skew-robust grouped revenue."""
-    from approximatequeryengine_spark.plans.outlier import outlier_grouped_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    return outlier_grouped_sum_ci(
-        cat.table("orders"), "o_totalprice", "o_orderpriority",
-        "o_orderkey", 0.10, n_outliers=50,
-    )
-
-
-def _outlier_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.outlier import (
-        outlier_grouped_sum_ci_sql,
-    )
-
-    return outlier_grouped_sum_ci_sql(
-        "orders", "o_totalprice", "o_orderpriority", "o_orderkey", 0.10,
-        n_outliers=50,
-    )
-
-
-_register("approx_grouped_sum_outlier", _outlier_grouped_fn, _outlier_grouped_oracle())
+_twin_query(
+    "approx_stddev_ci", _variance.approx_stddev_ci, _variance.approx_stddev_ci_sql,
+    "lineitem", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+)
+_twin_query(
+    "approx_corr_ci", _variance.approx_corr_ci, _variance.approx_corr_ci_sql,
+    "lineitem", "l_quantity", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+)
+_twin_query(
+    "approx_grouped_stddev_ci",
+    _variance.approx_grouped_stddev_ci, _variance.approx_grouped_stddev_ci_sql,
+    "lineitem", "l_extendedprice", "l_returnflag",
+    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
+)
+_twin_query(
+    "approx_grouped_corr_ci",
+    _variance.approx_grouped_corr_ci, _variance.approx_grouped_corr_ci_sql,
+    "lineitem", "l_quantity", "l_extendedprice", "l_returnflag",
+    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
+)
+_twin_query(
+    "approx_ab_diff_ci", _variance.approx_ab_diff_ci, _variance.approx_ab_diff_ci_sql,
+    "events", "value", "event_type", "purchase", "click",
+    SamplingSpec(design="uniform_hash", fraction=0.4, key="event_id"),
+)
+_twin_query(
+    "approx_sum_outlier_index", _outlier.outlier_sum_ci, _outlier.outlier_sum_ci_sql,
+    "orders", "o_totalprice", "o_orderkey", 0.10,
+)
+_twin_query(
+    "approx_grouped_sum_outlier",
+    _outlier.outlier_grouped_sum_ci, _outlier.outlier_grouped_sum_ci_sql,
+    "orders", "o_totalprice", "o_orderpriority", "o_orderkey", 0.10, n_outliers=50,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1457,47 +1404,32 @@ _register("approx_grouped_sum_outlier", _outlier_grouped_fn, _outlier_grouped_or
 # analysis, dedup, similarity search, multimodal plumbing, streaming.
 # ---------------------------------------------------------------------------
 
-def _docs_query(name: str, op, oracle: str | None, table: str = "documents") -> None:
-    def fn(spark: SparkSession, sf_dir: str, _op=op, _t=table) -> DataFrame:
-        cat = _catalog(spark, sf_dir)
-        return _op(spark, cat.table(_t))
-
-    _register(name, fn, oracle)
-
-
-from approximatequeryengine_spark.operators import dedup as _dedup  # noqa: E402
-from approximatequeryengine_spark.operators import multimodal as _mm  # noqa: E402
-from approximatequeryengine_spark.operators import similarity as _sim  # noqa: E402
-from approximatequeryengine_spark.operators import temporal as _temporal  # noqa: E402
-from approximatequeryengine_spark.operators import text as _text  # noqa: E402
-from approximatequeryengine_spark.streaming import windowed as _stream  # noqa: E402
-
-_docs_query("text_lang_id_confusion", _text.lang_id_confusion, _text.lang_id_confusion_sql())
-_docs_query("text_quality_by_lang", _text.quality_by_lang, _text.quality_by_lang_sql())
-_docs_query("text_token_stats", _text.token_stats, _text.token_stats_sql())
-_docs_query("text_fingerprint_summary", _text.fingerprint_summary, _text.fingerprint_summary_sql())
+_table_query("text_lang_id_confusion", _text.lang_id_confusion, _text.lang_id_confusion_sql())
+_table_query("text_quality_by_lang", _text.quality_by_lang, _text.quality_by_lang_sql())
+_table_query("text_token_stats", _text.token_stats, _text.token_stats_sql())
+_table_query("text_fingerprint_summary", _text.fingerprint_summary, _text.fingerprint_summary_sql())
 # Round-3: Okapi BM25 ranking, query terms derived from the corpus so
 # selection + scoring + ranking re-run as one DuckDB oracle; per-doc
 # totals add the <=3 term scores in fixed query-rank order (no
 # order-dependent float aggregation in either engine).
-_docs_query("text_bm25_search", _text.bm25_search_top10, _text.bm25_search_top10_sql())
+_table_query("text_bm25_search", _text.bm25_search_top10, _text.bm25_search_top10_sql())
 # Round-3 second session: the CCNet-style perplexity-proxy filter —
 # mean unigram logprob per doc under the corpus's own smoothed model,
 # rolled up per language with the below-corpus-mean tail.
-_docs_query("text_unigram_logprob", _text.unigram_logprob_stats, _text.unigram_logprob_stats_sql())
+_table_query("text_unigram_logprob", _text.unigram_logprob_stats, _text.unigram_logprob_stats_sql())
 # Round-3: quality-filter calibration — the survival curve over 7
 # candidate cutoffs from ONE corpus scan (conditional sums, no
 # per-threshold rescans).
-_docs_query("text_quality_threshold_sweep", _text.quality_threshold_sweep, _text.quality_threshold_sweep_sql())
+_table_query("text_quality_threshold_sweep", _text.quality_threshold_sweep, _text.quality_threshold_sweep_sql())
 # Round-5 fourth batch: per-language token entropy + KL vs corpus —
 # the mixture diagnostics read before source reweighting.
-_docs_query("text_token_entropy_by_lang", _text.token_entropy_by_lang, _text.token_entropy_by_lang_sql())
+_table_query("text_token_entropy_by_lang", _text.token_entropy_by_lang, _text.token_entropy_by_lang_sql())
 # Round-6 build batch: the Gopher/MassiveText word-n-gram repetition
 # filter — per-language counts of documents whose top-2-gram share or
 # duplicate-3-gram mass crosses the published thresholds, plus mean
 # repetition fractions, all on the exact micro-fraction grid
 # (operators/text.py::repetition_filter_by_lang).
-_docs_query(
+_table_query(
     "text_repetition_filter",
     _text.repetition_filter_by_lang,
     _text.repetition_filter_by_lang_sql(),
@@ -1506,17 +1438,16 @@ _docs_query(
 # synchronous PageRank steps over the token co-occurrence graph in
 # integer fixed-point (order-free sums → engine-exact), the oracle
 # unrolling the iterations as chained CTEs (operators/graph.py).
-from approximatequeryengine_spark.operators import graph as _graph  # noqa: E402
 
-_docs_query(
+_table_query(
     "graph_token_pagerank", _graph.token_pagerank_topk, _graph.token_pagerank_topk_sql()
 )
-_docs_query("dedup_exact_groups", _dedup.exact_dup_groups, _dedup.exact_dup_groups_sql())
+_table_query("dedup_exact_groups", _dedup.exact_dup_groups, _dedup.exact_dup_groups_sql())
 # Round-6 build batch: dedup-policy yield curve — verified pair and
 # affected-doc counts at each candidate Jaccard cutoff from ONE pair
 # search (operators/dedup.py::dedup_yield_curve).
-_docs_query("dedup_yield_curve", _dedup.dedup_yield_curve, _dedup.dedup_yield_curve_sql())
-_docs_query("dedup_minhash_lsh_pairs", _dedup.minhash_lsh_pairs, _dedup.minhash_lsh_pairs_sql())
+_table_query("dedup_yield_curve", _dedup.dedup_yield_curve, _dedup.dedup_yield_curve_sql())
+_table_query("dedup_minhash_lsh_pairs", _dedup.minhash_lsh_pairs, _dedup.minhash_lsh_pairs_sql())
 # Round-6 (20th and final round-6 registration, at the ≤20 cap): the
 # verify='join' physical plan of the SAME pair search — keys-only band
 # fan-out, shingles re-joined for surviving pairs. This is the plan the
@@ -1525,7 +1456,7 @@ _docs_query("dedup_minhash_lsh_pairs", _dedup.minhash_lsh_pairs, _dedup.minhash_
 # sf10 corpus) and the shape a petabyte deployment runs against a
 # persisted signature store — certified against the same oracle as the
 # carry plan because the knob is physical-only (identical pair set).
-_docs_query(
+_table_query(
     "dedup_minhash_pairs_joinplan",
     lambda spark, docs: _dedup.minhash_lsh_pairs(spark, docs, verify="join"),
     _dedup.minhash_lsh_pairs_sql(),
@@ -1535,18 +1466,18 @@ _docs_query(
 # (sparse, the fixture's regime) or join (dup-dense); both underlying
 # plans are already certified against this same oracle, so this entry
 # certifies the DISPATCH. The dense-side pick is test-pinned.
-_docs_query(
+_table_query(
     "dedup_minhash_auto_pairs",
     lambda spark, docs: _dedup.minhash_lsh_pairs(spark, docs, verify="auto"),
     _dedup.minhash_lsh_pairs_sql(),
 )
-_docs_query("dedup_simhash_summary", _dedup.simhash_summary, _dedup.simhash_summary_sql())
+_table_query("dedup_simhash_summary", _dedup.simhash_summary, _dedup.simhash_summary_sql())
 # Round-5: the actual simhash PAIR search (pigeonhole multi-index,
 # WWW'07) — lossless vs the oracle's quadratic popcount scan. The
 # certified row set is the per-distance pair-count rollup (≤ k+1
 # rows at any corpus size); the raw pair set is the function's
 # deliverable and is pinned by tests/test_pipeline_ops.py.
-_docs_query(
+_table_query(
     "dedup_simhash_hamming_pairs",
     _dedup.simhash_hamming_stats,
     _dedup.simhash_hamming_stats_sql(),
@@ -1554,23 +1485,23 @@ _docs_query(
 # Round-5 fourth batch: cross-source duplication matrix — which
 # sources share near-dup content (contamination flows), riding the
 # certified MinHash pair search.
-_docs_query(
+_table_query(
     "dedup_cross_source_matrix",
     _dedup.cross_source_dup_matrix,
     _dedup.cross_source_dup_matrix_sql(),
 )
-_docs_query(
+_table_query(
     "dedup_connected_clusters",
     _dedup.dedup_connected_clusters,
     _dedup.dedup_connected_clusters_sql(),
 )
-_docs_query("dedup_ngram_jaccard_pairs", _dedup.ngram_jaccard_pairs, _dedup.ngram_jaccard_pairs_sql())
+_table_query("dedup_ngram_jaccard_pairs", _dedup.ngram_jaccard_pairs, _dedup.ngram_jaccard_pairs_sql())
 # Round-5 fourth batch: FastSS edit-distance-1 pair search (deletion
 # neighborhoods) over the fixed-format customer keys — candidate set
 # from an equi-join on (position, deletion variant), every candidate
 # verified with a real levenshtein call. Completeness vs the quadratic
 # scan is pinned in tests/test_pipeline_ops.py.
-_docs_query(
+_table_query(
     "dedup_editdist1_pairs",
     lambda spark, df: _dedup.editdist1_pairs(df, "c_name"),
     _dedup.editdist1_pairs_sql("customer", "c_name"),
@@ -1590,31 +1521,31 @@ def _hybrid_rrf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _register("search_hybrid_rrf", _hybrid_rrf_fn, _sim.search_hybrid_rrf_sql())
 
-_docs_query("ann_bruteforce_topk", _sim.ann_bruteforce_topk, _sim.ann_bruteforce_topk_sql(), table="embeddings")
+_table_query("ann_bruteforce_topk", _sim.ann_bruteforce_topk, _sim.ann_bruteforce_topk_sql(), table="embeddings")
 # Arrow fast path — identical results (fold-order bit parity), so it
 # shares the brute-force oracle; per-partition local top-k bounds the
 # shuffle at k·|queries| rows per partition.
-_docs_query("ann_bruteforce_matmul_topk", _sim.ann_bruteforce_topk_arrow, _sim.ann_bruteforce_topk_sql(), table="embeddings")
-_docs_query("ann_lsh_topk", _sim.ann_lsh_topk, _sim.ann_lsh_topk_sql(), table="embeddings")
+_table_query("ann_bruteforce_matmul_topk", _sim.ann_bruteforce_topk_arrow, _sim.ann_bruteforce_topk_sql(), table="embeddings")
+_table_query("ann_lsh_topk", _sim.ann_lsh_topk, _sim.ann_lsh_topk_sql(), table="embeddings")
 # Round-5 fourth batch: metadata-filtered vector search (pre-filter
 # exact top-k per query label, plus the post-filter-deficit column).
-_docs_query("ann_filtered_topk", _sim.ann_filtered_topk, _sim.ann_filtered_topk_sql(), table="embeddings")
+_table_query("ann_filtered_topk", _sim.ann_filtered_topk, _sim.ann_filtered_topk_sql(), table="embeddings")
 # Round-5 fourth batch: recall@k of the IVF index vs the brute-force
 # ground truth — the offline fidelity evaluation, certified end to end.
-_docs_query("ann_recall_profile", _sim.ann_recall_profile, _sim.ann_recall_profile_sql(), table="embeddings")
+_table_query("ann_recall_profile", _sim.ann_recall_profile, _sim.ann_recall_profile_sql(), table="embeddings")
 # IVF ANN — oracle-backed since round 4: the coarse quantizer is a
 # deterministic LSH cell (hyperplane bits) rather than iterative
 # k-means, so the DuckDB oracle re-derives training (cell assignment +
 # centroid means) plus probing and ranking end-to-end.
-_docs_query("ann_ivf_topk", _sim.ann_ivf_topk, _sim.ann_ivf_topk_sql(), table="embeddings")
+_table_query("ann_ivf_topk", _sim.ann_ivf_topk, _sim.ann_ivf_topk_sql(), table="embeddings")
 # Round-4: IVF-PQ with exact rerank (Jégou et al. TPAMI'11 + the FAISS
 # refine step) — both quantizers are deterministic LSH-cell designs and
 # the ADC partials are integer-gridded, so codebook training, encoding,
 # probing, shortlist, and rerank all re-derive as one DuckDB oracle.
-_docs_query("ann_ivfpq_topk", _sim.ann_ivfpq_topk, _sim.ann_ivfpq_topk_sql(), table="embeddings")
+_table_query("ann_ivfpq_topk", _sim.ann_ivfpq_topk, _sim.ann_ivfpq_topk_sql(), table="embeddings")
 # Round-4: SemDeDup-style semantic dedup — LSH-cell clustering +
 # within-cell cosine keep-min; quadratic only inside a cell.
-_docs_query(
+_table_query(
     "dedup_semantic_cells",
     _sim.semantic_dedup_cells,
     _sim.semantic_dedup_cells_sql(),
@@ -1625,7 +1556,7 @@ _docs_query(
 # 4.8× off this plan at sf1, so the certified query should be the one
 # you'd run. The oracle re-derives the cell grid from count(*) with the
 # same integer ladder.
-_docs_query(
+_table_query(
     "dedup_semantic_cells_scaled",
     _sim.semantic_dedup_cells_scaled,
     _sim.semantic_dedup_cells_scaled_sql(),
@@ -1639,18 +1570,11 @@ def _ivf_index_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm and results to ann_ivf_topk, so it shares that oracle.
     The pruning (scan touches only probed cell directories) is
     plan-gated in test_ivf_index_matches_in_memory_and_prunes_partitions."""
-    import tempfile
-
-    from approximatequeryengine_spark.operators.similarity import (
-        ann_ivf_query_index,
-        ann_ivf_write_index,
-    )
-
     cat = _catalog(spark, sf_dir)
     emb = cat.table("embeddings")
     path = tempfile.mkdtemp(prefix="aqe_ivf_idx_")
-    ann_ivf_write_index(spark, emb, path)
-    return ann_ivf_query_index(spark, emb, path)
+    _sim.ann_ivf_write_index(spark, emb, path)
+    return _sim.ann_ivf_query_index(spark, emb, path)
 
 
 _register("ann_ivf_index_topk", _ivf_index_fn, _sim.ann_ivf_topk_sql())
@@ -1665,18 +1589,11 @@ def _ivfpq_index_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     and results to ann_ivfpq_topk (shared _pq_encode/_ivfpq_rank
     definitions), so it shares that oracle; pruning + append parity are
     pinned in test_ivfpq_index_*."""
-    import tempfile
-
-    from approximatequeryengine_spark.operators.similarity import (
-        ann_ivfpq_query_index,
-        ann_ivfpq_write_index,
-    )
-
     cat = _catalog(spark, sf_dir)
     emb = cat.table("embeddings")
     path = tempfile.mkdtemp(prefix="aqe_ivfpq_idx_")
-    ann_ivfpq_write_index(spark, emb, path)
-    return ann_ivfpq_query_index(spark, emb, path)
+    _sim.ann_ivfpq_write_index(spark, emb, path)
+    return _sim.ann_ivfpq_query_index(spark, emb, path)
 
 
 _register("ann_ivfpq_index_topk", _ivfpq_index_fn, _sim.ann_ivfpq_topk_sql())
@@ -1685,260 +1602,111 @@ _register("ann_ivfpq_index_topk", _ivfpq_index_fn, _sim.ann_ivfpq_topk_sql())
 # the whole quantize→search path is oracle-checked (promoted from
 # rows-only in round 2); overlap vs float pinned in
 # test_int8_topk_overlap.
-_docs_query("ann_int8_topk", _sim.ann_bruteforce_topk_int8, _sim.ann_int8_topk_sql(), table="embeddings")
+_table_query("ann_int8_topk", _sim.ann_bruteforce_topk_int8, _sim.ann_int8_topk_sql(), table="embeddings")
 # Round-3: data-driven LSH parameter tuning. The full derivation —
 # portable-hash sample, pairwise-cosine moments, (T, b) grid search,
 # feasibility verdict — is deterministic, so the DuckDB oracle re-runs
 # it end to end (the ladder-re-derivation trick from adaptive_clt_sum
 # applied to index tuning). `ann_auto_topk` dispatches on this row.
-_docs_query("ann_autotune_profile", _sim.ann_tune_profile, _sim.ann_tune_profile_sql(), table="embeddings")
+_table_query("ann_autotune_profile", _sim.ann_tune_profile, _sim.ann_tune_profile_sql(), table="embeddings")
 # τ=0.35 (not the 0.95 production default): the synthetic fixture's max
 # within-label cosine is ~0.47, so 0.95 would make the check vacuous
 # (always 0 rows); 0.35 yields nonzero matches at every SF.
-_docs_query(
+_table_query(
     "embedding_neardup_pairs",
     lambda spark, df: _sim.embedding_neardup_pairs(spark, df, threshold=0.35),
     _sim.embedding_neardup_pairs_sql(threshold=0.35),
     table="embeddings",
 )
-_docs_query("multimodal_blob_stats", _mm.blob_feature_stats, _mm.blob_feature_stats_sql())
-_docs_query("multimodal_frame_sample", _mm.video_frame_sample, _mm.video_frame_sample_sql())
+_table_query("multimodal_blob_stats", _mm.blob_feature_stats, _mm.blob_feature_stats_sql())
+_table_query("multimodal_frame_sample", _mm.video_frame_sample, _mm.video_frame_sample_sql())
 # Round-3: REAL codec round trips. Spark encodes genuine PNG/WAV bytes
 # per doc, decodes them with the dependency-free codecs inside the
 # mapInPandas kernel, and aggregates features of the DECODED arrays;
 # the oracle recomputes everything arithmetically from doc_id — a hash
 # match certifies encoder ∘ decoder = identity (all 5 PNG filter types
 # cycle through the row).
-_docs_query("multimodal_png_decode", _mm.png_decode_stats, _mm.png_decode_stats_sql())
-_docs_query("multimodal_wav_decode", _mm.wav_decode_stats, _mm.wav_decode_stats_sql())
+_table_query("multimodal_png_decode", _mm.png_decode_stats, _mm.png_decode_stats_sql())
+_table_query("multimodal_wav_decode", _mm.wav_decode_stats, _mm.wav_decode_stats_sql())
 # Round-3: REAL video frame extraction over a genuine (uncompressed)
 # Y4M container — encode, decode, sample every 2nd frame, all inside
 # the kernel; arithmetic oracle. Outside the 50-row window this round
 # (it is full); certified by check_entry + pytest, rotates next round.
-_docs_query("multimodal_y4m_frames", _mm.y4m_frame_extract_stats, _mm.y4m_frame_extract_stats_sql())
-_docs_query("asof_join_purchase_click", _temporal.asof_purchase_click, _temporal.asof_purchase_click_sql(), table="events")
-_docs_query("range_join_purchase_clicks", _temporal.range_join_purchase_clicks, _temporal.range_join_purchase_clicks_sql(), table="events")
+_table_query("multimodal_y4m_frames", _mm.y4m_frame_extract_stats, _mm.y4m_frame_extract_stats_sql())
+_table_query("asof_join_purchase_click", _temporal.asof_purchase_click, _temporal.asof_purchase_click_sql(), table="events")
+_table_query("range_join_purchase_clicks", _temporal.range_join_purchase_clicks, _temporal.range_join_purchase_clicks_sql(), table="events")
 
 # Round-4: universe (coordinated) sampling over the many-to-many
 # click×purchase join — sample the user-id UNIVERSE with one shared
 # hash so every pair of a surviving key survives (1/p scaling; per-side
 # Bernoulli would keep p² of the pairs). Per-key pre-aggregation means
 # the pair join is never materialized.
-from approximatequeryengine_spark.operators import joins as _joins  # noqa: E402
 
-_docs_query(
+_table_query(
     "approx_join_universe_pairs",
     _joins.universe_join_pairs,
     _joins.universe_join_pairs_sql(),
     table="events",
 )
-_docs_query("events_funnel_conversion", _temporal.funnel_conversion, _temporal.funnel_conversion_sql(), table="events")
-_docs_query("events_cohort_retention", _temporal.cohort_retention, _temporal.cohort_retention_sql(), table="events")
-_docs_query("corpus_clean_pipeline", _text.corpus_clean_pipeline, _text.corpus_clean_pipeline_sql())
+_table_query("events_funnel_conversion", _temporal.funnel_conversion, _temporal.funnel_conversion_sql(), table="events")
+_table_query("events_cohort_retention", _temporal.cohort_retention, _temporal.cohort_retention_sql(), table="events")
+_table_query("corpus_clean_pipeline", _text.corpus_clean_pipeline, _text.corpus_clean_pipeline_sql())
 # Data mixing: language-balanced downsampling (two-pass, deterministic).
-_docs_query("corpus_mix_balanced", _text.corpus_mix_balanced, _text.corpus_mix_balanced_sql())
+_table_query("corpus_mix_balanced", _text.corpus_mix_balanced, _text.corpus_mix_balanced_sql())
 
 # Round-4: Efraimidis-Spirakis weighted sampling without replacement —
 # the key u^(1/w) realized EXACTLY as the max of w independent portable
 # hashes (integer arithmetic, no float pow), inclusion ∝ quality weight.
-from approximatequeryengine_spark.operators import curation as _curation  # noqa: E402
 
-_docs_query(
+_table_query(
     "curation_weighted_sample",
-    _curation.weighted_sample_docs,
-    _curation.weighted_sample_docs_sql(),
+    _cur.weighted_sample_docs,
+    _cur.weighted_sample_docs_sql(),
 )
-
-
-def _stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stream.windowed_event_counts_stream(spark, sf_dir)
-
-
-_register("streaming_windowed_events", _stream_fn, _stream.windowed_event_counts_sql())
-
-
-def _stream_sliding_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stream.sliding_event_counts_stream(spark, sf_dir)
-
-
-# Round-4: hopping (sliding) windows — 30-minute windows every 10
-# minutes, each event in exactly 3 overlapping windows; the oracle
-# replicates events onto their window starts and aggregates.
-_register("streaming_sliding_windows", _stream_sliding_fn, _stream.sliding_event_counts_sql())
-
-
-def _stream_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.dedup_events_stream(spark, sf_dir)
-
-
-def _stream_enrich_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.enriched_revenue_stream(spark, sf_dir)
-
-
-def _streaming_pipeline_oracles():
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.dedup_events_sql(), _p.enriched_revenue_sql()
-
-
-_DEDUP_SQL, _ENRICH_SQL = _streaming_pipeline_oracles()
-_register("streaming_dedup_events", _stream_dedup_fn, _DEDUP_SQL)
-_register("streaming_enriched_revenue", _stream_enrich_fn, _ENRICH_SQL)
-
-
-def _stream_interval_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STREAM interval join (round 4): purchases ⋈ same-user
-    clicks in the trailing hour, both sides watermarked streams —
-    completes the streaming join coverage (dedup, stream-static, and
-    now stream-stream). Generous replay watermark → the drain emits
-    every in-interval pair, so the batch INNER range join is the
-    oracle."""
-    from approximatequeryengine_spark.streaming.pipeline import interval_join_stream
-
-    return interval_join_stream(spark, sf_dir)
-
-
-def _stream_interval_join_oracle() -> str:
-    from approximatequeryengine_spark.streaming.pipeline import interval_join_sql
-
-    return interval_join_sql()
 
 
 _register(
-    "streaming_interval_join", _stream_interval_join_fn, _stream_interval_join_oracle()
+    "streaming_windowed_events",
+    _stream.windowed_event_counts_stream,
+    _stream.windowed_event_counts_sql(),
 )
-
-
-def _stream_sessions_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.session_windows_stream(spark, sf_dir)
-
-
-def _stream_sessions_oracle() -> str:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.session_windows_sql()
-
-
-_register("streaming_session_windows", _stream_sessions_fn, _stream_sessions_oracle())
-
-
-def _stream_corpus_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.corpus_dedup_stream(spark, sf_dir)
-
-
-def _stream_corpus_dedup_oracle() -> str:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.corpus_dedup_sql()
-
-
-_register("streaming_corpus_dedup", _stream_corpus_dedup_fn, _stream_corpus_dedup_oracle())
-
-
-def _stream_sampled_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.sampled_revenue_stream(spark, sf_dir)
-
-
-def _stream_sampled_oracle() -> str:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.sampled_revenue_sql()
-
-
-_register("streaming_sampled_revenue", _stream_sampled_fn, _stream_sampled_oracle())
-
-
-def _stream_poststrat_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-8: POST-STRATIFIED estimation on a stream — per-stratum
-    running integer moments over the hash sample, exact stratum counts
-    from the static side, finalized by the SHARED batch estimator code
-    (streaming/pipeline.py::poststrat_stream). Integer state makes the
-    drained stream equal the batch answer bit-for-bit — the oracle is
-    the batch poststrat SQL verbatim."""
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.poststrat_stream(spark, sf_dir)
-
-
-def _stream_poststrat_oracle() -> str:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.poststrat_stream_sql()
-
-
+# Hopping (sliding) windows — 30-minute windows every 10 minutes, each
+# event in exactly 3 overlapping windows; the oracle replicates events
+# onto their window starts and aggregates.
 _register(
-    "streaming_poststrat_estimate",
-    _stream_poststrat_fn,
-    _stream_poststrat_oracle(),
+    "streaming_sliding_windows",
+    _stream.sliding_event_counts_stream,
+    _stream.sliding_event_counts_sql(),
 )
-
-
-def _stream_cms_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.countmin_stream(spark, sf_dir)
-
-
-def _stream_cms_oracle() -> str:
-    # The drained streaming sketch equals the batch sketch (counter
-    # addition is order-insensitive) — same oracle text.
-    from approximatequeryengine_spark.plans.countmin import countmin_topk_sql
-
-    return countmin_topk_sql()
-
-
-_register("streaming_countmin_tokens", _stream_cms_fn, _stream_cms_oracle())
-
-
-def _media_metadata_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real byte-level media header parsing (PNG IHDR / WAV RIFF) —
-    generate headers, parse them back, aggregate; the oracle recomputes
-    from doc_id arithmetic, certifying generator∘parser == identity."""
-    from approximatequeryengine_spark.operators.multimodal import (
-        media_metadata_summary,
-    )
-
-    cat = _catalog(spark, sf_dir)
-    return media_metadata_summary(spark, cat.table("documents"))
-
-
-def _media_metadata_oracle() -> str:
-    from approximatequeryengine_spark.operators.multimodal import (
-        media_metadata_summary_sql,
-    )
-
-    return media_metadata_summary_sql()
-
-
-_register("multimodal_header_metadata", _media_metadata_fn, _media_metadata_oracle())
-
-
-def _bucketed_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-free co-located join over bucket-partitioned tables
-    (sources/layout.py) — the storage-layout lever that removes the two
-    biggest exchanges of a fact-fact join at scale."""
-    from approximatequeryengine_spark.sources.layout import bucketed_join_revenue
-
-    return bucketed_join_revenue(spark, sf_dir)
-
-
-def _bucketed_join_oracle() -> str:
-    from approximatequeryengine_spark.sources.layout import bucketed_join_revenue_sql
-
-    return bucketed_join_revenue_sql()
-
-
-_register("bucketed_join_revenue", _bucketed_join_fn, _bucketed_join_oracle())
+_register("streaming_dedup_events", _pipeline.dedup_events_stream, _pipeline.dedup_events_sql())
+_register(
+    "streaming_enriched_revenue",
+    _pipeline.enriched_revenue_stream,
+    _pipeline.enriched_revenue_sql(),
+)
+# A generous replay watermark drains every pair, so the batch range join is the oracle.
+_register(
+    "streaming_interval_join", _pipeline.interval_join_stream, _pipeline.interval_join_sql()
+)
+_register(
+    "streaming_session_windows", _pipeline.session_windows_stream, _pipeline.session_windows_sql()
+)
+_register("streaming_corpus_dedup", _pipeline.corpus_dedup_stream, _pipeline.corpus_dedup_sql())
+_register(
+    "streaming_sampled_revenue", _pipeline.sampled_revenue_stream, _pipeline.sampled_revenue_sql()
+)
+# Integer state makes the drained stream equal the batch poststrat answer bit-for-bit.
+_register(
+    "streaming_poststrat_estimate", _pipeline.poststrat_stream, _pipeline.poststrat_stream_sql()
+)
+# Counter addition is order-free, so the drained sketch shares the batch oracle.
+_register("streaming_countmin_tokens", _pipeline.countmin_stream, _cms.countmin_topk_sql())
+_table_query(
+    "multimodal_header_metadata", _mm.media_metadata_summary, _mm.media_metadata_summary_sql()
+)
+_register(
+    "bucketed_join_revenue", _layout.bucketed_join_revenue, _layout.bucketed_join_revenue_sql()
+)
 
 
 def _salted_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1947,13 +1715,11 @@ def _salted_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     with hot keys fanned across salt_buckets reducers. The salt values
     themselves are nondeterministic (partition position); only the
     physical distribution changes, so the aggregate is exact."""
-    from approximatequeryengine_spark.operators.joins import salted_join
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
     od = cat.table("orders").withColumnRenamed("o_orderkey", "l_orderkey")
     return (
-        salted_join(li, od, on="l_orderkey", salt_buckets=8)
+        _joins.salted_join(li, od, on="l_orderkey", salt_buckets=8)
         .groupBy("o_orderpriority")
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
@@ -1963,7 +1729,7 @@ def _salted_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register("salted_join_revenue", _salted_join_fn, _bucketed_join_oracle())
+_register("salted_join_revenue", _salted_join_fn, ORACLE["bucketed_join_revenue"])
 
 
 def _skewsplit_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1974,13 +1740,11 @@ def _skewsplit_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt_buckets× copy of the other side. Identical result to the
     plain join (disjoint key partition), so the same oracle as
     bucketed/salted certifies it."""
-    from approximatequeryengine_spark.operators.joins import skew_split_join
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
     od = cat.table("orders").withColumnRenamed("o_orderkey", "l_orderkey")
     return (
-        skew_split_join(li, od, on="l_orderkey", hot_top=16)
+        _joins.skew_split_join(li, od, on="l_orderkey", hot_top=16)
         .groupBy("o_orderpriority")
         .agg(
             F.round(
@@ -1992,7 +1756,7 @@ def _skewsplit_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register("skewjoin_split_revenue", _skewsplit_join_fn, _bucketed_join_oracle())
+_register("skewjoin_split_revenue", _skewsplit_join_fn, ORACLE["bucketed_join_revenue"])
 
 
 def _bloom_prune_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2002,44 +1766,25 @@ def _bloom_prune_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     row proving losslessness (sum over exact matches) and measuring the
     realized false-positive rate. The oracle rebuilds the identical
     bitmap from the same deterministic hashes."""
-    from approximatequeryengine_spark.plans.bloom import bloom_prune_semi_join
-
     cat = _catalog(spark, sf_dir)
     dim = cat.table("customer").filter(F.col("c_mktsegment") == "BUILDING")
-    return bloom_prune_semi_join(
+    return _bloom.bloom_prune_semi_join(
         spark, cat.table("orders"), dim, "o_custkey", "c_custkey", "o_totalprice"
     )
 
 
-def _bloom_prune_oracle() -> str:
-    from approximatequeryengine_spark.plans.bloom import bloom_prune_semi_join_sql
-
-    return bloom_prune_semi_join_sql(
+_register(
+    "bloom_prune_semi_join",
+    _bloom_prune_fn,
+    _bloom.bloom_prune_semi_join_sql(
         "orders", "customer", "o_custkey", "c_custkey", "o_totalprice",
         "c_mktsegment = 'BUILDING'",
-    )
-
-
-_register("bloom_prune_semi_join", _bloom_prune_fn, _bloom_prune_oracle())
-
-
-def _key_skew_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew profile (operators/joins.py): the one-exchange
-    diagnostic that decides plain vs salted vs broadcast join — max and
-    top-5 key shares plus the straggler multiple (max/mean frequency)."""
-    from approximatequeryengine_spark.operators.joins import profile_key_skew
-
-    cat = _catalog(spark, sf_dir)
-    return profile_key_skew(cat.table("lineitem"), "l_suppkey")
-
-
-def _key_skew_oracle() -> str:
-    from approximatequeryengine_spark.operators.joins import profile_key_skew_sql
-
-    return profile_key_skew_sql("lineitem", "l_suppkey")
-
-
-_register("profile_join_key_skew", _key_skew_fn, _key_skew_oracle())
+    ),
+)
+_twin_query(
+    "profile_join_key_skew", _joins.profile_key_skew, _joins.profile_key_skew_sql,
+    "lineitem", "l_suppkey",
+)
 
 
 _LINEITEM_PROFILE_COLS = [
@@ -2050,46 +1795,18 @@ _LINEITEM_PROFILE_COLS = [
 ]
 
 
-def _profile_cols_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiler (operators/profiling.py): the schema-drift /
-    data-quality snapshot — per-column null, distinct, numeric min/max
-    counts from ONE aggregate."""
-    from approximatequeryengine_spark.operators.profiling import profile_columns
-
-    cat = _catalog(spark, sf_dir)
-    return profile_columns(spark, cat.table("lineitem"))
-
-
-def _profile_cols_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import profile_columns_sql
-
-    return profile_columns_sql("lineitem", _LINEITEM_PROFILE_COLS)
-
-
-_register("profile_table_columns", _profile_cols_fn, _profile_cols_oracle())
-
-
-def _freq_spectrum_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-of-counts over the lineitem join key: the spectrum that
-    predicts dedup yield, join fan-out (Σf² cross-checks the AMS
-    sketch) and feeds Chao-style estimators."""
-    from approximatequeryengine_spark.operators.profiling import (
-        key_frequency_spectrum,
-    )
-
-    cat = _catalog(spark, sf_dir)
-    return key_frequency_spectrum(spark, cat.table("lineitem"), "l_orderkey")
-
-
-def _freq_spectrum_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import (
-        key_frequency_spectrum_sql,
-    )
-
-    return key_frequency_spectrum_sql("lineitem", "l_orderkey")
-
-
-_register("profile_key_frequency_spectrum", _freq_spectrum_fn, _freq_spectrum_oracle())
+_table_query(
+    "profile_table_columns",
+    _prof.profile_columns,
+    _prof.profile_columns_sql("lineitem", _LINEITEM_PROFILE_COLS),
+    table="lineitem",
+)
+_table_query(
+    "profile_key_frequency_spectrum",
+    lambda spark, df: _prof.key_frequency_spectrum(spark, df, "l_orderkey"),
+    _prof.key_frequency_spectrum_sql("lineitem", "l_orderkey"),
+    table="lineitem",
+)
 
 
 # Round-5 fourth batch: join-size estimator BAKE-OFF — the same
@@ -2102,13 +1819,10 @@ _register("profile_key_frequency_spectrum", _freq_spectrum_fn, _freq_spectrum_or
 
 
 def _joinsize_bakeoff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.ams import ams_f2_estimate
-    from approximatequeryengine_spark.plans.countmin import cms_join_size
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
-    cms = cms_join_size(li, li, "l_orderkey").select("exact_join_size", "cms_est")
-    ams = ams_f2_estimate(li, F.col("l_orderkey")).select(
+    cms = _cms.cms_join_size(li, li, "l_orderkey").select("exact_join_size", "cms_est")
+    ams = _ams.ams_f2_estimate(li, F.col("l_orderkey")).select(
         F.col("f2_estimate").alias("ams_est")
     )
     row = cms.crossJoin(ams)  # 1-row × 1-row
@@ -2123,18 +1837,15 @@ def _joinsize_bakeoff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _joinsize_bakeoff_oracle() -> str:
-    from approximatequeryengine_spark.plans.ams import ams_f2_estimate_sql
-    from approximatequeryengine_spark.plans.countmin import cms_join_size_sql
-
     return f"""
 WITH cms AS (SELECT exact_join_size, cms_est
-             FROM ({cms_join_size_sql(
+             FROM ({_cms.cms_join_size_sql(
                  "SELECT l_orderkey FROM lineitem",
                  "SELECT l_orderkey FROM lineitem",
                  "l_orderkey",
              )}) __c),
 ams AS (SELECT f2_estimate AS ams_est
-        FROM ({ams_f2_estimate_sql("lineitem", "l_orderkey")}) __a)
+        FROM ({_ams.ams_f2_estimate_sql("lineitem", "l_orderkey")}) __a)
 SELECT exact_join_size, cms_est,
        round(ams_est, 2) AS ams_est,
        round((cms_est - CAST(exact_join_size AS DOUBLE))
@@ -2200,9 +1911,7 @@ def _design_bakeoff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fifth design (round 6): two-stage cluster sampling — blocks then
     # rows, ultimate-cluster variance (plans/twostage.py). Its realized
     # inclusion reads ~f1·f2 = 0.125, the file-pruning design's budget.
-    from approximatequeryengine_spark.plans.twostage import twostage_sum_ci
-
-    ts = twostage_sum_ci(
+    ts = _twostage.twostage_sum_ci(
         li, _LKEY, F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
     ).select(
         F.lit("twostage").alias("design"),
@@ -2248,13 +1957,11 @@ def _design_bakeoff_oracle() -> str:
             f"round((ci_upper - ci_lower) / 2.0, 2) AS ci_halfwidth, n_samples "
             f"FROM ({m}) __m_{name}"
         )
-    from approximatequeryengine_spark.plans.twostage import twostage_sum_ci_sql
-
     parts.append(
         f"SELECT 'twostage' AS design, sum_value AS est, "
         f"round((ci_upper - ci_lower) / 2.0, 2) AS ci_halfwidth, "
         f"n_rows AS n_samples "
-        f"FROM ({twostage_sum_ci_sql('lineitem', _LKEY, 'floor(l_extendedprice * 100.0 + 0.5)')}) __m_twostage"
+        f"FROM ({_twostage.twostage_sum_ci_sql('lineitem', _LKEY, 'floor(l_extendedprice * 100.0 + 0.5)')}) __m_twostage"
     )
     body = " UNION ALL ".join(parts)
     return f"""
@@ -2279,25 +1986,19 @@ _register("sampling_design_bakeoff", _design_bakeoff_fn, _design_bakeoff_oracle(
 
 
 def _twostage_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.twostage import twostage_sum_ci
-
     cat = _catalog(spark, sf_dir)
-    return twostage_sum_ci(
+    return _twostage.twostage_sum_ci(
         cat.table("lineitem"),
         _LKEY,
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5),
     )
 
 
-def _twostage_oracle() -> str:
-    from approximatequeryengine_spark.plans.twostage import twostage_sum_ci_sql
-
-    return twostage_sum_ci_sql(
-        "lineitem", _LKEY, "floor(l_extendedprice * 100.0 + 0.5)"
-    )
-
-
-_register("approx_sum_twostage", _twostage_fn, _twostage_oracle())
+_register(
+    "approx_sum_twostage",
+    _twostage_fn,
+    _twostage.twostage_sum_ci_sql("lineitem", _LKEY, "floor(l_extendedprice * 100.0 + 0.5)"),
+)
 
 
 def _twostage_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2306,12 +2007,8 @@ def _twostage_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped model-assisted family (plans/twostage.py::
     twostage_grouped_sum_ci). Per-domain block partials, exact integer
     folds, missing groups surfaced with n_psus = 0."""
-    from approximatequeryengine_spark.plans.twostage import (
-        twostage_grouped_sum_ci,
-    )
-
     cat = _catalog(spark, sf_dir)
-    return twostage_grouped_sum_ci(
+    return _twostage.twostage_grouped_sum_ci(
         cat.table("lineitem"),
         _LKEY,
         "l_returnflag",
@@ -2319,24 +2016,13 @@ def _twostage_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-def _twostage_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.twostage import (
-        twostage_grouped_sum_ci_sql,
-    )
-
-    return (
-        twostage_grouped_sum_ci_sql(
-            "lineitem", _LKEY, "l_returnflag",
-            "floor(l_extendedprice * 100.0 + 0.5)",
-        )
-        + " ORDER BY l_returnflag"
-    )
-
-
 _register(
     "approx_grouped_sum_twostage",
     _twostage_grouped_fn,
-    _twostage_grouped_oracle(),
+    _twostage.twostage_grouped_sum_ci_sql(
+        "lineitem", _LKEY, "l_returnflag", "floor(l_extendedprice * 100.0 + 0.5)",
+    )
+    + " ORDER BY l_returnflag",
 )
 
 
@@ -2350,23 +2036,18 @@ _register(
 
 
 def _quantile_bakeoff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles
-    from approximatequeryengine_spark.plans.quantiles import approx_quantile_ci
-
-    from approximatequeryengine_spark.plans.quantiles import exact_interp_quantiles
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
     # Round 9: partition-parallel exact p95 (see exact_quantiles) — the
     # built-in percentile() merged the full value histogram in one task.
-    (p95,) = exact_interp_quantiles(li, "l_extendedprice", [0.95])
+    (p95,) = _quantiles.exact_interp_quantiles(li, "l_extendedprice", [0.95])
     exact = spark.range(1).select(
         F.round(F.lit(p95).cast("double"), 2).alias("exact_p95")
     )
-    dd = ddsketch_quantiles(li, "l_extendedprice", qs=(0.95,)).select(
+    dd = _dd.ddsketch_quantiles(li, "l_extendedprice", qs=(0.95,)).select(
         F.round(F.col("est_q"), 2).alias("ddsketch_est")
     )
-    samp = approx_quantile_ci(
+    samp = _quantiles.approx_quantile_ci(
         li,
         "l_extendedprice",
         0.95,
@@ -2384,16 +2065,13 @@ def _quantile_bakeoff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quantile_bakeoff_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles_sql
-    from approximatequeryengine_spark.plans.quantiles import approx_quantile_ci_sql
-
-    samp_sql = approx_quantile_ci_sql(
+    samp_sql = _quantiles.approx_quantile_ci_sql(
         "lineitem",
         "l_extendedprice",
         0.95,
         SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
     )
-    dd_sql = ddsketch_quantiles_sql("lineitem", "l_extendedprice", qs=(0.95,))
+    dd_sql = _dd.ddsketch_quantiles_sql("lineitem", "l_extendedprice", qs=(0.95,))
     return f"""
 WITH ex AS (
   SELECT round(CAST(quantile_cont(l_extendedprice, 0.95) AS DOUBLE), 2)
@@ -2419,23 +2097,11 @@ _register(
 
 
 def _constraints_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.operators.profiling import (
-        constraint_checks_orders,
-    )
-
     cat = _catalog(spark, sf_dir)
-    return constraint_checks_orders(spark, cat.table("orders"), cat.table("customer"))
+    return _prof.constraint_checks_orders(spark, cat.table("orders"), cat.table("customer"))
 
 
-def _constraints_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import (
-        constraint_checks_orders_sql,
-    )
-
-    return constraint_checks_orders_sql()
-
-
-_register("quality_constraint_checks", _constraints_fn, _constraints_oracle())
+_register("quality_constraint_checks", _constraints_fn, _prof.constraint_checks_orders_sql())
 
 
 # Round-5 fourth batch: MAD-based robust outlier screen — supplier
@@ -2482,12 +2148,6 @@ _sql_query(
 
 
 def _sampled_hh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.functions.hashing import (
-        fraction_threshold,
-        portable_hash_col,
-    )
-    from approximatequeryengine_spark.functions.text import ws_tokens_col
-
     cat = _catalog(spark, sf_dir)
     docs = cat.table("documents")
     f = 0.2
@@ -2513,12 +2173,6 @@ def _sampled_hh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sampled_hh_oracle() -> str:
-    from approximatequeryengine_spark.functions.hashing import (
-        fraction_threshold,
-        portable_hash_sql,
-    )
-    from approximatequeryengine_spark.functions.text import ws_tokens_sql
-
     f = 0.2
     inc = f"{portable_hash_sql('doc_id', 7)} < {fraction_threshold(f)}"
     toks = f"list_transform({ws_tokens_sql('text')}, t -> lower(t))"
@@ -2570,27 +2224,10 @@ _sql_query(
         "ORDER BY digit"
     ),
 )
-# Round-5 fourth batch: PSI distribution-drift monitor per source.
-
-
-def _psi_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.operators.profiling import psi_drift_by_source
-
-    cat = _catalog(spark, sf_dir)
-    return psi_drift_by_source(spark, cat.table("documents"))
-
-
-def _psi_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import (
-        psi_drift_by_source_sql,
-    )
-
-    return psi_drift_by_source_sql()
-
-
-_register("profile_psi_drift_by_source", _psi_fn, _psi_oracle())
-
-
+# PSI distribution-drift monitor per source.
+_table_query(
+    "profile_psi_drift_by_source", _prof.psi_drift_by_source, _prof.psi_drift_by_source_sql()
+)
 # Round-5 fourth batch: embedding↔document coverage — the referential
 # check an embedding pipeline runs before training (every doc embedded
 # exactly once, no orphan vectors). Two anti-join counts + totals in
@@ -2608,22 +2245,9 @@ _sql_query(
 )
 
 
-def _rfm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation (operators/profiling.py): recency /
-    frequency / monetary quintiles over the orders fact."""
-    from approximatequeryengine_spark.operators.profiling import rfm_segments
-
-    cat = _catalog(spark, sf_dir)
-    return rfm_segments(spark, cat.table("orders"))
-
-
-def _rfm_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import rfm_segments_sql
-
-    return rfm_segments_sql()
-
-
-_register("customers_rfm_segments", _rfm_fn, _rfm_oracle())
+_table_query(
+    "customers_rfm_segments", _prof.rfm_segments, _prof.rfm_segments_sql(), table="orders"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2638,12 +2262,10 @@ _register("customers_rfm_segments", _rfm_fn, _rfm_oracle())
 # ---------------------------------------------------------------------------
 
 def _chao1_queries() -> tuple[str, str]:
-    from approximatequeryengine_spark.plans.distinct import chao1_sql
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     return (
-        chao1_sql("lineitem", "l_partkey", spec),
-        chao1_sql("lineitem", "l_partkey", spec, group_col="l_returnflag"),
+        _distinct.chao1_sql("lineitem", "l_partkey", spec),
+        _distinct.chao1_sql("lineitem", "l_partkey", spec, group_col="l_returnflag"),
     )
 
 
@@ -2651,18 +2273,14 @@ def _bootstrap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass Poissonized bootstrap CI for the HT-scaled SUM
     (plans/bootstrap.py) — replicate weights from the salted portable
     hash, so the whole thing (CI included) is oracle-checkable."""
-    from approximatequeryengine_spark.plans.bootstrap import bootstrap_sum_ci
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return bootstrap_sum_ci(cat.table("lineitem"), "l_extendedprice", spec)
+    return _boot.bootstrap_sum_ci(cat.table("lineitem"), "l_extendedprice", spec)
 
 
 def _bootstrap_oracle() -> str:
-    from approximatequeryengine_spark.plans.bootstrap import bootstrap_sum_ci_sql
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return bootstrap_sum_ci_sql(
+    return _boot.bootstrap_sum_ci_sql(
         "lineitem", "l_extendedprice", spec, p_sql=sampling_p_sql(spec)
     )
 
@@ -2671,22 +2289,16 @@ _register("approx_sum_bootstrap32", _bootstrap_fn, _bootstrap_oracle())
 
 
 def _grouped_bootstrap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.plans.bootstrap import bootstrap_grouped_sum_ci
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return bootstrap_grouped_sum_ci(
+    return _boot.bootstrap_grouped_sum_ci(
         cat.table("lineitem"), "l_extendedprice", "l_returnflag", spec
     )
 
 
 def _grouped_bootstrap_oracle() -> str:
-    from approximatequeryengine_spark.plans.bootstrap import (
-        bootstrap_grouped_sum_ci_sql,
-    )
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return bootstrap_grouped_sum_ci_sql(
+    return _boot.bootstrap_grouped_sum_ci_sql(
         "lineitem", "l_extendedprice", "l_returnflag", spec,
         p_sql=sampling_p_sql(spec),
     )
@@ -2696,8 +2308,6 @@ def _ratio_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Effective discount rate = SUM(price*disc)/SUM(price) per return
     flag — ratio estimation with a delta-method CI from one sampled
     pass (plans/estimators.py::ratio_estimate_ci)."""
-    from approximatequeryengine_spark.plans.estimators import ratio_estimate_ci
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     sampled = apply_sampling(cat.table("lineitem"), spec).withColumn(
@@ -2709,8 +2319,6 @@ def _ratio_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ratio_oracle() -> str:
-    from approximatequeryengine_spark.plans.estimators import ratio_estimate_ci_sql
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     return ratio_estimate_ci_sql(
         "lineitem",
@@ -2732,23 +2340,10 @@ _register(
 )
 
 
-def _pps_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probability-proportional-to-size SUM (plans/pps.py): heavy rows
-    are certainties, light rows sampled — lower HT variance than
-    uniform at the same expected sample size."""
-    from approximatequeryengine_spark.plans.pps import pps_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    return pps_sum_ci(cat.table("lineitem"), "l_extendedprice", _LKEY, fraction=0.10)
-
-
-def _pps_oracle() -> str:
-    from approximatequeryengine_spark.plans.pps import pps_sum_ci_sql
-
-    return pps_sum_ci_sql("lineitem", "l_extendedprice", _LKEY, fraction=0.10)
-
-
-_register("approx_sum_pps10", _pps_fn, _pps_oracle())
+_twin_query(
+    "approx_sum_pps10", _pps.pps_sum_ci, _pps.pps_sum_ci_sql,
+    "lineitem", "l_extendedprice", _LKEY, fraction=0.10,
+)
 
 
 def _cluster_join_sql() -> str:
@@ -2789,9 +2384,7 @@ _sql_query("approx_grouped_distinct_chao1", _CHAO1_GROUPED_SQL)
 
 
 def _grouped_median_sql() -> str:
-    from approximatequeryengine_spark.plans.quantiles import grouped_quantile_ci_sql
-
-    return grouped_quantile_ci_sql(
+    return _quantiles.grouped_quantile_ci_sql(
         "lineitem",
         "l_extendedprice",
         "l_returnflag",
@@ -2877,8 +2470,6 @@ _APPROX_SQL_JOIN = (
 
 
 def _approx_sql_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.engine import AQEngine
-
     _catalog(spark, sf_dir)
     res = AQEngine(spark, sf_dir).run(_APPROX_SQL_JOIN)
     if res.method != "sql_rewrite":  # the routing IS the thing certified
@@ -2903,8 +2494,6 @@ _register(
 
 def _mk_sql_rewrite_fn(sql: str, rounding: dict[str, int]):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from approximatequeryengine_spark.engine import AQEngine
-
         _catalog(spark, sf_dir)
         res = AQEngine(spark, sf_dir).run(sql)
         if res.method != "sql_rewrite":  # the routing IS the thing certified
@@ -3125,11 +2714,8 @@ def _adaptive_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments, and stop decision are deterministic arithmetic — so the
     DuckDB oracle re-derives the chosen rung and its estimate in one
     SQL query (``_adaptive_oracle``)."""
-    from approximatequeryengine_spark.plans.adaptive import adaptive_aggregate
-    from approximatequeryengine_spark.plans.estimators import AggSpec
-
     cat = _catalog(spark, sf_dir)
-    res = adaptive_aggregate(
+    res = _adaptive.adaptive_aggregate(
         cat.table("lineitem"),
         AggSpec("sum", "l_extendedprice"),
         SamplingSpec(fraction=0.0, key=_LKEY),
@@ -3159,10 +2745,7 @@ def _adaptive_oracle(
     entries reuse this oracle with the user's alias. ``agg`` mirrors
     the loop's AggSpec: 'sum' (HT total), 'avg' (ratio mean, CLT
     sample-variance margin), 'count' (Σ1/p, binomial margin)."""
-    from approximatequeryengine_spark.plans.adaptive import error_ladder
-    from approximatequeryengine_spark.plans.estimators import Z_95
-
-    ladder = [error_ladder(_ADAPTIVE_ERROR_PCT)]
+    ladder = [_adaptive.error_ladder(_ADAPTIVE_ERROR_PCT)]
     while ladder[-1] < 1.0:
         ladder.append(min(1.0, ladder[-1] * 2.0))
     parts = []
@@ -3250,11 +2833,8 @@ def _adaptive_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     CI half-width meets the budget (beyond-reference — the reference
     runs grouped queries at a fixed fraction). Terminal rung re-derived
     by the oracle below, per group."""
-    from approximatequeryengine_spark.plans.adaptive import adaptive_grouped_aggregate
-    from approximatequeryengine_spark.plans.estimators import AggSpec
-
     cat = _catalog(spark, sf_dir)
-    rdf, _, _ = adaptive_grouped_aggregate(
+    rdf, _, _ = _adaptive.adaptive_grouped_aggregate(
         cat.table("lineitem"),
         AggSpec("sum", "l_extendedprice"),
         ["l_returnflag"],
@@ -3274,10 +2854,7 @@ def _adaptive_grouped_oracle(alias: str = "sum_l_extendedprice") -> str:
     integer-rounded margin, and the first rung where EVERY group has
     ``n ≥ min_samples ∧ est ≠ 0 ∧ rel ≤ e`` (else the full-scan rung).
     ``alias`` names the estimate column (reused by the WITHIN marker)."""
-    from approximatequeryengine_spark.plans.adaptive import error_ladder
-    from approximatequeryengine_spark.plans.estimators import Z_95
-
-    ladder = [error_ladder(_ADAPTIVE_ERROR_PCT)]
+    ladder = [_adaptive.error_ladder(_ADAPTIVE_ERROR_PCT)]
     while ladder[-1] < 1.0:
         ladder.append(min(1.0, ladder[-1] * 2.0))
     parts = []
@@ -3333,8 +2910,6 @@ _APPROX_SQL_WITHIN = (
 
 
 def _within_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.engine import AQEngine
-
     _catalog(spark, sf_dir)
     res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN)
     if res.method != "adaptive_sql":  # the routing IS the thing certified
@@ -3355,8 +2930,6 @@ _APPROX_SQL_WITHIN_GROUPED = (
 
 
 def _within_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.engine import AQEngine
-
     _catalog(spark, sf_dir)
     res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_GROUPED)
     if res.method != "adaptive_sql":
@@ -3431,8 +3004,6 @@ _APPROX_SQL_WITHIN_JOIN = (
 
 
 def _within_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.engine import AQEngine
-
     _catalog(spark, sf_dir)
     res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_JOIN)
     if res.method != "adaptive_sql":
@@ -3462,8 +3033,6 @@ _APPROX_SQL_WITHIN_AVG = (
 
 
 def _within_avg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.engine import AQEngine
-
     _catalog(spark, sf_dir)
     res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_AVG)
     if res.method != "adaptive_sql":
@@ -3493,18 +3062,11 @@ def _stateful_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 4: the replay split is deterministic (row_number quartiles),
     so the multi-batch state evolution unrolls into a batch cumulative-
     window SQL the DuckDB oracle replays emission for emission."""
-    import tempfile
-
-    from approximatequeryengine_spark.streaming.stateful import (
-        running_estimates_stream,
-        split_events_for_replay,
-    )
-
     cat = _catalog(spark, sf_dir)
     events = cat.table("events")
     replay_dir = tempfile.mkdtemp(prefix="aqe_replay_")
-    split_events_for_replay(events, replay_dir, n_batches=4)
-    out = running_estimates_stream(
+    _stateful.split_events_for_replay(events, replay_dir, n_batches=4)
+    out = _stateful.running_estimates_stream(
         spark, replay_dir, spark.read.parquet(replay_dir).schema
     )
     return out.orderBy("event_type", "n_seen")
@@ -3516,8 +3078,6 @@ def _stateful_stream_oracle(n_batches: int = 4) -> str:
     per (event_type, batch-with-rows) — exactly the stream's update-mode
     emissions. Rounding formulas are spelled identically to
     ``stateful._r`` (floor half-up)."""
-    from approximatequeryengine_spark.plans.estimators import Z_95, finite_sql
-
     z = Z_95
     r8 = "floor({v} * 100000000.0 + 0.5) / 100000000.0"
     r9 = "floor({v} * 1000000000.0 + 0.5) / 1000000000.0"
@@ -3602,26 +3162,10 @@ def _hll_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register("sketch_approx_distinct", _hll_fn, None)
 
 
-def _portable_hll_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable HyperLogLog (round 3): per-group distinct estimates
-    plus a global row derived by MERGING the per-group registers —
-    deterministic avalanche-hash registers, so the DuckDB oracle
-    reproduces the whole sketch (register maxima, merge law, estimator,
-    small-range correction) exactly. Complements the rows-only Spark
-    HLL++ rows above and the sample-based Chao1 estimators."""
-    cat = _catalog(spark, sf_dir)
-    from approximatequeryengine_spark.plans.hll import portable_hll_rollup
-
-    return portable_hll_rollup(cat.table("lineitem"), "l_partkey", "l_returnflag")
-
-
-def _portable_hll_oracle() -> str:
-    from approximatequeryengine_spark.plans.hll import portable_hll_rollup_sql
-
-    return portable_hll_rollup_sql("lineitem", "l_partkey", "l_returnflag")
-
-
-_register("sketch_portable_hll", _portable_hll_fn, _portable_hll_oracle())
+_twin_query(
+    "sketch_portable_hll", _hll.portable_hll_rollup, _hll.portable_hll_rollup_sql,
+    "lineitem", "l_partkey", "l_returnflag",
+)
 
 
 _HLL_SIDES_SQL = (
@@ -3639,9 +3183,6 @@ def _hll_overlap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves WITHOUT a join (round 3): per-side portable-HLL registers,
     max-merged union, inclusion-exclusion intersection — the sketch
     answer to cross-corpus contamination/coverage at 100 TB."""
-    from approximatequeryengine_spark.functions.text import ws_tokens_col
-    from approximatequeryengine_spark.plans.hll import portable_hll_overlap
-
     cat = _catalog(spark, sf_dir)
     docs = cat.table("documents")
     toks = docs.select(
@@ -3656,40 +3197,14 @@ def _hll_overlap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("k"),
     )
-    return portable_hll_overlap(sides)
+    return _hll.portable_hll_overlap(sides)
 
 
-def _hll_overlap_oracle() -> str:
-    from approximatequeryengine_spark.plans.hll import portable_hll_overlap_sql
-
-    return portable_hll_overlap_sql(_HLL_SIDES_SQL)
-
-
-_register("sketch_hll_overlap", _hll_overlap_fn, _hll_overlap_oracle())
-
-
-def _hll_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming portable-HLL maintenance; drained registers equal the
-    batch sketch (max is order-free), so this row reuses the batch
-    oracle verbatim."""
-    from approximatequeryengine_spark.streaming.pipeline import hll_stream
-
-    return hll_stream(spark, sf_dir)
-
-
-_register("streaming_hll_distinct", _hll_stream_fn, _portable_hll_oracle())
-
-
-def _bloom_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Bloom-filter maintenance; drained words equal the
-    batch bitmap (OR is order-free), so this row reuses the batch
-    bloom_prune_semi_join oracle verbatim."""
-    from approximatequeryengine_spark.streaming.pipeline import bloom_stream
-
-    return bloom_stream(spark, sf_dir)
-
-
-_register("streaming_bloom_filter", _bloom_stream_fn, _bloom_prune_oracle())
+_register("sketch_hll_overlap", _hll_overlap_fn, _hll.portable_hll_overlap_sql(_HLL_SIDES_SQL))
+# Max is order-free, so the drained registers share the batch oracle.
+_register("streaming_hll_distinct", _pipeline.hll_stream, ORACLE["sketch_portable_hll"])
+# OR is order-free, so the drained Bloom words share the batch oracle.
+_register("streaming_bloom_filter", _pipeline.bloom_stream, ORACLE["bloom_prune_semi_join"])
 
 
 def _cms_join_size_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3698,18 +3213,14 @@ def _cms_join_size_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "will this join explode?" answered without shuffling the tables
     against each other. One-sided (est ≥ exact), both sides in the
     output, oracle recomputes both."""
-    from approximatequeryengine_spark.plans.countmin import cms_join_size
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
-    return cms_join_size(li, li, "l_partkey")
+    return _cms.cms_join_size(li, li, "l_partkey")
 
 
 def _cms_join_size_oracle() -> str:
-    from approximatequeryengine_spark.plans.countmin import cms_join_size_sql
-
     q = "SELECT l_partkey FROM lineitem"
-    return cms_join_size_sql(q, q, "l_partkey")
+    return _cms.cms_join_size_sql(q, q, "l_partkey")
 
 
 _register("sketch_cms_join_size", _cms_join_size_fn, _cms_join_size_oracle())
@@ -3724,13 +3235,6 @@ def _recordfile_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders — a green row proves the save/load path
     (``custom_bplus_db.cpp:665-711``) is lossless through the numpy
     pack → binaryFile → Arrow decode chain."""
-    import tempfile
-
-    from approximatequeryengine_spark.sources.recordfile import (
-        read_record_files,
-        write_record_files,
-    )
-
     cat = _catalog(spark, sf_dir)
     records = cat.table("orders").select(
         F.col("o_orderkey").alias("id"),
@@ -3740,8 +3244,8 @@ def _recordfile_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("o_orderdate")).alias("timestamp"),
     )
     out_dir = tempfile.mkdtemp(prefix="aqe_recordfile_")
-    write_record_files(records, out_dir)
-    back = read_record_files(spark, out_dir)
+    _recordfile.write_record_files(records, out_dir)
+    back = _recordfile.read_record_files(spark, out_dir)
     return back.agg(
         F.count(F.lit(1)).alias("n_records"),
         F.round(F.sum("amount"), 2).alias("sum_amount"),
@@ -3766,26 +3270,25 @@ _register(
 # Corpus-curation layer (operators/curation.py): packing, decontamination,
 # repetition profiling, PII accounting — the remaining first-class
 # training-data-pipeline passes.
-from approximatequeryengine_spark.operators import curation as _cur  # noqa: E402
 
-_docs_query("curation_pack_sequences", _cur.pack_sequences, _cur.pack_sequences_sql())
-_docs_query(
+_table_query("curation_pack_sequences", _cur.pack_sequences, _cur.pack_sequences_sql())
+_table_query(
     "curation_contamination_screen",
     _cur.contamination_screen,
     _cur.contamination_screen_sql(),
 )
-_docs_query("curation_repetition_stats", _cur.repetition_stats, _cur.repetition_stats_sql())
-_docs_query("curation_pii_stats", _cur.pii_scrub_stats, _cur.pii_scrub_stats_sql())
-_docs_query("curation_dataset_split", _cur.dataset_split, _cur.dataset_split_sql())
+_table_query("curation_repetition_stats", _cur.repetition_stats, _cur.repetition_stats_sql())
+_table_query("curation_pii_stats", _cur.pii_scrub_stats, _cur.pii_scrub_stats_sql())
+_table_query("curation_dataset_split", _cur.dataset_split, _cur.dataset_split_sql())
 # Round-6 build batch: eval-set leakage audit — near-dup pairs (the
 # certified MinHash-LSH machinery) labeled by the splits their
 # endpoints hash into; leaky rows are pairs straddling train/eval
 # (operators/curation.py::split_leakage).
-_docs_query("curation_split_leakage", _cur.split_leakage, _cur.split_leakage_sql())
-_docs_query("curation_sample_per_source", _cur.sample_per_source, _cur.sample_per_source_sql())
-_docs_query("curation_mixture_plan", _cur.mixture_plan, _cur.mixture_plan_sql())
-_docs_query("curation_chunk_inventory", _cur.chunk_inventory, _cur.chunk_inventory_sql())
-_docs_query("dedup_ingest_stats", _dedup.ingest_dedup_stats, _dedup.ingest_dedup_stats_sql())
+_table_query("curation_split_leakage", _cur.split_leakage, _cur.split_leakage_sql())
+_table_query("curation_sample_per_source", _cur.sample_per_source, _cur.sample_per_source_sql())
+_table_query("curation_mixture_plan", _cur.mixture_plan, _cur.mixture_plan_sql())
+_table_query("curation_chunk_inventory", _cur.chunk_inventory, _cur.chunk_inventory_sql())
+_table_query("dedup_ingest_stats", _dedup.ingest_dedup_stats, _dedup.ingest_dedup_stats_sql())
 
 
 def _neardup_index_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3795,13 +3298,6 @@ def _neardup_index_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the stored one — O(batch) signature work per ingest. The
     oracle re-derives both sides' signatures from the documents table,
     since the index contents are a pure function of the corpus split."""
-    import tempfile
-
-    from approximatequeryengine_spark.functions.hashing import (
-        fraction_threshold,
-        portable_hash_col,
-    )
-
     cat = _catalog(spark, sf_dir)
     docs = cat.table("documents")
     inc = portable_hash_col(F.col("doc_id"), salt=_dedup.INGEST_SALT) < F.lit(
@@ -3828,14 +3324,6 @@ def _incremental_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the full-history aggregate: the entry passes iff
     merge(state(base), delta) == state(base ∪ delta) exactly (integer
     state makes the equality bit-for-bit)."""
-    import tempfile
-
-    from approximatequeryengine_spark.functions.hashing import (
-        fraction_threshold,
-        portable_hash_col,
-    )
-    from approximatequeryengine_spark.plans import incremental as _inc
-
     cat = _catalog(spark, sf_dir)
     ev = cat.table("events")
     batch = portable_hash_col(F.col("event_id"), salt=13) < F.lit(fraction_threshold(0.10))
@@ -3845,151 +3333,47 @@ def _incremental_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _inc.agg_state_readout(merged)
 
 
-def _incremental_oracle() -> str:
-    from approximatequeryengine_spark.plans.incremental import incremental_readout_sql
-
-    return incremental_readout_sql("events", "event_type", "value")
-
-
-_register("incremental_state_merge", _incremental_fn, _incremental_oracle())
-
-
-def _kmv_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV bottom-k distinct sketch over l_partkey (round 4) — the
-    third distinct estimator (Chao1: sample-only; HLL: registers; KMV:
-    order statistics + a uniform sample of the distinct VALUES)."""
-    from approximatequeryengine_spark.plans.distinct import kmv_distinct_ci
-
-    cat = _catalog(spark, sf_dir)
-    return kmv_distinct_ci(cat.table("lineitem"), "l_partkey", k=256)
-
-
-def _kmv_oracle() -> str:
-    from approximatequeryengine_spark.plans.distinct import kmv_distinct_ci_sql
-
-    return kmv_distinct_ci_sql("lineitem", "l_partkey", k=256)
-
-
-_register("sketch_kmv_distinct", _kmv_fn, _kmv_oracle())
-
-
-def _wavelet_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haar-wavelet synopsis selectivity estimation (round 4) — B=8
-    coefficients answer 8 unaligned prefix-range counts; the only data
-    pass is the 64-bucket histogram aggregate."""
-    from approximatequeryengine_spark.plans.wavelet import wavelet_range_counts
-
-    cat = _catalog(spark, sf_dir)
-    return wavelet_range_counts(spark, cat.table("lineitem"), "l_extendedprice")
-
-
-def _wavelet_oracle() -> str:
-    from approximatequeryengine_spark.plans.wavelet import wavelet_range_counts_sql
-
-    return wavelet_range_counts_sql("lineitem", "l_extendedprice")
-
-
-_register("sketch_wavelet_selectivity", _wavelet_fn, _wavelet_oracle())
-
-
-def _blb_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag of Little Bootstraps SUM (plans/bootstrap.py::blb_sum_ci):
-    full-scale error assessment from 4 disjoint 5% hash subsamples —
-    the bootstrap that never rereads the corpus R times."""
-    from approximatequeryengine_spark.plans.bootstrap import blb_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    return blb_sum_ci(cat.table("lineitem"), "l_extendedprice", _LKEY)
-
-
-def _blb_oracle() -> str:
-    from approximatequeryengine_spark.plans.bootstrap import blb_sum_ci_sql
-
-    return blb_sum_ci_sql("lineitem", "l_extendedprice", _LKEY)
-
-
-_register("approx_sum_blb", _blb_fn, _blb_oracle())
-
-
-def _countmin_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min token sketch vs exact top-20 (plans/countmin.py):
-    constant-memory mergeable counters; estimates certified against
-    ground truth in one result."""
-    from approximatequeryengine_spark.plans.countmin import countmin_topk_estimates
-
-    cat = _catalog(spark, sf_dir)
-    return countmin_topk_estimates(spark, cat.table("documents"))
-
-
-def _countmin_oracle() -> str:
-    from approximatequeryengine_spark.plans.countmin import countmin_topk_sql
-
-    return countmin_topk_sql()
-
-
-_register("sketch_countmin_tokens", _countmin_fn, _countmin_oracle())
-
-
-def _hist_quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-histogram quantiles (plans/histogram.py): the mergeable,
-    oracle-exact alternative to the engine-specific approx_percentile
-    sketch."""
-    from approximatequeryengine_spark.plans.histogram import hist_quantiles
-
-    cat = _catalog(spark, sf_dir)
-    return hist_quantiles(cat.table("lineitem"), "l_extendedprice")
-
-
-def _hist_quantiles_oracle() -> str:
-    from approximatequeryengine_spark.plans.histogram import hist_quantiles_sql
-
-    return hist_quantiles_sql("lineitem", "l_extendedprice")
-
-
-_register("sketch_hist_quantiles", _hist_quantiles_fn, _hist_quantiles_oracle())
-
-
-def _hist_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming grid-histogram maintenance; the drained bin counts
-    equal the batch histogram (addition is order-free), so this row
-    reuses the batch sketch_hist_quantiles oracle verbatim."""
-    from approximatequeryengine_spark.streaming.pipeline import hist_quantile_stream
-
-    return hist_quantile_stream(spark, sf_dir)
-
-
-_register("streaming_hist_quantiles", _hist_stream_fn, _hist_quantiles_oracle())
-
-
-def _ddsketch_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DDSketch relative-error quantiles over l_extendedprice (round 4)
-    — the guaranteed-α quantile synopsis (deterministic, mergeable)
-    complementing the sampled order-statistic CI (`approx_p90_ci`) and
-    the fixed-grid histogram (`sketch_hist_quantiles`)."""
-    from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles
-
-    cat = _catalog(spark, sf_dir)
-    return ddsketch_quantiles(cat.table("lineitem"), "l_extendedprice", alpha=0.01)
-
-
-def _ddsketch_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles_sql
-
-    return ddsketch_quantiles_sql("lineitem", "l_extendedprice", alpha=0.01)
-
-
-_register("sketch_ddsketch_quantiles", _ddsketch_fn, _ddsketch_oracle())
+_register(
+    "incremental_state_merge",
+    _incremental_fn,
+    _inc.incremental_readout_sql("events", "event_type", "value"),
+)
+_twin_query(
+    "sketch_kmv_distinct", _distinct.kmv_distinct_ci, _distinct.kmv_distinct_ci_sql,
+    "lineitem", "l_partkey", k=256,
+)
+_table_query(
+    "sketch_wavelet_selectivity",
+    lambda spark, df: _wavelet.wavelet_range_counts(spark, df, "l_extendedprice"),
+    _wavelet.wavelet_range_counts_sql("lineitem", "l_extendedprice"),
+    table="lineitem",
+)
+_twin_query(
+    "approx_sum_blb", _boot.blb_sum_ci, _boot.blb_sum_ci_sql,
+    "lineitem", "l_extendedprice", _LKEY,
+)
+_table_query("sketch_countmin_tokens", _cms.countmin_topk_estimates, _cms.countmin_topk_sql())
+_twin_query(
+    "sketch_hist_quantiles", _hist.hist_quantiles, _hist.hist_quantiles_sql,
+    "lineitem", "l_extendedprice",
+)
+# Addition is order-free, so the drained bin counts share the batch oracle.
+_register(
+    "streaming_hist_quantiles", _pipeline.hist_quantile_stream, ORACLE["sketch_hist_quantiles"]
+)
+_twin_query(
+    "sketch_ddsketch_quantiles", _dd.ddsketch_quantiles, _dd.ddsketch_quantiles_sql,
+    "lineitem", "l_extendedprice", alpha=0.01,
+)
 
 
 def _priority_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (round 4) — sample ONCE (k=2048, weights =
     o_totalprice cents), answer any later subset-sum; here the subset
     is the 1-URGENT orders. DLT'07 estimator Σ max(w, τ)."""
-    from approximatequeryengine_spark.plans.priority import priority_sample_subset_sum
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
-    return priority_sample_subset_sum(
+    return _priority.priority_sample_subset_sum(
         orders,
         key="o_orderkey",
         weight_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long"),
@@ -3998,21 +3382,17 @@ def _priority_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _priority_oracle() -> str:
-    from approximatequeryengine_spark.plans.priority import (
-        priority_sample_subset_sum_sql,
-    )
-
-    return priority_sample_subset_sum_sql(
+_register(
+    "approx_sum_priority",
+    _priority_fn,
+    _priority.priority_sample_subset_sum_sql(
         "orders",
         key="o_orderkey",
         weight_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
         subset_sql="o_orderpriority = '1-URGENT'",
         k=2048,
-    )
-
-
-_register("approx_sum_priority", _priority_fn, _priority_oracle())
+    ),
+)
 
 
 # Epoch-day bounds for the zonemap range query (1997 calendar year —
@@ -4028,24 +3408,17 @@ def _zonemap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     custom_bplus_db.cpp range scans): range-bucketed sorted layout +
     min/max zone stats, partition-pruned range aggregate. The oracle
     re-derives layout, pruning AND the answer."""
-    import tempfile
-
-    from approximatequeryengine_spark.sources.zonemap import (
-        zonemap_range_sum,
-        zonemap_write,
-    )
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_zonemap_")
-    zonemap_write(
+    _zonemap.zonemap_write(
         spark,
         orders.select("o_orderdate", "o_totalprice"),
         path,
         key=F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")),
         n_zones=64,
     )
-    return zonemap_range_sum(
+    return _zonemap.zonemap_range_sum(
         spark,
         path,
         _ZM_LO,
@@ -4054,20 +3427,18 @@ def _zonemap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zonemap_oracle() -> str:
-    from approximatequeryengine_spark.sources.zonemap import zonemap_range_sum_sql
-
-    return zonemap_range_sum_sql(
+_register(
+    "index_zonemap_range_sum",
+    _zonemap_fn,
+    _zonemap.zonemap_range_sum_sql(
         "orders",
         key_sql="date_diff('day', DATE '1970-01-01', o_orderdate)",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
         lo=_ZM_LO,
         hi=_ZM_HI,
         n_zones=64,
-    )
-
-
-_register("index_zonemap_range_sum", _zonemap_fn, _zonemap_oracle())
+    ),
+)
 
 
 # Block bloom-filter skip index — the EQUALITY-predicate complement of
@@ -4081,17 +3452,10 @@ _BB_KEY = 42  # o_custkey present at every fixture SF
 
 
 def _blockbloom_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from approximatequeryengine_spark.sources.blockbloom import (
-        blockbloom_point_sum,
-        blockbloom_write,
-    )
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_blockbloom_")
-    blockbloom_write(
+    _blockbloom.blockbloom_write(
         spark,
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
         path,
@@ -4099,24 +3463,20 @@ def _blockbloom_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         lookup_key=F.col("o_custkey"),
         value_cents=F.floor(F.col("o_totalprice") * 100.0 + 0.5),
     )
-    return blockbloom_point_sum(spark, path, _BB_KEY)
+    return _blockbloom.blockbloom_point_sum(spark, path, _BB_KEY)
 
 
-def _blockbloom_oracle() -> str:
-    from approximatequeryengine_spark.sources.blockbloom import (
-        blockbloom_point_sum_sql,
-    )
-
-    return blockbloom_point_sum_sql(
+_register(
+    "index_blockbloom_point_sum",
+    _blockbloom_fn,
+    _blockbloom.blockbloom_point_sum_sql(
         "orders",
         ingest_key_sql="o_orderkey",
         lookup_key_sql="o_custkey",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
         key=_BB_KEY,
-    )
-
-
-_register("index_blockbloom_point_sum", _blockbloom_fn, _blockbloom_oracle())
+    ),
+)
 
 
 # Z-order (Morton) 2-D clustering — rectangle data skipping on
@@ -4141,14 +3501,6 @@ _ZO_Y = (40, 119)  # 80-partkey slice (4% of the sf0.01 domain)
 
 
 def _zorder_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from approximatequeryengine_spark.sources.zorder import (
-        linear_blocks_scanned,
-        zorder_rect_sum,
-        zorder_write,
-    )
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_shipdate", "l_extendedprice"
@@ -4157,18 +3509,18 @@ def _zorder_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.col("l_partkey")
     rid = F.col("l_orderkey") * 8 + F.col("l_linenumber")
     path = tempfile.mkdtemp(prefix="aqe_zorder_")
-    zorder_write(spark, li, path, x=x, y=y, rowid=rid,
+    _zorder.zorder_write(spark, li, path, x=x, y=y, rowid=rid,
                  value_cents=F.floor(F.col("l_extendedprice") * 100.0 + 0.5))
-    rect = zorder_rect_sum(spark, path, *_ZO_X, *_ZO_Y)
-    lin = linear_blocks_scanned(spark, li, x=x, y=y, rowid=rid, x_lo=_ZO_X[0],
+    rect = _zorder.zorder_rect_sum(spark, path, *_ZO_X, *_ZO_Y)
+    lin = _zorder.linear_blocks_scanned(spark, li, x=x, y=y, rowid=rid, x_lo=_ZO_X[0],
                                 x_hi=_ZO_X[1], y_lo=_ZO_Y[0], y_hi=_ZO_Y[1])
     return rect.crossJoin(lin)  # 1-row x 1-row readout
 
 
-def _zorder_oracle() -> str:
-    from approximatequeryengine_spark.sources.zorder import zorder_rect_sum_sql
-
-    return zorder_rect_sum_sql(
+_register(
+    "index_zorder_rect_sum",
+    _zorder_fn,
+    _zorder.zorder_rect_sum_sql(
         "lineitem",
         x_sql="date_diff('day', DATE '1970-01-01', l_shipdate)",
         y_sql="l_partkey",
@@ -4178,10 +3530,8 @@ def _zorder_oracle() -> str:
         x_hi=_ZO_X[1],
         y_lo=_ZO_Y[0],
         y_hi=_ZO_Y[1],
-    )
-
-
-_register("index_zorder_rect_sum", _zorder_fn, _zorder_oracle())
+    ),
+)
 
 
 # MERGE / upsert (CDC apply) — the lakehouse write primitive
@@ -4194,8 +3544,6 @@ _register("index_zorder_rect_sum", _zorder_fn, _zorder_oracle())
 
 
 def _merge_upsert_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.operators.merge import merge_upsert_stats
-
     cat = _catalog(spark, sf_dir)
     o = cat.table("orders").select("o_orderkey", "o_totalprice")
     k = F.col("o_orderkey")
@@ -4207,7 +3555,7 @@ def _merge_upsert_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (k + 100_000_000).alias("o_orderkey"), F.col("o_totalprice")
     )
     source = upd.unionAll(unch).unionAll(ins)
-    return merge_upsert_stats(
+    return _merge.merge_upsert_stats(
         o,
         source,
         key="o_orderkey",
@@ -4216,8 +3564,6 @@ def _merge_upsert_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _merge_upsert_oracle() -> str:
-    from approximatequeryengine_spark.operators.merge import merge_upsert_stats_sql
-
     src = (
         "(SELECT o_orderkey, o_totalprice + 10.0 AS o_totalprice "
         " FROM orders WHERE o_orderkey % 21 = 0 "
@@ -4226,7 +3572,7 @@ def _merge_upsert_oracle() -> str:
         " UNION ALL SELECT o_orderkey + 100000000, o_totalprice "
         " FROM orders WHERE o_orderkey % 21 = 14) src"
     )
-    return merge_upsert_stats_sql(
+    return _merge.merge_upsert_stats_sql(
         target_sql="orders",
         source_sql=src,
         key="o_orderkey",
@@ -4256,26 +3602,19 @@ def _aqpplus_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     are sampled (10% deterministic hash). CI variance comes from the
     boundary alone — measured 6× narrower than pure sampling at the
     same fraction (tests/test_aqpplus.py)."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.aqpplus import (
-        aqpplus_build,
-        aqpplus_range_sum,
-    )
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_aqpplus_")
-    handle = aqpplus_build(
+    handle = _aqpplus.aqpplus_build(
         spark, orders, path, _AQPP_KEY, _AQPP_CENTS, row_key="o_orderkey", n_blocks=64
     )
-    return aqpplus_range_sum(spark, handle, _AQPP_LO, _AQPP_HI, fraction=0.1)
+    return _aqpplus.aqpplus_range_sum(spark, handle, _AQPP_LO, _AQPP_HI, fraction=0.1)
 
 
-def _aqpplus_oracle() -> str:
-    from approximatequeryengine_spark.plans.aqpplus import aqpplus_range_sum_sql
-
-    return aqpplus_range_sum_sql(
+_register(
+    "aqpplus_range_sum",
+    _aqpplus_fn,
+    _aqpplus.aqpplus_range_sum_sql(
         "orders",
         key_sql="date_diff('day', DATE '1970-01-01', o_orderdate)",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
@@ -4284,30 +3623,21 @@ def _aqpplus_oracle() -> str:
         hi=_AQPP_HI,
         n_blocks=64,
         fraction=0.1,
-    )
-
-
-_register("aqpplus_range_sum", _aqpplus_fn, _aqpplus_oracle())
+    ),
+)
 
 
 def _aqpplus_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped AQP++ (dashboard shape): per-priority range revenue
     with exact (block, group) interiors and one shared boundary
     sample — the grouped complement of aqpplus_range_sum."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.aqpplus import (
-        aqpplus_grouped_build,
-        aqpplus_grouped_range_sum,
-    )
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders")
     path = tempfile.mkdtemp(prefix="aqe_aqppg_")
-    aqpplus_grouped_build(
+    _aqpplus.aqpplus_grouped_build(
         spark, orders, path, _AQPP_KEY, _AQPP_CENTS, group="o_orderpriority", n_blocks=64
     )
-    return aqpplus_grouped_range_sum(
+    return _aqpplus.aqpplus_grouped_range_sum(
         spark,
         orders,
         path,
@@ -4322,11 +3652,7 @@ def _aqpplus_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _aqpplus_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.aqpplus import (
-        aqpplus_grouped_range_sum_sql,
-    )
-
-    inner = aqpplus_grouped_range_sum_sql(
+    inner = _aqpplus.aqpplus_grouped_range_sum_sql(
         "orders",
         key_sql="date_diff('day', DATE '1970-01-01', o_orderdate)",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
@@ -4353,16 +3679,9 @@ def _join_synopsis_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority from the synopsis ALONE — no join at query time.
     The oracle replays sample → join → HT estimate on the base
     tables."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.joinsynopsis import (
-        join_synopsis_agg,
-        join_synopsis_build,
-    )
-
     cat = _catalog(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="aqe_joinsyn_") + "/syn"
-    join_synopsis_build(
+    _joinsyn.join_synopsis_build(
         spark,
         path,
         fact=cat.table("lineitem"),
@@ -4377,7 +3696,7 @@ def _join_synopsis_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below 2^53 in ANY summation order — the HT estimate is
     # bit-reproducible across engines (float revenue sums are not:
     # a 0.01 ci-bound flip was observed on the raw expression).
-    rdf = join_synopsis_agg(
+    rdf = _joinsyn.join_synopsis_agg(
         spark,
         path,
         AggSpec("sum", _REV_GRID, alias="revenue"),
@@ -4428,18 +3747,9 @@ def _join_synopsis_quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     synopsis answers it from f·|fact| rows, and the binomial CI is
     honest about the sampling. The oracle replays sample → join →
     identical rank arithmetic on the base tables."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.joinsynopsis import (
-        join_synopsis_build,
-    )
-    from approximatequeryengine_spark.plans.quantiles import (
-        grouped_quantile_ci_sql,
-    )
-
     cat = _catalog(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="aqe_joinsynq_") + "/syn"
-    join_synopsis_build(
+    _joinsyn.join_synopsis_build(
         spark,
         path,
         fact=cat.table("lineitem"),
@@ -4450,7 +3760,7 @@ def _join_synopsis_quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         columns=["l_orderkey", "l_linenumber", "l_extendedprice", "o_orderpriority"],
     )
     spark.read.parquet(path).createOrReplaceTempView("__join_synopsis_q")
-    sql = grouped_quantile_ci_sql(
+    sql = _quantiles.grouped_quantile_ci_sql(
         table="__join_synopsis_q",
         column="l_extendedprice",
         group_col="o_orderpriority",
@@ -4460,27 +3770,19 @@ def _join_synopsis_quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(sql)
 
 
-def _join_synopsis_quantiles_oracle() -> str:
-    from approximatequeryengine_spark.plans.quantiles import (
-        grouped_quantile_ci_sql,
-    )
-
-    # same rank arithmetic, but the sample is re-derived from the base
-    # join via the hash predicate — identical sample content, so the
-    # order statistics match element-for-element.
-    return grouped_quantile_ci_sql(
+# The oracle runs the same rank arithmetic, but re-derives the sample
+# from the base join via the hash predicate — identical sample content,
+# so the order statistics match element-for-element.
+_register(
+    "join_synopsis_price_quantiles",
+    _join_synopsis_quantiles_fn,
+    _quantiles.grouped_quantile_ci_sql(
         table="lineitem JOIN orders ON l_orderkey = o_orderkey",
         column="l_extendedprice",
         group_col="o_orderpriority",
         q=0.5,
         spec=SamplingSpec(design="uniform_hash", fraction=0.1, key=_LKEY),
-    )
-
-
-_register(
-    "join_synopsis_price_quantiles",
-    _join_synopsis_quantiles_fn,
-    _join_synopsis_quantiles_oracle(),
+    ),
 )
 
 
@@ -4490,11 +3792,9 @@ def _kmv_setops_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices of lineitem (exact Jaccard 0.518 at sf0.01) —
     DIRECT intersection estimation (no inclusion-exclusion blow-up,
     unlike sketch_hll_overlap)."""
-    from approximatequeryengine_spark.plans.distinct import kmv_set_ops
-
     cat = _catalog(spark, sf_dir)
     li = cat.table("lineitem")
-    return kmv_set_ops(
+    return _distinct.kmv_set_ops(
         li.filter(F.col("l_quantity") < 3),
         li.filter(F.col("l_quantity") > 48),
         "l_partkey",
@@ -4502,56 +3802,27 @@ def _kmv_setops_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_setops_oracle() -> str:
-    from approximatequeryengine_spark.plans.distinct import kmv_set_ops_sql
-
-    return kmv_set_ops_sql(
+_register(
+    "sketch_kmv_set_ops",
+    _kmv_setops_fn,
+    _distinct.kmv_set_ops_sql(
         "(SELECT * FROM lineitem WHERE l_quantity < 3)",
         "(SELECT * FROM lineitem WHERE l_quantity > 48)",
         "l_partkey",
         k=256,
-    )
+    ),
+)
 
 
-_register("sketch_kmv_set_ops", _kmv_setops_fn, _kmv_setops_oracle())
-
-
-def _ddsketch_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped DDSketch (round 4): per-returnflag price quantiles from
-    ONE grouped bucket pass — no per-group sort; the α-guarantee holds
-    per group."""
-    from approximatequeryengine_spark.plans.ddsketch import ddsketch_grouped_quantiles
-
-    cat = _catalog(spark, sf_dir)
-    return ddsketch_grouped_quantiles(
-        cat.table("lineitem"), "l_extendedprice", "l_returnflag", alpha=0.01
-    )
-
-
-def _ddsketch_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_grouped_quantiles_sql,
-    )
-
-    return ddsketch_grouped_quantiles_sql(
-        "lineitem", "l_extendedprice", "l_returnflag", alpha=0.01
-    )
-
-
-_register("sketch_ddsketch_grouped", _ddsketch_grouped_fn, _ddsketch_grouped_oracle())
-
-
-def _ddsketch_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DDSketch maintenance; drained complete-mode bucket
-    counts equal the batch table (addition is order-free), so the
-    batch sketch_ddsketch_quantiles oracle applies verbatim — and
-    unlike the grid-histogram stream, NO batch pre-pass primes it."""
-    from approximatequeryengine_spark.streaming.pipeline import ddsketch_stream
-
-    return ddsketch_stream(spark, sf_dir)
-
-
-_register("streaming_ddsketch_quantiles", _ddsketch_stream_fn, _ddsketch_oracle())
+_twin_query(
+    "sketch_ddsketch_grouped",
+    _dd.ddsketch_grouped_quantiles, _dd.ddsketch_grouped_quantiles_sql,
+    "lineitem", "l_extendedprice", "l_returnflag", alpha=0.01,
+)
+# Addition is order-free, so the drained bucket counts share the batch oracle.
+_register(
+    "streaming_ddsketch_quantiles", _pipeline.ddsketch_stream, ORACLE["sketch_ddsketch_quantiles"]
+)
 
 
 def _synopsis_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4562,16 +3833,9 @@ def _synopsis_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     SYNOPSIS alone — the base table is never scanned at query time.
     The oracle re-derives counts → integer thresholds → membership →
     the same integer-moments estimate from the base table."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.synopsis import (
-        synopsis_build,
-        synopsis_stratified_sum,
-    )
-
     cat = _catalog(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="aqe_synopsis_")
-    synopsis_build(
+    _synopsis.synopsis_build(
         spark,
         cat.table("orders").select("o_orderkey", "o_orderpriority", "o_totalprice"),
         path,
@@ -4579,24 +3843,22 @@ def _synopsis_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         key="o_orderkey",
         cap=2048,
     )
-    return synopsis_stratified_sum(
+    return _synopsis.synopsis_stratified_sum(
         spark, path, "o_orderpriority", "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
     )
 
 
-def _synopsis_oracle() -> str:
-    from approximatequeryengine_spark.plans.synopsis import synopsis_stratified_sum_sql
-
-    return synopsis_stratified_sum_sql(
+_register(
+    "synopsis_stratified_sum",
+    _synopsis_fn,
+    _synopsis.synopsis_stratified_sum_sql(
         "orders",
         stratum="o_orderpriority",
         key="o_orderkey",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
         cap=2048,
-    )
-
-
-_register("synopsis_stratified_sum", _synopsis_fn, _synopsis_oracle())
+    ),
+)
 
 
 def _hist2d_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4605,11 +3867,9 @@ def _hist2d_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND tokens ≥ 80" is near-impossible under the joint distribution
     (exact 0) but the independence assumption predicts ~10% of the
     corpus — the certified row carries both estimates."""
-    from approximatequeryengine_spark.plans.histogram2d import hist2d_rect_selectivity
-
     cat = _catalog(spark, sf_dir)
     docs = cat.table("documents")
-    return hist2d_rect_selectivity(
+    return _hist2d.hist2d_rect_selectivity(
         docs,
         x=F.col("n_chars"),
         y=F.size(F.split(F.col("text"), " ")),
@@ -4618,21 +3878,17 @@ def _hist2d_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hist2d_oracle() -> str:
-    from approximatequeryengine_spark.plans.histogram2d import (
-        hist2d_rect_selectivity_sql,
-    )
-
-    return hist2d_rect_selectivity_sql(
+_register(
+    "sketch_hist2d_selectivity",
+    _hist2d_fn,
+    _hist2d.hist2d_rect_selectivity_sql(
         "documents",
         x_sql="n_chars",
         y_sql="len(string_split(text, ' '))",
         x_hi=300.0,
         y_lo=80.0,
-    )
-
-
-_register("sketch_hist2d_selectivity", _hist2d_fn, _hist2d_oracle())
+    ),
+)
 
 
 def _kmv_where_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4640,10 +3896,8 @@ def _kmv_where_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered (lineitem l_partkey) retail above 970 — the bottom-k
     sketch doubles as a uniform sample of the DISTINCT keys, joined to
     the part dimension for the predicate fraction."""
-    from approximatequeryengine_spark.plans.distinct import kmv_distinct_where
-
     cat = _catalog(spark, sf_dir)
-    return kmv_distinct_where(
+    return _distinct.kmv_distinct_where(
         cat.table("lineitem"),
         "l_partkey",
         cat.table("part"),
@@ -4653,15 +3907,13 @@ def _kmv_where_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_where_oracle() -> str:
-    from approximatequeryengine_spark.plans.distinct import kmv_distinct_where_sql
-
-    return kmv_distinct_where_sql(
+_register(
+    "sketch_kmv_distinct_where",
+    _kmv_where_fn,
+    _distinct.kmv_distinct_where_sql(
         "lineitem", "l_partkey", "part", "p_partkey", "p_retailprice > 970.0", k=256
-    )
-
-
-_register("sketch_kmv_distinct_where", _kmv_where_fn, _kmv_where_oracle())
+    ),
+)
 
 
 def _advisor_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4669,90 +3921,38 @@ def _advisor_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cv², top-B mass share, CLT-predicted CI at 10%) and recommend
     an estimator — the oracle re-derives the statistics AND the
     decision rule, certifying the recommendation itself."""
-    from approximatequeryengine_spark.plans.advisor import advise_method
-
-    from approximatequeryengine_spark.plans.estimators import finite_col
-
     cat = _catalog(spark, sf_dir)
-    return advise_method(
+    return _advisor.advise_method(
         cat.table("events"),
         F.floor(finite_col(F.col("value")) * 100.0 + 0.5).cast("long"),
     )
 
 
-def _advisor_oracle() -> str:
-    from approximatequeryengine_spark.plans.advisor import advise_method_sql
-    from approximatequeryengine_spark.plans.estimators import finite_sql
-
-    return advise_method_sql("events", f"floor({finite_sql('value')} * 100.0 + 0.5)")
-
-
-_register("advisor_method_profile", _advisor_fn, _advisor_oracle())
+_register(
+    "advisor_method_profile",
+    _advisor_fn,
+    _advisor.advise_method_sql("events", f"floor({finite_sql('value')} * 100.0 + 0.5)"),
+)
 
 
-def _adaptive_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive join estimation (round 4): the R8-R10 escalation loop
-    lifted to the click×purchase many-to-many join via nested
-    universe samples; the oracle replays every rung and the integer
-    stopping rule."""
-    from approximatequeryengine_spark.operators.joins import adaptive_universe_join
-
-    cat = _catalog(spark, sf_dir)
-    return adaptive_universe_join(cat.table("events"), error_bp=500)
-
-
-def _adaptive_join_oracle() -> str:
-    from approximatequeryengine_spark.operators.joins import (
-        adaptive_universe_join_sql,
-    )
-
-    return adaptive_universe_join_sql(error_bp=500)
-
-
-_register("adaptive_join_pairs", _adaptive_join_fn, _adaptive_join_oracle())
-
-
-def _decayed_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially time-decayed revenue per event type (round 4) —
-    integer-grid weights, BIGINT accumulation, mergeable at a fixed
-    anchor."""
-    from approximatequeryengine_spark.operators.temporal import decayed_sum_by_type
-
-    cat = _catalog(spark, sf_dir)
-    return decayed_sum_by_type(spark, cat.table("events"))
-
-
-def _decayed_oracle() -> str:
-    from approximatequeryengine_spark.operators.temporal import (
-        decayed_sum_by_type_sql,
-    )
-
-    return decayed_sum_by_type_sql()
-
-
-_register("events_decayed_sum", _decayed_fn, _decayed_oracle())
-
-
-def _gapfill_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense hourly rollup with gap filling + LOCF over events (the
-    hypertable time_bucket_gapfill shape) — certifies grid
-    generation, the left join, and the gaps-and-islands carry-forward
-    in one row set."""
-    from approximatequeryengine_spark.operators.temporal import time_bucket_gapfill
-
-    cat = _catalog(spark, sf_dir)
-    return time_bucket_gapfill(spark, cat.table("events"), bucket="hour")
-
-
-def _gapfill_oracle() -> str:
-    from approximatequeryengine_spark.operators.temporal import (
-        time_bucket_gapfill_sql,
-    )
-
-    return time_bucket_gapfill_sql(bucket="hour")
-
-
-_register("events_gapfill_locf", _gapfill_fn, _gapfill_oracle())
+_table_query(
+    "adaptive_join_pairs",
+    lambda spark, df: _joins.adaptive_universe_join(df, error_bp=500),
+    _joins.adaptive_universe_join_sql(error_bp=500),
+    table="events",
+)
+_table_query(
+    "events_decayed_sum",
+    _temporal.decayed_sum_by_type,
+    _temporal.decayed_sum_by_type_sql(),
+    table="events",
+)
+_table_query(
+    "events_gapfill_locf",
+    lambda spark, df: _temporal.time_bucket_gapfill(spark, df, bucket="hour"),
+    _temporal.time_bucket_gapfill_sql(bucket="hour"),
+    table="events",
+)
 
 
 # Round-5 fourth batch: day-of-week × hour activity matrix — the
@@ -4842,26 +4042,20 @@ _sql_query(
         "GROUP BY d.day ORDER BY d.day"
     ),
 )
-# Round-5 fourth batch: pipeline-monitoring anomaly scan — top-3 most
-# anomalous DAYS per event type by daily-volume z-score (exact integer
-# moments → engine-portable ranking).
-
-
-def _anomaly_days_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = _catalog(spark, sf_dir)
-    return _temporal.anomaly_days_by_type(spark, cat.table("events"))
-
-
-_register(
-    "events_anomaly_days", _anomaly_days_fn, _temporal.anomaly_days_by_type_sql()
+# Pipeline-monitoring anomaly scan — top-3 most anomalous DAYS per
+# event type by daily-volume z-score (exact integer moments →
+# engine-portable ranking).
+_table_query(
+    "events_anomaly_days",
+    _temporal.anomaly_days_by_type,
+    _temporal.anomaly_days_by_type_sql(),
+    table="events",
 )
 
 
 def _anomaly_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming.pipeline import anomaly_days_stream
-
     _catalog(spark, sf_dir)
-    return anomaly_days_stream(spark, sf_dir)
+    return _pipeline.anomaly_days_stream(spark, sf_dir)
 
 
 # Streaming twin: drained complete-mode daily counts == the batch
@@ -4876,51 +4070,20 @@ def _ams_f2_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey from 48 signed counters in one aggregate pass —
     completes the join-size family next to the Count-Min inner
     product (cross-join side)."""
-    from approximatequeryengine_spark.plans.ams import ams_f2_estimate
-
     cat = _catalog(spark, sf_dir)
-    return ams_f2_estimate(cat.table("lineitem"), F.col("l_orderkey"))
+    return _ams.ams_f2_estimate(cat.table("lineitem"), F.col("l_orderkey"))
 
 
-def _ams_f2_oracle() -> str:
-    from approximatequeryengine_spark.plans.ams import ams_f2_estimate_sql
-
-    return ams_f2_estimate_sql("lineitem", "l_orderkey")
-
-
-_register("sketch_ams_f2_selfjoin", _ams_f2_fn, _ams_f2_oracle())
-
-
-def _ams_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of sketch_ams_f2_selfjoin: counters accumulate
-    in complete-mode micro-batch state; linearity makes drained ==
-    batch, so the batch oracle certifies the incremental path."""
-    from approximatequeryengine_spark.streaming.pipeline import ams_f2_stream
-
-    return ams_f2_stream(spark, sf_dir)
-
-
-_register("streaming_ams_f2", _ams_stream_fn, _ams_f2_oracle())
-
-
-def _lambda_serving_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lambda serving view: batch DDSketch rollup store (closed days)
-    merged with a streaming sketch of the open tail; the oracle
-    derives the same percentiles from the raw events across the whole
-    range — certifying batch + stream + merge end-to-end."""
-    from approximatequeryengine_spark.streaming.pipeline import (
-        lambda_serving_quantiles,
-    )
-
-    return lambda_serving_quantiles(spark, sf_dir)
-
-
-def _lambda_serving_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_store_range_quantiles_sql,
-    )
-
-    return ddsketch_store_range_quantiles_sql(
+_register(
+    "sketch_ams_f2_selfjoin", _ams_f2_fn, _ams.ams_f2_estimate_sql("lineitem", "l_orderkey")
+)
+# Linearity makes the drained counters equal the batch ones, so the oracle is shared.
+_register("streaming_ams_f2", _pipeline.ams_f2_stream, ORACLE["sketch_ams_f2_selfjoin"])
+# Batch store (closed days) + stream (open tail); the oracle reads raw events.
+_register(
+    "streaming_lambda_serving",
+    _pipeline.lambda_serving_quantiles,
+    _dd.ddsketch_store_range_quantiles_sql(
         "events",
         ts_col="ts",
         group="event_type",
@@ -4929,10 +4092,8 @@ def _lambda_serving_oracle() -> str:
         day_hi="2024-01-30",
         alpha=0.01,
         qs=(0.5, 0.9),
-    )
-
-
-_register("streaming_lambda_serving", _lambda_serving_fn, _lambda_serving_oracle())
+    ),
+)
 
 
 # Round-5 fourth batch: streaming CDC apply — the continuous twin of
@@ -4942,10 +4103,8 @@ _register("streaming_lambda_serving", _lambda_serving_fn, _lambda_serving_oracle
 
 
 def _merge_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.streaming.pipeline import merge_upsert_stream
-
     _catalog(spark, sf_dir)
-    return merge_upsert_stream(spark, sf_dir)
+    return _pipeline.merge_upsert_stream(spark, sf_dir)
 
 
 _register("streaming_merge_upsert", _merge_stream_fn, _merge_upsert_oracle())
@@ -4967,13 +4126,6 @@ def _sample_seek_fn(lo: int, hi: int):
         pruned zones (zero-width CI), high-selectivity ones from the
         deterministic hash sample (HT CI) — the route derived from
         the O(zones) stats, no data scan."""
-        import tempfile
-
-        from approximatequeryengine_spark.plans.sampleseek import (
-            sample_seek_range_sum,
-        )
-        from approximatequeryengine_spark.sources.zonemap import zonemap_write
-
         cat = _catalog(spark, sf_dir)
         orders = cat.table("orders").select(
             F.col("o_orderkey").alias("__rk"),
@@ -4983,14 +4135,14 @@ def _sample_seek_fn(lo: int, hi: int):
             F.col("o_orderdate"),
         )
         path = tempfile.mkdtemp(prefix="aqe_sseek_")
-        zonemap_write(
+        _zonemap.zonemap_write(
             spark,
             orders,
             path,
             key=F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")),
             n_zones=64,
         )
-        return sample_seek_range_sum(
+        return _sampleseek.sample_seek_range_sum(
             spark, path, lo, hi, row_key="__rk", fraction=0.1
         )
 
@@ -4998,11 +4150,7 @@ def _sample_seek_fn(lo: int, hi: int):
 
 
 def _sample_seek_oracle(lo: int, hi: int) -> str:
-    from approximatequeryengine_spark.plans.sampleseek import (
-        sample_seek_range_sum_sql,
-    )
-
-    return sample_seek_range_sum_sql(
+    return _sampleseek.sample_seek_range_sum_sql(
         "orders",
         key_sql="date_diff('day', DATE '1970-01-01', o_orderdate)",
         value_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
@@ -5026,35 +4174,20 @@ _register(
 )
 
 
-def _wander_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wander join (SIGMOD'16): Σ|click−purchase| cents over all
-    same-user pairs from deterministic random walks — the
-    NON-FACTORIZABLE pair measure universe sampling can't
-    pre-aggregate; each walk touches one partner row via a
-    (key, rank) equi-join."""
-    from approximatequeryengine_spark.plans.wander import wander_join_abs_gap
-
-    cat = _catalog(spark, sf_dir)
-    return wander_join_abs_gap(cat.table("events"))
-
-
-def _wander_oracle() -> str:
-    from approximatequeryengine_spark.plans.wander import wander_join_abs_gap_sql
-
-    return wander_join_abs_gap_sql()
-
-
-_register("approx_join_wander_sum", _wander_fn, _wander_oracle())
+_table_query(
+    "approx_join_wander_sum",
+    lambda spark, df: _wander.wander_join_abs_gap(df),
+    _wander.wander_join_abs_gap_sql(),
+    table="events",
+)
 
 
 def _priority_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped priority sampling (round 4): per-priority-band revenue
     totals from per-group size-512 DLT samples — the grouped
     complement of approx_sum_priority."""
-    from approximatequeryengine_spark.plans.priority import priority_grouped_sum
-
     cat = _catalog(spark, sf_dir)
-    return priority_grouped_sum(
+    return _priority.priority_grouped_sum(
         cat.table("orders"),
         key="o_orderkey",
         group="o_orderpriority",
@@ -5063,46 +4196,40 @@ def _priority_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _priority_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.priority import priority_grouped_sum_sql
-
-    return priority_grouped_sum_sql(
+_register(
+    "approx_grouped_sum_priority",
+    _priority_grouped_fn,
+    _priority.priority_grouped_sum_sql(
         "orders",
         key="o_orderkey",
         group="o_orderpriority",
         weight_cents_sql="floor(o_totalprice * 100.0 + 0.5)",
         k=512,
-    )
-
-
-_register("approx_grouped_sum_priority", _priority_grouped_fn, _priority_grouped_oracle())
+    ),
+)
 
 
 def _elp_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error-latency profile (round 4): the whole 7-fraction estimate/
     CI curve for SUM(l_extendedprice) from ONE grouped pass — nested
     hash samples make every rung's moments suffix-cumulative."""
-    from approximatequeryengine_spark.plans.elp import elp_fraction_sweep
-
     cat = _catalog(spark, sf_dir)
-    return elp_fraction_sweep(
+    return _elp.elp_fraction_sweep(
         cat.table("lineitem"),
         key="l_orderkey * 8 + l_linenumber",
         value_cents=F.floor(F.col("l_extendedprice") * 100.0 + 0.5),
     )
 
 
-def _elp_oracle() -> str:
-    from approximatequeryengine_spark.plans.elp import elp_fraction_sweep_sql
-
-    return elp_fraction_sweep_sql(
+_register(
+    "elp_fraction_sweep",
+    _elp_fn,
+    _elp.elp_fraction_sweep_sql(
         "lineitem",
         key="l_orderkey * 8 + l_linenumber",
         value_cents_sql="floor(l_extendedprice * 100.0 + 0.5)",
-    )
-
-
-_register("elp_fraction_sweep", _elp_fn, _elp_oracle())
+    ),
+)
 
 
 def _synopsis_append_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5111,18 +4238,6 @@ def _synopsis_append_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     base — nested thresholds make maintenance an eviction filter —
     then read out. The oracle derives from the FULL table, so the
     driver row certifies append == rebuild."""
-    import tempfile
-
-    from approximatequeryengine_spark.functions.hashing import (
-        fraction_threshold,
-        portable_hash_col,
-    )
-    from approximatequeryengine_spark.plans.synopsis import (
-        synopsis_append,
-        synopsis_build,
-        synopsis_stratified_sum,
-    )
-
     cat = _catalog(spark, sf_dir)
     orders = cat.table("orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -5131,51 +4246,39 @@ def _synopsis_append_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         fraction_threshold(0.9)
     )
     path = tempfile.mkdtemp(prefix="aqe_synapp_")
-    synopsis_build(
+    _synopsis.synopsis_build(
         spark, orders.filter(split), path, "o_orderpriority", "o_orderkey", cap=2048
     )
-    synopsis_append(
+    _synopsis.synopsis_append(
         spark, orders.filter(~split), path, "o_orderpriority", "o_orderkey", cap=2048
     )
-    return synopsis_stratified_sum(
+    return _synopsis.synopsis_stratified_sum(
         spark, path, "o_orderpriority",
         "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)",
     )
 
 
-_register("synopsis_incremental_append", _synopsis_append_fn, _synopsis_oracle())
+_register("synopsis_incremental_append", _synopsis_append_fn, ORACLE["synopsis_stratified_sum"])
 
 
 def _ddsketch_collapsed_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-memory DDSketch (round 4): collapse to ≤64 buckets, read
     the high quantiles — the paper's memory contract, α preserved
     above the collapsed mass."""
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_buckets,
-        ddsketch_collapse,
-        ddsketch_readout,
-    )
-
     cat = _catalog(spark, sf_dir)
-    buckets = ddsketch_collapse(
-        ddsketch_buckets(cat.table("lineitem"), "l_extendedprice", alpha=0.01),
+    buckets = _dd.ddsketch_collapse(
+        _dd.ddsketch_buckets(cat.table("lineitem"), "l_extendedprice", alpha=0.01),
         max_buckets=64,
     )
-    return ddsketch_readout(buckets, alpha=0.01, qs=(0.9, 0.99))
-
-
-def _ddsketch_collapsed_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_collapsed_quantiles_sql,
-    )
-
-    return ddsketch_collapsed_quantiles_sql(
-        "lineitem", "l_extendedprice", alpha=0.01, max_buckets=64, qs=(0.9, 0.99)
-    )
+    return _dd.ddsketch_readout(buckets, alpha=0.01, qs=(0.9, 0.99))
 
 
 _register(
-    "sketch_ddsketch_collapsed", _ddsketch_collapsed_fn, _ddsketch_collapsed_oracle()
+    "sketch_ddsketch_collapsed",
+    _ddsketch_collapsed_fn,
+    _dd.ddsketch_collapsed_quantiles_sql(
+        "lineitem", "l_extendedprice", alpha=0.01, max_buckets=64, qs=(0.9, 0.99)
+    ),
 )
 
 
@@ -5184,59 +4287,30 @@ def _ddsketch_store_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     DDSketch buckets persisted once, then a two-week percentile query
     served by partition-pruned bucket merge — the Druid-style rollup
     pattern; the oracle derives the same answers from the raw events."""
-    import tempfile
-
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_store_range_quantiles,
-        ddsketch_store_write,
-    )
-
     cat = _catalog(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="aqe_ddstore_")
-    ddsketch_store_write(
+    _dd.ddsketch_store_write(
         spark, cat.table("events"), path, "ts", "event_type", "value"
     )
-    return ddsketch_store_range_quantiles(
+    return _dd.ddsketch_store_range_quantiles(
         spark, path, "2024-01-08", "2024-01-21", "event_type"
     )
 
 
-def _ddsketch_store_oracle() -> str:
-    from approximatequeryengine_spark.plans.ddsketch import (
-        ddsketch_store_range_quantiles_sql,
-    )
-
-    return ddsketch_store_range_quantiles_sql(
-        "events", "ts", "event_type", "value", "2024-01-08", "2024-01-21"
-    )
-
-
 _register(
-    "sketch_rollup_store_quantiles", _ddsketch_store_fn, _ddsketch_store_oracle()
+    "sketch_rollup_store_quantiles",
+    _ddsketch_store_fn,
+    _dd.ddsketch_store_range_quantiles_sql(
+        "events", "ts", "event_type", "value", "2024-01-08", "2024-01-21"
+    ),
 )
 
 
-def _poststrat_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-stratified SUM (plans/poststrat.py): uniform 10% sample
-    re-weighted by exact per-return-flag counts — between-stratum
-    variance removed after the fact, no stratified design needed."""
-    from approximatequeryengine_spark.plans.poststrat import poststrat_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return poststrat_sum_ci(
-        cat.table("lineitem"), "l_extendedprice", "l_returnflag", spec
-    )
-
-
-def _poststrat_oracle() -> str:
-    from approximatequeryengine_spark.plans.poststrat import poststrat_sum_ci_sql
-
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return poststrat_sum_ci_sql("lineitem", "l_extendedprice", "l_returnflag", spec)
-
-
-_register("approx_sum_poststratified", _poststrat_fn, _poststrat_oracle())
+_twin_query(
+    "approx_sum_poststratified", _poststrat.poststrat_sum_ci, _poststrat.poststrat_sum_ci_sql,
+    "lineitem", "l_extendedprice", "l_returnflag",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+)
 
 
 def _poststrat_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5246,13 +4320,9 @@ def _poststrat_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     poststrat_grouped_sum_ci). Reachable from SQL as
     ``APPROX(SUM(x)) ... GROUP BY g`` with method='poststrat' +
     stratum_col=."""
-    from approximatequeryengine_spark.plans.poststrat import (
-        poststrat_grouped_sum_ci,
-    )
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return poststrat_grouped_sum_ci(
+    return _poststrat.poststrat_grouped_sum_ci(
         cat.table("lineitem"),
         "l_extendedprice",
         "l_linestatus",
@@ -5262,13 +4332,9 @@ def _poststrat_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _poststrat_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.poststrat import (
-        poststrat_grouped_sum_ci_sql,
-    )
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     return (
-        poststrat_grouped_sum_ci_sql(
+        _poststrat.poststrat_grouped_sum_ci_sql(
             "lineitem", "l_extendedprice", "l_linestatus", "l_returnflag", spec
         )
         + " ORDER BY l_linestatus"
@@ -5282,87 +4348,21 @@ _register(
 )
 
 
-def _image_ahash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup clustering by perceptual average-hash
-    (operators/multimodal.py::image_ahash_clusters): real PNG encode →
-    Arrow → decode → 64-bit aHash → exact-signature groupBy; planted
-    +1-brightness variants land in the same cluster because the aHash
-    bit rule is shift-invariant."""
-    from approximatequeryengine_spark.operators.multimodal import (
-        image_ahash_clusters,
-    )
-
-    cat = _catalog(spark, sf_dir)
-    return image_ahash_clusters(spark, cat.table("documents"))
-
-
-def _image_ahash_oracle() -> str:
-    from approximatequeryengine_spark.operators.multimodal import (
-        image_ahash_clusters_sql,
-    )
-
-    return image_ahash_clusters_sql()
-
-
-_register("dedup_image_ahash_clusters", _image_ahash_fn, _image_ahash_oracle())
-
-
-def _audio_fp_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-dup clustering by volume-invariant energy-contour
-    fingerprint (operators/multimodal.py::audio_fingerprint_clusters):
-    real 16-bit PCM encode → Arrow → decode → 31 sign-of-difference
-    bits over window energies → exact-signature groupBy; planted
-    2× -volume variants land in the same cluster because every energy
-    ratio survives amplitude scaling."""
-    from approximatequeryengine_spark.operators.multimodal import (
-        audio_fingerprint_clusters,
-    )
-
-    cat = _catalog(spark, sf_dir)
-    return audio_fingerprint_clusters(spark, cat.table("documents"))
-
-
-def _audio_fp_oracle() -> str:
-    from approximatequeryengine_spark.operators.multimodal import (
-        audio_fingerprint_clusters_sql,
-    )
-
-    return audio_fingerprint_clusters_sql()
-
-
-_register(
-    "dedup_audio_fingerprint_clusters", _audio_fp_fn, _audio_fp_oracle()
+_table_query(
+    "dedup_image_ahash_clusters", _mm.image_ahash_clusters, _mm.image_ahash_clusters_sql()
+)
+_table_query(
+    "dedup_audio_fingerprint_clusters",
+    _mm.audio_fingerprint_clusters,
+    _mm.audio_fingerprint_clusters_sql(),
 )
 
 
-def _regaux_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regression estimator for SUM(revenue) using the exact book
-    total of l_extendedprice as the auxiliary (plans/regression.py):
-    revenue = price*(1-discount) is ~0.999-correlated with price, so
-    the CI shrinks by ~sqrt(1-r^2) vs plain expansion at the same 10%
-    sample - estimator quality bought with one cheap auxiliary scan."""
-    from approximatequeryengine_spark.plans.regression import regaux_sum_ci
-
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return regaux_sum_ci(
-        cat.table("lineitem"),
-        "l_extendedprice * (1 - l_discount)",
-        "l_extendedprice",
-        spec,
-    )
-
-
-def _regaux_oracle() -> str:
-    from approximatequeryengine_spark.plans.regression import regaux_sum_ci_sql
-
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return regaux_sum_ci_sql(
-        "lineitem", "l_extendedprice * (1 - l_discount)", "l_extendedprice", spec
-    )
-
-
-_register("approx_sum_regaux", _regaux_fn, _regaux_oracle())
+_twin_query(
+    "approx_sum_regaux", _regression.regaux_sum_ci, _regression.regaux_sum_ci_sql,
+    "lineitem", "l_extendedprice * (1 - l_discount)", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+)
 
 
 def _regaux_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5371,13 +4371,9 @@ def _regaux_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     total (plans/regression.py::regaux_grouped_sum_ci). Reachable from
     SQL as ``APPROX(SUM(x)) ... GROUP BY g`` with method='regaux' +
     aux_column=."""
-    from approximatequeryengine_spark.plans.regression import (
-        regaux_grouped_sum_ci,
-    )
-
     cat = _catalog(spark, sf_dir)
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return regaux_grouped_sum_ci(
+    return _regression.regaux_grouped_sum_ci(
         cat.table("lineitem"),
         "l_extendedprice * (1 - l_discount)",
         "l_returnflag",
@@ -5387,13 +4383,9 @@ def _regaux_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _regaux_grouped_oracle() -> str:
-    from approximatequeryengine_spark.plans.regression import (
-        regaux_grouped_sum_ci_sql,
-    )
-
     spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
     return (
-        regaux_grouped_sum_ci_sql(
+        _regression.regaux_grouped_sum_ci_sql(
             "lineitem",
             "l_extendedprice * (1 - l_discount)",
             "l_returnflag",
@@ -5409,70 +4401,21 @@ _register(
 )
 
 
-def _emb_drift_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space drift monitor
-    (operators/profiling.py::embedding_drift_by_label): cosine between
-    each label's integer sum-vector and the corpus sum-vector — the
-    encoder/mix-shift alarm that fires before ANN or semantic-dedup
-    quality visibly drops. All-integer accumulation; one division and
-    two sqrts are the only float ops."""
-    from approximatequeryengine_spark.operators.profiling import (
-        embedding_drift_by_label,
-    )
-
-    cat = _catalog(spark, sf_dir)
-    return embedding_drift_by_label(spark, cat.table("embeddings"))
-
-
-def _emb_drift_oracle() -> str:
-    from approximatequeryengine_spark.operators.profiling import (
-        embedding_drift_by_label_sql,
-    )
-
-    return embedding_drift_by_label_sql()
-
-
-_register("profile_embedding_drift", _emb_drift_fn, _emb_drift_oracle())
-
-
-def _emb_drift_stream_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of profile_embedding_drift: per-(label, dim)
-    integer sums maintained in complete-mode state; drained state ==
-    batch table (integer sums are order-free), so the batch oracle
-    certifies the incremental path verbatim."""
-    from approximatequeryengine_spark.streaming import pipeline as _p
-
-    return _p.embedding_drift_stream(spark, sf_dir)
-
-
-_register(
-    "streaming_embedding_drift", _emb_drift_stream_fn, _emb_drift_oracle()
+_table_query(
+    "profile_embedding_drift",
+    _prof.embedding_drift_by_label,
+    _prof.embedding_drift_by_label_sql(),
+    table="embeddings",
 )
-
-
-# Round-6 final pair (17th/18th registrations; ≤20 cap holds).
-#
-# Temperature-smoothed language mixture: the multilingual-LM sampling
-# formula q_l ∝ p_l^α with α = 1/2 — upsample low-resource languages by
-# sampling on sqrt(token mass). Integer-exact throughout (floor∘sqrt
-# weights, ppm readouts via BIGINT floor division); see the operator
-# docstring for the cross-engine exactness argument.
-def _mix_temp_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from approximatequeryengine_spark.operators.curation import mixture_temperature
-
-    cat = _catalog(spark, sf_dir)
-    return mixture_temperature(spark, cat.table("documents"))
-
-
-def _mix_temp_oracle() -> str:
-    from approximatequeryengine_spark.operators.curation import (
-        mixture_temperature_sql,
-    )
-
-    return mixture_temperature_sql()
-
-
-_register("curation_mixture_temperature", _mix_temp_fn, _mix_temp_oracle())
+# Integer sums are order-free, so the drained state shares the batch oracle.
+_register(
+    "streaming_embedding_drift",
+    _pipeline.embedding_drift_stream,
+    ORACLE["profile_embedding_drift"],
+)
+_table_query(
+    "curation_mixture_temperature", _cur.mixture_temperature, _cur.mixture_temperature_sql()
+)
 
 
 # SCD2 interval build (gaps-and-islands): collapse each customer's
@@ -5707,11 +4650,9 @@ ORDER BY s_name
 def _fixture_replicas(sf_dir: str) -> int:
     """Replica count of a synthetic scaling corpus (fixture_meta.json,
     written by tools/make_sf1.py); 1 for the driver fixtures."""
-    import json as _json
-
     try:
         with open(os.path.join(sf_dir, "fixture_meta.json")) as f:
-            return max(int(_json.load(f).get("replicas", 1)), 1)
+            return max(int(json.load(f).get("replicas", 1)), 1)
     except (OSError, ValueError):
         return 1
 
@@ -5807,7 +4748,10 @@ _CERTIFY_FIRST = [
 
 
 def _finalize_order() -> None:
-    front = [n for n in _CERTIFY_FIRST if n in QUERIES]
+    missing = [n for n in _CERTIFY_FIRST if n not in QUERIES]
+    if missing:
+        raise ValueError(f"_CERTIFY_FIRST names no registered entry: {missing}")
+    front = list(_CERTIFY_FIRST)
     rest = [n for n in QUERIES if n not in _CERTIFY_FIRST]
     ordered = {n: QUERIES[n] for n in [*front, *rest]}
     QUERIES.clear()

@@ -7,12 +7,21 @@ What must hold:
   other scheme is not;
 - ``read_partitions_arrow`` returns exactly the rows of the named
   partition directories, for tables from both writers, skipping the
-  JVM writer's ``.crc`` and ``_SUCCESS`` files.
+  JVM writer's ``.crc`` and ``_SUCCESS`` files;
+- every data type ``_DATA_TYPE_RE`` admits to the Arrow writer reads
+  back equal to the input and to a JVM ``partitionBy`` write of the
+  same frame, NULLs included, and a type outside that set takes the JVM
+  writer.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+from decimal import Decimal
+
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from approximatequeryengine_spark.sources.arrow_write import (
     _local_path,
@@ -54,3 +63,67 @@ def test_read_partitions_arrow_reads_only_named_directories(spark, tmp_path):
         tbl = read_partitions_arrow(path, "part", [2, 5], ["k", "v"])
         assert tbl.column_names == ["k", "v"]
         assert sorted(zip(*(tbl[c].to_pylist() for c in ("k", "v")))) == want
+
+
+# One column per type the Arrow writer admits; row 2 holds a NULL in
+# every data column, row 1 NULL array elements, row 3 a NULL partition.
+_ROUNDTRIP_SCHEMA = (
+    "id bigint, part int, ti tinyint, si smallint, i int, bi bigint, f float, "
+    "d double, b boolean, s string, bin binary, dt date, ts timestamp, "
+    "dec decimal(12,2), a_ti array<tinyint>, a_si array<smallint>, "
+    "a_i array<int>, a_bi array<bigint>, a_f array<float>, a_d array<double>, "
+    "a_b array<boolean>, a_s array<string>"
+)
+_ROUNDTRIP_ROWS = [
+    (0, 1, -3, 300, -70000, 2**40, 1.5, -2.25, True, "x=y/%z", b"\x00\xff",
+     datetime.date(1997, 1, 1), datetime.datetime(2024, 1, 8, 12, 30, 1, 250000),
+     Decimal("1234.56"), [1, -2], [300], [70000], [2**40], [0.5], [1e-3],
+     [True, False], ["a", ""]),
+    (1, 1, 0, 0, 0, 0, 0.0, 0.0, False, "", b"", datetime.date(1970, 1, 1),
+     datetime.datetime(1970, 1, 1), Decimal("0.00"), [None], [None], [None],
+     [None], [None], [None], [None], [None]),
+    (2, 2) + (None,) * 20,
+    (3, None, 7, 7, 7, 7, 7.0, 7.0, True, "n", b"n", datetime.date(2001, 12, 31),
+     datetime.datetime(2001, 12, 31, 23, 59, 59), Decimal("-0.01"), [], [], [], [],
+     [], [], [], []),
+]
+
+
+def _written(spark, path, columns):
+    return sorted(spark.read.parquet(path).select(*columns).collect())
+
+
+@pytest.fixture
+def jvm_writes(monkeypatch):
+    """Paths handed to the JVM parquet writer while the test runs."""
+    paths = []
+    jvm_parquet = DataFrameWriter.parquet
+
+    def _spy(self, path, *args, **kw):
+        paths.append(path)
+        return jvm_parquet(self, path, *args, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _spy)
+    return paths
+
+
+def test_arrow_write_roundtrip(spark, tmp_path, jvm_writes):
+    df = spark.createDataFrame(_ROUNDTRIP_ROWS, _ROUNDTRIP_SCHEMA)
+    arrow, jvm = str(tmp_path / "arrow"), str(tmp_path / "jvm")
+    write_partitioned_parquet(df, arrow, "part")
+    assert jvm_writes == []  # every column passed the type gate
+    df.write.partitionBy("part").parquet(jvm)
+    want = sorted(df.collect())
+    assert _written(spark, arrow, df.columns) == want
+    assert _written(spark, jvm, df.columns) == want
+    assert spark.read.parquet(arrow).dtypes == spark.read.parquet(jvm).dtypes
+
+
+def test_arrow_write_unsupported_type_takes_jvm_writer(spark, tmp_path, jvm_writes):
+    df = spark.createDataFrame(
+        [(0, 1, {"a": 1}), (1, 2, None)], "id bigint, part int, m map<string,int>"
+    )
+    path = str(tmp_path / "m")
+    write_partitioned_parquet(df, path, "part")
+    assert jvm_writes == [path]
+    assert _written(spark, path, ["id", "m"]) == [(0, {"a": 1}), (1, None)]
