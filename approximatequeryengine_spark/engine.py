@@ -89,10 +89,7 @@ from approximatequeryengine_spark.plans.outlier import (
     outlier_grouped_sum_ci,
     outlier_sum_ci,
 )
-from approximatequeryengine_spark.plans.poststrat import (
-    poststrat_grouped_sum_ci,
-    poststrat_sum_ci,
-)
+from approximatequeryengine_spark.plans.poststrat import poststrat_sum_ci
 from approximatequeryengine_spark.plans.pps import pps_sum_ci
 from approximatequeryengine_spark.plans.priority import priority_sample_subset_sum
 from approximatequeryengine_spark.plans.quantiles import (
@@ -100,27 +97,14 @@ from approximatequeryengine_spark.plans.quantiles import (
     grouped_order_stat_ci,
     order_stat_marker_ci,
 )
-from approximatequeryengine_spark.plans.regression import (
-    regaux_grouped_sum_ci,
-    regaux_sum_ci,
-)
+from approximatequeryengine_spark.plans.regression import regaux_sum_ci
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
     sql_double,
 )
-from approximatequeryengine_spark.plans.twostage import (
-    TS_F1,
-    TS_F2,
-    twostage_grouped_sum_ci,
-    twostage_sum_ci,
-)
-from approximatequeryengine_spark.plans.variance import (
-    approx_corr_ci,
-    approx_grouped_corr_ci,
-    approx_grouped_stddev_ci,
-    approx_stddev_ci,
-)
+from approximatequeryengine_spark.plans.twostage import TS_F1, TS_F2, twostage_sum_ci
+from approximatequeryengine_spark.plans.variance import approx_corr_ci, approx_stddev_ci
 from approximatequeryengine_spark.result import (
     ApproximationStatus,
     ApproxResult,
@@ -847,17 +831,11 @@ class AQEngine:
         spec = q.spec
         if not spec.column:
             raise ValueError("STDDEV requires a column")
-        if spec.group_by:
-            if not q.approx:
+        if not q.approx:
+            if spec.group_by:
                 # Plain grouped STDDEV is ordinary Spark SQL — don't
                 # regress the passthrough the grammar widening captured.
                 return self._run_spark_sql(q)
-            s_spec = self._sample_spec(q)
-            rdf = approx_grouped_stddev_ci(
-                self._base_df(spec), spec.column, spec.group_by, s_spec, z=q.z
-            )
-            return self._grouped_result(q, rdf, "moment", s_spec)
-        if not q.approx:
             rdf = self._base_df(spec).agg(
                 F.stddev_samp(F.col(spec.column).cast("double")).alias("stddev")
             )
@@ -867,7 +845,11 @@ class AQEngine:
             res.computation_time = time.time() - q.t0
             return res
         s_spec = self._sample_spec(q)
-        rdf = approx_stddev_ci(self._base_df(spec), spec.column, s_spec, z=q.z)
+        rdf = approx_stddev_ci(
+            self._base_df(spec), spec.column, s_spec, z=q.z, group_by=spec.group_by
+        )
+        if spec.group_by:
+            return self._grouped_result(q, rdf, "moment", s_spec)
         return self._ci_result(q, rdf, rdf.collect()[0], "stddev", "moment", s_spec)
 
     def _run_corr(self, q: _Query) -> ApproxResult:
@@ -877,16 +859,9 @@ class AQEngine:
         spec = q.spec
         if not spec.column or not spec.column2:
             raise ValueError("CORR requires two columns: CORR(x, y)")
-        if spec.group_by:
-            if not q.approx:
-                return self._run_spark_sql(q)
-            s_spec = self._sample_spec(q)
-            rdf = approx_grouped_corr_ci(
-                self._base_df(spec), spec.column, spec.column2,
-                spec.group_by, s_spec, z=q.z,
-            )
-            return self._grouped_result(q, rdf, "fisher_z", s_spec)
         if not q.approx:
+            if spec.group_by:
+                return self._run_spark_sql(q)
             rdf = self._base_df(spec).agg(
                 F.corr(
                     F.col(spec.column).cast("double"),
@@ -900,8 +875,11 @@ class AQEngine:
             return res
         s_spec = self._sample_spec(q)
         rdf = approx_corr_ci(
-            self._base_df(spec), spec.column, spec.column2, s_spec, z=q.z
+            self._base_df(spec), spec.column, spec.column2, s_spec, z=q.z,
+            group_by=spec.group_by,
         )
+        if spec.group_by:
+            return self._grouped_result(q, rdf, "fisher_z", s_spec)
         return self._ci_result(q, rdf, rdf.collect()[0], "corr", "fisher_z", s_spec)
 
     def _run_count_distinct(self, q: _Query) -> ApproxResult:
@@ -1358,6 +1336,22 @@ def _cents_floor(q: _Query):
     return F.floor(F.col(q.spec.column) * 100.0 + 0.5)
 
 
+def _twostage(q: _Query, base: DataFrame, s: SamplingSpec) -> DataFrame:
+    return twostage_sum_ci(base, s.key, _cents_floor(q), z=q.z, group_by=q.spec.group_by)
+
+
+def _poststrat(q: _Query, base: DataFrame, s: SamplingSpec) -> DataFrame:
+    return poststrat_sum_ci(
+        base, q.spec.column, q.stratum_col, s, z=q.z, group_by=q.spec.group_by
+    )
+
+
+def _regaux(q: _Query, base: DataFrame, s: SamplingSpec) -> DataFrame:
+    return regaux_sum_ci(
+        base, q.spec.column, q.aux_column, s, z=q.z, group_by=q.spec.group_by
+    )
+
+
 _ALL_AGGS = ("SUM", "AVG", "COUNT", "MIN", "MAX")
 _ESTIMATORS: dict[str, _Method] = {
     **dict.fromkeys(
@@ -1384,29 +1378,18 @@ _ESTIMATORS: dict[str, _Method] = {
         n_samples="n_sample",
     ),
     "twostage": _Method(
-        lambda q, base, s: twostage_sum_ci(base, s.key, _cents_floor(q), z=q.z),
-        lambda q, base, s: twostage_grouped_sum_ci(
-            base, s.key, q.spec.group_by, _cents_floor(q), z=q.z
-        ).orderBy(q.spec.group_by),
+        _twostage, _twostage,
         estimate="sum_value",
         n_samples="n_rows",
         fraction=TS_F1 * TS_F2,
     ),
     "poststrat": _Method(
-        lambda q, base, s: poststrat_sum_ci(
-            base, q.spec.column, q.stratum_col, s, z=q.z
-        ),
-        lambda q, base, s: poststrat_grouped_sum_ci(
-            base, q.spec.column, q.spec.group_by, q.stratum_col, s, z=q.z
-        ),
+        _poststrat, _poststrat,
         needs=("stratum_col", "<column> — the column whose exact counts "
                "re-weight the sample"),
     ),
     "regaux": _Method(
-        lambda q, base, s: regaux_sum_ci(base, q.spec.column, q.aux_column, s, z=q.z),
-        lambda q, base, s: regaux_grouped_sum_ci(
-            base, q.spec.column, q.spec.group_by, q.aux_column, s, z=q.z
-        ),
+        _regaux, _regaux,
         needs=("aux_column", "<column/expression> — the auxiliary whose "
                "exact total calibrates the sample"),
     ),

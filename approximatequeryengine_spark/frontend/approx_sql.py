@@ -104,7 +104,7 @@ from __future__ import annotations
 
 import re
 
-from approximatequeryengine_spark.plans.estimators import Z_95
+from approximatequeryengine_spark.plans.estimators import Z_95, cents_sql
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     sampling_p_sql,
@@ -1371,11 +1371,6 @@ FROM aqe_r{g_grp}
     return f"{sql} {tail}" if tail else sql
 
 
-def _cents_sql(expr: str) -> str:
-    """The portable integer-cents grid (estimators.cents_col twin)."""
-    return f"CAST(floor(CAST({expr} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
-
-
 def _poststrat_text(
     from_exact: str,
     from_sampled: str,
@@ -1395,7 +1390,7 @@ def _poststrat_text(
     before any join), per-group-cell order-pinned cumulative folds
     read with max_by. ``groups`` may hold any number of plain output
     group columns (aliased aqe_q0..k in the folds)."""
-    c = _cents_sql(expr)
+    c = cents_sql(expr)
     base_where = f" WHERE {where}" if where else ""
     qs = [f"aqe_q{i}" for i in range(len(groups))]
     q_sel = "".join(
@@ -1491,8 +1486,8 @@ def _regaux_text(
     constant auxiliary) fall back to plain expansion, flagged in
     ``method``. ``groups`` may hold any number of plain group
     columns."""
-    y = _cents_sql(expr)
-    x = _cents_sql(aux)
+    y = cents_sql(expr)
+    x = cents_sql(aux)
     base_where = f" WHERE {where}" if where else ""
     qs = [f"aqe_q{i}" for i in range(len(groups))]
     q_sel = "".join(f"{g} AS {q}, " for g, q in zip(groups, qs))

@@ -48,6 +48,11 @@ def cents_col(col: Column) -> Column:
     return F.floor(col.cast("double") * 100.0 + 0.5).cast("long")
 
 
+def cents_sql(expr: str) -> str:
+    """SQL twin of :func:`cents_col`."""
+    return f"CAST(floor(CAST({expr} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
+
+
 def finite_col(col: Column) -> Column:
     """Telemetry hygiene, one copy: a non-finite measurement (NaN/±Inf
     — sensor glitches, div-by-zero upstream) is NO measurement and maps

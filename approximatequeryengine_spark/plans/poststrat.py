@@ -36,6 +36,12 @@ fix; the caller escalates the fraction or collapses strata). A stratum
 with n_g = 1 contributes its point estimate with zero variance term,
 counted in ``thin_strata``.
 
+GROUP BY: a grouped query runs the same estimator within each output
+group — exact counts per (group, stratum) cell, folds order-pinned
+within each group — and every group present in the POPULATION appears
+(a group the sample missed reads estimate 0 with all its strata
+counted missing). A global query is the call with no ``group_by``.
+
 Reference anchor: the reference has no post-stratification; this
 extends its R15 stratified design (custom_bplus_db.cpp:1239-1324) with
 the estimator-side twin the survey literature pairs it with.
@@ -43,10 +49,12 @@ the estimator-side twin the survey literature pairs it with.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.plans.estimators import Z_95, cents_col
+from approximatequeryengine_spark.plans.estimators import Z_95, cents_col, cents_sql
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
@@ -63,27 +71,33 @@ def poststrat_sum_ci(
     spec: SamplingSpec,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> DataFrame:
-    """1-row DataFrame: (estimate, ci_lower, ci_upper, n_samples,
-    n_strata, missing_strata, thin_strata) — post-stratified SUM over a
-    uniform sample, exact stratum counts, order-pinned folds."""
-    cents = cents_col(F.col(column))
-    exact = df.groupBy(F.col(stratum_col).alias("g")).agg(
-        F.count(F.lit(1)).alias("n_pop")
-    )
+    """(estimate, ci_lower, ci_upper, n_samples, n_strata,
+    missing_strata, thin_strata) — post-stratified SUM over a uniform
+    sample, exact stratum counts, order-pinned folds; one row, or one
+    row per ``group_by`` value led by that column.
+
+    Scale shape: two scans (count-only + sampled moments), one shuffle
+    each on (group, stratum), then |groups × strata| bounded rows
+    through the window — never data-sized."""
+    keys = [F.col(group_by)] if group_by else []
+    # cast BEFORE the square: a long*long product wraps past ~3e9
+    # cents/row; decimal(38,0)×decimal(38,0) stays exact.
+    c = cents_col(F.col(column)).cast(_DEC)
+    exact = df.groupBy(
+        *[k.alias("q") for k in keys], F.col(stratum_col).alias("g")
+    ).agg(F.count(F.lit(1)).alias("n_pop"))
     sample = (
         apply_sampling(df, spec)
-        .select(F.col(stratum_col).alias("g2"), cents.alias("c"))
-        .groupBy("g2")
+        .groupBy(*[k.alias("q2") for k in keys], F.col(stratum_col).alias("g2"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("c").cast(_DEC)).alias("sc"),
-            # cast BEFORE the square: a long*long product wraps past
-            # ~3e9 cents/row; decimal(38,0)×decimal(38,0) stays exact.
-            F.sum(F.col("c").cast(_DEC) * F.col("c").cast(_DEC)).alias("sc2"),
+            F.sum(c).alias("sc"),
+            F.sum(c * c).alias("sc2"),
         )
     )
-    return poststrat_from_moments(exact, sample, z=z, round_to=round_to)
+    return poststrat_from_moments(exact, sample, z=z, round_to=round_to, group_by=group_by)
 
 
 def poststrat_from_moments(
@@ -91,18 +105,27 @@ def poststrat_from_moments(
     sample: DataFrame,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> DataFrame:
     """The estimator's finalization, factored so PRE-AGGREGATED moments
     can feed it — the streaming twin maintains per-stratum (n, Σc, Σc²)
     running state and finalizes here once the stream drains. ``exact``
     is (g, n_pop); ``sample`` is (g2, n, sc, sc2) with sc/sc2 on the
-    integer cents grid (sc2 in DECIMAL(38,0))."""
+    integer cents grid (sc2 in DECIMAL(38,0)). With ``group_by``, both
+    lead with the group as ``q`` / ``q2``."""
+    qs = ["q"] if group_by else []
+    # Null-safe join: a NULL group or stratum is a real group on both
+    # sides (groupBy keeps it); a plain equi-join would silently drop
+    # its sampled moments and misreport it as missing.
+    on = reduce(
+        lambda a, k: a & exact[k].eqNullSafe(sample[f"{k}2"]),
+        qs,
+        exact["g"].eqNullSafe(sample["g2"]),
+    )
     per = (
-        # Null-safe join: a NULL stratum is a real group on both sides
-        # (groupBy keeps it); a plain equi-join would silently drop its
-        # sampled moments and misreport it as missing.
-        exact.join(sample, exact["g"].eqNullSafe(sample["g2"]), "left")
+        exact.join(sample, on, "left")
         .select(
+            *qs,
             "g",
             "n_pop",
             F.coalesce(F.col("n"), F.lit(0)).alias("n"),
@@ -144,15 +167,16 @@ def poststrat_from_moments(
     # rank is never NULL (a NULL stratum would make max_by skip its
     # row), and NULLS FIRST is pinned explicitly because Spark and
     # DuckDB default to opposite NULL placements in ASC order.
-    ow = Window.orderBy(F.col("g").asc_nulls_first())
+    ow = Window.partitionBy(*qs).orderBy(F.col("g").asc_nulls_first())
     w = ow.rowsBetween(Window.unboundedPreceding, 0)
     folded = per.select(
+        *qs,
         "n",
         F.row_number().over(ow).alias("rid"),
         F.sum("t").over(w).alias("cum_t"),
         F.sum("v").over(w).alias("cum_v"),
     )
-    agg = folded.agg(
+    agg = folded.groupBy(*qs).agg(
         F.max_by("cum_t", "rid").alias("tot_t"),
         F.max_by("cum_v", "rid").alias("tot_v"),
         F.sum("n").alias("n_samples"),
@@ -160,14 +184,15 @@ def poststrat_from_moments(
         F.sum(F.when(F.col("n") == 0, 1).otherwise(0)).alias("missing_strata"),
         F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).alias("thin_strata"),
     )
-    # Empty-input degeneracy: the aggregate over zero strata returns
-    # one all-NULL row — coalesce to a zero estimate with a zero-width
-    # CI so the engine's n_samples readout never sees NULL.
+    # Empty-input degeneracy: the global aggregate over zero strata
+    # returns one all-NULL row — coalesce to a zero estimate with a
+    # zero-width CI so the engine's n_samples readout never sees NULL.
     tot_t = F.coalesce(F.col("tot_t"), F.lit(0.0))
     tot_v = F.coalesce(F.col("tot_v"), F.lit(0.0))
     est = tot_t / F.lit(100.0)
     margin = F.lit(z) * F.sqrt(F.greatest(tot_v, F.lit(0.0))) / F.lit(100.0)
     return agg.select(
+        *[F.col(q).alias(group_by) for q in qs],
         F.round(est, round_to).alias("estimate"),
         F.round(est - margin, round_to).alias("ci_lower"),
         F.round(est + margin, round_to).alias("ci_upper"),
@@ -180,206 +205,6 @@ def poststrat_from_moments(
     )
 
 
-def poststrat_grouped_sum_ci(
-    df: DataFrame,
-    column: str,
-    group_by: str,
-    stratum_col: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> DataFrame:
-    """Grouped post-stratified SUM: one row per ``group_by`` value with
-    (estimate, ci_lower, ci_upper, n_samples, n_strata, missing_strata,
-    thin_strata) — the per-group twin of :func:`poststrat_sum_ci`.
-
-    Math is the global estimator applied within each output group: the
-    exact counts are per (group, stratum) cells (the SAME one
-    column-pruned scan, just a two-column groupBy), each cell
-    contributes N_qg·ȳ_qg to its group's total and the Cochran
-    conditional variance to its group's V̂, and the across-strata folds
-    are order-pinned WITHIN each group (a per-group cumulative window
-    over the stratum rank). Every output group present in the
-    POPULATION appears — a group the sample missed entirely reads
-    estimate 0 with all its strata counted missing, the same
-    surface-the-defect contract as the global form (and as the grouped
-    adaptive's missed-group guard).
-
-    Scale shape: two scans (count-only + sampled moments), one shuffle
-    each on (group, stratum), then |groups × strata| bounded rows
-    through the window — never data-sized."""
-    cents = cents_col(F.col(column))
-    exact = df.groupBy(
-        F.col(group_by).alias("q"), F.col(stratum_col).alias("g")
-    ).agg(F.count(F.lit(1)).alias("n_pop"))
-    sample = (
-        apply_sampling(df, spec)
-        .select(
-            F.col(group_by).alias("q2"),
-            F.col(stratum_col).alias("g2"),
-            cents.alias("c"),
-        )
-        .groupBy("q2", "g2")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("c").cast(_DEC)).alias("sc"),
-            F.sum(F.col("c").cast(_DEC) * F.col("c").cast(_DEC)).alias("sc2"),
-        )
-    )
-    per = (
-        exact.join(
-            sample,
-            exact["q"].eqNullSafe(sample["q2"])
-            & exact["g"].eqNullSafe(sample["g2"]),
-            "left",
-        )
-        .select(
-            "q",
-            "g",
-            "n_pop",
-            F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-            F.coalesce(F.col("sc"), F.lit(0).cast(_DEC)).alias("sc"),
-            F.coalesce(F.col("sc2"), F.lit(0).cast(_DEC)).alias("sc2"),
-        )
-        .withColumn(
-            "t",
-            F.when(
-                F.col("n") > 0,
-                F.col("n_pop").cast("double")
-                * F.col("sc").cast("double")
-                / F.col("n"),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "v",
-            F.when(
-                F.col("n") > 1,
-                F.col("n_pop").cast("double")
-                * (F.col("n_pop") - F.col("n")).cast("double")
-                * (
-                    (
-                        F.col("n").cast(_DEC) * F.col("sc2")
-                        - F.col("sc") * F.col("sc")
-                    ).cast("double")
-                    / (
-                        F.col("n").cast("double")
-                        * (F.col("n") - F.lit(1)).cast("double")
-                    )
-                )
-                / F.col("n"),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    ow = Window.partitionBy("q").orderBy(F.col("g").asc_nulls_first())
-    w = ow.rowsBetween(Window.unboundedPreceding, 0)
-    folded = per.select(
-        "q",
-        "n",
-        F.row_number().over(ow).alias("rid"),
-        F.sum("t").over(w).alias("cum_t"),
-        F.sum("v").over(w).alias("cum_v"),
-    )
-    agg = folded.groupBy("q").agg(
-        F.max_by("cum_t", "rid").alias("tot_t"),
-        F.max_by("cum_v", "rid").alias("tot_v"),
-        F.sum("n").alias("n_samples"),
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum(F.when(F.col("n") == 0, 1).otherwise(0)).alias("missing_strata"),
-        F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).alias("thin_strata"),
-    )
-    tot_t = F.coalesce(F.col("tot_t"), F.lit(0.0))
-    tot_v = F.coalesce(F.col("tot_v"), F.lit(0.0))
-    est = tot_t / F.lit(100.0)
-    margin = F.lit(z) * F.sqrt(F.greatest(tot_v, F.lit(0.0))) / F.lit(100.0)
-    return agg.select(
-        F.col("q").alias(group_by),
-        F.round(est, round_to).alias("estimate"),
-        F.round(est - margin, round_to).alias("ci_lower"),
-        F.round(est + margin, round_to).alias("ci_upper"),
-        F.col("n_samples").cast("long").alias("n_samples"),
-        F.col("n_strata").cast("long").alias("n_strata"),
-        F.col("missing_strata").cast("long").alias("missing_strata"),
-        F.col("thin_strata").cast("long").alias("thin_strata"),
-    )
-
-
-def poststrat_grouped_sum_ci_sql(
-    table: str,
-    column: str,
-    group_by: str,
-    stratum_col: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> str:
-    """DuckDB oracle for :func:`poststrat_grouped_sum_ci` — identical
-    (group, stratum) cells, integer moments, per-group order-pinned
-    folds."""
-    where = sampling_where_sql(spec)
-    c = f"CAST(floor(CAST({column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
-    return f"""
-WITH exact AS (
-  SELECT {group_by} AS q, {stratum_col} AS g, count(*) AS n_pop
-  FROM {table} GROUP BY 1, 2
-),
-sample AS (
-  SELECT {group_by} AS q, {stratum_col} AS g,
-         count(*) AS n,
-         sum({c}) AS sc,
-         sum(CAST({c} AS HUGEINT) * {c}) AS sc2
-  FROM {table} WHERE {where} GROUP BY 1, 2
-),
-per AS (
-  SELECT e.q, e.g, e.n_pop,
-         coalesce(s.n, 0) AS n,
-         coalesce(s.sc, 0) AS sc,
-         coalesce(s.sc2, 0) AS sc2
-  FROM exact e LEFT JOIN sample s
-    ON e.q IS NOT DISTINCT FROM s.q AND e.g IS NOT DISTINCT FROM s.g
-),
-terms AS (
-  SELECT q, g, n,
-         CASE WHEN n > 0
-              THEN CAST(n_pop AS DOUBLE) * CAST(sc AS DOUBLE) / n
-              ELSE 0.0 END AS t,
-         CASE WHEN n > 1
-              THEN CAST(n_pop AS DOUBLE) * CAST(n_pop - n AS DOUBLE)
-                   * (CAST(n * sc2 - sc * sc AS DOUBLE)
-                      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))
-                   / n
-              ELSE 0.0 END AS v
-  FROM per
-),
-folded AS (
-  SELECT q, n,
-         row_number() OVER (PARTITION BY q ORDER BY g NULLS FIRST) AS rid,
-         sum(t) OVER (PARTITION BY q ORDER BY g NULLS FIRST) AS cum_t,
-         sum(v) OVER (PARTITION BY q ORDER BY g NULLS FIRST) AS cum_v
-  FROM terms
-),
-agg AS (
-  SELECT q,
-         coalesce(max_by(cum_t, rid), 0.0) AS tot_t,
-         coalesce(max_by(cum_v, rid), 0.0) AS tot_v,
-         CAST(sum(n) AS BIGINT) AS n_samples,
-         CAST(count(*) AS BIGINT) AS n_strata,
-         CAST(sum(CASE WHEN n = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS missing_strata,
-         CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS thin_strata
-  FROM folded GROUP BY q
-)
-SELECT q AS {group_by},
-       round(tot_t / 100.0, {round_to}) AS estimate,
-       round(tot_t / 100.0
-             - {z!r} * sqrt(greatest(tot_v, 0.0)) / 100.0, {round_to}) AS ci_lower,
-       round(tot_t / 100.0
-             + {z!r} * sqrt(greatest(tot_v, 0.0)) / 100.0, {round_to}) AS ci_upper,
-       n_samples, n_strata, missing_strata, thin_strata
-FROM agg
-"""
-
-
 def poststrat_sum_ci_sql(
     table: str,
     column: str,
@@ -387,6 +212,7 @@ def poststrat_sum_ci_sql(
     spec: SamplingSpec,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> str:
     """DuckDB oracle: identical strata joins, integer moments, and
     order-pinned folds. DuckDB's integer sums widen to HUGEINT, which
@@ -394,27 +220,34 @@ def poststrat_sum_ci_sql(
     both engines cast the same exact integer to DOUBLE before the one
     rounding division."""
     where = sampling_where_sql(spec)
-    c = f"CAST(floor(CAST({column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
+    c = cents_sql(column)
+    qs = ["q"] if group_by else []
+    q_src = "".join(f"{group_by} AS {q}, " for q in qs)
+    q_cols = "".join(f"{q}, " for q in qs)
+    q_part = "".join(f"PARTITION BY {q} " for q in qs)
+    q_out = "".join(f"{q} AS {group_by}, " for q in qs)
+    on = " AND ".join(f"e.{k} IS NOT DISTINCT FROM s.{k}" for k in (*qs, "g"))
     return f"""
 WITH exact AS (
-  SELECT {stratum_col} AS g, count(*) AS n_pop FROM {table} GROUP BY 1
+  SELECT {q_src}{stratum_col} AS g, count(*) AS n_pop
+  FROM {table} GROUP BY ALL
 ),
 sample AS (
-  SELECT {stratum_col} AS g,
+  SELECT {q_src}{stratum_col} AS g,
          count(*) AS n,
          sum({c}) AS sc,
          sum(CAST({c} AS HUGEINT) * {c}) AS sc2
-  FROM {table} WHERE {where} GROUP BY 1
+  FROM {table} WHERE {where} GROUP BY ALL
 ),
 per AS (
-  SELECT e.g, e.n_pop,
+  SELECT {"".join(f"e.{q}, " for q in qs)}e.g, e.n_pop,
          coalesce(s.n, 0) AS n,
          coalesce(s.sc, 0) AS sc,
          coalesce(s.sc2, 0) AS sc2
-  FROM exact e LEFT JOIN sample s ON e.g IS NOT DISTINCT FROM s.g
+  FROM exact e LEFT JOIN sample s ON {on}
 ),
 terms AS (
-  SELECT g, n,
+  SELECT {q_cols}g, n,
          CASE WHEN n > 0
               THEN CAST(n_pop AS DOUBLE) * CAST(sc AS DOUBLE) / n
               ELSE 0.0 END AS t,
@@ -427,24 +260,24 @@ terms AS (
   FROM per
 ),
 folded AS (
-  SELECT n,
-         row_number() OVER (ORDER BY g NULLS FIRST) AS rid,
-         sum(t) OVER (ORDER BY g NULLS FIRST) AS cum_t,
-         sum(v) OVER (ORDER BY g NULLS FIRST) AS cum_v
+  SELECT {q_cols}n,
+         row_number() OVER ({q_part}ORDER BY g NULLS FIRST) AS rid,
+         sum(t) OVER ({q_part}ORDER BY g NULLS FIRST) AS cum_t,
+         sum(v) OVER ({q_part}ORDER BY g NULLS FIRST) AS cum_v
   FROM terms
 ),
 agg AS (
-  SELECT coalesce(max_by(cum_t, rid), 0.0) AS tot_t,
+  SELECT {q_cols}coalesce(max_by(cum_t, rid), 0.0) AS tot_t,
          coalesce(max_by(cum_v, rid), 0.0) AS tot_v,
          CAST(coalesce(sum(n), 0) AS BIGINT) AS n_samples,
-         count(*) AS n_strata,
+         CAST(count(*) AS BIGINT) AS n_strata,
          CAST(coalesce(sum(CASE WHEN n = 0 THEN 1 ELSE 0 END), 0)
               AS BIGINT) AS missing_strata,
          CAST(coalesce(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END), 0)
               AS BIGINT) AS thin_strata
-  FROM folded
+  FROM folded GROUP BY ALL
 )
-SELECT round(tot_t / 100.0, {round_to}) AS estimate,
+SELECT {q_out}round(tot_t / 100.0, {round_to}) AS estimate,
        round(tot_t / 100.0
              - {z!r} * sqrt(greatest(tot_v, 0.0)) / 100.0, {round_to}) AS ci_lower,
        round(tot_t / 100.0

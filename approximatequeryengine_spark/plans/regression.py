@@ -35,14 +35,22 @@ auxiliary) fall back to the plain expansion estimator N·ȳ with the
 SRS variance N²(1−f)s²_y/n — flagged in the ``method`` column
 ('regression' vs 'expansion_fallback') so the caller sees which
 estimator actually answered.
+
+GROUP BY: a grouped query fits a SEPARATE slope per group against that
+group's exact auxiliary total, and each group falls back to plain
+expansion on its own; every population group appears (a group the
+sample missed reads a zero estimate with n_samples = 0). A global
+query is the call with no ``group_by``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from approximatequeryengine_spark.plans.estimators import Z_95, cents_col
+from approximatequeryengine_spark.plans.estimators import Z_95, cents_col, cents_sql
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
@@ -59,27 +67,46 @@ def regaux_sum_ci(
     spec: SamplingSpec,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> DataFrame:
-    """1-row DataFrame: (estimate, ci_lower, ci_upper, n_samples,
-    slope, method) — regression-estimated SUM(column) using the exact
-    total of ``aux_column``."""
-    y = cents_col(F.expr(column))
-    x = cents_col(F.expr(aux_column))
-    pop = df.agg(
+    """(estimate, ci_lower, ci_upper, n_samples, slope, method) —
+    regression-estimated SUM(column) using the exact total of
+    ``aux_column``; one row, or one row per ``group_by`` value led by
+    that column."""
+    qs = ["q"] if group_by else []
+    # cast BEFORE the product: long*long wraps past ~3e9 cents/row,
+    # decimal(38,0) products stay exact (matching HUGEINT below).
+    y = cents_col(F.expr(column)).cast(_DEC)
+    x = cents_col(F.expr(aux_column)).cast(_DEC)
+    pop = df.groupBy(*[F.col(group_by).alias(q) for q in qs]).agg(
         F.count(F.lit(1)).alias("n_pop"),
-        F.sum(x.cast(_DEC)).alias("tx"),
+        F.sum(x).alias("tx"),
     )
-    smp = apply_sampling(df, spec).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(y.cast(_DEC)).alias("sy"),
-        F.sum(x.cast(_DEC)).alias("sx"),
-        # cast BEFORE the product: long*long wraps past ~3e9 cents/row,
-        # decimal(38,0) products stay exact (matching HUGEINT below).
-        F.sum(y.cast(_DEC) * x.cast(_DEC)).alias("sxy"),
-        F.sum(x.cast(_DEC) * x.cast(_DEC)).alias("sxx"),
-        F.sum(y.cast(_DEC) * y.cast(_DEC)).alias("syy"),
+    smp = (
+        apply_sampling(df, spec)
+        .groupBy(*[F.col(group_by).alias(f"{q}2") for q in qs])
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(y).alias("sy"),
+            F.sum(x).alias("sx"),
+            F.sum(y * x).alias("sxy"),
+            F.sum(x * x).alias("sxx"),
+            F.sum(y * y).alias("syy"),
+        )
     )
-    m = smp.crossJoin(F.broadcast(pop))
+    # A global aggregate is one row on each side; a grouped sample can
+    # miss a population group, which then keeps its row with zeros.
+    on = reduce(lambda a, k: a & pop[k].eqNullSafe(smp[f"{k}2"]), qs, F.lit(True))
+    m = pop.join(smp, on, "left").select(
+        *qs,
+        "n_pop",
+        "tx",
+        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
+        *[
+            F.coalesce(F.col(c), F.lit(0).cast(_DEC)).alias(c)
+            for c in ("sy", "sx", "sxy", "sxx", "syy")
+        ],
+    )
     n = F.col("n").cast("double")
     npop = F.col("n_pop").cast("double")
     # Exact-integer covariance numerators (×n relative to the usual
@@ -115,88 +142,7 @@ def regaux_sum_ci(
     est = t_hat / F.lit(100.0)
     margin = F.lit(z) * F.sqrt(v) / F.lit(100.0)
     return m.select(
-        F.round(est, round_to).alias("estimate"),
-        F.round(est - margin, round_to).alias("ci_lower"),
-        F.round(est + margin, round_to).alias("ci_upper"),
-        F.col("n").alias("n_samples"),
-        F.round(b, 6).alias("slope"),
-        F.when(ok, F.lit("regression"))
-        .otherwise(F.lit("expansion_fallback"))
-        .alias("method"),
-    )
-
-
-def regaux_grouped_sum_ci(
-    df: DataFrame,
-    column: str,
-    group_by: str,
-    aux_column: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> DataFrame:
-    """Grouped regression-estimated SUM: one row per ``group_by`` value
-    — the per-group twin of :func:`regaux_sum_ci`, fitting a SEPARATE
-    slope per group against that group's exact auxiliary total (both
-    from one grouped scan each; a group with a weak or degenerate
-    auxiliary falls back to plain expansion independently, flagged in
-    its own ``method`` cell). Every population group appears; a group
-    the sample missed reads a zero estimate with n_samples = 0."""
-    y = cents_col(F.expr(column))
-    x = cents_col(F.expr(aux_column))
-    pop = df.groupBy(F.col(group_by).alias("q")).agg(
-        F.count(F.lit(1)).alias("n_pop"),
-        F.sum(x.cast(_DEC)).alias("tx"),
-    )
-    smp = (
-        apply_sampling(df, spec)
-        .groupBy(F.col(group_by).alias("q2"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(y.cast(_DEC)).alias("sy"),
-            F.sum(x.cast(_DEC)).alias("sx"),
-            F.sum(y.cast(_DEC) * x.cast(_DEC)).alias("sxy"),
-            F.sum(x.cast(_DEC) * x.cast(_DEC)).alias("sxx"),
-            F.sum(y.cast(_DEC) * y.cast(_DEC)).alias("syy"),
-        )
-    )
-    m = pop.join(smp, pop["q"].eqNullSafe(smp["q2"]), "left").select(
-        "q",
-        "n_pop",
-        "tx",
-        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-        *[
-            F.coalesce(F.col(c), F.lit(0).cast(_DEC)).alias(c)
-            for c in ("sy", "sx", "sxy", "sxx", "syy")
-        ],
-    )
-    n = F.col("n").cast("double")
-    npop = F.col("n_pop").cast("double")
-    sxy_n = (F.col("n").cast(_DEC) * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    sxx_n = (F.col("n").cast(_DEC) * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    syy_n = (F.col("n").cast(_DEC) * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    ok = (F.col("n") >= 3) & (sxx_n > 0)
-    b = F.when(ok, sxy_n / sxx_n).otherwise(F.lit(0.0))
-    ybar = F.when(F.col("n") > 0, F.col("sy").cast("double") / n).otherwise(F.lit(0.0))
-    xbar = F.when(F.col("n") > 0, F.col("sx").cast("double") / n).otherwise(F.lit(0.0))
-    xbar_pop = F.when(
-        F.col("n_pop") > 0, F.col("tx").cast("double") / npop
-    ).otherwise(F.lit(0.0))
-    t_hat = npop * (ybar + b * (xbar_pop - xbar))
-    s2e = (
-        F.when(ok, (syy_n / n - b * (sxy_n / n)) / (n - F.lit(2.0)))
-        .when(F.col("n") >= 2, (syy_n / n) / (n - F.lit(1.0)))
-        .otherwise(F.lit(0.0))
-    )
-    f_real = F.when(F.col("n_pop") > 0, n / npop).otherwise(F.lit(0.0))
-    v = F.when(
-        F.col("n") > 0,
-        npop * npop * (F.lit(1.0) - f_real) * F.greatest(s2e, F.lit(0.0)) / n,
-    ).otherwise(F.lit(0.0))
-    est = t_hat / F.lit(100.0)
-    margin = F.lit(z) * F.sqrt(v) / F.lit(100.0)
-    return m.select(
-        F.col("q").alias(group_by),
+        *[F.col(q).alias(group_by) for q in qs],
         F.round(est, round_to).alias("estimate"),
         F.round(est - margin, round_to).alias("ci_lower"),
         F.round(est + margin, round_to).alias("ci_upper"),
@@ -208,88 +154,6 @@ def regaux_grouped_sum_ci(
     )
 
 
-def regaux_grouped_sum_ci_sql(
-    table: str,
-    column: str,
-    group_by: str,
-    aux_column: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> str:
-    """DuckDB oracle for :func:`regaux_grouped_sum_ci` — identical
-    per-group moments, numerators, and scalar chain."""
-    where = sampling_where_sql(spec)
-    y = f"CAST(floor(CAST({column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
-    x = f"CAST(floor(CAST({aux_column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
-    return f"""
-WITH pop AS (
-  SELECT {group_by} AS q, count(*) AS n_pop, sum({x}) AS tx
-  FROM {table} GROUP BY 1
-),
-smp AS (
-  SELECT {group_by} AS q, count(*) AS n,
-         sum({y}) AS sy, sum({x}) AS sx,
-         sum(CAST({y} AS HUGEINT) * {x}) AS sxy,
-         sum(CAST({x} AS HUGEINT) * {x}) AS sxx,
-         sum(CAST({y} AS HUGEINT) * {y}) AS syy
-  FROM {table} WHERE {where} GROUP BY 1
-),
-m AS (
-  SELECT p.q, p.n_pop, p.tx,
-         coalesce(s.n, 0) AS n,
-         coalesce(s.sy, 0) AS sy, coalesce(s.sx, 0) AS sx,
-         coalesce(s.sxy, 0) AS sxy, coalesce(s.sxx, 0) AS sxx,
-         coalesce(s.syy, 0) AS syy
-  FROM pop p LEFT JOIN smp s ON p.q IS NOT DISTINCT FROM s.q
-),
-calc AS (
-  SELECT q, n, n_pop,
-         CAST(n * sxy - sx * sy AS DOUBLE) AS sxy_n,
-         CAST(n * sxx - sx * sx AS DOUBLE) AS sxx_n,
-         CAST(n * syy - sy * sy AS DOUBLE) AS syy_n,
-         CASE WHEN n > 0 THEN CAST(sy AS DOUBLE) / n ELSE 0.0 END AS ybar,
-         CASE WHEN n > 0 THEN CAST(sx AS DOUBLE) / n ELSE 0.0 END AS xbar,
-         CASE WHEN n_pop > 0 THEN CAST(tx AS DOUBLE) / n_pop ELSE 0.0 END AS xbar_pop,
-         (n >= 3 AND CAST(n * sxx - sx * sx AS DOUBLE) > 0) AS ok
-  FROM m
-),
-est AS (
-  SELECT q, n, ok,
-         CASE WHEN ok THEN sxy_n / sxx_n ELSE 0.0 END AS b,
-         CAST(n_pop AS DOUBLE)
-           * (ybar + (CASE WHEN ok THEN sxy_n / sxx_n ELSE 0.0 END)
-              * (xbar_pop - xbar)) AS t_hat,
-         CASE WHEN ok
-              THEN (syy_n / n
-                    - (sxy_n / sxx_n) * (sxy_n / n)) / (n - 2.0)
-              WHEN n >= 2 THEN (syy_n / n) / (n - 1.0)
-              ELSE 0.0 END AS s2e,
-         CASE WHEN n_pop > 0 THEN CAST(n AS DOUBLE) / n_pop ELSE 0.0 END AS f_real,
-         CAST(n_pop AS DOUBLE) AS npop
-  FROM calc
-)
-SELECT q AS {group_by},
-       round(t_hat / 100.0, {round_to}) AS estimate,
-       round(t_hat / 100.0
-             - {z!r} * (CASE WHEN n > 0
-                             THEN sqrt(npop * npop * (1.0 - f_real)
-                                       * greatest(s2e, 0.0) / n)
-                             ELSE 0.0 END) / 100.0,
-             {round_to}) AS ci_lower,
-       round(t_hat / 100.0
-             + {z!r} * (CASE WHEN n > 0
-                             THEN sqrt(npop * npop * (1.0 - f_real)
-                                       * greatest(s2e, 0.0) / n)
-                             ELSE 0.0 END) / 100.0,
-             {round_to}) AS ci_upper,
-       CAST(n AS BIGINT) AS n_samples,
-       round(b, 6) AS slope,
-       CASE WHEN ok THEN 'regression' ELSE 'expansion_fallback' END AS method
-FROM est
-"""
-
-
 def regaux_sum_ci_sql(
     table: str,
     column: str,
@@ -297,26 +161,38 @@ def regaux_sum_ci_sql(
     spec: SamplingSpec,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> str:
     """DuckDB oracle: identical moments, numerators, and scalar chain."""
     where = sampling_where_sql(spec)
-    y = f"CAST(floor(CAST({column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
-    x = f"CAST(floor(CAST({aux_column} AS DOUBLE) * 100.0 + 0.5) AS BIGINT)"
+    y = cents_sql(column)
+    x = cents_sql(aux_column)
+    qs = ["q"] if group_by else []
+    q_src = "".join(f"{group_by} AS {q}, " for q in qs)
+    on = " AND ".join(f"p.{q} IS NOT DISTINCT FROM s.{q}" for q in qs) or "TRUE"
     return f"""
 WITH pop AS (
-  SELECT count(*) AS n_pop, sum({x}) AS tx FROM {table}
+  SELECT {q_src}count(*) AS n_pop, sum({x}) AS tx
+  FROM {table} GROUP BY ALL
 ),
 smp AS (
-  SELECT count(*) AS n,
+  SELECT {q_src}count(*) AS n,
          sum({y}) AS sy, sum({x}) AS sx,
          sum(CAST({y} AS HUGEINT) * {x}) AS sxy,
          sum(CAST({x} AS HUGEINT) * {x}) AS sxx,
          sum(CAST({y} AS HUGEINT) * {y}) AS syy
-  FROM {table} WHERE {where}
+  FROM {table} WHERE {where} GROUP BY ALL
 ),
-m AS (SELECT * FROM smp CROSS JOIN pop),
+m AS (
+  SELECT {"".join(f"p.{q}, " for q in qs)}p.n_pop, p.tx,
+         coalesce(s.n, 0) AS n,
+         coalesce(s.sy, 0) AS sy, coalesce(s.sx, 0) AS sx,
+         coalesce(s.sxy, 0) AS sxy, coalesce(s.sxx, 0) AS sxx,
+         coalesce(s.syy, 0) AS syy
+  FROM pop p LEFT JOIN smp s ON {on}
+),
 calc AS (
-  SELECT n, n_pop,
+  SELECT {"".join(f"{q}, " for q in qs)}n, n_pop,
          CAST(n * sxy - sx * sy AS DOUBLE) AS sxy_n,
          CAST(n * sxx - sx * sx AS DOUBLE) AS sxx_n,
          CAST(n * syy - sy * sy AS DOUBLE) AS syy_n,
@@ -327,7 +203,7 @@ calc AS (
   FROM m
 ),
 est AS (
-  SELECT n, ok,
+  SELECT {"".join(f"{q}, " for q in qs)}n, ok,
          CASE WHEN ok THEN sxy_n / sxx_n ELSE 0.0 END AS b,
          CAST(n_pop AS DOUBLE)
            * (ybar + (CASE WHEN ok THEN sxy_n / sxx_n ELSE 0.0 END)
@@ -341,7 +217,7 @@ est AS (
          CAST(n_pop AS DOUBLE) AS npop
   FROM calc
 )
-SELECT round(t_hat / 100.0, {round_to}) AS estimate,
+SELECT {"".join(f"{q} AS {group_by}, " for q in qs)}round(t_hat / 100.0, {round_to}) AS estimate,
        round(t_hat / 100.0
              - {z!r} * (CASE WHEN n > 0
                              THEN sqrt(npop * npop * (1.0 - f_real)

@@ -40,6 +40,17 @@ Scale shape: one scan with BOTH hash predicates fused into the read
 layout blocks align with files), one (block) groupBy, one 5-column
 final aggregate. Nothing leaves the executors but O(sampled blocks)
 partials.
+
+GROUP BY (domain estimation under the SAME design): a block is still
+the PSU, and a group's per-block partial sums only that group's rows
+in the block; the ultimate-cluster variance applies per domain over
+its block partials. Every accumulated term stays exact integer
+arithmetic, so the per-group folds need no order-pinning window. A
+group the sample missed entirely still appears — one count-only
+grouped scan of the population, left-joined — and reads 0 with a
+zero-width CI and n_psus = 0. A global query is the call with no
+``group_by``; its aggregate always returns its row, so it scans the
+population only once.
 """
 
 from __future__ import annotations
@@ -75,198 +86,64 @@ def twostage_sum_ci(
     z: float = Z_95,
     psu_salt: int = TS_PSU_SALT,
     row_salt: int = TS_ROW_SALT,
+    group_by: str | None = None,
 ) -> DataFrame:
-    """1-row readout (sum_value, ci_lower, ci_upper, n_psus, n_rows)
-    for the two-stage design over an integer-cents measure. ``key`` is
-    a SQL expression for a unique integer row key; blocks are
+    """(sum_value, ci_lower, ci_upper, n_psus, n_rows) for the
+    two-stage design over an integer-cents measure; one row, or one row
+    per ``group_by`` value led by that column. ``key`` is a SQL
+    expression for a unique integer row key; blocks are
     ``floor(key / TS_BLOCK)``."""
+    qs = ["q"] if group_by else []
     k = F.expr(key).cast("long")
     b = F.floor(k / F.lit(TS_BLOCK)).cast("long")
-    sampled = df.where(
-        (portable_hash_col(b, psu_salt) < F.lit(fraction_threshold(TS_F1)))
-        & (portable_hash_col(k, row_salt) < F.lit(fraction_threshold(TS_F2)))
-    ).select(b.alias("b"), value_cents.cast("long").alias("x"))
-    xd = F.col("x").cast("decimal(19,0)")
-    per_psu = sampled.groupBy("b").agg(
-        F.sum("x").cast("long").alias("s"),
-        F.sum(xd * xd).cast("decimal(38,0)").alias("q"),
-        F.count(F.lit(1)).cast("long").alias("nr"),
-    )
-    sd = F.col("s").cast("decimal(19,0)")
-    tot = per_psu.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.coalesce(F.sum("nr"), F.lit(0)).cast("long").alias("n_rows"),
-        F.coalesce(F.sum("s"), F.lit(0)).cast("long").alias("ss"),
-        F.coalesce(F.sum(sd * sd), F.lit(0).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("ss2"),
-        F.coalesce(F.sum("q"), F.lit(0).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("qq"),
-    )
-    est_d = (F.col("ss") * F.lit(_EST_MULT)).cast("double") / F.lit(100.0)
-    margin = ht_integer_margin("m", _VHT_D, z)
-    return tot.select(
-        F.round(est_d, 2).alias("sum_value"),
-        F.round(est_d - margin, 2).alias("ci_lower"),
-        F.round(est_d + margin, 2).alias("ci_upper"),
-        F.col("m").alias("n_psus"),
-        F.col("n_rows"),
-    )
-
-
-def twostage_grouped_sum_ci(
-    df: DataFrame,
-    key: str,
-    group_by: str,
-    value_cents: Column,
-    z: float = Z_95,
-    psu_salt: int = TS_PSU_SALT,
-    row_salt: int = TS_ROW_SALT,
-) -> DataFrame:
-    """Grouped two-stage SUM: one row per ``group_by`` value with
-    (sum_value, ci_lower, ci_upper, n_psus, n_rows) — the per-domain
-    twin of :func:`twostage_sum_ci`, completing the grouped
-    model-assisted family (poststrat/regaux gained grouped forms in
-    round 7).
-
-    Domain estimation under the SAME design: a block is the PSU, and a
-    group's per-block partial t̂_{q,i} sums only that group's rows in
-    the block — the standard domain-total decomposition (the stage-1
-    inclusion event is the block's, shared across groups; the
-    ultimate-cluster variance applies per domain over its block
-    partials). Missing-cluster accounting: every POPULATION group
-    appears (one count-only grouped scan, left-joined) — a group the
-    two-stage sample missed entirely reads 0 with a zero-width CI and
-    n_psus = 0, the same surface-the-defect contract as poststrat's
-    ``missing_strata``.
-
-    No fold-order hazard: unlike the poststrat doubles, every
-    accumulated term here is EXACT integer arithmetic (BIGINT /
-    DECIMAL(38,0)) under the f₁ = 1/4, f₂ = 1/2 power-of-two design,
-    so the per-group folds need no order-pinning window.
-
-    Scale shape: one count-only scan (group cardinalities), one fused
-    two-predicate sampled scan, one (group, block) shuffle, one group
-    shuffle — partials only, never data-sized."""
-    k = F.expr(key).cast("long")
-    b = F.floor(k / F.lit(TS_BLOCK)).cast("long")
-    pop = df.groupBy(F.col(group_by).alias("q")).agg(
-        F.count(F.lit(1)).alias("n_pop")
-    )
     sampled = df.where(
         (portable_hash_col(b, psu_salt) < F.lit(fraction_threshold(TS_F1)))
         & (portable_hash_col(k, row_salt) < F.lit(fraction_threshold(TS_F2)))
     ).select(
-        F.col(group_by).alias("q2"),
+        *[F.col(group_by).alias(q) for q in qs],
         b.alias("b"),
         value_cents.cast("long").alias("x"),
     )
     xd = F.col("x").cast("decimal(19,0)")
-    per_psu = sampled.groupBy("q2", "b").agg(
+    per_psu = sampled.groupBy(*qs, "b").agg(
         F.sum("x").cast("long").alias("s"),
         F.sum(xd * xd).cast("decimal(38,0)").alias("qv"),
         F.count(F.lit(1)).cast("long").alias("nr"),
     )
     sd = F.col("s").cast("decimal(19,0)")
-    tot = per_psu.groupBy("q2").agg(
+    tot = per_psu.groupBy(*qs).agg(
         F.count(F.lit(1)).cast("long").alias("m"),
         F.sum("nr").cast("long").alias("n_rows"),
         F.sum("s").cast("long").alias("ss"),
         F.sum(sd * sd).cast("decimal(38,0)").alias("ss2"),
         F.sum("qv").cast("decimal(38,0)").alias("qq"),
     )
-    joined = pop.join(tot, pop["q"].eqNullSafe(tot["q2"]), "left").select(
-        "q",
-        F.coalesce(F.col("m"), F.lit(0)).alias("m"),
-        F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-        F.coalesce(F.col("ss"), F.lit(0)).alias("ss"),
-        F.coalesce(F.col("ss2"), F.lit(0).cast("decimal(38,0)")).alias("ss2"),
-        F.coalesce(F.col("qq"), F.lit(0).cast("decimal(38,0)")).alias("qq"),
+    if group_by:
+        # A global aggregate always returns its row; a group the sample
+        # missed gets its row from a count-only scan of the population.
+        pop = df.select(F.col(group_by).alias("q")).distinct()
+        tot = pop.join(
+            tot.withColumnRenamed("q", "q2"), F.col("q").eqNullSafe(F.col("q2")), "left"
+        )
+    # Zero sampled blocks leave the sums NULL: read them as 0.
+    tot = tot.select(
+        *qs,
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in ("m", "n_rows", "ss")],
+        *[
+            F.coalesce(F.col(c), F.lit(0).cast("decimal(38,0)")).alias(c)
+            for c in ("ss2", "qq")
+        ],
     )
     est_d = (F.col("ss") * F.lit(_EST_MULT)).cast("double") / F.lit(100.0)
     margin = ht_integer_margin("m", _VHT_D, z)
-    return joined.select(
-        F.col("q").alias(group_by),
+    return tot.select(
+        *[F.col(q).alias(group_by) for q in qs],
         F.round(est_d, 2).alias("sum_value"),
         F.round(est_d - margin, 2).alias("ci_lower"),
         F.round(est_d + margin, 2).alias("ci_upper"),
         F.col("m").cast("long").alias("n_psus"),
         F.col("n_rows").cast("long").alias("n_rows"),
     )
-
-
-def twostage_grouped_sum_ci_sql(
-    table: str,
-    key_sql: str,
-    group_by: str,
-    value_cents_sql: str,
-    z: float = Z_95,
-    psu_salt: int = TS_PSU_SALT,
-    row_salt: int = TS_ROW_SALT,
-) -> str:
-    """DuckDB oracle for :func:`twostage_grouped_sum_ci` — identical
-    hashes, (group, block) cells, population left join, integer
-    coefficients and margin chain."""
-    b_sql = f"CAST(floor(({key_sql}) / {TS_BLOCK}.0) AS BIGINT)"
-    h_psu = portable_hash_sql(b_sql, psu_salt)
-    h_row = portable_hash_sql(f"({key_sql})", row_salt)
-    return f"""
-WITH pop AS (
-  SELECT {group_by} AS q, count(*) AS n_pop FROM {table} GROUP BY 1
-),
-base AS (
-  SELECT {group_by} AS q, {b_sql} AS b, CAST({value_cents_sql} AS BIGINT) AS x
-  FROM {table}
-  WHERE {h_psu} < {fraction_threshold(TS_F1)}
-    AND {h_row} < {fraction_threshold(TS_F2)}
-),
-per_psu AS (
-  SELECT q, b, CAST(sum(x) AS BIGINT) AS s,
-         CAST(sum(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0)))
-              AS DECIMAL(38,0)) AS qv,
-         CAST(count(*) AS BIGINT) AS nr
-  FROM base GROUP BY q, b
-),
-tot AS (
-  SELECT q, CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(nr) AS BIGINT) AS n_rows,
-         CAST(sum(s) AS BIGINT) AS ss,
-         CAST(sum(CAST(s AS DECIMAL(19,0)) * CAST(s AS DECIMAL(19,0)))
-              AS DECIMAL(38,0)) AS ss2,
-         CAST(sum(qv) AS DECIMAL(38,0)) AS qq
-  FROM per_psu GROUP BY q
-),
-joined AS (
-  SELECT p.q,
-         coalesce(t.m, 0) AS m,
-         coalesce(t.n_rows, 0) AS n_rows,
-         coalesce(t.ss, 0) AS ss,
-         coalesce(t.ss2, 0) AS ss2,
-         coalesce(t.qq, 0) AS qq
-  FROM pop p LEFT JOIN tot t ON p.q IS NOT DISTINCT FROM t.q
-),
-calc AS (
-  SELECT q, m, n_rows,
-         CAST(ss * {_EST_MULT} AS DOUBLE) / 100.0 AS est_d,
-         CASE WHEN m >= 2
-              THEN {z!r} * sqrt(greatest(
-                     CAST(ss2 * {_V_SS2} + qq * {_V_QQ} AS DOUBLE) / 10000.0,
-                     0.0))
-              ELSE 0.0 END AS m0
-  FROM joined
-)
-SELECT q AS {group_by},
-       round(est_d, 2) AS sum_value,
-       round(est_d - (CASE WHEN m0 > 0
-                           THEN greatest(round(m0, 0), 1.0)
-                           ELSE 0.0 END), 2) AS ci_lower,
-       round(est_d + (CASE WHEN m0 > 0
-                           THEN greatest(round(m0, 0), 1.0)
-                           ELSE 0.0 END), 2) AS ci_upper,
-       CAST(m AS BIGINT) AS n_psus, CAST(n_rows AS BIGINT) AS n_rows
-FROM calc
-"""
 
 
 def twostage_sum_ci_sql(
@@ -276,53 +153,64 @@ def twostage_sum_ci_sql(
     z: float = Z_95,
     psu_salt: int = TS_PSU_SALT,
     row_salt: int = TS_ROW_SALT,
+    group_by: str | None = None,
 ) -> str:
     """DuckDB oracle — identical hashes, blocks, integer coefficients
-    and margin chain."""
+    and margin chain (and, grouped, the population left join)."""
     b_sql = f"CAST(floor(({key_sql}) / {TS_BLOCK}.0) AS BIGINT)"
     h_psu = portable_hash_sql(b_sql, psu_salt)
     h_row = portable_hash_sql(f"({key_sql})", row_salt)
+    qs = ["q"] if group_by else []
+    q_cols = "".join(f"{q}, " for q in qs)
+    src = "tot"
+    if group_by:
+        # A global aggregate always returns its row; a group the sample
+        # missed gets its row from the population.
+        src = f"""(SELECT p.q, t.m, t.n_rows, t.ss, t.ss2, t.qq
+        FROM (SELECT DISTINCT {group_by} AS q FROM {table}) p
+        LEFT JOIN tot t ON p.q IS NOT DISTINCT FROM t.q)"""
     return f"""
 WITH base AS (
-  SELECT {b_sql} AS b, CAST({value_cents_sql} AS BIGINT) AS x
+  SELECT {"".join(f"{group_by} AS {q}, " for q in qs)}{b_sql} AS b,
+         CAST({value_cents_sql} AS BIGINT) AS x
   FROM {table}
   WHERE {h_psu} < {fraction_threshold(TS_F1)}
     AND {h_row} < {fraction_threshold(TS_F2)}
 ),
 per_psu AS (
-  SELECT b, CAST(sum(x) AS BIGINT) AS s,
+  SELECT {q_cols}b, CAST(sum(x) AS BIGINT) AS s,
          CAST(sum(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0)))
-              AS DECIMAL(38,0)) AS q,
+              AS DECIMAL(38,0)) AS qv,
          CAST(count(*) AS BIGINT) AS nr
-  FROM base GROUP BY b
+  FROM base GROUP BY ALL
 ),
 tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-         CAST(coalesce(sum(nr), 0) AS BIGINT) AS n_rows,
-         CAST(coalesce(sum(s), 0) AS BIGINT) AS ss,
-         CAST(coalesce(sum(CAST(s AS DECIMAL(19,0))
-                           * CAST(s AS DECIMAL(19,0))), 0)
+  SELECT {q_cols}CAST(count(*) AS BIGINT) AS m,
+         CAST(sum(nr) AS BIGINT) AS n_rows,
+         CAST(sum(s) AS BIGINT) AS ss,
+         CAST(sum(CAST(s AS DECIMAL(19,0)) * CAST(s AS DECIMAL(19,0)))
               AS DECIMAL(38,0)) AS ss2,
-         CAST(coalesce(sum(q), 0) AS DECIMAL(38,0)) AS qq
-  FROM per_psu
+         CAST(sum(qv) AS DECIMAL(38,0)) AS qq
+  FROM per_psu GROUP BY ALL
 ),
 calc AS (
-  SELECT m, n_rows,
-         CAST(ss * {_EST_MULT} AS DOUBLE) / 100.0 AS est_d,
-         CASE WHEN m >= 2
+  SELECT {q_cols}coalesce(m, 0) AS m, coalesce(n_rows, 0) AS n_rows,
+         CAST(coalesce(ss, 0) * {_EST_MULT} AS DOUBLE) / 100.0 AS est_d,
+         CASE WHEN coalesce(m, 0) >= 2
               THEN {z!r} * sqrt(greatest(
-                     CAST(ss2 * {_V_SS2} + qq * {_V_QQ} AS DOUBLE) / 10000.0,
+                     CAST(coalesce(ss2, 0) * {_V_SS2} + coalesce(qq, 0) * {_V_QQ}
+                          AS DOUBLE) / 10000.0,
                      0.0))
               ELSE 0.0 END AS m0
-  FROM tot
+  FROM {src}
 )
-SELECT round(est_d, 2) AS sum_value,
+SELECT {"".join(f"{q} AS {group_by}, " for q in qs)}round(est_d, 2) AS sum_value,
        round(est_d - (CASE WHEN m0 > 0
                            THEN greatest(round(m0, 0), 1.0)
                            ELSE 0.0 END), 2) AS ci_lower,
        round(est_d + (CASE WHEN m0 > 0
                            THEN greatest(round(m0, 0), 1.0)
                            ELSE 0.0 END), 2) AS ci_upper,
-       m AS n_psus, n_rows
+       CAST(m AS BIGINT) AS n_psus, CAST(n_rows AS BIGINT) AS n_rows
 FROM calc
 """

@@ -20,17 +20,29 @@ the mantissa the data magnitude leaves), while the integer quantization
 makes ``c`` itself reproducible across engines (the float mean's last
 bit is summation-order-dependent; its rounding to the integer grid is
 not, noise ~1e-12 vs a unit grid). ``s²`` then uses the exact algebra
-``(Σd² − n·d̄²)/(n−1)`` with ``d = x − c``; ``m₄`` is taken about ``c``
-directly (the ``d̄ ≤ 0.5`` offset perturbs it by O(d̄/s) ≲ 1e-5
-relative — far below the CI's own sampling noise — and both engines
-compute the identical formula). Final values are rounded to 4 decimals
-on both sides, the quotient-family convention of
-``estimators._ci_columns``.
+``(Σd² − n·d̄²)/(n−1)`` with ``d = x − c``. The fourth moment is NOT
+centre-invariant, so ``m₄`` about ``c`` is recentred exactly on the
+sample mean,
 
-Plan shape: two jobs — a 1-row mean collect, then ONE
-map-side-combined aggregate producing every moment; nothing but two
-scalar rows ever reaches the driver, so it scales like any global
-aggregate.
+    m₄ᶜ = m₄ − 4·d̄·m₃ + 6·d̄²·m₂ − 3·d̄⁴ ,
+
+which with ``|d̄| ≤ 0.5`` is both algebraically exact and numerically
+stable (unrecentred, a measure whose spread is a few units of the grid
+— a discount in [0, 0.1] — gets an interval several times too wide).
+Final values are rounded to 4 decimals on both sides, the
+quotient-family convention of ``estimators._ci_columns``.
+
+GROUP BY: a grouped STDDEV runs the same estimator within each group —
+an integer centre per group (a group whose mean sits far from a shared
+centre would see its raw m₄ inflated by ~6d̄²s² + d̄⁴) and the same
+recentring. A grouped CORR keeps one shared centre: its second-moment
+algebra is exact for any constant centre. A global query is the call
+with no ``group_by``.
+
+Plan shape: two jobs — a 1-row centre collect (a global STDDEV, and
+CORR) or a group-sized broadcast join of per-group centres (a grouped
+STDDEV), then ONE map-side-combined aggregate producing every moment;
+nothing data-sized is ever collected.
 """
 
 from __future__ import annotations
@@ -60,98 +72,36 @@ def approx_stddev_ci(
     column: str,
     spec: SamplingSpec,
     z: float = Z_95,
+    group_by: str | None = None,
 ) -> DataFrame:
-    """1-row DataFrame: (n_samples, stddev, ci_lower, ci_upper)."""
-    x = F.col(column).cast("double")
+    """(n_samples, stddev, ci_lower, ci_upper): the sampled standard
+    deviation with the fourth-moment CLT interval; one row, or one row
+    per ``group_by`` value led by that column. Groups with n ≤ 3 get a
+    degenerate [sd, sd] interval."""
+    keys = [group_by] if group_by else []
     # NULLs are excluded up front: a count(*)/null-skipping-sum mismatch
     # would silently deflate every moment on a nullable column.
     sampled = (
-        apply_sampling(df, spec).select(x.alias("x")).filter(F.col("x").isNotNull())
-    )
-    first = sampled.agg(
-        F.avg("x").alias("mu"), F.count("x").alias("n")
-    ).collect()[0]
-    if first["mu"] is None or first["n"] < 2:
-        raise ValueError(
-            "stddev needs at least 2 sampled non-null rows; increase the fraction"
-        )
-    c = _int_center(first["mu"])
-    d = F.col("x") - F.lit(c)
-    m = sampled.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(d).alias("d1"),
-        F.sum(d * d).alias("sd2"),
-        F.avg(d * d * d * d).alias("m4"),
-    )
-    n = F.col("n")
-    # greatest(…, 0): mathematically non-negative, but float rounding of
-    # sd2 − n·d̄² can dip a hair below zero on constant columns — and
-    # DuckDB's sqrt RAISES on negatives where Spark returns NaN.
-    s2 = F.greatest(F.col("sd2") - n * F.col("d1") * F.col("d1"), F.lit(0.0)) / (n - 1)
-    var_s2 = (
-        F.greatest(
-            F.col("m4") - s2 * s2 * (n - 3) / (n - 1),
-            F.lit(0.0),
-        )
-        / n
-    )
-    sd = F.sqrt(s2)
-    # Constant column: sd = 0 with zero spread — a degenerate [sd, sd]
-    # interval, not a 0/0 NaN.
-    half = F.when(sd > 0, F.lit(z) * F.sqrt(var_s2) / (F.lit(2.0) * sd)).otherwise(
-        F.lit(0.0)
-    )
-    return m.select(
-        n.cast("long").alias("n_samples"),
-        F.round(sd, 4).alias("stddev"),
-        F.round(F.greatest(sd - half, F.lit(0.0)), 4).alias("ci_lower"),
-        F.round(sd + half, 4).alias("ci_upper"),
-    )
-
-
-def approx_grouped_stddev_ci(
-    df: DataFrame,
-    column: str,
-    group_col: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-) -> DataFrame:
-    """Per-group sampled standard deviation with the fourth-moment CI —
-    one row per group: (group, n_samples, stddev, ci_lower, ci_upper).
-
-    Unlike s² (whose centered algebra is exact for any constant
-    center), the fourth moment is NOT center-invariant: a group whose
-    mean sits d̄ away from a shared global center sees its raw m₄
-    inflated by ~6d̄²s² + d̄⁴ — unbounded, since per-group offsets from
-    a global center can be arbitrarily large, and even the exact
-    binomial recentering identity cancels catastrophically in doubles
-    once d̄⁴ dwarfs the true central moment. So the first pass computes
-    a PER-GROUP integer center (one grouped aggregate, broadcast-joined
-    back onto the sample — group-cardinality-sized, the same bound as
-    the result itself), which caps |d̄| ≤ 0.5 exactly like the global
-    estimator's rounding bound. The moment aggregate then recenters m₄
-    exactly with
-
-        m₄ᶜ = m₄ − 4·d̄·m₃ + 6·d̄²·m₂ − 3·d̄⁴
-
-    which, with |d̄| ≤ 0.5, is both algebraically exact and numerically
-    stable — the Kendall–Stuart Var(s²) formula holds per group no
-    matter how far apart the group means sit. Groups with n < 2 fall
-    back to a degenerate [sd, sd] interval via the n-guard, mirroring
-    ``_ci_columns``. An empty sample yields an empty result (no
-    driver-side collect anywhere — two jobs total, both group-bounded)."""
-    x = F.col(column).cast("double")
-    sampled = (
         apply_sampling(df, spec)
-        .select(F.col(group_col), x.alias("x"))
+        .select(*keys, F.col(column).cast("double").alias("x"))
         .filter(F.col("x").isNotNull())
     )
-    centers = sampled.groupBy(group_col).agg(
-        F.floor(F.avg("x") + F.lit(0.5)).cast("double").alias("c")
-    )
-    joined = sampled.join(F.broadcast(centers), group_col)
+    if group_by:
+        centres = sampled.groupBy(group_by).agg(
+            F.floor(F.avg("x") + F.lit(0.5)).cast("double").alias("c")
+        )
+        sampled = sampled.join(F.broadcast(centres), group_by)
+    else:
+        # A global query always answers one row: its centre is collected
+        # first, and a sample too small to have a spread is rejected.
+        first = sampled.agg(F.avg("x").alias("mu"), F.count("x").alias("n")).collect()[0]
+        if first["mu"] is None or first["n"] < 2:
+            raise ValueError(
+                "stddev needs at least 2 sampled non-null rows; increase the fraction"
+            )
+        sampled = sampled.withColumn("c", F.lit(_int_center(first["mu"])))
     d = F.col("x") - F.col("c")
-    m = joined.groupBy(group_col).agg(
+    m = sampled.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
         F.avg(d).alias("d1"),
         F.sum(d * d).alias("sd2"),
@@ -159,6 +109,9 @@ def approx_grouped_stddev_ci(
         F.avg(d * d * d * d).alias("m4"),
     )
     n = F.col("n")
+    # greatest(…, 0): mathematically non-negative, but float rounding of
+    # sd2 − n·d̄² can dip a hair below zero on constant columns — and
+    # DuckDB's sqrt RAISES on negatives where Spark returns NaN.
     s2 = F.when(
         n >= 2,
         F.greatest(F.col("sd2") - n * F.col("d1") * F.col("d1"), F.lit(0.0)) / (n - 1),
@@ -173,44 +126,49 @@ def approx_grouped_stddev_ci(
     )
     var_s2 = F.greatest(m4c - s2 * s2 * (n - 3) / (n - 1), F.lit(0.0)) / n
     sd = F.sqrt(s2)
+    # Constant column: sd = 0 with zero spread — a degenerate [sd, sd]
+    # interval, not a 0/0 NaN.
     half = F.when(
         (sd > 0) & (n > 3), F.lit(z) * F.sqrt(var_s2) / (F.lit(2.0) * sd)
     ).otherwise(F.lit(0.0))
     return m.select(
-        F.col(group_col),
+        *keys,
         n.cast("long").alias("n_samples"),
         F.round(sd, 4).alias("stddev"),
         F.round(F.greatest(sd - half, F.lit(0.0)), 4).alias("ci_lower"),
         F.round(sd + half, 4).alias("ci_upper"),
-    ).orderBy(group_col)
+    )
 
 
-def approx_grouped_stddev_ci_sql(
+def approx_stddev_ci_sql(
     table: str,
     column: str,
-    group_col: str,
     spec: SamplingSpec,
     z: float = Z_95,
+    group_by: str | None = None,
 ) -> str:
-    """DuckDB oracle for :func:`approx_grouped_stddev_ci` — the same
-    per-group integer centers and the exact m₄ recentering identity
-    m₄ᶜ = m₄ − 4d̄m₃ + 6d̄²m₂ − 3d̄⁴."""
+    """DuckDB oracle for :func:`approx_stddev_ci` — the same integer
+    centres (per group when grouped) and the exact m₄ recentring."""
     where = sampling_where_sql(spec)
+    gs = ["g"] if group_by else []
+    g_src = "".join(f"{group_by} AS {g}, " for g in gs)
+    g_cols = "".join(f"{g}, " for g in gs)
+    on = " AND ".join(f"s.{g} = c.{g}" for g in gs) or "TRUE"
     return f"""
-WITH s AS (SELECT {group_col} AS g, CAST({column} AS DOUBLE) AS x
+WITH s AS (SELECT {g_src}CAST({column} AS DOUBLE) AS x
            FROM {table}
            WHERE ({where}) AND {column} IS NOT NULL),
-c AS (SELECT g, floor(avg(x) + 0.5) AS c FROM s GROUP BY g),
+c AS (SELECT {g_cols}floor(avg(x) + 0.5) AS c FROM s GROUP BY ALL),
 m AS (
-  SELECT s.g AS g, count(*) AS n,
+  SELECT {"".join(f"s.{g} AS {g}, " for g in gs)}count(*) AS n,
          avg(x - c.c) AS d1,
          sum((x - c.c) * (x - c.c)) AS sd2,
          avg((x - c.c) * (x - c.c) * (x - c.c)) AS m3,
          avg((x - c.c) * (x - c.c) * (x - c.c) * (x - c.c)) AS m4
-  FROM s JOIN c ON s.g = c.g GROUP BY s.g
+  FROM s JOIN c ON {on} GROUP BY ALL
 ),
 v AS (
-  SELECT g, n,
+  SELECT {g_cols}n,
          CASE WHEN n >= 2
               THEN greatest(sd2 - n * d1 * d1, 0.0) / (n - 1)
               ELSE 0.0 END AS s2,
@@ -219,18 +177,18 @@ v AS (
   FROM m
 ),
 h AS (
-  SELECT g, n, sqrt(s2) AS sd,
+  SELECT {g_cols}n, sqrt(s2) AS sd,
          CASE WHEN sqrt(s2) > 0 AND n > 3
               THEN {z!r} * sqrt(greatest(m4c - s2 * s2 * (n - 3) / (n - 1), 0.0) / n)
                    / (2.0 * sqrt(s2))
               ELSE 0.0 END AS half
   FROM v
 )
-SELECT g AS {group_col}, CAST(n AS BIGINT) AS n_samples,
+SELECT {"".join(f"{g} AS {group_by}, " for g in gs)}CAST(n AS BIGINT) AS n_samples,
        round(sd, 4) AS stddev,
        round(greatest(sd - half, 0.0), 4) AS ci_lower,
        round(sd + half, 4) AS ci_upper
-FROM h ORDER BY g
+FROM h
 """
 
 
@@ -240,6 +198,7 @@ def approx_corr_ci(
     col_y: str,
     spec: SamplingSpec,
     z: float = Z_95,
+    group_by: str | None = None,
 ) -> DataFrame:
     """Sampled Pearson correlation with the Fisher-z interval:
     ``atanh(r) ± z/√(n−3)``, mapped back through tanh — the standard
@@ -247,31 +206,38 @@ def approx_corr_ci(
     naive CLT on ``r`` near ±1.
 
     Same numeric discipline as :func:`approx_stddev_ci`: both columns
-    center on integer-quantized means from a first pass, cross/self
-    second moments come from ONE aggregate, and atanh/tanh are spelled
-    as log/exp identities because DuckDB lacks the hyperbolic inverses
-    — identical formula text on both engines. 1-row DataFrame:
-    (n_samples, corr, ci_lower, ci_upper)."""
-    x = F.col(col_x).cast("double")
-    y = F.col(col_y).cast("double")
+    center on integer-quantized means from a first pass (one shared
+    pair of centres even when grouped — cross/self moment algebra is
+    exact for any constant centres), cross/self second moments come
+    from ONE aggregate, and atanh/tanh are spelled as log/exp
+    identities because DuckDB lacks the hyperbolic inverses — identical
+    formula text on both engines. (n_samples, corr, ci_lower,
+    ci_upper): one row, or one row per ``group_by`` value led by that
+    column; groups with n ≤ 3 or a degenerate arm report NULL interval
+    columns."""
+    keys = [group_by] if group_by else []
     sampled = (
         apply_sampling(df, spec)
-        .select(x.alias("x"), y.alias("y"))
+        .select(
+            *keys,
+            F.col(col_x).cast("double").alias("x"),
+            F.col(col_y).cast("double").alias("y"),
+        )
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
     )
     mrow = sampled.agg(
         F.avg("x").alias("mx"), F.avg("y").alias("my"), F.count(F.lit(1)).alias("n")
     ).collect()[0]
-    if mrow["mx"] is None or mrow["my"] is None or mrow["n"] <= 3:
+    # A global answer is one Fisher-z interval, which needs n > 3; a
+    # grouped one reports NULL for its small groups.
+    if mrow["n"] <= (0 if group_by else 3):
         raise ValueError(
             "corr needs more than 3 sampled rows for the Fisher-z "
             "interval; increase the fraction"
         )
-    cx = _int_center(mrow["mx"])
-    cy = _int_center(mrow["my"])
-    dx = F.col("x") - F.lit(cx)
-    dy = F.col("y") - F.lit(cy)
-    m = sampled.agg(
+    dx = F.col("x") - F.lit(_int_center(mrow["mx"]))
+    dy = F.col("y") - F.lit(_int_center(mrow["my"]))
+    m = sampled.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
         F.avg(dx).alias("dx1"),
         F.avg(dy).alias("dy1"),
@@ -284,130 +250,22 @@ def approx_corr_ci(
     vx = (F.col("sxx") - n * F.col("dx1") * F.col("dx1")) / (n - 1)
     vy = (F.col("syy") - n * F.col("dy1") * F.col("dy1")) / (n - 1)
     # Degenerate inputs (a constant column → vx/vy ≤ 0, or |r| = 1 where
-    # atanh diverges) yield NULL, not NaN/crash — the identical CASE
-    # conditions in the oracle produce the same NULLs.
-    r = F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
-    # atanh/tanh via log/exp so the oracle's text is identical
-    zr = F.when(F.abs(r) < 1, F.lit(0.5) * F.log((1 + r) / (1 - r)))
-    half = F.lit(z) / F.sqrt(n - 3)
-    lo_e = F.exp(F.lit(2.0) * (zr - half))
-    hi_e = F.exp(F.lit(2.0) * (zr + half))
-    return m.select(
-        n.cast("long").alias("n_samples"),
-        F.round(r, 6).alias("corr"),
-        F.round((lo_e - 1) / (lo_e + 1), 6).alias("ci_lower"),
-        F.round((hi_e - 1) / (hi_e + 1), 6).alias("ci_upper"),
-    )
-
-
-def approx_grouped_corr_ci(
-    df: DataFrame,
-    col_x: str,
-    col_y: str,
-    group_col: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-) -> DataFrame:
-    """Per-group sampled Pearson correlation with Fisher-z intervals —
-    the grouped twin of :func:`approx_corr_ci`, using the same
-    shared-global-center trick as :func:`approx_grouped_stddev_ci`
-    (cross/self moment algebra is exact for any constant centers):
-    one 1-row first pass, then ONE grouped aggregate. Groups with n ≤ 3
-    or a degenerate arm report NULL interval columns."""
-    x = F.col(col_x).cast("double")
-    y = F.col(col_y).cast("double")
-    sampled = (
-        apply_sampling(df, spec)
-        .select(F.col(group_col), x.alias("x"), y.alias("y"))
-        .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
-    )
-    mrow = sampled.agg(F.avg("x").alias("mx"), F.avg("y").alias("my")).collect()[0]
-    if mrow["mx"] is None or mrow["my"] is None:
-        raise ValueError("empty sample; increase the fraction")
-    cx, cy = _int_center(mrow["mx"]), _int_center(mrow["my"])
-    dx = F.col("x") - F.lit(cx)
-    dy = F.col("y") - F.lit(cy)
-    m = sampled.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(dx).alias("dx1"),
-        F.avg(dy).alias("dy1"),
-        F.sum(dx * dx).alias("sxx"),
-        F.sum(dy * dy).alias("syy"),
-        F.sum(dx * dy).alias("sxy"),
-    )
-    n = F.col("n")
-    cov = (F.col("sxy") - n * F.col("dx1") * F.col("dy1")) / (n - 1)
-    vx = (F.col("sxx") - n * F.col("dx1") * F.col("dx1")) / (n - 1)
-    vy = (F.col("syy") - n * F.col("dy1") * F.col("dy1")) / (n - 1)
+    # atanh diverges, or n ≤ 3) yield NULL, not NaN/crash — the
+    # identical CASE conditions in the oracle produce the same NULLs
+    # (DuckDB's sqrt raises on negatives where Spark yields NaN).
     r = F.when((n > 1) & (vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
+    # atanh/tanh via log/exp so the oracle's text is identical
     zr = F.when((n > 3) & (F.abs(r) < 1), F.lit(0.5) * F.log((1 + r) / (1 - r)))
-    # n ≤ 3 groups: NULL half (DuckDB's sqrt raises on negatives where
-    # Spark silently yields NaN — same cross-engine trap as the global
-    # estimator's guards).
     half = F.when(n > 3, F.lit(z) / F.sqrt(n - 3))
     lo_e = F.exp(F.lit(2.0) * (zr - half))
     hi_e = F.exp(F.lit(2.0) * (zr + half))
     return m.select(
-        F.col(group_col),
+        *keys,
         n.cast("long").alias("n_samples"),
         F.round(r, 6).alias("corr"),
         F.round((lo_e - 1) / (lo_e + 1), 6).alias("ci_lower"),
         F.round((hi_e - 1) / (hi_e + 1), 6).alias("ci_upper"),
-    ).orderBy(group_col)
-
-
-def approx_grouped_corr_ci_sql(
-    table: str,
-    col_x: str,
-    col_y: str,
-    group_col: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-) -> str:
-    """DuckDB oracle for :func:`approx_grouped_corr_ci`."""
-    where = sampling_where_sql(spec)
-    return f"""
-WITH s AS (SELECT {group_col} AS g, CAST({col_x} AS DOUBLE) AS x,
-                  CAST({col_y} AS DOUBLE) AS y
-           FROM {table}
-           WHERE ({where}) AND {col_x} IS NOT NULL AND {col_y} IS NOT NULL),
-c AS (SELECT floor(avg(x) + 0.5) AS cx, floor(avg(y) + 0.5) AS cy FROM s),
-m AS (
-  SELECT g, count(*) AS n,
-         avg(x - (SELECT cx FROM c)) AS dx1,
-         avg(y - (SELECT cy FROM c)) AS dy1,
-         sum((x - (SELECT cx FROM c)) * (x - (SELECT cx FROM c))) AS sxx,
-         sum((y - (SELECT cy FROM c)) * (y - (SELECT cy FROM c))) AS syy,
-         sum((x - (SELECT cx FROM c)) * (y - (SELECT cy FROM c))) AS sxy
-  FROM s GROUP BY g
-),
-v AS (
-  SELECT g, n,
-         (sxy - n * dx1 * dy1) / (n - 1) AS cov,
-         (sxx - n * dx1 * dx1) / (n - 1) AS vx,
-         (syy - n * dy1 * dy1) / (n - 1) AS vy
-  FROM m
-),
-f AS (
-  SELECT g, n,
-         CASE WHEN n > 1 AND vx > 0 AND vy > 0 THEN cov / sqrt(vx * vy) END AS r,
-         CASE WHEN n > 3 THEN {z!r} / sqrt(n - 3) END AS half
-  FROM v
-),
-gg AS (
-  SELECT g, n, r, half,
-         CASE WHEN n > 3 AND abs(r) < 1
-              THEN 0.5 * ln((1 + r) / (1 - r)) END AS zr
-  FROM f
-)
-SELECT g AS {group_col}, CAST(n AS BIGINT) AS n_samples,
-       round(r, 6) AS corr,
-       round((exp(2.0 * (zr - half)) - 1) / (exp(2.0 * (zr - half)) + 1), 6)
-           AS ci_lower,
-       round((exp(2.0 * (zr + half)) - 1) / (exp(2.0 * (zr + half)) + 1), 6)
-           AS ci_upper
-FROM gg ORDER BY g
-"""
+    )
 
 
 def approx_corr_ci_sql(
@@ -416,49 +274,54 @@ def approx_corr_ci_sql(
     col_y: str,
     spec: SamplingSpec,
     z: float = Z_95,
+    group_by: str | None = None,
 ) -> str:
     """DuckDB oracle for :func:`approx_corr_ci` — identical two-pass
     centered-moment algebra and log/exp hyperbolic identities."""
     where = sampling_where_sql(spec)
+    gs = ["g"] if group_by else []
+    g_cols = "".join(f"{g}, " for g in gs)
     return f"""
-WITH s AS (SELECT CAST({col_x} AS DOUBLE) AS x, CAST({col_y} AS DOUBLE) AS y
+WITH s AS (SELECT {"".join(f"{group_by} AS {g}, " for g in gs)}CAST({col_x} AS DOUBLE) AS x,
+                  CAST({col_y} AS DOUBLE) AS y
            FROM {table}
            WHERE ({where}) AND {col_x} IS NOT NULL AND {col_y} IS NOT NULL),
 c AS (SELECT floor(avg(x) + 0.5) AS cx, floor(avg(y) + 0.5) AS cy FROM s),
 m AS (
-  SELECT count(*) AS n,
+  SELECT {g_cols}count(*) AS n,
          avg(x - (SELECT cx FROM c)) AS dx1,
          avg(y - (SELECT cy FROM c)) AS dy1,
          sum((x - (SELECT cx FROM c)) * (x - (SELECT cx FROM c))) AS sxx,
          sum((y - (SELECT cy FROM c)) * (y - (SELECT cy FROM c))) AS syy,
          sum((x - (SELECT cx FROM c)) * (y - (SELECT cy FROM c))) AS sxy
-  FROM s
+  FROM s GROUP BY ALL
 ),
 v AS (
-  SELECT n,
+  SELECT {g_cols}n,
          (sxy - n * dx1 * dy1) / (n - 1) AS cov,
          (sxx - n * dx1 * dx1) / (n - 1) AS vx,
          (syy - n * dy1 * dy1) / (n - 1) AS vy
   FROM m
 ),
 f AS (
-  SELECT n,
-         CASE WHEN vx > 0 AND vy > 0 THEN cov / sqrt(vx * vy) END AS r,
-         {z!r} / sqrt(n - 3) AS half
+  SELECT {g_cols}n,
+         CASE WHEN n > 1 AND vx > 0 AND vy > 0 THEN cov / sqrt(vx * vy) END AS r,
+         CASE WHEN n > 3 THEN {z!r} / sqrt(n - 3) END AS half
   FROM v
 ),
-g AS (
-  SELECT n, r, half,
-         CASE WHEN abs(r) < 1 THEN 0.5 * ln((1 + r) / (1 - r)) END AS zr
+gg AS (
+  SELECT {g_cols}n, r, half,
+         CASE WHEN n > 3 AND abs(r) < 1
+              THEN 0.5 * ln((1 + r) / (1 - r)) END AS zr
   FROM f
 )
-SELECT CAST(n AS BIGINT) AS n_samples,
+SELECT {"".join(f"{g} AS {group_by}, " for g in gs)}CAST(n AS BIGINT) AS n_samples,
        round(r, 6) AS corr,
        round((exp(2.0 * (zr - half)) - 1) / (exp(2.0 * (zr - half)) + 1), 6)
            AS ci_lower,
        round((exp(2.0 * (zr + half)) - 1) / (exp(2.0 * (zr + half)) + 1), 6)
            AS ci_upper
-FROM g
+FROM gg
 """
 
 
@@ -580,46 +443,4 @@ SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
        round((da - db) - {z!r} * sqrt({va} / na + {vb} / nb), 6) AS ci_lower,
        round((da - db) + {z!r} * sqrt({va} / na + {vb} / nb), 6) AS ci_upper
 FROM j
-"""
-
-
-def approx_stddev_ci_sql(
-    table: str,
-    column: str,
-    spec: SamplingSpec,
-    z: float = Z_95,
-) -> str:
-    """DuckDB oracle computing the identical two-pass moment algebra."""
-    where = sampling_where_sql(spec)
-    return f"""
-WITH s AS (SELECT CAST({column} AS DOUBLE) AS x FROM {table}
-           WHERE ({where}) AND {column} IS NOT NULL),
-c AS (SELECT floor(avg(x) + 0.5) AS c FROM s),
-m AS (
-  SELECT count(*) AS n,
-         avg(x - (SELECT c FROM c)) AS d1,
-         sum((x - (SELECT c FROM c)) * (x - (SELECT c FROM c))) AS sd2,
-         avg((x - (SELECT c FROM c)) * (x - (SELECT c FROM c))
-             * (x - (SELECT c FROM c)) * (x - (SELECT c FROM c))) AS m4
-  FROM s
-),
-v AS (
-  SELECT n,
-         sqrt(greatest(sd2 - n * d1 * d1, 0.0) / (n - 1)) AS sd,
-         greatest(m4 - (greatest(sd2 - n * d1 * d1, 0.0) / (n - 1))
-                       * (greatest(sd2 - n * d1 * d1, 0.0) / (n - 1))
-                       * (n - 3) / (n - 1), 0) / n AS var_s2
-  FROM m
-),
-h AS (
-  SELECT n, sd,
-         CASE WHEN sd > 0 THEN {z!r} * sqrt(var_s2) / (2.0 * sd)
-              ELSE 0.0 END AS half
-  FROM v
-)
-SELECT CAST(n AS BIGINT) AS n_samples,
-       round(sd, 4) AS stddev,
-       round(greatest(sd - half, 0.0), 4) AS ci_lower,
-       round(sd + half, 4) AS ci_upper
-FROM h
 """

@@ -1372,16 +1372,14 @@ _twin_query(
     SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
 )
 _twin_query(
-    "approx_grouped_stddev_ci",
-    _variance.approx_grouped_stddev_ci, _variance.approx_grouped_stddev_ci_sql,
-    "lineitem", "l_extendedprice", "l_returnflag",
-    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
+    "approx_grouped_stddev_ci", _variance.approx_stddev_ci, _variance.approx_stddev_ci_sql,
+    "lineitem", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY), group_by="l_returnflag",
 )
 _twin_query(
-    "approx_grouped_corr_ci",
-    _variance.approx_grouped_corr_ci, _variance.approx_grouped_corr_ci_sql,
-    "lineitem", "l_quantity", "l_extendedprice", "l_returnflag",
-    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY),
+    "approx_grouped_corr_ci", _variance.approx_corr_ci, _variance.approx_corr_ci_sql,
+    "lineitem", "l_quantity", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.15, key=_LKEY), group_by="l_returnflag",
 )
 _twin_query(
     "approx_ab_diff_ci", _variance.approx_ab_diff_ci, _variance.approx_ab_diff_ci_sql,
@@ -2002,27 +2000,24 @@ _register(
 
 
 def _twostage_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-8 (VERDICT r7 #2): GROUPED two-stage cluster SUM — revenue
-    per returnflag under the same block/row design, completing the
-    grouped model-assisted family (plans/twostage.py::
-    twostage_grouped_sum_ci). Per-domain block partials, exact integer
+    """GROUPED two-stage cluster SUM — revenue per returnflag under the
+    same block/row design. Per-domain block partials, exact integer
     folds, missing groups surfaced with n_psus = 0."""
     cat = _catalog(spark, sf_dir)
-    return _twostage.twostage_grouped_sum_ci(
+    return _twostage.twostage_sum_ci(
         cat.table("lineitem"),
         _LKEY,
-        "l_returnflag",
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5),
-    ).orderBy("l_returnflag")
+        group_by="l_returnflag",
+    )
 
 
 _register(
     "approx_grouped_sum_twostage",
     _twostage_grouped_fn,
-    _twostage.twostage_grouped_sum_ci_sql(
-        "lineitem", _LKEY, "l_returnflag", "floor(l_extendedprice * 100.0 + 0.5)",
-    )
-    + " ORDER BY l_returnflag",
+    _twostage.twostage_sum_ci_sql(
+        "lineitem", _LKEY, "floor(l_extendedprice * 100.0 + 0.5)", group_by="l_returnflag"
+    ),
 )
 
 
@@ -4313,38 +4308,14 @@ _twin_query(
 )
 
 
-def _poststrat_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-7: the GROUPED post-stratified SUM — revenue per
-    linestatus, each group's sample re-weighted by exact
-    (linestatus, returnflag) cell counts (plans/poststrat.py::
-    poststrat_grouped_sum_ci). Reachable from SQL as
-    ``APPROX(SUM(x)) ... GROUP BY g`` with method='poststrat' +
-    stratum_col=."""
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _poststrat.poststrat_grouped_sum_ci(
-        cat.table("lineitem"),
-        "l_extendedprice",
-        "l_linestatus",
-        "l_returnflag",
-        spec,
-    ).orderBy("l_linestatus")
-
-
-def _poststrat_grouped_oracle() -> str:
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return (
-        _poststrat.poststrat_grouped_sum_ci_sql(
-            "lineitem", "l_extendedprice", "l_linestatus", "l_returnflag", spec
-        )
-        + " ORDER BY l_linestatus"
-    )
-
-
-_register(
+# Revenue per linestatus, each group's sample re-weighted by exact
+# (linestatus, returnflag) cell counts; reachable from SQL as
+# ``APPROX(SUM(x)) ... GROUP BY g`` with method='poststrat' + stratum_col=.
+_twin_query(
     "approx_grouped_sum_poststratified",
-    _poststrat_grouped_fn,
-    _poststrat_grouped_oracle(),
+    _poststrat.poststrat_sum_ci, _poststrat.poststrat_sum_ci_sql,
+    "lineitem", "l_extendedprice", "l_returnflag",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY), group_by="l_linestatus",
 )
 
 
@@ -4365,39 +4336,13 @@ _twin_query(
 )
 
 
-def _regaux_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-7: GROUPED regression estimator — revenue per returnflag,
-    a separate slope per group against each group's exact auxiliary
-    total (plans/regression.py::regaux_grouped_sum_ci). Reachable from
-    SQL as ``APPROX(SUM(x)) ... GROUP BY g`` with method='regaux' +
-    aux_column=."""
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _regression.regaux_grouped_sum_ci(
-        cat.table("lineitem"),
-        "l_extendedprice * (1 - l_discount)",
-        "l_returnflag",
-        "l_extendedprice",
-        spec,
-    ).orderBy("l_returnflag")
-
-
-def _regaux_grouped_oracle() -> str:
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return (
-        _regression.regaux_grouped_sum_ci_sql(
-            "lineitem",
-            "l_extendedprice * (1 - l_discount)",
-            "l_returnflag",
-            "l_extendedprice",
-            spec,
-        )
-        + " ORDER BY l_returnflag"
-    )
-
-
-_register(
-    "approx_grouped_sum_regaux", _regaux_grouped_fn, _regaux_grouped_oracle()
+# Revenue per returnflag, a separate slope per group against each
+# group's exact auxiliary total; reachable from SQL as
+# ``APPROX(SUM(x)) ... GROUP BY g`` with method='regaux' + aux_column=.
+_twin_query(
+    "approx_grouped_sum_regaux", _regression.regaux_sum_ci, _regression.regaux_sum_ci_sql,
+    "lineitem", "l_extendedprice * (1 - l_discount)", "l_extendedprice",
+    SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY), group_by="l_returnflag",
 )
 
 

@@ -129,22 +129,17 @@ def test_grouped_poststrat_matches_oracle_and_sums_to_cells(spark, lineitem, duc
     """Grouped form: oracle parity, and each group's estimate must equal
     the global estimator run on that group's rows alone (the grouped
     math IS the global math applied within each group)."""
-    from approximatequeryengine_spark.plans.poststrat import (
-        poststrat_grouped_sum_ci,
-        poststrat_grouped_sum_ci_sql,
-    )
-
     from .conftest import assert_df_matches_sql
 
     spec = SamplingSpec(design="uniform_hash", fraction=0.2, key=_LKEY)
-    out = poststrat_grouped_sum_ci(
-        lineitem, "l_extendedprice", "l_linestatus", "l_returnflag", spec
+    out = poststrat_sum_ci(
+        lineitem, "l_extendedprice", "l_returnflag", spec, group_by="l_linestatus"
     )
     assert_df_matches_sql(
         out,
         duck,
-        poststrat_grouped_sum_ci_sql(
-            "lineitem", "l_extendedprice", "l_linestatus", "l_returnflag", spec
+        poststrat_sum_ci_sql(
+            "lineitem", "l_extendedprice", "l_returnflag", spec, group_by="l_linestatus"
         ),
     )
     rows = {r["l_linestatus"]: r for r in out.collect()}

@@ -89,22 +89,17 @@ def test_grouped_regaux_matches_oracle_and_per_group_global(spark, lineitem, duc
     """Grouped form: oracle parity, and each group's row must equal the
     global estimator run on that group's rows alone (separate slope,
     separate fallback decision per group)."""
-    from approximatequeryengine_spark.plans.regression import (
-        regaux_grouped_sum_ci,
-        regaux_grouped_sum_ci_sql,
-    )
-
     from .conftest import assert_df_matches_sql
 
     spec = SamplingSpec(design="uniform_hash", fraction=0.2, key=_LKEY)
-    out = regaux_grouped_sum_ci(
-        lineitem, REVENUE, "l_returnflag", "l_extendedprice", spec
+    out = regaux_sum_ci(
+        lineitem, REVENUE, "l_extendedprice", spec, group_by="l_returnflag"
     )
     assert_df_matches_sql(
         out,
         duck,
-        regaux_grouped_sum_ci_sql(
-            "lineitem", REVENUE, "l_returnflag", "l_extendedprice", spec
+        regaux_sum_ci_sql(
+            "lineitem", REVENUE, "l_extendedprice", spec, group_by="l_returnflag"
         ),
     )
     for row in out.collect():

@@ -89,6 +89,35 @@ JOBS = {
         {},
         2,
     ),
+    # The model-assisted and second-moment estimators: a global query
+    # and the same query grouped, each through one estimator body.
+    "stddev": ("SELECT APPROX(STDDEV(l_discount)) FROM lineitem", {}, 5),
+    "stddev_grouped": (
+        "SELECT APPROX(STDDEV(l_discount)) FROM lineitem GROUP BY l_returnflag", {}, 4
+    ),
+    "corr": ("SELECT APPROX(CORR(l_quantity, l_extendedprice)) FROM lineitem", {}, 5),
+    "corr_grouped": (
+        "SELECT APPROX(CORR(l_quantity, l_extendedprice)) FROM lineitem "
+        "GROUP BY l_returnflag",
+        {},
+        4,
+    ),
+    "poststrat": (
+        L, {"sample_pct": 10, "method": "poststrat", "stratum_col": "l_returnflag"}, 6
+    ),
+    "poststrat_grouped": (
+        L + " GROUP BY l_linestatus",
+        {"sample_pct": 10, "method": "poststrat", "stratum_col": "l_returnflag"},
+        5,
+    ),
+    "regaux": (L, {"sample_pct": 10, "method": "regaux", "aux_column": "l_quantity"}, 5),
+    "regaux_grouped": (
+        L + " GROUP BY l_returnflag",
+        {"sample_pct": 10, "method": "regaux", "aux_column": "l_quantity"},
+        4,
+    ),
+    "twostage": (L, {"method": "twostage"}, 4),
+    "twostage_grouped": (L + " GROUP BY l_returnflag", {"method": "twostage"}, 5),
 }
 
 

@@ -1407,16 +1407,13 @@ def test_twostage_grouped_partition_of_global(spark):
     group's exact total on the fixture's deterministic sample, and a
     group absent from the sample surfaces n_psus = 0 rather than
     vanishing."""
-    from approximatequeryengine_spark.plans.twostage import (
-        twostage_grouped_sum_ci,
-        twostage_sum_ci,
-    )
+    from approximatequeryengine_spark.plans.twostage import twostage_sum_ci
 
     sf = "/root/testdata/sf0.01"
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
     cents = F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
     key = "l_orderkey * 8 + l_linenumber"
-    g = twostage_grouped_sum_ci(li, key, "l_returnflag", cents).collect()
+    g = twostage_sum_ci(li, key, cents, group_by="l_returnflag").collect()
     total = twostage_sum_ci(li, key, cents).collect()[0]
     assert {r["l_returnflag"] for r in g} == {"A", "N", "R"}
     # exact partition: integer cents, no float fold — equality holds
@@ -1449,8 +1446,8 @@ def test_twostage_grouped_partition_of_global(spark):
     both = extra.select("l_orderkey", "l_linenumber", "l_extendedprice", "gg").unionByName(one)
     rows = {
         r["gg"]: r
-        for r in twostage_grouped_sum_ci(
-            both, "l_orderkey * 8 + l_linenumber", "gg", cents
+        for r in twostage_sum_ci(
+            both, "l_orderkey * 8 + l_linenumber", cents, group_by="gg"
         ).collect()
     }
     assert "never" in rows and rows["never"]["n_psus"] in (0, 1)

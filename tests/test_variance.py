@@ -238,10 +238,6 @@ def test_native_approx_percentile_passthrough_preserved(engine):
 
 
 def test_grouped_stddev_covers_per_group(spark, lineitem, duck):
-    from approximatequeryengine_spark.plans.variance import (
-        approx_grouped_stddev_ci,
-        approx_grouped_stddev_ci_sql,
-    )
 
     spec = SamplingSpec(design="uniform_hash", fraction=0.3, key=SPEC.key)
     exact = {
@@ -250,21 +246,67 @@ def test_grouped_stddev_covers_per_group(spark, lineitem, duck):
         .agg(F.stddev_samp(F.col("l_extendedprice").cast("double")).alias("s"))
         .collect()
     }
-    rows = approx_grouped_stddev_ci(
-        lineitem, "l_extendedprice", "l_returnflag", spec
-    ).collect()
+    rows = approx_stddev_ci(lineitem, "l_extendedprice", spec, group_by="l_returnflag").collect()
     assert {r["l_returnflag"] for r in rows} == set(exact)
     covered = sum(
         1 for r in rows if r["ci_lower"] <= exact[r["l_returnflag"]] <= r["ci_upper"]
     )
     assert covered == len(rows)  # 30% sample: every group's CI covers
     assert_df_matches_sql(
-        approx_grouped_stddev_ci(lineitem, "l_extendedprice", "l_returnflag", spec),
+        approx_stddev_ci(lineitem, "l_extendedprice", spec, group_by="l_returnflag"),
         duck,
-        approx_grouped_stddev_ci_sql(
-            "lineitem", "l_extendedprice", "l_returnflag", spec
-        ),
+        approx_stddev_ci_sql("lineitem", "l_extendedprice", spec, group_by="l_returnflag"),
     )
+
+
+def test_grouped_stddev_rows_equal_global_per_group(lineitem):
+    """Each group's row of the grouped STDDEV equals the global
+    estimator run on that group's rows alone: a global query recentres
+    its fourth moment exactly as each group does. l_discount sits about
+    0.05 away from its integer centre 0 with a spread of about 0.03,
+    so an unrecentred m4 widens the global interval several-fold."""
+    spec = SamplingSpec(design="uniform_hash", fraction=0.2, key=SPEC.key)
+    out = approx_stddev_ci(lineitem, "l_discount", spec, group_by="l_returnflag")
+    rows = out.collect()
+    assert len(rows) == 3
+    for row in rows:
+        alone = approx_stddev_ci(
+            lineitem.filter(F.col("l_returnflag") == row["l_returnflag"]),
+            "l_discount",
+            spec,
+        ).collect()[0]
+        assert alone.asDict() == {k: row[k] for k in alone.asDict()}
+
+
+def test_stddev_route_interval_uses_central_fourth_moment(engine, duck):
+    """APPROX(STDDEV(l_discount)) through the engine: the interval is
+    the Kendall–Stuart one with m4 taken about the sample mean,
+    recomputed here in float64 from the same 10% sample."""
+    import math
+
+    from approximatequeryengine_spark.plans.estimators import Z_95
+    from approximatequeryengine_spark.plans.sampling import sampling_where_sql
+
+    res = engine.run("SELECT APPROX(STDDEV(l_discount)) FROM lineitem")
+    spec = SamplingSpec(
+        design="uniform_hash", fraction=0.1, key=engine.catalog.unique_key("lineitem")
+    )
+    xs = [
+        r[0]
+        for r in duck.execute(
+            "SELECT CAST(l_discount AS DOUBLE) FROM lineitem "
+            f"WHERE ({sampling_where_sql(spec)}) AND l_discount IS NOT NULL"
+        ).fetchall()
+    ]
+    n = len(xs)
+    mean = sum(xs) / n
+    s2 = sum((x - mean) ** 2 for x in xs) / (n - 1)
+    m4 = sum((x - mean) ** 4 for x in xs) / n
+    half = Z_95 * math.sqrt((m4 - s2 * s2 * (n - 3) / (n - 1)) / n) / (2 * math.sqrt(s2))
+    assert res.samples_used == n
+    assert res.value == pytest.approx(math.sqrt(s2), abs=1e-4)
+    # bounds are rounded to 4 decimals; an unrecentred m4 gives ~5x the width
+    assert res.ci_upper - res.ci_lower == pytest.approx(2 * half, abs=2e-4)
 
 
 def test_grouped_stddev_dialect_route(engine):
@@ -281,7 +323,7 @@ def test_grouped_stddev_dialect_route(engine):
 
 def test_grouped_corr_dialect_route(engine):
     """Regression (round-4 advisory): grouped APPROX(CORR(x, y)) routes
-    to approx_grouped_corr_ci instead of raising."""
+    to the grouped approx_corr_ci instead of raising."""
     res = engine.run(
         "SELECT APPROX(CORR(l_quantity, l_extendedprice)) FROM lineitem "
         "GROUP BY l_returnflag",
@@ -298,8 +340,8 @@ def test_grouped_corr_dialect_route(engine):
 
 def test_grouped_corr_covers_and_handles_tiny_groups(spark, lineitem, duck):
     from approximatequeryengine_spark.plans.variance import (
-        approx_grouped_corr_ci,
-        approx_grouped_corr_ci_sql,
+        approx_corr_ci,
+        approx_corr_ci_sql,
     )
 
     spec = SamplingSpec(design="uniform_hash", fraction=0.3, key=SPEC.key)
@@ -314,19 +356,19 @@ def test_grouped_corr_covers_and_handles_tiny_groups(spark, lineitem, duck):
         )
         .collect()
     }
-    rows = approx_grouped_corr_ci(
-        lineitem, "l_quantity", "l_extendedprice", "l_returnflag", spec
+    rows = approx_corr_ci(
+        lineitem, "l_quantity", "l_extendedprice", spec, group_by="l_returnflag"
     ).collect()
     assert {r["l_returnflag"] for r in rows} == set(exact)
     for r in rows:
         assert r["ci_lower"] <= exact[r["l_returnflag"]] <= r["ci_upper"]
     assert_df_matches_sql(
-        approx_grouped_corr_ci(
-            lineitem, "l_quantity", "l_extendedprice", "l_returnflag", spec
+        approx_corr_ci(
+            lineitem, "l_quantity", "l_extendedprice", spec, group_by="l_returnflag"
         ),
         duck,
-        approx_grouped_corr_ci_sql(
-            "lineitem", "l_quantity", "l_extendedprice", "l_returnflag", spec
+        approx_corr_ci_sql(
+            "lineitem", "l_quantity", "l_extendedprice", spec, group_by="l_returnflag"
         ),
     )
     # a 1-row group must yield NULL corr/CI, not a crash, in BOTH engines
@@ -344,7 +386,7 @@ def test_grouped_corr_covers_and_handles_tiny_groups(spark, lineitem, duck):
     tiny_spec = SamplingSpec(design="none", key="k")
     got = {
         r["g"]: r
-        for r in approx_grouped_corr_ci(tiny, "x", "y", "g", tiny_spec).collect()
+        for r in approx_corr_ci(tiny, "x", "y", tiny_spec, group_by="g").collect()
     }
     assert got["solo"]["corr"] is None and got["solo"]["ci_lower"] is None
     # perfectly-correlated group: r = 1 exactly, where atanh diverges —
@@ -353,11 +395,11 @@ def test_grouped_corr_covers_and_handles_tiny_groups(spark, lineitem, duck):
     assert got["rest"]["ci_lower"] is None
     # None-safe parity check (the conftest comparator's plain sort
     # can't order None against float; the driver's own hasher can)
-    sdf = approx_grouped_corr_ci(tiny, "x", "y", "g", tiny_spec)
+    sdf = approx_corr_ci(tiny, "x", "y", tiny_spec, group_by="g")
     cols = sorted(sdf.columns)
     key = lambda row: tuple((v is None, str(v)) for v in row)
     srows = sorted((tuple(r[c] for c in cols) for r in sdf.collect()), key=key)
-    res = duck.execute(approx_grouped_corr_ci_sql("tiny_t", "x", "y", "g", tiny_spec))
+    res = duck.execute(approx_corr_ci_sql("tiny_t", "x", "y", tiny_spec, group_by="g"))
     dcols = [d[0] for d in res.description]
     idx = [dcols.index(c) for c in cols]
     drows = sorted((tuple(r[i] for i in idx) for r in res.fetchall()), key=key)
@@ -384,10 +426,6 @@ def test_grouped_stddev_offset_groups_exact_m4_recenter(spark, duck):
         "     ELSE 100000.0 + (range % 3) - 1.0 END AS DOUBLE) AS x, range AS k "
         "FROM range(600)"
     )
-    from approximatequeryengine_spark.plans.variance import (
-        approx_grouped_stddev_ci,
-        approx_grouped_stddev_ci_sql,
-    )
 
     spec = SamplingSpec(design="none", key="k")
     # each group is 100 copies each of {-1, 0, 1} about its own mean:
@@ -397,7 +435,7 @@ def test_grouped_stddev_offset_groups_exact_m4_recenter(spark, duck):
     true_sd = math.sqrt(200.0 / (n_per - 1))
     rows = {
         r["g"]: r
-        for r in approx_grouped_stddev_ci(offs, "x", "g", spec).collect()
+        for r in approx_stddev_ci(offs, "x", spec, group_by="g").collect()
     }
     for g in ("lo", "hi"):
         r = rows[g]
@@ -409,7 +447,7 @@ def test_grouped_stddev_offset_groups_exact_m4_recenter(spark, duck):
             abs(r["stddev"] - true_sd) < 1e-3
         )
     assert_df_matches_sql(
-        approx_grouped_stddev_ci(offs, "x", "g", spec),
+        approx_stddev_ci(offs, "x", spec, group_by="g"),
         duck,
-        approx_grouped_stddev_ci_sql("offs_t", "x", "g", spec),
+        approx_stddev_ci_sql("offs_t", "x", spec, group_by="g"),
     )

@@ -3,6 +3,23 @@ sf0.01 on a VANILLA SparkSession and compare against oracle_sql() via
 DuckDB (row count + sorted-column value comparison). Exit non-zero on
 any mismatch.
 
+    python tools/check_entry.py [dump_dir]
+
+With ``dump_dir``, each entry's Spark rows are also written, sorted, to
+``<dump_dir>/<entry>.txt`` (a column line, then one ``repr`` per row, so
+floats keep every digit). That makes "answers unchanged" a ``cmp`` loop,
+the same as the plan gate of ``tools/explain_all.py``: capture the
+parent twice (``before``, ``before2``), then the change (``after``), and
+
+    for f in before/*.txt; do n=${f#before/}
+      cmp -s "$f" before2/$n || { echo "varies: $n"; continue; }
+      cmp -s "$f" after/$n || echo "moved: $n"
+    done
+
+An entry whose rows differ between the two parent captures varies from
+run to run (a sampled or timing-dependent readout); list it rather than
+gate on it.
+
 ``check_one.py`` imports :func:`make_duck`, :func:`get_session`, and
 :func:`check_query` for the single-entry fast loop — keep the
 comparison semantics (including the dtype gate) in ONE place here.
@@ -53,16 +70,20 @@ def _key(row):
     return tuple((v is None, str(type(v)), str(v)) for v in row)
 
 
-def check_query(spark, con, name, fn, oracle, sf_dir: str = SF_DIR):
+def check_query(spark, con, name, fn, oracle, sf_dir: str = SF_DIR, dump_dir=None):
     """Run one queries() entry and compare to its oracle. Returns
     ``None`` on a match (or a rows-only entry), else the failure reason.
-    Raises nothing: exceptions come back as a reason string."""
+    Raises nothing: exceptions come back as a reason string. With
+    ``dump_dir``, the sorted Spark rows go to ``<dump_dir>/<name>.txt``."""
     try:
         sdf = fn(spark, sf_dir)
         cols = sorted(sdf.columns)
         srows = sorted(
             (tuple(row[c] for c in cols) for row in sdf.collect()), key=_key
         )
+        if dump_dir is not None:
+            with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
+                f.write("".join(f"{r!r}\n" for r in [tuple(cols), *srows]))
         if oracle is None:
             return None, f"rows-only check, {len(srows)} rows OK"
         res = con.execute(oracle)
@@ -106,8 +127,11 @@ def check_query(spark, con, name, fn, oracle, sf_dir: str = SF_DIR):
         return f"EXCEPTION {type(e).__name__}: {e}", None
 
 
-def main() -> int:
+def main(dump_dir: str | None = None) -> int:
     import __spark_entry__ as entrymod
+
+    if dump_dir is not None:
+        os.makedirs(dump_dir, exist_ok=True)
 
     spark = get_session()
     con = make_duck()
@@ -122,7 +146,9 @@ def main() -> int:
 
     failures = []
     for name, fn in qs.items():
-        reason, ok = check_query(spark, con, name, fn, oracles.get(name))
+        reason, ok = check_query(
+            spark, con, name, fn, oracles.get(name), dump_dir=dump_dir
+        )
         if reason:
             failures.append((name, reason))
         else:
@@ -138,4 +164,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else None))
