@@ -72,11 +72,7 @@ from approximatequeryengine_spark.plans.advisor import (
     advise_method_evidence,
     advise_quantile_evidence,
 )
-from approximatequeryengine_spark.plans.bootstrap import (
-    blb_sum_ci,
-    bootstrap_grouped_sum_ci,
-    bootstrap_sum_ci,
-)
+from approximatequeryengine_spark.plans.bootstrap import blb_sum_ci, bootstrap_sum_ci
 from approximatequeryengine_spark.plans.ddsketch import ddsketch_quantiles
 from approximatequeryengine_spark.plans.distinct import chao1_sql, kmv_distinct_ci
 from approximatequeryengine_spark.plans.estimators import (
@@ -85,10 +81,7 @@ from approximatequeryengine_spark.plans.estimators import (
     approx_aggregate,
 )
 from approximatequeryengine_spark.plans.hll import HLL_M, _estimate, hll_registers
-from approximatequeryengine_spark.plans.outlier import (
-    outlier_grouped_sum_ci,
-    outlier_sum_ci,
-)
+from approximatequeryengine_spark.plans.outlier import outlier_sum_ci
 from approximatequeryengine_spark.plans.poststrat import poststrat_sum_ci
 from approximatequeryengine_spark.plans.pps import pps_sum_ci
 from approximatequeryengine_spark.plans.priority import priority_sample_subset_sum
@@ -648,7 +641,7 @@ class AQEngine:
         est.check(q)
         fraction = (q.pct / 100.0) if q.pct else error_ladder(q.error_pct or 5.0)
         s_spec = self._sampling_spec(spec, METHODS[q.method]["design"], fraction)
-        out = (est.grouped if spec.group_by else est.run)(q, self._base_df(spec), s_spec)
+        out = est.run(q, self._base_df(spec), s_spec)
         if isinstance(out, ApproxResult):
             res = out
             res.method = q.method
@@ -1253,17 +1246,17 @@ _ROUTES: tuple[_Route, ...] = (
 @dataclass(frozen=True)
 class _Method:
     """How the sampled dialect route runs one ``method=`` (METHODS
-    holds its sampling design and description): its estimator for a
-    global query and, if it has one, for a grouped query — each
+    holds its sampling design and description): its estimator
     ``(query, base frame, sampling spec) → result frame`` or a finished
-    ApproxResult; the aggregates it accepts; its output columns renamed
+    ApproxResult, which reads any GROUP BY from the query; whether it
+    accepts one; the aggregates it accepts; its output columns renamed
     to the ``sum_<col>`` estimate and to ``n_samples``; the fraction it
     reports when not the requested one; the ``run()`` argument it needs
     (name, what it is). A sketch for another aggregate family has no
     estimator here: ``only`` names the family it serves."""
 
     run: Callable | None = None
-    grouped: Callable | None = None
+    grouped: bool = False
     aggs: tuple[str, ...] = ("SUM",)
     estimate: str | None = "estimate"
     n_samples: str | None = None
@@ -1290,7 +1283,7 @@ class _Method:
                 f"method={name!r} applies to {self.only} only; use the "
                 "sampling methods for SUM/AVG/COUNT"
             )
-        if spec.agg not in self.aggs or (spec.group_by and self.grouped is None):
+        if spec.agg not in self.aggs or (spec.group_by and not self.grouped):
             scope = " or a SUM grouped by one column" if self.grouped else ""
             hint = self.hint or "the closed-form methods for AVG/COUNT" + (
                 "" if self.grouped else "/GROUP BY"
@@ -1314,16 +1307,14 @@ def _closed_form(q: _Query, base: DataFrame, s: SamplingSpec) -> DataFrame:
 
 
 def _adaptive(q: _Query, base: DataFrame, s: SamplingSpec) -> ApproxResult:
-    return adaptive_aggregate(
-        base, q.agg, s, error_pct=q.error_pct or 5.0, confidence=q.confidence,
-        validators=METHODS[q.method].get("validators", 0), z=q.z,
-    )
-
-
-def _adaptive_grouped(q: _Query, base: DataFrame, s: SamplingSpec) -> ApproxResult:
-    """Round 3: grouped adaptive escalation — double the fraction until
-    the WORST group's relative CI half-width meets the budget (the
-    reference ran grouped queries at a fixed fraction)."""
+    """Double the fraction until the CI half-width meets the budget; a
+    grouped query escalates until the WORST group's does (the reference
+    ran grouped queries at a fixed fraction)."""
+    if not q.spec.group_by:
+        return adaptive_aggregate(
+            base, q.agg, s, error_pct=q.error_pct or 5.0, confidence=q.confidence,
+            validators=METHODS[q.method].get("validators", 0), z=q.z,
+        )
     rdf, fraction, iterations = adaptive_grouped_aggregate(
         base, q.agg, [q.spec.group_by], s, error_pct=q.error_pct or 5.0, z=q.z
     )
@@ -1356,19 +1347,17 @@ _ALL_AGGS = ("SUM", "AVG", "COUNT", "MIN", "MAX")
 _ESTIMATORS: dict[str, _Method] = {
     **dict.fromkeys(
         ("random", "block", "parallel", "revolutionary"),
-        _Method(_closed_form, _closed_form, _ALL_AGGS, estimate=None),
+        _Method(_closed_form, True, _ALL_AGGS, estimate=None),
     ),
     **dict.fromkeys(
         ("clt", "adaptive"),
-        _Method(_adaptive, _adaptive_grouped, _ALL_AGGS, estimate=None),
+        _Method(_adaptive, True, _ALL_AGGS, estimate=None),
     ),
     "outlier": _Method(
         lambda q, base, s: outlier_sum_ci(
-            base, q.spec.column, s.key, s.fraction, z=q.z
+            base, q.spec.column, s.key, s.fraction, z=q.z, group_by=q.spec.group_by
         ),
-        lambda q, base, s: outlier_grouped_sum_ci(
-            base, q.spec.column, q.spec.group_by, s.key, s.fraction, z=q.z
-        ),
+        True,
     ),
     "priority": _Method(
         lambda q, base, s: priority_sample_subset_sum(
@@ -1378,18 +1367,18 @@ _ESTIMATORS: dict[str, _Method] = {
         n_samples="n_sample",
     ),
     "twostage": _Method(
-        _twostage, _twostage,
+        _twostage, True,
         estimate="sum_value",
         n_samples="n_rows",
         fraction=TS_F1 * TS_F2,
     ),
     "poststrat": _Method(
-        _poststrat, _poststrat,
+        _poststrat, True,
         needs=("stratum_col", "<column> — the column whose exact counts "
                "re-weight the sample"),
     ),
     "regaux": _Method(
-        _regaux, _regaux,
+        _regaux, True,
         needs=("aux_column", "<column/expression> — the auxiliary whose "
                "exact total calibrates the sample"),
     ),
@@ -1402,10 +1391,10 @@ _ESTIMATORS: dict[str, _Method] = {
         hint="method='bootstrap' for grouped bootstrap CIs",
     ),
     "bootstrap": _Method(
-        lambda q, base, s: bootstrap_sum_ci(base, q.spec.column, s, z=q.z),
-        lambda q, base, s: bootstrap_grouped_sum_ci(
-            base, q.spec.column, q.spec.group_by, s, z=q.z
+        lambda q, base, s: bootstrap_sum_ci(
+            base, q.spec.column, s, z=q.z, group_by=q.spec.group_by
         ),
+        True,
     ),
     **dict.fromkeys(
         ("hll", "kmv", "chao1"), _Method(only="COUNT(DISTINCT)")

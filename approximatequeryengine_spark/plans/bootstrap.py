@@ -15,10 +15,13 @@ non-uniform on hash-selected keys) — pure integer/CASE arithmetic,
 identical in Spark SQL and DuckDB, so the driver's value-hash gate
 covers the bootstrap CI too.
 
-Plan shape at scale: the global AND grouped estimators ship the slim
-sampled columns through a vectorized Arrow ``mapInPandas`` kernel that
-accumulates all R replicate partial sums per partition (per group for
-the grouped twin) — measured faster than both the explode fan-out and
+GROUP BY: a grouped query runs the same estimator within each group;
+a global query is the call with no ``group_by``.
+
+Plan shape at scale: the estimator ships the slim sampled columns
+through a vectorized Arrow ``mapInPandas`` kernel that accumulates all
+R replicate partial sums per partition (per group when grouped) —
+measured faster than both the explode fan-out and
 a pure-SQL column-wise rewrite, whose 32 CASE ladders fall out of
 JIT-compilable codegen (see ``bootstrap_sum_ci``). The BLB variant
 keeps the ``explode(sequence(-1, R-1))`` fan-out (R+1 rows per sampled
@@ -47,6 +50,7 @@ from approximatequeryengine_spark.plans.estimators import Z_95
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     apply_sampling,
+    sampling_p_sql,
     sampling_where_sql,
 )
 
@@ -75,10 +79,12 @@ def bootstrap_sum_ci(
     replicates: int = DEFAULT_REPLICATES,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> DataFrame:
-    """1-row DataFrame: (estimate, ci_lower, ci_upper, n_samples,
-    n_replicates) for the HT-scaled SUM, with the CI from the bootstrap
-    standard error (est ± z·sd of the replicate estimates).
+    """(estimate, ci_lower, ci_upper, n_samples, n_replicates) for the
+    HT-scaled SUM, with the CI from the bootstrap standard error
+    (est ± z·sd of the replicate estimates): one row, or one row per
+    ``group_by`` value led by that column.
 
     Plan shape: a VECTORIZED Arrow partial-sum kernel, not row fan-out.
     The original ``explode(sequence(-1, R-1))`` design multiplied the
@@ -94,14 +100,14 @@ def bootstrap_sum_ci(
     all R replicate partial sums per partition with numpy broadcasting —
     identical 64-bit integer arithmetic to the SQL spelling, ~10× fewer
     cycles per (row, replicate) than codegen row-at-a-time. Each
-    partition emits ONE row: an array [n, n_valid, Σx/p, e_0..e_{R-1}]
-    of partial accumulators; a pos-exploded micro-aggregate
-    (≤ (R+3)·partitions rows) reduces them to the same (ht, sd, n) the
-    explode plan produced. The estimator definition (hash family,
-    weights, reductions) is unchanged, so the DuckDB oracle is
-    untouched; float fold order differs across engines exactly as
-    before, absorbed by the round_to grid + integer margin (module
-    docstring).
+    partition emits ONE row per group: an array
+    [n, n_valid, Σx/p, e_0..e_{R-1}] of partial accumulators; a
+    pos-exploded micro-aggregate (≤ (R+3)·groups·partitions rows)
+    reduces them to the same (ht, sd, n) the explode plan produced.
+    The estimator definition (hash family, weights, reductions) is
+    unchanged, so the DuckDB oracle is untouched; float fold order
+    differs across engines exactly as before, absorbed by the round_to
+    grid + integer margin (module docstring).
 
     NULL parity: NaN measure values are zeroed in the accumulators but
     counted in ``n_valid`` = #non-NULL; when a (group's) sample has ZERO
@@ -110,24 +116,28 @@ def bootstrap_sum_ci(
     empty/all-NULL inputs, not just the happy path.
 
     At 100 TB this keeps the aggregate's distributed shape: per-partition
-    Arrow-batched partials, a shuffle of (R+3)·partitions scalar rows,
-    one final 1-row reduce."""
+    Arrow-batched partials, a shuffle of (R+3)·groups·partitions scalar
+    rows, one final reduce of a row per group."""
     if replicates < 2:
         raise ValueError("bootstrap needs at least 2 replicates")
+    gs = ["g"] if group_by else []
     x = F.col(column).cast("double")
     key = F.expr(spec.key).cast("long")
     sampled = apply_sampling(df, spec).select(
-        x.alias("x"), key.alias("k"), F.col("__p").alias("p")
+        *(F.col(group_by).alias(g) for g in gs),
+        x.alias("x"), key.alias("k"), F.col("__p").alias("p"),
     )
     sampled = _cap_kernel_parallelism(sampled)
-    kernel = _poisson_partials_kernel(replicates)
-    parts = sampled.mapInPandas(kernel, schema="es array<double>")
+    schema = [*(f"g {dict(sampled.dtypes)['g']}" for g in gs), "es array<double>"]
+    parts = sampled.mapInPandas(
+        _poisson_partials_kernel(replicates, bool(gs)), schema=", ".join(schema)
+    )
     sums = (
-        parts.select(F.posexplode("es").alias("i", "v"))
-        .groupBy("i")
+        parts.select(*gs, F.posexplode("es").alias("i", "v"))
+        .groupBy(*gs, "i")
         .agg(F.sum("v").alias("s"))
     )
-    agg = sums.agg(
+    agg = sums.groupBy(*gs).agg(
         F.min(F.when(F.col("i") == 0, F.col("s"))).cast("long").alias("n_samples"),
         F.min(F.when(F.col("i") == 1, F.col("s"))).cast("long").alias("n_valid"),
         F.min(F.when(F.col("i") == 2, F.col("s"))).alias("ht_raw"),
@@ -142,6 +152,7 @@ def bootstrap_sum_ci(
     # (see estimators._ci_columns).
     margin = F.round(F.lit(z) * F.col("sd"), 0)
     return agg.select(
+        *(F.col(g).alias(group_by) for g in gs),
         F.round(F.col("ht"), round_to).alias("estimate"),
         F.round(F.col("ht") - margin, round_to).alias("ci_lower"),
         F.round(F.col("ht") + margin, round_to).alias("ci_upper"),
@@ -170,9 +181,10 @@ def _cap_kernel_parallelism(sampled: DataFrame) -> DataFrame:
     return sampled
 
 
-def _poisson_partials_kernel(replicates: int):
-    """Build the mapInPandas kernel: per partition, one output row whose
-    array is [n, n_valid, Σx/p, e_0..e_{R-1}] with
+def _poisson_partials_kernel(replicates: int, grouped: bool):
+    """Build the mapInPandas kernel: per partition, one output row per
+    group (one row when not ``grouped``, even for an empty partition)
+    whose array is [n, n_valid, Σx/p, e_0..e_{R-1}] with
     e_r = Σ poisson_w(k, r)·x/p over the non-NULL values.
 
     The replicate hashes are ``hashing.avalanche_np`` over the
@@ -189,108 +201,21 @@ def _poisson_partials_kernel(replicates: int):
 
         cdf = np.array(_POISSON_CDF, dtype=np.float64)
         salts = BOOT_SALT0 + np.arange(replicates, dtype=np.int64)
-        n = 0
-        n_valid = 0
-        ht = 0.0
-        es = np.zeros(replicates, dtype=np.float64)
+        acc: dict = {} if grouped else {None: np.zeros(replicates + 3)}
         for pdf in batches:
-            k = pdf["k"].to_numpy(np.int64)
-            hx = pdf["x"].to_numpy(np.float64) / pdf["p"].to_numpy(np.float64)
-            n += len(k)
-            # NULL x arrives as NaN: SQL aggregates (the oracle and the
-            # old explode path) SKIP nulls while count(*) still counts
-            # the row — zero the contribution and track n_valid so the
-            # reduce can reproduce SQL's NULL-when-no-values semantics.
-            nan = np.isnan(hx)
-            n_valid += int(len(k) - nan.sum())
-            hx = np.where(nan, 0.0, hx)
-            ht += float(hx.sum())
-            h = avalanche_np(k[:, None], salts)
-            u = h.astype(np.float64) / float(HASH_SPACE)
-            w = np.searchsorted(cdf, u.ravel(), side="right").reshape(u.shape)
-            es += (w.astype(np.float64) * hx[:, None]).sum(axis=0)
-        yield pd.DataFrame(
-            {"es": [np.concatenate(([float(n), float(n_valid), ht], es)).tolist()]}
-        )
-
-    return kernel
-
-
-def bootstrap_grouped_sum_ci(
-    df: DataFrame,
-    column: str,
-    group_col: str,
-    spec: SamplingSpec,
-    replicates: int = DEFAULT_REPLICATES,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> DataFrame:
-    """Per-group bootstrap SUM CI — the grouped twin of
-    :func:`bootstrap_sum_ci`, sharing its vectorized Arrow kernel
-    design: each partition accumulates a per-group array of
-    [n, Σx/p, e_0..e_{R-1}] partials (numpy broadcasting per group
-    chunk, identical integer hash arithmetic to the SQL spelling), and
-    the reduce shuffles only (R+2)·|groups|·partitions scalar rows into
-    the same (group, slot) micro-aggregate the explode plan produced.
-    The estimator definition is unchanged, so the DuckDB oracle is
-    untouched (fold-order float noise absorbed by round_to + integer
-    margin, as documented on the global kernel)."""
-    if replicates < 2:
-        raise ValueError("bootstrap needs at least 2 replicates")
-    x = F.col(column).cast("double")
-    key = F.expr(spec.key).cast("long")
-    sampled = apply_sampling(df, spec).select(
-        F.col(group_col).alias("g"), x.alias("x"), key.alias("k"),
-        F.col("__p").alias("p"),
-    )
-    sampled = _cap_kernel_parallelism(sampled)
-    g_type = dict(sampled.dtypes)["g"]
-    kernel = _grouped_poisson_partials_kernel(replicates)
-    parts = sampled.mapInPandas(kernel, schema=f"g {g_type}, es array<double>")
-    sums = (
-        parts.select("g", F.posexplode("es").alias("i", "v"))
-        .groupBy("g", "i")
-        .agg(F.sum("v").alias("s"))
-    )
-    agg = sums.groupBy("g").agg(
-        F.min(F.when(F.col("i") == 0, F.col("s"))).cast("long").alias("n_samples"),
-        F.min(F.when(F.col("i") == 1, F.col("s"))).cast("long").alias("n_valid"),
-        F.min(F.when(F.col("i") == 2, F.col("s"))).alias("ht_raw"),
-        F.stddev_samp(F.when(F.col("i") >= 3, F.col("s"))).alias("sd"),
-    ).withColumn("ht", F.when(F.col("n_valid") > 0, F.col("ht_raw")))
-    margin = F.round(F.lit(z) * F.col("sd"), 0)
-    return agg.select(
-        F.col("g").alias(group_col),
-        F.round(F.col("ht"), round_to).alias("estimate"),
-        F.round(F.col("ht") - margin, round_to).alias("ci_lower"),
-        F.round(F.col("ht") + margin, round_to).alias("ci_upper"),
-        F.col("n_samples"),
-    ).orderBy(group_col)
-
-
-def _grouped_poisson_partials_kernel(replicates: int):
-    """Grouped variant of :func:`_poisson_partials_kernel`: one output
-    row per (partition, group) whose array is
-    [n, n_valid, Σx/p, e_0..e_{R-1}] accumulated over that group's
-    rows. NULL x is zeroed while n_valid tracks the non-NULL count, so
-    an all-NULL GROUP reduces to a NULL estimate like SQL (count(*)
-    parity for n_samples)."""
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        cdf = np.array(_POISSON_CDF, dtype=np.float64)
-        salts = BOOT_SALT0 + np.arange(replicates, dtype=np.int64)
-        acc: dict = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby("g", sort=False, dropna=False):
+            subs = pdf.groupby("g", sort=False, dropna=False) if grouped else [(None, pdf)]
+            for g, sub in subs:
                 k = sub["k"].to_numpy(np.int64)
                 hx = sub["x"].to_numpy(np.float64) / sub["p"].to_numpy(np.float64)
                 a = acc.get(g)
                 if a is None:
-                    a = acc[g] = np.zeros(replicates + 3, dtype=np.float64)
+                    a = acc[g] = np.zeros(replicates + 3)
                 a[0] += len(k)
+                # NULL x arrives as NaN: SQL aggregates (the oracle and
+                # the old explode path) SKIP nulls while count(*) still
+                # counts the row — zero the contribution and track
+                # n_valid so the reduce can reproduce SQL's
+                # NULL-when-no-values semantics.
                 nan = np.isnan(hx)
                 a[1] += float(len(k) - nan.sum())
                 hx = np.where(nan, 0.0, hx)
@@ -300,9 +225,8 @@ def _grouped_poisson_partials_kernel(replicates: int):
                 w = np.searchsorted(cdf, u.ravel(), side="right").reshape(u.shape)
                 a[3:] += (w.astype(np.float64) * hx[:, None]).sum(axis=0)
         if acc:
-            yield pd.DataFrame(
-                {"g": list(acc.keys()), "es": [a.tolist() for a in acc.values()]}
-            )
+            es = {"es": [a.tolist() for a in acc.values()]}
+            yield pd.DataFrame({"g": list(acc), **es} if grouped else es)
 
     return kernel
 
@@ -474,71 +398,42 @@ FROM agg
 """
 
 
-def bootstrap_grouped_sum_ci_sql(
-    table: str,
-    column: str,
-    group_col: str,
-    spec: SamplingSpec,
-    p_sql: str,
-    replicates: int = DEFAULT_REPLICATES,
-    z: float = Z_95,
-    round_to: int = 3,
-) -> str:
-    where = sampling_where_sql(spec)
-    x = f"CAST({column} AS DOUBLE)"
-    key = f"CAST({spec.key} AS BIGINT)"
-    hash_steps, h_final = avalanche_hash_sql_steps("k", f"{BOOT_SALT0} + r")
-    u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
-    w = f"CASE WHEN r = -1 THEN 1 ELSE {_poisson_icdf_sql(u)} END"
-    return f"""
-WITH s AS (SELECT {group_col} AS g, {x} AS x, {key} AS k, {p_sql} AS p
-           FROM {table} WHERE {where}),
-rep AS (SELECT s.*, v.r FROM s, (SELECT unnest(generate_series(-1, {replicates - 1})) AS r) v),
-hashed AS (SELECT rep.*, {hash_steps} FROM rep),
-boot AS (SELECT g, r, sum(CAST({w} AS DOUBLE) * x / p) AS est_r, count(*) AS n
-         FROM hashed GROUP BY g, r),
-agg AS (SELECT g, min(CASE WHEN r = -1 THEN est_r END) AS ht,
-               stddev_samp(CASE WHEN r >= 0 THEN est_r END) AS sd,
-               min(CASE WHEN r = -1 THEN n END) AS n_samples
-        FROM boot GROUP BY g)
-SELECT g AS {group_col},
-       round(ht, {round_to}) AS estimate,
-       round(ht - round({z!r} * sd, 0), {round_to}) AS ci_lower,
-       round(ht + round({z!r} * sd, 0), {round_to}) AS ci_upper,
-       n_samples
-FROM agg ORDER BY {group_col}
-"""
-
-
 def bootstrap_sum_ci_sql(
     table: str,
     column: str,
     spec: SamplingSpec,
-    p_sql: str,
+    p_sql: str | None = None,
     replicates: int = DEFAULT_REPLICATES,
     z: float = Z_95,
     round_to: int = 3,
+    group_by: str | None = None,
 ) -> str:
-    """DuckDB oracle: the same fan-out, hash, weights, and reductions.
-    Only the replicate-sequence spelling differs from the Spark plan
-    (generate_series vs sequence+explode)."""
+    """DuckDB oracle: the same fan-out, hash, weights, and reductions
+    (per group when grouped). Only the replicate-sequence spelling
+    differs from the Spark plan (generate_series vs sequence+explode).
+    ``p_sql`` is each sampled row's inclusion probability, by default
+    ``sampling_p_sql(spec)``."""
     where = sampling_where_sql(spec)
+    gs = ["g"] if group_by else []
+    g_cols = "".join(f"{g}, " for g in gs)
     x = f"CAST({column} AS DOUBLE)"
     key = f"CAST({spec.key} AS BIGINT)"
     hash_steps, h_final = avalanche_hash_sql_steps("k", f"{BOOT_SALT0} + r")
     u = f"(CAST({h_final} AS DOUBLE) / {float(HASH_SPACE)!r})"
     w = f"CASE WHEN r = -1 THEN 1 ELSE {_poisson_icdf_sql(u)} END"
     return f"""
-WITH s AS (SELECT {x} AS x, {key} AS k, {p_sql} AS p FROM {table} WHERE {where}),
+WITH s AS (SELECT {"".join(f"{group_by} AS {g}, " for g in gs)}{x} AS x, {key} AS k,
+                  {p_sql or sampling_p_sql(spec)} AS p
+           FROM {table} WHERE {where}),
 rep AS (SELECT s.*, v.r FROM s, (SELECT unnest(generate_series(-1, {replicates - 1})) AS r) v),
 hashed AS (SELECT rep.*, {hash_steps} FROM rep),
-boot AS (SELECT r, sum(CAST({w} AS DOUBLE) * x / p) AS est_r, count(*) AS n
-         FROM hashed GROUP BY r),
-agg AS (SELECT min(CASE WHEN r = -1 THEN est_r END) AS ht,
+boot AS (SELECT {g_cols}r, sum(CAST({w} AS DOUBLE) * x / p) AS est_r, count(*) AS n
+         FROM hashed GROUP BY ALL),
+agg AS (SELECT {g_cols}min(CASE WHEN r = -1 THEN est_r END) AS ht,
                stddev_samp(CASE WHEN r >= 0 THEN est_r END) AS sd,
                min(CASE WHEN r = -1 THEN n END) AS n_samples
-        FROM boot)
-SELECT round(ht, {round_to}) AS estimate,
+        FROM boot GROUP BY ALL)
+SELECT {"".join(f"{g} AS {group_by}, " for g in gs)}round(ht, {round_to}) AS estimate,
        round(ht - round({z!r} * sd, 0), {round_to}) AS ci_lower,
        round(ht + round({z!r} * sd, 0), {round_to}) AS ci_upper,
        n_samples, {replicates} AS n_replicates

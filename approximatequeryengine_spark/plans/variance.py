@@ -87,10 +87,13 @@ def approx_stddev_ci(
         .filter(F.col("x").isNotNull())
     )
     if group_by:
-        centres = sampled.groupBy(group_by).agg(
+        centres = sampled.groupBy(F.col(group_by).alias("__g")).agg(
             F.floor(F.avg("x") + F.lit(0.5)).cast("double").alias("c")
         )
-        sampled = sampled.join(F.broadcast(centres), group_by)
+        # Null-safe, so a NULL group keeps its centre.
+        sampled = sampled.join(
+            F.broadcast(centres), F.col(group_by).eqNullSafe(F.col("__g"))
+        )
     else:
         # A global query always answers one row: its centre is collected
         # first, and a sample too small to have a spread is rejected.
@@ -153,7 +156,7 @@ def approx_stddev_ci_sql(
     gs = ["g"] if group_by else []
     g_src = "".join(f"{group_by} AS {g}, " for g in gs)
     g_cols = "".join(f"{g}, " for g in gs)
-    on = " AND ".join(f"s.{g} = c.{g}" for g in gs) or "TRUE"
+    on = " AND ".join(f"s.{g} IS NOT DISTINCT FROM c.{g}" for g in gs) or "TRUE"
     return f"""
 WITH s AS (SELECT {g_src}CAST({column} AS DOUBLE) AS x
            FROM {table}

@@ -1391,9 +1391,8 @@ _twin_query(
     "orders", "o_totalprice", "o_orderkey", 0.10,
 )
 _twin_query(
-    "approx_grouped_sum_outlier",
-    _outlier.outlier_grouped_sum_ci, _outlier.outlier_grouped_sum_ci_sql,
-    "orders", "o_totalprice", "o_orderpriority", "o_orderkey", 0.10, n_outliers=50,
+    "approx_grouped_sum_outlier", _outlier.outlier_sum_ci, _outlier.outlier_sum_ci_sql,
+    "orders", "o_totalprice", "o_orderkey", 0.10, n_outliers=50, group_by="o_orderpriority",
 )
 
 
@@ -2264,39 +2263,10 @@ def _chao1_queries() -> tuple[str, str]:
     )
 
 
-def _bootstrap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass Poissonized bootstrap CI for the HT-scaled SUM
-    (plans/bootstrap.py) — replicate weights from the salted portable
-    hash, so the whole thing (CI included) is oracle-checkable."""
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _boot.bootstrap_sum_ci(cat.table("lineitem"), "l_extendedprice", spec)
-
-
-def _bootstrap_oracle() -> str:
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _boot.bootstrap_sum_ci_sql(
-        "lineitem", "l_extendedprice", spec, p_sql=sampling_p_sql(spec)
-    )
-
-
-_register("approx_sum_bootstrap32", _bootstrap_fn, _bootstrap_oracle())
-
-
-def _grouped_bootstrap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = _catalog(spark, sf_dir)
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _boot.bootstrap_grouped_sum_ci(
-        cat.table("lineitem"), "l_extendedprice", "l_returnflag", spec
-    )
-
-
-def _grouped_bootstrap_oracle() -> str:
-    spec = SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY)
-    return _boot.bootstrap_grouped_sum_ci_sql(
-        "lineitem", "l_extendedprice", "l_returnflag", spec,
-        p_sql=sampling_p_sql(spec),
-    )
+_twin_query(
+    "approx_sum_bootstrap32", _boot.bootstrap_sum_ci, _boot.bootstrap_sum_ci_sql,
+    "lineitem", "l_extendedprice", SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+)
 
 
 def _ratio_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2328,10 +2298,10 @@ def _ratio_oracle() -> str:
 _register("approx_ratio_discount_rate", _ratio_fn, _ratio_oracle())
 
 
-_register(
-    "approx_grouped_sum_bootstrap32",
-    _grouped_bootstrap_fn,
-    _grouped_bootstrap_oracle(),
+_twin_query(
+    "approx_grouped_sum_bootstrap32", _boot.bootstrap_sum_ci, _boot.bootstrap_sum_ci_sql,
+    "lineitem", "l_extendedprice", SamplingSpec(design="uniform_hash", fraction=0.10, key=_LKEY),
+    group_by="l_returnflag",
 )
 
 

@@ -100,6 +100,19 @@ def duck_med():
     return _duck(SF_DIR_MED)
 
 
+@pytest.fixture(scope="session")
+def null_group_frame(spark):
+    """3,000 rows ``(k, g, v)``: the group ``g`` is NULL on a third of
+    them, and ``v`` is integer-valued and heavy-tailed (every 97th row is
+    about 1,000× the rest)."""
+    return spark.range(3000).selectExpr(
+        "id AS k",
+        "CASE WHEN id % 3 = 0 THEN NULL ELSE CAST(id % 2 AS STRING) END AS g",
+        "CAST(CASE WHEN id % 97 = 0 THEN 10000 + id % 7 * 1000 ELSE 10 + id % 13 END"
+        " AS DOUBLE) AS v",
+    )
+
+
 def duck_of(**frames):
     """A fresh DuckDB connection with each Spark frame registered under
     its keyword — the table name an operator's ``*_sql`` twin reads."""

@@ -10,7 +10,7 @@ from approximatequeryengine_spark.plans.outlier import (
     outlier_sum_ci_sql,
 )
 from approximatequeryengine_spark.plans.sampling import SamplingSpec, apply_sampling
-from tests.conftest import SF_DIR, assert_df_matches_sql
+from tests.conftest import SF_DIR, assert_df_matches_sql, duck_of
 
 
 def test_covers_exact_and_outliers_are_exact(spark, engine):
@@ -107,22 +107,36 @@ def test_fraction_one_degenerates_to_exact(spark, engine, duck):
 
 
 def test_grouped_outlier_oracle_parity(spark, engine, duck):
-    from approximatequeryengine_spark.plans.outlier import (
-        outlier_grouped_sum_ci,
-        outlier_grouped_sum_ci_sql,
-    )
-
     orders = engine.catalog.table("orders")
     assert_df_matches_sql(
-        outlier_grouped_sum_ci(
-            orders, "o_totalprice", "o_orderpriority", "o_orderkey", 0.2,
-            n_outliers=50,
+        outlier_sum_ci(
+            orders, "o_totalprice", "o_orderkey", 0.2, n_outliers=50,
+            group_by="o_orderpriority",
         ),
         duck,
-        outlier_grouped_sum_ci_sql(
-            "orders", "o_totalprice", "o_orderpriority", "o_orderkey", 0.2,
-            n_outliers=50,
+        outlier_sum_ci_sql(
+            "orders", "o_totalprice", "o_orderkey", 0.2, n_outliers=50,
+            group_by="o_orderpriority",
         ),
+    )
+
+
+def test_grouped_outlier_rows_equal_global_per_group(null_group_frame):
+    """Each group's row of the grouped estimator, the NULL group
+    included, equals the global estimator run on that group's rows
+    alone, and the DuckDB twin returns the same rows. Integer values at
+    fraction 0.5 keep every moment exact, so the rows match exactly."""
+    df = null_group_frame
+    out = outlier_sum_ci(df, "v", "k", 0.5, group_by="g")
+    rows = out.collect()
+    assert {r["g"] for r in rows} == {"0", "1", None}
+    for row in rows:
+        alone = outlier_sum_ci(
+            df.filter(F.col("g").eqNullSafe(F.lit(row["g"]))), "v", "k", 0.5
+        ).collect()[0]
+        assert alone.asDict() == {k: row[k] for k in alone.asDict()}
+    assert_df_matches_sql(
+        out, duck_of(t=df), outlier_sum_ci_sql("t", "v", "k", 0.5, group_by="g")
     )
 
 
@@ -130,8 +144,6 @@ def test_grouped_outlier_narrower_than_uniform_per_group(spark):
     """Each group's outlier-indexed CI must beat the grouped uniform
     estimator's CI on heavy-tailed per-group data — the skew robustness
     is per group, not just in aggregate."""
-    from approximatequeryengine_spark.plans.outlier import outlier_grouped_sum_ci
-
     df = spark.range(0, 30_000).select(
         F.col("id").alias("k"),
         (F.col("id") % 3).cast("string").alias("g"),
@@ -153,8 +165,8 @@ def test_grouped_outlier_narrower_than_uniform_per_group(spark):
             apply_sampling(df, spec), AggSpec("sum", "v"), group_by=["g"]
         ).collect():
             width_uni[r["g"]].append(r["ci_upper"] - r["ci_lower"])
-        for r in outlier_grouped_sum_ci(
-            df, "v", "g", "k", 0.1, n_outliers=200, salt=salt
+        for r in outlier_sum_ci(
+            df, "v", "k", 0.1, n_outliers=200, salt=salt, group_by="g"
         ).collect():
             width_out[r["g"]].append(r["ci_upper"] - r["ci_lower"])
             n_checks += 1

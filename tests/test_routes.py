@@ -118,6 +118,12 @@ JOBS = {
     ),
     "twostage": (L, {"method": "twostage"}, 4),
     "twostage_grouped": (L + " GROUP BY l_returnflag", {"method": "twostage"}, 5),
+    "outlier": (L, {"sample_pct": 10, "method": "outlier"}, 4),
+    "outlier_grouped": (L + " GROUP BY l_returnflag", {"sample_pct": 10, "method": "outlier"}, 4),
+    "bootstrap": (L, {"sample_pct": 10, "method": "bootstrap"}, 5),
+    "bootstrap_grouped": (
+        L + " GROUP BY l_returnflag", {"sample_pct": 10, "method": "bootstrap"}, 4
+    ),
 }
 
 

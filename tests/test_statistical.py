@@ -582,9 +582,7 @@ def test_grouped_bootstrap_all_null_group_yields_null(spark, duck):
     """Regression (round-4 second review): a group whose every sampled
     value is NULL must produce a NULL estimate (SQL sum-over-no-values),
     not 0.0 — matching the unchanged DuckDB oracle semantics."""
-    from approximatequeryengine_spark.plans.bootstrap import (
-        bootstrap_grouped_sum_ci,
-    )
+    from approximatequeryengine_spark.plans.bootstrap import bootstrap_sum_ci
     from approximatequeryengine_spark.plans.sampling import SamplingSpec
 
     df = spark.range(1000).select(
@@ -595,11 +593,38 @@ def test_grouped_bootstrap_all_null_group_yields_null(spark, duck):
         .alias("v"),
     )
     spec = SamplingSpec(design="uniform_hash", fraction=0.5, key="k")
-    rows = {r["g"]: r for r in bootstrap_grouped_sum_ci(df, "v", "g", spec).collect()}
+    rows = {r["g"]: r for r in bootstrap_sum_ci(df, "v", spec, group_by="g").collect()}
     assert rows["allnull"]["estimate"] is None
     assert rows["allnull"]["ci_lower"] is None
     assert rows["allnull"]["n_samples"] > 0  # count(*) still counts rows
     assert rows["ok"]["estimate"] is not None and rows["ok"]["estimate"] > 0
+
+
+def test_grouped_bootstrap_rows_equal_global_per_group(null_group_frame):
+    """Each group's row of the grouped bootstrap, the NULL group
+    included, equals the global estimator run on that group's rows
+    alone (floats to 1e-9 relative: the replicate spread is folded in
+    another order), and the DuckDB twin returns the same rows."""
+    from approximatequeryengine_spark.plans.bootstrap import (
+        bootstrap_sum_ci,
+        bootstrap_sum_ci_sql,
+    )
+    from approximatequeryengine_spark.plans.sampling import SamplingSpec
+    from tests.conftest import assert_df_matches_sql, duck_of
+
+    df = null_group_frame
+    spec = SamplingSpec(design="uniform_hash", fraction=0.5, key="k")
+    out = bootstrap_sum_ci(df, "v", spec, group_by="g")
+    rows = out.collect()
+    assert {r["g"] for r in rows} == {"0", "1", None}
+    for row in rows:
+        alone = bootstrap_sum_ci(
+            df.filter(F.col("g").eqNullSafe(F.lit(row["g"]))), "v", spec
+        ).collect()[0]
+        assert alone.asDict() == pytest.approx({k: row[k] for k in alone.asDict()}, rel=1e-9)
+    assert_df_matches_sql(
+        out, duck_of(t=df), bootstrap_sum_ci_sql("t", "v", spec, group_by="g")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -278,6 +278,19 @@ def test_grouped_stddev_rows_equal_global_per_group(lineitem):
         assert alone.asDict() == {k: row[k] for k in alone.asDict()}
 
 
+def test_grouped_stddev_keeps_null_group(null_group_frame):
+    """A NULL group is a group: the grouped STDDEV returns its row in
+    Spark and in the DuckDB twin, and the two agree."""
+    from tests.conftest import duck_of
+
+    spec = SamplingSpec(design="uniform_hash", fraction=0.5, key="k")
+    out = approx_stddev_ci(null_group_frame, "v", spec, group_by="g")
+    assert {r["g"] for r in out.collect()} == {"0", "1", None}
+    assert_df_matches_sql(
+        out, duck_of(t=null_group_frame), approx_stddev_ci_sql("t", "v", spec, group_by="g")
+    )
+
+
 def test_stddev_route_interval_uses_central_fourth_moment(engine, duck):
     """APPROX(STDDEV(l_discount)) through the engine: the interval is
     the Kendall–Stuart one with m4 taken about the sample mean,
