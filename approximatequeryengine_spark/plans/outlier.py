@@ -107,7 +107,6 @@ def outlier_sum_ci(
     outlier stratum is exact). ``column`` and ``key`` are Spark SQL
     text; the plan is built from text (one parse call per step, not a
     py4j round trip per Column node)."""
-    keys = [group_by] if group_by else []
     x = f"CAST(({column}) AS DOUBLE)"
     base = df.filter(f"{x} IS NOT NULL")
     if group_by:
@@ -135,7 +134,7 @@ def outlier_sum_ci(
         t = sql_double(trow["t"])
     # One SQL text (GROUP BY ALL is a global aggregate when no key is
     # selected): a Column tree would cost a py4j round trip per node.
-    cols = "".join(f"`{k}`, " for k in keys)
+    cols = f"`{group_by}`, " if group_by else ""
     moments = ", ".join(_moments_sql(x, t, key, fraction, salt))
     text = (
         f"SELECT {cols}{', '.join(_estimate_sql(z))} "
