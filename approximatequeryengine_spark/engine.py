@@ -64,7 +64,6 @@ from approximatequeryengine_spark.frontend.dialect import (
 )
 from approximatequeryengine_spark.plans.adaptive import (
     adaptive_aggregate,
-    adaptive_grouped_aggregate,
     error_ladder,
 )
 from approximatequeryengine_spark.plans.advisor import (
@@ -454,9 +453,10 @@ class AQEngine:
         adaptive CLT escalation loop — the reference's early-stop
         semantics (``custom_bplus_db.cpp:885-1043``) from plain SQL.
         The fraction doubles until the realized CI half-width meets the
-        budget; global shape → adaptive_aggregate, grouped → the
-        worst-group stop rule. The terminal rung is a pure function of
-        the data — certifiable by a rung-re-deriving oracle. Output
+        budget: of the one global row, or of the worst group when the
+        query is grouped — one loop, ``adaptive_aggregate``, either way.
+        The terminal rung is a pure function of the data — certifiable
+        by a rung-re-deriving oracle. Output
         columns: [group,] <alias>, ci_lower, ci_upper, n_samples — the
         approx_aggregate frame with the user's alias."""
         (table, aggf, expr, alias, where, group, start_pct, error_pct,
@@ -484,24 +484,12 @@ class AQEngine:
             fraction=(start_pct / 100.0) if start_pct else 0.0,
             key=self.catalog.unique_key(table),
         )
-        if group:
-            rdf, fraction, iterations = adaptive_grouped_aggregate(
-                base, agg, group, s_spec, error_pct=error_pct, z=q.z
-            )
-            if order_by_groups:
-                rdf = rdf.orderBy(*group)
-            res = ApproxResult(
-                df=rdf,
-                method="adaptive_sql",
-                status=ApproximationStatus.STABLE,
-                fraction=fraction,
-                iterations=iterations,
-            )
-        else:
-            res = adaptive_aggregate(
-                base, agg, s_spec, error_pct=error_pct, z=q.z
-            )
-            res.method = "adaptive_sql"
+        res = adaptive_aggregate(
+            base, agg, s_spec, group_by=group, error_pct=error_pct, z=q.z
+        )
+        if order_by_groups:
+            res.df = res.df.orderBy(*group)
+        res.method = "adaptive_sql"
         res.computation_time = time.time() - q.t0
         return res
 
@@ -1310,17 +1298,11 @@ def _adaptive(q: _Query, base: DataFrame, s: SamplingSpec) -> ApproxResult:
     """Double the fraction until the CI half-width meets the budget; a
     grouped query escalates until the WORST group's does (the reference
     ran grouped queries at a fixed fraction)."""
-    if not q.spec.group_by:
-        return adaptive_aggregate(
-            base, q.agg, s, error_pct=q.error_pct or 5.0, confidence=q.confidence,
-            validators=METHODS[q.method].get("validators", 0), z=q.z,
-        )
-    rdf, fraction, iterations = adaptive_grouped_aggregate(
-        base, q.agg, [q.spec.group_by], s, error_pct=q.error_pct or 5.0, z=q.z
+    return adaptive_aggregate(
+        base, q.agg, s, group_by=[q.spec.group_by] if q.spec.group_by else None,
+        error_pct=q.error_pct or 5.0, confidence=q.confidence,
+        validators=METHODS[q.method].get("validators", 0), z=q.z,
     )
-    res = q.eng._finalize(rdf, q, q.method, fraction, confidence=q.confidence)
-    res.iterations = iterations
-    return res
 
 
 def _cents_floor(q: _Query):

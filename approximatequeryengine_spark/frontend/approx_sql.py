@@ -105,6 +105,7 @@ from __future__ import annotations
 import re
 
 from approximatequeryengine_spark.plans.estimators import Z_95, cents_sql
+from approximatequeryengine_spark.plans.quantiles import order_stat_ranks_sql
 from approximatequeryengine_spark.plans.sampling import (
     SamplingSpec,
     sampling_p_sql,
@@ -1336,10 +1337,7 @@ def _rewrite_quantile_sql(
     # A NULL measurement has no rank, and the engines order NULLs on
     # opposite ends of a sort — exclude in the one shared text.
     w = f"{w} AND ({x}) IS NOT NULL"
-    half = f"{z!r} * sqrt(n * {q!r} * (1.0 - {q!r}))"
-    point = f"least(greatest(CAST(ceil({q!r} * n) AS BIGINT), 1), n)"
-    lo = f"least(greatest(CAST(floor({q!r} * n - {half}) AS BIGINT), 1), n)"
-    hi = f"least(greatest(CAST(ceil({q!r} * n + {half}) AS BIGINT), 1), n)"
+    lo, point, hi = order_stat_ranks_sql(q, z)
     gs = [f"aqe_g{i}" for i in range(len(groups))]
     g_sel = "".join(f"{g} AS {a}, " for g, a in zip(groups, gs))
     g_cols = "".join(f"{a}, " for a in gs)

@@ -99,6 +99,17 @@ def _ranks(n: int, q: float, z: float) -> tuple[int, int, int]:
     return lo, point, hi
 
 
+def order_stat_ranks_sql(q: float, z: float) -> tuple[str, str, str]:
+    """The ``(lo, point, hi)`` ranks of the order-statistic CI as SQL
+    over a sample-size column ``n``: the one spelling every quantile
+    text shares, and the one :func:`_ranks` bit-matches."""
+    half = f"{z!r} * sqrt(n * {q!r} * (1.0 - {q!r}))"
+    point = f"least(greatest(CAST(ceil({q!r} * n) AS BIGINT), 1), n)"
+    lo = f"least(greatest(CAST(floor({q!r} * n - {half}) AS BIGINT), 1), n)"
+    hi = f"least(greatest(CAST(ceil({q!r} * n + {half}) AS BIGINT), 1), n)"
+    return lo, point, hi
+
+
 def _zone_histogram(
     nonnull: DataFrame, intervals: list[tuple[float, float]] | None
 ) -> DataFrame:
@@ -653,10 +664,7 @@ def grouped_quantile_ci_sql(
     where = sampling_where_sql(spec)
     x = f"CAST({column} AS DOUBLE)"
     key = f"CAST({spec.key} AS BIGINT)"
-    half = f"{z!r} * sqrt(n * {q!r} * (1.0 - {q!r}))"
-    point = f"least(greatest(CAST(ceil({q!r} * n) AS BIGINT), 1), n)"
-    lo = f"least(greatest(CAST(floor({q!r} * n - {half}) AS BIGINT), 1), n)"
-    hi = f"least(greatest(CAST(ceil({q!r} * n + {half}) AS BIGINT), 1), n)"
+    lo, point, hi = order_stat_ranks_sql(q, z)
     return f"""
 WITH s AS (SELECT {group_col} AS g, {x} AS x, {key} AS k FROM {table} WHERE {where}),
 r AS (SELECT g, x,
@@ -688,10 +696,7 @@ def approx_quantile_ci_sql(
     where = sampling_where_sql(spec)
     x = f"CAST({column} AS DOUBLE)"
     key = f"CAST({spec.key} AS BIGINT)"
-    half = f"{z!r} * sqrt(n * {q!r} * (1.0 - {q!r}))"
-    point = f"least(greatest(CAST(ceil({q!r} * n) AS BIGINT), 1), n)"
-    lo = f"least(greatest(CAST(floor({q!r} * n - {half}) AS BIGINT), 1), n)"
-    hi = f"least(greatest(CAST(ceil({q!r} * n + {half}) AS BIGINT), 1), n)"
+    lo, point, hi = order_stat_ranks_sql(q, z)
     return f"""
 WITH s AS (SELECT {x} AS x, {key} AS k FROM {table} WHERE {where}),
 nn AS (SELECT count(*) AS n FROM s),

@@ -43,6 +43,7 @@ import json
 import os
 import tempfile
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2417,6 +2418,26 @@ _register(
 )
 
 
+def _mk_engine_fn(
+    sql: str,
+    rounding: dict[str, int],
+    method: str = "sql_rewrite",
+    order_by: str | None = None,
+):
+    """``AQEngine.run(sql)``, checked to take the route of ``method`` —
+    the routing IS the thing certified — and rounded per ``rounding``."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _catalog(spark, sf_dir)
+        res = AQEngine(spark, sf_dir).run(sql)
+        if res.method != method:
+            raise AssertionError(f"expected {method} routing, got {res.method}")
+        rdf = res.df.orderBy(order_by) if order_by else res.df
+        return _round_cols(rdf, rounding)
+
+    return fn
+
+
 # The same estimate reachable from PLAIN SQL (VERDICT r6 #5): the user
 # writes the join query directly, marks the fact with SQL-standard
 # TABLESAMPLE and the aggregate with APPROX(...); the engine's
@@ -2434,17 +2455,9 @@ _APPROX_SQL_JOIN = (
 )
 
 
-def _approx_sql_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _catalog(spark, sf_dir)
-    res = AQEngine(spark, sf_dir).run(_APPROX_SQL_JOIN)
-    if res.method != "sql_rewrite":  # the routing IS the thing certified
-        raise AssertionError(f"expected sql_rewrite routing, got {res.method}")
-    return _round_cols(res.df, {"revenue": 3, "ci_lower": 3, "ci_upper": 3})
-
-
 _register(
     "approx_sql_join_revenue",
-    _approx_sql_join_fn,
+    _mk_engine_fn(_APPROX_SQL_JOIN, {"revenue": 3, "ci_lower": 3, "ci_upper": 3}),
     _rewrite_approx_sql(_APPROX_SQL_JOIN, dict(_CATALOG_TABLES), round_to=3),
 )
 
@@ -2457,17 +2470,6 @@ _register(
 # SQL text that is also the oracle: what DuckDB runs IS what Spark ran.
 
 
-def _mk_sql_rewrite_fn(sql: str, rounding: dict[str, int]):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _catalog(spark, sf_dir)
-        res = AQEngine(spark, sf_dir).run(sql)
-        if res.method != "sql_rewrite":  # the routing IS the thing certified
-            raise AssertionError(f"expected sql_rewrite routing, got {res.method}")
-        return _round_cols(res.df, rounding)
-
-    return fn
-
-
 _APPROX_SQL_POSTSTRAT = (
     "SELECT l_linestatus, APPROX(SUM(l_extendedprice)) AS est "
     "FROM lineitem TABLESAMPLE (10 PERCENT) "
@@ -2475,7 +2477,7 @@ _APPROX_SQL_POSTSTRAT = (
 )
 _register(
     "approx_sql_poststrat_grouped",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_POSTSTRAT, {"est": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(_APPROX_SQL_POSTSTRAT, dict(_CATALOG_TABLES), round_to=3),
@@ -2487,7 +2489,7 @@ _APPROX_SQL_REGAUX = (
 )
 _register(
     "approx_sql_regaux_revenue",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_REGAUX, {"revenue": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(_APPROX_SQL_REGAUX, dict(_CATALOG_TABLES), round_to=3),
@@ -2502,7 +2504,7 @@ _APPROX_SQL_RATIO = (
 )
 _register(
     "approx_sql_ratio_by_flag",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_RATIO,
         {"rev_per_unit": 6, "rev_per_unit_lo": 6, "rev_per_unit_hi": 6,
          "ci_lower": 6, "ci_upper": 6},
@@ -2521,7 +2523,7 @@ _APPROX_SQL_MEDIAN = (
 )
 _register(
     "approx_sql_median_price",
-    _mk_sql_rewrite_fn(_APPROX_SQL_MEDIAN, {}),
+    _mk_engine_fn(_APPROX_SQL_MEDIAN, {}),
     _rewrite_approx_sql(_APPROX_SQL_MEDIAN, dict(_CATALOG_TABLES)),
 )
 
@@ -2533,7 +2535,7 @@ _APPROX_SQL_P90 = (
 )
 _register(
     "approx_sql_p90_by_flag",
-    _mk_sql_rewrite_fn(_APPROX_SQL_P90, {}),
+    _mk_engine_fn(_APPROX_SQL_P90, {}),
     _rewrite_approx_sql(_APPROX_SQL_P90, dict(_CATALOG_TABLES)),
 )
 
@@ -2555,7 +2557,7 @@ _APPROX_SQL_HAVING = (
 )
 _register(
     "approx_sql_having_revenue",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_HAVING, {"revenue": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(_APPROX_SQL_HAVING, dict(_CATALOG_TABLES), round_to=3),
@@ -2581,7 +2583,7 @@ _APPROX_SQL_POSTSTRAT_JOIN = (
 )
 _register(
     "approx_sql_poststrat_join",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_POSTSTRAT_JOIN, {"revenue": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(
@@ -2603,7 +2605,7 @@ _APPROX_SQL_CTE = (
 )
 _register(
     "approx_sql_cte_revenue",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_CTE, {"rev": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(_APPROX_SQL_CTE, dict(_CATALOG_TABLES), round_to=3),
@@ -2617,7 +2619,7 @@ _APPROX_SQL_REGAUX_JOIN = (
 )
 _register(
     "approx_sql_regaux_join",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_REGAUX_JOIN, {"revenue": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(
@@ -2638,7 +2640,7 @@ _APPROX_SQL_DISTINCT = (
 )
 _register(
     "approx_sql_distinct_parts",
-    _mk_sql_rewrite_fn(_APPROX_SQL_DISTINCT, {}),
+    _mk_engine_fn(_APPROX_SQL_DISTINCT, {}),
     _rewrite_approx_sql(_APPROX_SQL_DISTINCT, dict(_CATALOG_TABLES)),
 )
 
@@ -2672,23 +2674,30 @@ _ADAPTIVE_ERROR_PCT = 2.0
 _ADAPTIVE_MIN_SAMPLES = 50
 
 
-def _adaptive_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive CLT loop (R8-R10): iterative driver-side escalation.
-    The loop is a multi-job process, but its *terminal state* is a pure
-    function of the data — every escalation step's sample membership,
-    moments, and stop decision are deterministic arithmetic — so the
-    DuckDB oracle re-derives the chosen rung and its estimate in one
-    SQL query (``_adaptive_oracle``)."""
+def _adaptive_fn(
+    spark: SparkSession, sf_dir: str, group_by: list[str] | None = None
+) -> DataFrame:
+    """Adaptive CLT loop (R8-R10): iterative driver-side escalation,
+    global or — with ``group_by`` — until the WORST group's relative CI
+    half-width meets the budget (beyond-reference: the reference runs
+    grouped queries at a fixed fraction). The loop is a multi-job
+    process, but its *terminal state* is a pure function of the data —
+    every escalation step's sample membership, moments, and stop
+    decision are deterministic arithmetic — so the DuckDB oracle
+    re-derives the chosen rung and its estimate in one SQL query
+    (``_adaptive_oracle``)."""
     cat = _catalog(spark, sf_dir)
     res = _adaptive.adaptive_aggregate(
         cat.table("lineitem"),
         AggSpec("sum", "l_extendedprice"),
         SamplingSpec(fraction=0.0, key=_LKEY),
+        group_by=group_by,
         error_pct=_ADAPTIVE_ERROR_PCT,
         min_samples=_ADAPTIVE_MIN_SAMPLES,
     )
+    rdf = res.df.orderBy(*group_by) if group_by else res.df
     return _round_cols(
-        res.df, {"sum_l_extendedprice": 2, "ci_lower": 2, "ci_upper": 2}
+        rdf, {"sum_l_extendedprice": 2, "ci_lower": 2, "ci_upper": 2}
     )
 
 
@@ -2699,42 +2708,48 @@ def _adaptive_oracle(
     where: str | None = None,
     agg: str = "sum",
     key: str | None = None,
+    group_by: str | None = None,
 ) -> str:
     """Re-derive the adaptive loop's terminal rung in SQL: evaluate the
     moments on every ladder fraction (samples are NESTED in the
     fraction, so this mirrors exactly what the loop saw), apply the
     same margin convention (integer-rounded for SUM/COUNT, raw for
     AVG — estimators._ci_columns) and ``n ≥ min_samples ∧ rel ≤ e``
-    stop rule, and emit the first converged rung (else the full-scan
-    rung). ``alias`` names the estimate column — the WITHIN-marker
-    entries reuse this oracle with the user's alias. ``agg`` mirrors
-    the loop's AggSpec: 'sum' (HT total), 'avg' (ratio mean, CLT
-    sample-variance margin), 'count' (Σ1/p, binomial margin)."""
+    stop rule to every output row, and emit the first rung where every
+    row converged (else the full-scan rung). ``alias`` names the
+    estimate column — the WITHIN-marker entries reuse this oracle with
+    the user's alias. ``agg`` mirrors the loop's AggSpec: 'sum' (HT
+    total), 'avg' (ratio mean, CLT sample-variance margin), 'count'
+    (Σ1/p, binomial margin).
+
+    Like the loop's rung, each rung aggregates the UNSAMPLED rows with
+    the sample as a mask (GROUP BY ALL is a global aggregate when there
+    is no ``group_by``): every group of the data is present at every
+    rung, and one the sample missed has ``n = 0``, so it blocks the stop
+    rule; a grouped answer then drops such rows."""
     ladder = [_adaptive.error_ladder(_ADAPTIVE_ERROR_PCT)]
     while ladder[-1] < 1.0:
         ladder.append(min(1.0, ladder[-1] * 2.0))
+    x = "CAST(1 AS DOUBLE)" if x_expr.strip() == "*" else f"CAST({x_expr} AS DOUBLE)"
+    g = f"{group_by}, " if group_by else ""
+    w = f" WHERE {where}" if where else ""
     parts = []
     for i, f in enumerate(ladder, 1):
-        s = SamplingSpec(
-            design="uniform_hash", fraction=f, key=key or _LKEY
-        )
-        samp = sampling_where_sql(s)
-        w = f"({where}) AND {samp}" if where else samp
-        p = sampling_p_sql(s)
-        x = (
-            "CAST(1 AS DOUBLE)"
-            if x_expr.strip() == "*"
-            else f"CAST({x_expr} AS DOUBLE)"
-        )
+        s = SamplingSpec(design="uniform_hash", fraction=f, key=key or _LKEY)
+        samp, p = sampling_where_sql(s), sampling_p_sql(s)
+
+        def m(e: str, samp=samp) -> str:
+            return f"CASE WHEN {samp} THEN {e} END"
+
         # COUNT({x}), not COUNT(*): the loop's n_samples is F.count(x)
         # — the NON-NULL measure count (null_sweep caught the * form
         # diverging by exactly the NULL-measure rows on dirty data).
         parts.append(
-            f"SELECT {i} AS i, COUNT({x}) AS n, SUM({x} / {p}) AS ht, "
-            f"SUM(1.0 / {p}) AS htn, "
-            f"SUM({x}) AS s1, SUM({x} * {x}) AS s2, AVG({p}) AS pavg, "
-            f"SUM({x} * {x} * (1.0 - {p}) / ({p} * {p})) AS vht "
-            f"FROM {from_clause} WHERE {w}"
+            f"SELECT {i} AS i, * FROM (SELECT {g}COUNT({m(x)}) AS n, "
+            f"SUM({m(f'{x} / {p}')}) AS ht, SUM({m(f'1.0 / {p}')}) AS htn, "
+            f"SUM({m(x)}) AS s1, SUM({m(f'{x} * {x}')}) AS s2, AVG({m(p)}) AS pavg, "
+            f"SUM({m(f'{x} * {x} * (1.0 - {p}) / ({p} * {p})')}) AS vht "
+            f"FROM {from_clause}{w} GROUP BY ALL)"
         )
     last = len(ladder)
     z = Z_95
@@ -2776,91 +2791,26 @@ def _adaptive_oracle(
     )
     return (
         f"WITH m AS ({' UNION ALL '.join(parts)}), "
-        f"sel AS (SELECT i, n, {est} AS est, {rawm} AS rawm "
-        f"  FROM m), "
+        f"sel AS (SELECT *, {est} AS est, {rawm} AS rawm FROM m), "
         # Margin convention per aggregate — estimators._ci_columns.
-        f"mm AS (SELECT i, n, est, {mm} AS margin "
-        f"  FROM sel), "
-        f"conv AS (SELECT *, (n >= {_ADAPTIVE_MIN_SAMPLES} AND est <> 0 "
-        f"  AND 100.0 * margin / abs(est) <= {_ADAPTIVE_ERROR_PCT!r}) AS ok FROM mm), "
-        f"pick AS (SELECT * FROM conv WHERE ok OR i = {last} ORDER BY i LIMIT 1) "
-        f"SELECT round(est, 2) AS {alias}, "
+        f"mm AS (SELECT *, {mm} AS margin FROM sel), "
+        f"rung AS (SELECT i, bool_and(n >= {_ADAPTIVE_MIN_SAMPLES} AND est <> 0 "
+        f"  AND 100.0 * margin / abs(est) <= {_ADAPTIVE_ERROR_PCT!r}) AS ok "
+        f"  FROM mm GROUP BY i), "
+        f"pick AS (SELECT i FROM rung WHERE ok OR i = {last} ORDER BY i LIMIT 1) "
+        f"SELECT {g}round(est, 2) AS {alias}, "
         f"round(est - margin, 2) AS ci_lower, round(est + margin, 2) AS ci_upper, "
-        f"CAST(n AS BIGINT) AS n_samples FROM pick"
+        f"CAST(n AS BIGINT) AS n_samples "
+        f"FROM mm JOIN pick USING (i){' WHERE n > 0' if group_by else ''}"
     )
 
 
 _register("adaptive_clt_sum", _adaptive_fn, _adaptive_oracle())
-
-
-def _adaptive_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped adaptive escalation: stop when the WORST group's relative
-    CI half-width meets the budget (beyond-reference — the reference
-    runs grouped queries at a fixed fraction). Terminal rung re-derived
-    by the oracle below, per group."""
-    cat = _catalog(spark, sf_dir)
-    rdf, _, _ = _adaptive.adaptive_grouped_aggregate(
-        cat.table("lineitem"),
-        AggSpec("sum", "l_extendedprice"),
-        ["l_returnflag"],
-        SamplingSpec(fraction=0.0, key=_LKEY),
-        error_pct=_ADAPTIVE_ERROR_PCT,
-        min_samples=_ADAPTIVE_MIN_SAMPLES,
-    )
-    return _round_cols(
-        rdf.orderBy("l_returnflag"),
-        {"sum_l_extendedprice": 2, "ci_lower": 2, "ci_upper": 2},
-    )
-
-
-def _adaptive_grouped_oracle(alias: str = "sum_l_extendedprice") -> str:
-    """Per-group ladder re-derivation: grouped moments on every rung
-    (nested samples — each rung is exactly what the loop saw), the same
-    integer-rounded margin, and the first rung where EVERY group has
-    ``n ≥ min_samples ∧ est ≠ 0 ∧ rel ≤ e`` (else the full-scan rung).
-    ``alias`` names the estimate column (reused by the WITHIN marker)."""
-    ladder = [_adaptive.error_ladder(_ADAPTIVE_ERROR_PCT)]
-    while ladder[-1] < 1.0:
-        ladder.append(min(1.0, ladder[-1] * 2.0))
-    parts = []
-    for i, f in enumerate(ladder, 1):
-        s = SamplingSpec(design="uniform_hash", fraction=f, key=_LKEY)
-        where = sampling_where_sql(s)
-        p = sampling_p_sql(s)
-        x = "CAST(l_extendedprice AS DOUBLE)"
-        # COUNT({x}) mirrors the loop's F.count(x) — see _adaptive_oracle.
-        parts.append(
-            f"SELECT {i} AS i, l_returnflag, COUNT({x}) AS n, "
-            f"SUM({x} / {p}) AS est, "
-            f"SUM({x} * {x} * (1.0 - {p}) / ({p} * {p})) AS vht "
-            f"FROM lineitem WHERE {where} GROUP BY l_returnflag"
-        )
-    last = len(ladder)
-    z = Z_95
-    return (
-        f"WITH m AS ({' UNION ALL '.join(parts)}), "
-        f"sel AS (SELECT i, l_returnflag, n, est, "
-        f"  CASE WHEN n >= 2 THEN {z!r} * sqrt(greatest(vht, 0.0)) ELSE 0.0 END AS rawm "
-        f"  FROM m), "
-        f"mm AS (SELECT i, l_returnflag, n, est, "
-        f"  CASE WHEN rawm > 0 THEN greatest(round(rawm, 0), 1.0) ELSE 0.0 END AS margin "
-        f"  FROM sel), "
-        f"rung AS (SELECT i, bool_and(n >= {_ADAPTIVE_MIN_SAMPLES} AND est <> 0 "
-        f"  AND 100.0 * margin / abs(est) <= {_ADAPTIVE_ERROR_PCT!r}) "
-        # every group of the FULL table must be present at the rung —
-        # mirrors the loop's n_groups requirement (a rare group missed
-        # by the sample blocks convergence).
-        f"  AND count(*) = (SELECT count(DISTINCT l_returnflag) FROM lineitem) AS ok "
-        f"  FROM mm GROUP BY i), "
-        f"pick AS (SELECT i FROM rung WHERE ok OR i = {last} ORDER BY i LIMIT 1) "
-        f"SELECT l_returnflag, round(est, 2) AS {alias}, "
-        f"round(est - margin, 2) AS ci_lower, round(est + margin, 2) AS ci_upper, "
-        f"CAST(n AS BIGINT) AS n_samples "
-        f"FROM mm JOIN pick USING (i) ORDER BY l_returnflag"
-    )
-
-
-_register("adaptive_grouped_sum", _adaptive_grouped_fn, _adaptive_grouped_oracle())
+_register(
+    "adaptive_grouped_sum",
+    partial(_adaptive_fn, group_by=["l_returnflag"]),
+    _adaptive_oracle(group_by="l_returnflag"),
+)
 
 
 # Round-9 (VERDICT r8 #3): the reference's headline CLT error budget
@@ -2874,18 +2824,14 @@ _APPROX_SQL_WITHIN = (
 )
 
 
-def _within_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _catalog(spark, sf_dir)
-    res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN)
-    if res.method != "adaptive_sql":  # the routing IS the thing certified
-        raise AssertionError(f"expected adaptive_sql routing, got {res.method}")
-    return _round_cols(
-        res.df, {"total_price": 2, "ci_lower": 2, "ci_upper": 2}
-    )
-
-
 _register(
-    "approx_sql_within_budget", _within_fn, _adaptive_oracle("total_price")
+    "approx_sql_within_budget",
+    _mk_engine_fn(
+        _APPROX_SQL_WITHIN,
+        {"total_price": 2, "ci_lower": 2, "ci_upper": 2},
+        method="adaptive_sql",
+    ),
+    _adaptive_oracle("total_price"),
 )
 
 _APPROX_SQL_WITHIN_GROUPED = (
@@ -2894,21 +2840,15 @@ _APPROX_SQL_WITHIN_GROUPED = (
 )
 
 
-def _within_grouped_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _catalog(spark, sf_dir)
-    res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_GROUPED)
-    if res.method != "adaptive_sql":
-        raise AssertionError(f"expected adaptive_sql routing, got {res.method}")
-    return _round_cols(
-        res.df.orderBy("l_returnflag"),
-        {"sum_price": 2, "ci_lower": 2, "ci_upper": 2},
-    )
-
-
 _register(
     "approx_sql_within_grouped",
-    _within_grouped_fn,
-    _adaptive_grouped_oracle("sum_price"),
+    _mk_engine_fn(
+        _APPROX_SQL_WITHIN_GROUPED,
+        {"sum_price": 2, "ci_lower": 2, "ci_upper": 2},
+        method="adaptive_sql",
+        order_by="l_returnflag",
+    ),
+    _adaptive_oracle("sum_price", group_by="l_returnflag"),
 )
 
 # Multi-column GROUP BY across the marker templates (round 9, second
@@ -2926,7 +2866,7 @@ _APPROX_SQL_POSTSTRAT_MULTI = (
 )
 _register(
     "approx_sql_poststrat_multigroup",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_POSTSTRAT_MULTI, {"est": 3, "ci_lower": 3, "ci_upper": 3}
     ),
     _rewrite_approx_sql(
@@ -2947,7 +2887,7 @@ _APPROX_SQL_POSTSTRAT_HAVING = (
 )
 _register(
     "approx_sql_poststrat_having",
-    _mk_sql_rewrite_fn(
+    _mk_engine_fn(
         _APPROX_SQL_POSTSTRAT_HAVING,
         {"est": 3, "ci_lower": 3, "ci_upper": 3},
     ),
@@ -2968,17 +2908,13 @@ _APPROX_SQL_WITHIN_JOIN = (
 )
 
 
-def _within_join_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _catalog(spark, sf_dir)
-    res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_JOIN)
-    if res.method != "adaptive_sql":
-        raise AssertionError(f"expected adaptive_sql routing, got {res.method}")
-    return _round_cols(res.df, {"revenue": 2, "ci_lower": 2, "ci_upper": 2})
-
-
 _register(
     "approx_sql_within_join",
-    _within_join_fn,
+    _mk_engine_fn(
+        _APPROX_SQL_WITHIN_JOIN,
+        {"revenue": 2, "ci_lower": 2, "ci_upper": 2},
+        method="adaptive_sql",
+    ),
     _adaptive_oracle(
         "revenue",
         from_clause="lineitem JOIN orders ON l_orderkey = o_orderkey",
@@ -2997,19 +2933,13 @@ _APPROX_SQL_WITHIN_AVG = (
 )
 
 
-def _within_avg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _catalog(spark, sf_dir)
-    res = AQEngine(spark, sf_dir).run(_APPROX_SQL_WITHIN_AVG)
-    if res.method != "adaptive_sql":
-        raise AssertionError(f"expected adaptive_sql routing, got {res.method}")
-    return _round_cols(
-        res.df, {"avg_price": 2, "ci_lower": 2, "ci_upper": 2}
-    )
-
-
 _register(
     "approx_sql_within_avg",
-    _within_avg_fn,
+    _mk_engine_fn(
+        _APPROX_SQL_WITHIN_AVG,
+        {"avg_price": 2, "ci_lower": 2, "ci_upper": 2},
+        method="adaptive_sql",
+    ),
     _adaptive_oracle(
         "avg_price",
         from_clause="orders",

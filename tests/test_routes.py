@@ -65,12 +65,12 @@ JOBS = {
     "fixed_random": (
         L + " WHERE l_quantity < 30", {"sample_pct": 10, "method": "random"}, 3
     ),
-    "auto_sum": (L + " WHERE l_quantity < 30", {"sample_pct": 10, "method": "auto"}, 10),
-    "error_budget": ("SELECT SUM(l_extendedprice) FROM lineitem", {"error_pct": 5}, 7),
+    "auto_sum": (L + " WHERE l_quantity < 30", {"sample_pct": 10, "method": "auto"}, 9),
+    "error_budget": ("SELECT SUM(l_extendedprice) FROM lineitem", {"error_pct": 5}, 6),
     "within": (
         "SELECT APPROX(SUM(l_extendedprice)) AS est FROM lineitem WITHIN 2 PERCENT",
         {},
-        9,
+        8,
     ),
     "tablesample_star": (
         "SELECT n_name, APPROX(SUM(l_extendedprice)) AS rev FROM lineitem "
